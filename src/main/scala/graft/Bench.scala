@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Per-round benchmark main (driver contract): runs every registered query
   * on `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with the total and
@@ -30,19 +30,11 @@ object Bench {
     val (stealStart, totalStart) = HealthStamp.cpuJiffies()
     val healthStart = HealthStamp.json()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus(4))
     // Untimed warmup: JVM/codegen/parquet-footer costs land here, not in
     // whichever query happens to run first (steady-state measurement).
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
     // Dev-only subset filter (comma-separated ids); the driver never sets
     // it, so protocol runs always measure the full registry. Ids are
@@ -57,48 +49,13 @@ object Bench {
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
       val dt = (System.nanoTime() - t0) / 1e9
-      // Query isolation (r10 driver-run diagnosis): eager
-      // localCheckpoint blocks from the dedup/kmeans pipelines stay
-      // pinned in the block manager until the driver GC happens to
-      // collect their DataFrames, so a long all-registry run
-      // accumulates storage pressure and late queries (the trivial
-      // j*) degrade 10-100x under eviction+GC thrash. Each registry
-      // query is an independent job; drop its persisted blocks as
-      // soon as it is drained, exactly as separate job JVMs would.
-      // Runs UNCONDITIONALLY — a query that throws mid-pipeline after
-      // eagerly checkpointing would otherwise leak its pinned blocks
-      // into every later measurement — and blocking, so async eviction
-      // cannot overlap the next query's timed region (dt is already
-      // captured; the cleanup costs nothing in measured time).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      // THRESHOLD-TRIGGERED broadcast hygiene (VERDICT r14 ask #2):
-      // broadcast blocks outlive clearCache — the ContextCleaner reaps
-      // one only after the driver GC collects its variable — so a long
-      // all-registry run accumulates dead-but-pinned broadcasts, and on
-      // rare draws a mid-registry query degrades under that storage
-      // pressure (the diagnosed i57 51.8s-vs-3.4s scale-gate allow at
-      // sf1, where ~240 had piled up). A UNIFORM per-query System.gc()
-      // was measured at ~1.27x on every query (rejected, r13); instead
-      // the GC fires only when the block-manager's broadcast-block
-      // count says pressure is real (~once per 100+ queries at the
-      // observed accumulation rate — ~1/50th of the uniform tax). The
-      // probe is one driver-local metadata read; the brief sleep lets
-      // the async ContextCleaner drain the reference queue before the
-      // next timed region starts. dt is already captured — nothing
-      // here lands in measured time.
-      if (org.apache.spark.GraftBlockProbe
-          .broadcastBlockCount(spark.sparkContext) > 128) {
-        System.gc()
-        Thread.sleep(200)
-        System.err.println(s"[bench] broadcast hygiene GC after $name " +
-          s"(post-GC blocks: ${org.apache.spark.GraftBlockProbe.broadcastBlockCount(spark.sparkContext)})")
-      }
+      // Query isolation (see [[Harness.isolate]]); dt is already
+      // captured, so the cleanup costs nothing in measured time.
+      Harness.isolate(spark)
       if (!ok) { errors += name; name -> -1.0 } else name -> dt
     }
     // Stdout line: per-query seconds rounded to ms so the one-line JSON
@@ -135,7 +92,7 @@ object Bench {
           val v = new com.fasterxml.jackson.databind.ObjectMapper()
             .readTree(stamp).get("cold_read_mbps").asDouble(-1.0)
           v
-        } catch { case _: Throwable => -1.0 }
+        } catch { case NonFatal(_) => -1.0 }
       val vs = Seq(coldOf(healthStart), coldOf(healthEnd)).filter(_ >= 0)
       if (vs.isEmpty) -1.0 else vs.min
     }
@@ -192,7 +149,7 @@ object Bench {
       }
     val outFile = sys.env.getOrElse("SPARK_GRAFT_OUT", defaultOut)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), fullLine + "\n")
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
     }
     println(line)

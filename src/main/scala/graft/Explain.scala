@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev plan inspector: prints the formatted physical plan of one or more
   * registry queries — the `.explain("formatted")` loop the scale review
   * runs after every operator change.
@@ -9,15 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, ids @ _*) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus(4))
     ids.foreach { id =>
       println(s"==== $id ====")
       Registry.byId(id).build(spark, sfDir).explain("formatted")

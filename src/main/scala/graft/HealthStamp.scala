@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Host-health stamps shared by every measurement artifact the repo
   * writes (Bench envelopes, ladder rungs, RouteEval, the
   * BuildIndexes/IngestBatch/compact manifests).
@@ -32,7 +34,7 @@ object HealthStamp {
       val f = scala.io.Source.fromFile("/proc/loadavg")
       try f.mkString.trim.split("\\s+").take(3).mkString("[", ",", "]")
       finally f.close()
-    } catch { case _: Throwable => "[]" }
+    } catch { case NonFatal(_) => "[]" }
 
   /** Count of OTHER live JVMs on the box that look like Spark/sbt work
     * (commandline mentions spark or sbt) — >0 at either stamp means the
@@ -124,7 +126,7 @@ object HealthStamp {
         }.toMap
         (kv.getOrElse("Buffers", 0L) + kv.getOrElse("Cached", 0L)) / 1024
       } finally f.close()
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   /** Cold-file first-touch read rate in MB/s (VERDICT r18 ask #2's
     * second probe; -1 when the O_DIRECT path is unavailable). The r18
@@ -171,7 +173,7 @@ object HealthStamp {
         if (lock == null) sentinel
         else try body finally lock.release()
       } finally ch.close()
-    } catch { case _: Throwable => sentinel }
+    } catch { case NonFatal(_) => sentinel }
 
   def coldReadMbps(): Double = withProbeLock(-1.0) {
     try {
@@ -218,7 +220,7 @@ object HealthStamp {
           java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
         math.rint(total / 1e6 / sec * 10) / 10
       } finally ch.close()
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
   }
 
   /** Durable-write rate in MB/s (-1 on failure): 32 MB written and
@@ -263,7 +265,7 @@ object HealthStamp {
         ch.close()
         java.nio.file.Files.deleteIfExists(p)
       }
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
   }
 
   /** SUSTAINED durable-write floor in MB/s: the WORST per-chunk rate over
@@ -336,7 +338,7 @@ object HealthStamp {
         ch.close()
         java.nio.file.Files.deleteIfExists(p)
       }
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
   }
 
   /** Raw cumulative (steal, total) jiffies from `/proc/stat`'s
@@ -364,7 +366,7 @@ object HealthStamp {
         val steal = if (fields.length > 7) fields(7) else 0L
         (steal, fields.take(8).sum)
       } finally f.close()
-    } catch { case _: Throwable => (-1L, -1L) }
+    } catch { case NonFatal(_) => (-1L, -1L) }
 
   /** One-shot stamp as a JSON-object STRING — embed as the value of a
     * `"health_start"` / `"health_end"` key in any manifest line.

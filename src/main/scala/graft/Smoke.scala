@@ -1,18 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev smoke runner: drives the driver's t1 check (SparkEntry.entry
   * rows > 0 on sf0.001) and prints a sample of the rendered lines.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus(4))
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())
     df.show(5, truncate = false)

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Typed envelope for the stream surrogate table (`events`).
@@ -34,24 +36,29 @@ object Tables {
   // metastore entry (optimization r21, the per-query fixed-overhead
   // floor): a bare `spark.read.parquet` pays a file listing plus a
   // schema-inference footer job on EVERY call, ~0.10-0.14 s measured
-  // (tools/ProbeFloor), and the registry's 253 queries each re-create
+  // (OPTIMIZATION_r21.md), and the registry's 253 queries each re-create
   // their relations from scratch — pure metadata overhead repeated
   // hundreds of times per bench/verify run. A real deployment reads
   // these ten fixed tables through a catalog that resolves the schema
   // and file list ONCE; this cache is that, scoped to the session.
   // It holds ONLY the resolved logical relation (schema + file index) —
   // never row data, never results: every query still scans parquet and
-  // computes from it inside its own timed region. Keyed additionally by
-  // the table directory's mtime so an overwrite-then-reload (tools and
-  // tests writing scratch dirs) can never serve a stale file list.
+  // computes from it inside its own timed region. Each entry carries the
+  // table directory's mtime and is replaced when it differs, so an
+  // overwrite-then-reload (tools and tests writing scratch dirs) can
+  // never serve a stale file list, and the cache holds one entry per
+  // (session, dir, table) however often a table is rewritten.
   private val relCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, Long), DataFrame]()
+    (SparkSession, String, String), (Long, DataFrame)]()
+
+  private[graft] def cachedRelations: Int = relCache.size
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val mtime =
       try Files.getLastModifiedTime(Paths.get(s"$dir/$name.parquet")).toMillis
-      catch { case _: Throwable => -1L }
-    relCache.computeIfAbsent((spark, dir, name, mtime), _ => loadFresh(spark, dir, name))
+      catch { case NonFatal(_) => -1L }
+    relCache.compute((spark, dir, name), (_, hit) =>
+      if (hit != null && hit._1 == mtime) hit else (mtime, loadFresh(spark, dir, name)))._2
   }
 
   private def loadFresh(spark: SparkSession, dir: String, name: String): DataFrame =

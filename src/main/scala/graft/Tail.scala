@@ -2,6 +2,7 @@ package graft
 
 import java.io.PrintStream
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -185,6 +186,10 @@ object Tail {
                 startTimestampUs = Some(startUs),
                 maxRecordsPerTrigger = Some(10000L))) // main.go:218
               .select(line.as("line"))
+            // The checkpoint only carries this run's own offsets (a new run
+            // starts from -start, never from a saved offset), so it is
+            // removed once the query has stopped, on every exit path.
+            val ckpt = java.nio.file.Files.createTempDirectory("graft-tail-ckpt").toFile
             // stdout IS the sink (the reference's funnel, main.go:288-292),
             // but drained through toLocalIterator so the driver holds ONE
             // partition (= one shard's batch slice, ≤ the per-pull record
@@ -194,46 +199,35 @@ object Tail {
             // same output order collect() had: shards in partition order,
             // each shard's records in sequence order.
             val writer = rendered.writeStream
-              .option("checkpointLocation",
-                java.nio.file.Files.createTempDirectory("graft-tail-ckpt").toString)
+              .option("checkpointLocation", ckpt.toString)
               .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
                 batch.toLocalIterator().forEachRemaining(r => out.println(r.getString(0)))
                 out.flush()
               }
-            val q = (if (o.oneShot) writer.trigger(Trigger.AvailableNow())
-              else writer.trigger(Trigger.ProcessingTime(pollUs / 1000L))).start()
-            if (o.oneShot) {
-              if (!q.awaitTermination(600000L)) { q.stop(); return 1 }
-              0
-            } else {
-              // Graceful shutdown on SIGINT/SIGTERM: stop the query so the
-              // in-flight micro-batch drains, then fall through to exit —
-              // the reference's interrupt handler (main.go:180-208).
-              val hook = new Thread(() => q.stop())
-              Runtime.getRuntime.addShutdownHook(hook)
-              q.awaitTermination()
-              try Runtime.getRuntime.removeShutdownHook(hook)
-              catch { case _: IllegalStateException => () } // already exiting
-              0
-            }
+            try {
+              val q = (if (o.oneShot) writer.trigger(Trigger.AvailableNow())
+                else writer.trigger(Trigger.ProcessingTime(pollUs / 1000L))).start()
+              if (o.oneShot) {
+                if (!q.awaitTermination(600000L)) { q.stop(); return 1 }
+                0
+              } else {
+                // Graceful shutdown on SIGINT/SIGTERM: stop the query so the
+                // in-flight micro-batch drains, then fall through to exit —
+                // the reference's interrupt handler (main.go:180-208). The
+                // hook deletes the checkpoint itself because the JVM halts
+                // as soon as the hooks finish.
+                val hook = new Thread(() => { q.stop(); FileUtils.deleteQuietly(ckpt) })
+                Runtime.getRuntime.addShutdownHook(hook)
+                q.awaitTermination()
+                try Runtime.getRuntime.removeShutdownHook(hook)
+                catch { case _: IllegalStateException => () } // already exiting
+                0
+              }
+            } finally FileUtils.deleteQuietly(ckpt)
         }
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    def session(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-        .appName("graft-tail")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    sys.exit(run(args, () => session(), System.out, System.err))
-  }
+  def main(args: Array[String]): Unit =
+    sys.exit(run(args, () => Harness.session(Harness.cpus(4)), System.out, System.err))
 }

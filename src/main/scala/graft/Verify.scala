@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,28 +9,18 @@ object Verify {
     // Optional query-name filter (local iteration); the driver passes
     // exactly (sfDir, outDir) and gets the full dump.
     val only = rest.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus(4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.isEmpty || only(name)) {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
         // Same per-query isolation as Bench: drop this query's eager
         // localCheckpoint blocks before the next one runs.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
+        Harness.isolate(spark)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{LlmOps, PipelineOps}
@@ -53,16 +53,7 @@ object BuildIndexes {
     val dir = args(0)
     val outDir = args(1)
     val measure = args.contains("--measure")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", outDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.cpus(32), Some(outDir))
     import spark.implicits._
 
     val docs = spark.read.parquet(s"$dir/documents.parquet").localCheckpoint(true)

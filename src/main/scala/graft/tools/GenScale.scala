@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: scale a driver testdata directory N× by unioning shifted
@@ -68,15 +68,8 @@ object GenScale {
     // (e.g. sf100 from the 100-copy sf10: copies 0-9, salt 1).
     val seedSalt = if (args.length > 5) args(5).toLong else 0L
     def want(n: String): Boolean = onlyTables.isEmpty || onlyTables(n)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Harness.cpus(16)
+    val spark = graft.Harness.session(cpus)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val S = 10000000L // key stride, far above every sf0.1 key range
@@ -98,7 +91,7 @@ object GenScale {
     // within each file.
     def write(name: String, df: DataFrame, sortKey: String): Unit = {
       if (!want(name)) { println(s"[genscale] $name: skipped (table filter)"); return }
-      df.repartitionByRange(cpus.toInt, col(sortKey))
+      df.repartitionByRange(cpus, col(sortKey))
         .sortWithinPartitions(sortKey)
         .write.mode("overwrite").parquet(s"$dst/$name.parquet")
       println(s"[genscale] $name: ${spark.read.parquet(s"$dst/$name.parquet").count()} rows")

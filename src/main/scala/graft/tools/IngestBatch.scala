@@ -207,16 +207,7 @@ object IngestBatch {
     val pos = args.filterNot(_.startsWith("--"))
     val indexDir = pos(0)
     if (compactMode) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-        .config("spark.sql.warehouse.dir", indexDir)
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = graft.Harness.session(graft.Harness.cpus(32), Some(indexDir))
       val rows = compactIndex(spark, indexDir)
       val line = s"""{"index_dir":"$indexDir",""" +
         s""""compacted":${rows.mkString("[", ",", "]")},""" +
@@ -246,16 +237,7 @@ object IngestBatch {
     val tag = (if (pos.length > 2) pos(2)
       else java.nio.file.Paths.get(batchDir).getFileName.toString)
       .toLowerCase.replaceAll("[^a-z0-9_]", "_")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", indexDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.cpus(32), Some(indexDir))
 
     // Base artifacts by path (the in-memory catalog died with the build
     // JVM; the parquet files ARE the artifact — reading them directly

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the sf100-MAGNITUDE rig for the decimal-overflow regime
@@ -46,15 +46,8 @@ object MagScale {
     val src = if (args.length > 0) args(0) else "/root/repo/data/sf10"
     val dst = if (args.length > 1) args(1) else "/root/repo/data/sf100mag"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Harness.cpus(16)
+    val spark = graft.Harness.session(cpus)
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
     def read(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
@@ -62,7 +55,7 @@ object MagScale {
     // natural key, sorted within files (the i18 lesson — random key
     // order defeats RLE, row-group stats and the sort's adaptivity).
     def write(name: String, df: DataFrame, sortKey: String): Unit = {
-      df.repartitionByRange(cpus.toInt, col(sortKey))
+      df.repartitionByRange(cpus, col(sortKey))
         .sortWithinPartitions(sortKey)
         .write.mode("overwrite").parquet(s"$dst/$name.parquet")
       println(s"[magscale] $name: ${spark.read.parquet(s"$dst/$name.parquet").count()} rows (scaled x$factor)")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.PipelineOps
@@ -33,15 +32,7 @@ object QuadProbe {
     val dir = args(0)
     val k = args(1).toInt
     val theta = if (args.length > 2) args(2).toDouble else 0.4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.cpus(32))
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val n = emb.count()
@@ -73,7 +64,7 @@ object QuadProbe {
         .write.format("noop").mode("overwrite").save()
     }
 
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    graft.Harness.isolate(spark)
     val tag = java.nio.file.Paths.get(dir).getFileName.toString
       .replaceAll("[^A-Za-z0-9._-]", "_")
     val line =

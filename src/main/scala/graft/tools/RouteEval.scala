@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.PipelineOps
@@ -49,15 +48,7 @@ object RouteEval {
     val pos = args.filterNot(_.startsWith("--"))
     val dir = pos(0)
     val ks = pos(1).split(",").map(_.trim.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.cpus(32))
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet").localCheckpoint(true)
     val n = emb.count()

@@ -1,5 +1,7 @@
 package org.apache.spark
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.storage.BlockId
 
 /** Driver-side probe for the block-manager state the bench harness keys
@@ -37,5 +39,5 @@ object GraftBlockProbe {
   def broadcastBlockCount(sc: SparkContext): Int =
     try sc.env.blockManager.master
       .getMatchingBlockIds(_.isBroadcast, askStorageEndpoints = false).size
-    catch { case _: Throwable => -1 }
+    catch { case NonFatal(_) => -1 }
 }

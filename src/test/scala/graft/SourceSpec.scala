@@ -85,4 +85,16 @@ class SourceSpec extends SparkTestBase {
     assert(back.filter(col("event_id").isNull).count() == 1,
       "the broken row carries null fields, and no exception is thrown")
   }
+
+  test("Tables.load replaces a rewritten table's cached relation") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-test-relcache").toString
+    Seq(1, 2).toDF("x").write.parquet(s"$root/t.parquet")
+    assert(Tables.load(spark, root, "t").count() == 2)
+    val entries = Tables.cachedRelations
+    Seq(3, 4, 5).toDF("x").write.mode("overwrite").parquet(s"$root/t.parquet")
+    assert(Tables.load(spark, root, "t").as[Int].collect().sorted.toSeq == Seq(3, 4, 5))
+    assert(Tables.cachedRelations == entries,
+      s"cache grew from $entries to ${Tables.cachedRelations} entries on a rewrite")
+  }
 }

@@ -3,21 +3,13 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM; sbt forks once). */
+/** Shared local session for all suites (one JVM; sbt forks once), at a
+  * fixed `local[4]` whatever `SPARK_GRAFT_CPUS` or `SPARK_GRAFT_MASTER`
+  * say.
+  */
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession =
+    Harness.session("local[4]", 4, Some("/tmp/graft-test-warehouse"))
 }
 
 trait SparkTestBase extends AnyFunSuite {

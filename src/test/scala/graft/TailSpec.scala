@@ -1,7 +1,9 @@
 package graft
 
 import java.io.{ByteArrayOutputStream, PrintStream}
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -91,6 +93,20 @@ class TailSpec extends SparkTestBase {
     assert(got.sorted == want.sorted)
     // Spot-check the template shape: short host id, timestamp, payload.
     assert(got.head.matches(".+ \\d{4}-\\d{2}-\\d{2} .+"))
+  }
+
+  test("a one-shot run leaves no checkpoint directory in the temp dir") {
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def ckpts(): Set[String] = {
+      val s = Files.list(tmp)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft-tail-ckpt")).toSet
+      finally s.close()
+    }
+    val before = ckpts()
+    val (code, out, _) = tail(nowAfterAllData, "-O", "-s", "20000d", streamRoot)
+    assert(code == 0 && out.nonEmpty)
+    assert((ckpts() -- before).isEmpty, s"left behind: ${ckpts() -- before}")
   }
 
   test("one-shot honors -start as the AT_TIMESTAMP offset") {
