@@ -3,13 +3,15 @@ package graft
 import java.io.PrintStream
 
 import org.apache.commons.io.FileUtils
+import org.apache.commons.lang3.exception.ExceptionUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.functions.Template
 import graft.operators.EnvelopeOps
 import graft.sources.ShardedEvents
+import graft.streaming.LocalCheckpointFileManager
 
 /** The user-facing tailer — the reference CLI (`main.go:62-135`) composed
   * from the engine's parts: flag parsing with the reference's exact
@@ -34,7 +36,8 @@ import graft.sources.ShardedEvents
   *     ignored offline (no AWS endpoint exists to point them at)
   *   - missing stream / extra positional → exit 2 (`main.go:117-129`)
   *   - unreadable stream (the reference's ListShards failure) → exit 1
-  *     (`main.go:153-156`)
+  *     (`main.go:153-156`); so does a stream whose query fails (a
+  *     malformed or truncated shard), with the cause on stderr
   *   - SIGINT during watch → graceful drain then exit (`main.go:180-208`),
   *     as a shutdown hook stopping the streaming query
   */
@@ -181,6 +184,11 @@ object Tail {
               return 1
             }
             val s = spark()
+            // Unless the session names a manager, the scratch checkpoint
+            // below gets the one that never forks a process.
+            if (s.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
+              s.conf.set(LocalCheckpointFileManager.ClassKey,
+                classOf[LocalCheckpointFileManager].getName)
             val rendered = EnvelopeOps.envelope(
               ShardedEvents.readStream(s, streamDir,
                 startTimestampUs = Some(startUs),
@@ -218,11 +226,16 @@ object Tail {
                 // as soon as the hooks finish.
                 val hook = new Thread(() => { q.stop(); FileUtils.deleteQuietly(ckpt) })
                 Runtime.getRuntime.addShutdownHook(hook)
-                q.awaitTermination()
-                try Runtime.getRuntime.removeShutdownHook(hook)
-                catch { case _: IllegalStateException => () } // already exiting
+                try q.awaitTermination()
+                finally
+                  try Runtime.getRuntime.removeShutdownHook(hook)
+                  catch { case _: IllegalStateException => () } // already exiting
                 0
               }
+            } catch {
+              case e: StreamingQueryException =>
+                err.println(s"Failed to read stream $streamDir: ${ExceptionUtils.getRootCauseMessage(e)}")
+                1
             } finally FileUtils.deleteQuietly(ckpt)
         }
     }

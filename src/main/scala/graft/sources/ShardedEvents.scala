@@ -107,14 +107,12 @@ object ShardedEvents {
       .sortBy(_.getName)
       .toSeq
 
-  /** Total record count of a shard (the service's "latest sequence"). */
-  private[sources] def shardEnd(root: String, shard: String): Long = {
+  /** Record count of one shard file. */
+  private[sources] def lineCount(f: File): Long = {
     var n = 0L
-    shardFiles(root, shard).foreach { f =>
-      val r = new BufferedReader(new FileReader(f))
-      try { while (r.readLine() != null) n += 1 }
-      finally r.close()
-    }
+    val r = new BufferedReader(new FileReader(f))
+    try { while (r.readLine() != null) n += 1 }
+    finally r.close()
     n
   }
 
@@ -285,8 +283,35 @@ class ShardedEventsStream(root: String, startUs: Long, maxPerTrigger: Option[Lon
   }
 
   private def allAvailable(): ShardOffsets =
-    ShardOffsets(ShardedEvents.listShards(root)
-      .map(s => s -> ShardedEvents.shardEnd(root, s)).toMap)
+    ShardOffsets(shardEnds(ShardedEvents.listShards(root)))
+
+  // Line counts per shard file as (length, mtime, lines): a trigger counts
+  // only the files that changed since the last one, not the whole stream.
+  private val lineCounts = scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
+
+  /** Each shard's record count (the service's "latest sequence"). Files
+    * no longer listed leave the cache.
+    */
+  private def shardEnds(shards: Seq[String]): Map[String, Long] = synchronized {
+    val listed = scala.collection.mutable.Set.empty[String]
+    val ends = shards.map { shard =>
+      shard -> ShardedEvents.shardFiles(root, shard).map { f =>
+        val (key, len, mtime) = (f.getPath, f.length(), f.lastModified())
+        listed += key
+        lineCounts.get(key) match {
+          case Some((`len`, `mtime`, n)) => n
+          case _ =>
+            val n = ShardedEvents.lineCount(f)
+            lineCounts(key) = (len, mtime, n)
+            n
+        }
+      }.sum
+    }.toMap
+    lineCounts.filterInPlace((k, _) => listed(k))
+    ends
+  }
+
+  private[graft] def cachedLineCounts: Int = synchronized(lineCounts.size)
 
   override def initialOffset(): Offset =
     ShardOffsets(ShardedEvents.listShards(root)
@@ -310,11 +335,13 @@ class ShardedEventsStream(root: String, startUs: Long, maxPerTrigger: Option[Lon
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startPos = start.asInstanceOf[ShardOffsets].positions
     val target = availableNowTarget
-    val next = ShardedEvents.listShards(root).map { shard =>
+    val shards = ShardedEvents.listShards(root)
+    lazy val ends = shardEnds(shards)
+    val next = shards.map { shard =>
       val from = startPos.getOrElse(shard, initialPositionOf(shard))
       val end = target match {
         case Some(t) => t.positions.getOrElse(shard, from)
-        case None => ShardedEvents.shardEnd(root, shard)
+        case None => ends(shard)
       }
       val capped = limit match {
         case m: ReadMaxRows => math.min(end, from + m.maxRows())
@@ -361,7 +388,11 @@ class ShardSliceReader(slice: ShardSlice) extends PartitionReader[InternalRow] {
   override def next(): Boolean = {
     while (pos < slice.until) {
       val line = readLine()
-      if (line == null) return false // fewer lines than promised: stop
+      // The offset was committed past the files' end: emitting fewer rows
+      // would advance the stream over records never delivered.
+      if (line == null) throw new IllegalStateException(
+        s"shard ${slice.shard} holds $pos lines, fewer than its slice " +
+          s"[${slice.from}, ${slice.until}) needs")
       if (pos >= slice.from) {
         current = ShardedEvents.parse(slice.shard, line)
         pos += 1

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -20,8 +21,18 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 object Replay {
   private val counter = new AtomicInteger(0)
 
-  private def ckpt(): String =
-    Files.createTempDirectory("graft-ckpt").toString
+  /** Start a query on a fresh checkpoint dir, hand it to `use`, then
+    * stop it and delete the dir: a replay never resumes, so nothing in
+    * the dir outlives the query.
+    */
+  private def withQuery[A](start: String => StreamingQuery)(use: StreamingQuery => A): A = {
+    val dir = Files.createTempDirectory("graft-ckpt").toFile
+    try {
+      val q = start(dir.toString)
+      try use(q)
+      finally { q.stop(); q.awaitTermination() }
+    } finally FileUtils.deleteQuietly(dir)
+  }
 
   /** Run `logic` over `data` replayed in `chunks` micro-batches; return
     * the final content of the memory sink table.
@@ -31,12 +42,10 @@ object Replay {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[T]
     val name = s"replay_${counter.incrementAndGet()}"
-    val q = logic(ms.toDS()).writeStream
+    withQuery(dir => logic(ms.toDS()).writeStream
       .format("memory").queryName(name).outputMode(mode)
-      .option("checkpointLocation", ckpt())
-      .start()
-    feed(ms, q, data, chunks)
-    q.stop(); q.awaitTermination()
+      .option("checkpointLocation", dir)
+      .start())(feed(ms, _, data, chunks))
     spark.table(name)
   }
 
@@ -49,18 +58,17 @@ object Replay {
       implicit enc: Encoder[T]): Unit = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[T]
-    val q = logic(ms.toDS()).writeStream
+    withQuery(dir => logic(ms.toDS()).writeStream
       .outputMode(mode)
-      .option("checkpointLocation", ckpt())
+      .option("checkpointLocation", dir)
       .foreachBatch(onBatch)
-      .start()
-    feed(ms, q, data, chunks)
-    q.stop(); q.awaitTermination()
+      .start())(feed(ms, _, data, chunks))
   }
 
   /** One-shot drain (the reference's `--one-shot`, `main.go:89-92`):
     * all data is present up front; `Trigger.AvailableNow` processes it in
-    * bounded micro-batches and terminates the query by itself.
+    * bounded micro-batches and terminates the query by itself; one still
+    * running after two minutes is stopped and reported as an error.
     */
   def runOneShot[T](spark: SparkSession, data: Seq[T], mode: OutputMode)(
       logic: Dataset[T] => DataFrame)(implicit enc: Encoder[T]): (StreamingQuery, DataFrame) = {
@@ -68,12 +76,15 @@ object Replay {
     val ms = MemoryStream[T]
     ms.addData(data)
     val name = s"oneshot_${counter.incrementAndGet()}"
-    val q = logic(ms.toDS()).writeStream
+    val q = withQuery(dir => logic(ms.toDS()).writeStream
       .format("memory").queryName(name).outputMode(mode)
-      .option("checkpointLocation", ckpt())
+      .option("checkpointLocation", dir)
       .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000L)
+      .start()) { q =>
+      if (!q.awaitTermination(120000L))
+        throw new IllegalStateException(s"one-shot replay $name did not terminate in 120 s")
+      q
+    }
     (q, spark.table(name))
   }
 

@@ -1,15 +1,18 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.StreamingOps
-import graft.sources.ShardedEvents
+import graft.sources.{ShardOffsets, ShardSlice, ShardSliceReader, ShardedEvents, ShardedEventsStream}
+import graft.streaming.LocalCheckpointFileManager
 
 /** The DSv2 `sharded-events` micro-batch source — the reference's native
   * identity (sharded resumable tail, reference `main.go:148-172,295-396`)
@@ -112,20 +115,24 @@ class ShardedSourceSpec extends SparkTestBase {
     assert(want.size < batchDF.count(), "start offset must actually skip rows")
   }
 
-  test("kill + restart resumes from checkpointed sequence numbers, no loss/dup") {
+  /** Drain half the stream into `ckpt` on `session`, let the stream
+    * grow, drain again on the same checkpoint: no record may be lost,
+    * redelivered or reordered.
+    */
+  private def killAndRestart(session: SparkSession, ckpt: String): Unit = {
+    val batchDF = Tables.load(session, dir, "events")
     // Deterministic two-phase tail: phase 1 dumps only the first half of
     // event time; the full dump then EXTENDS each shard's file with the
     // same prefix (same shard routing, same (ts, event_id) order), which
     // is exactly an append-only stream observed at two instants.
     val root2 = tmp("graft-shards2")
-    val ckpt = tmp("ckpt")
     val cutUs = batchDF
       .select(expr("percentile_approx(unix_micros(ts), 0.5, 100)"))
       .head().getLong(0)
     val phase1 = batchDF.filter(unix_micros(col("ts")) < cutUs)
     ShardedEvents.dump(phase1, root2, 4)
     val run1 = ArrayBuffer.empty[(Long, String, Long, Long)]
-    drain(ShardedEvents.readStream(spark, root2), ckpt, run1)
+    drain(ShardedEvents.readStream(session, root2), ckpt, run1)
     assert(run1.size.toLong == phase1.count())
 
     // The stream grows; a NEW query on the SAME checkpoint must resume
@@ -134,7 +141,7 @@ class ShardedSourceSpec extends SparkTestBase {
     // AT_TIMESTAMP.
     ShardedEvents.dump(batchDF, root2, 4)
     val run2 = ArrayBuffer.empty[(Long, String, Long, Long)]
-    drain(ShardedEvents.readStream(spark, root2), ckpt, run2)
+    drain(ShardedEvents.readStream(session, root2), ckpt, run2)
 
     val ids1 = run1.map(_._4)
     val ids2 = run2.map(_._4)
@@ -148,6 +155,25 @@ class ShardedSourceSpec extends SparkTestBase {
       assert(seqs == (0L until seqs.size.toLong),
         s"shard $shard lost order across restart: ${seqs.take(10)}...")
     }
+  }
+
+  test("kill + restart resumes from checkpointed sequence numbers, no loss/dup") {
+    killAndRestart(spark, tmp("ckpt"))
+  }
+
+  test("kill + restart through LocalCheckpointFileManager: no loss/dup") {
+    val session = spark.newSession()
+    session.conf.set(LocalCheckpointFileManager.ClassKey,
+      classOf[LocalCheckpointFileManager].getName)
+    val ckpt = tmp("ckpt")
+    killAndRestart(session, ckpt)
+    // Spark's default manager writes a .crc beside every metadata file on
+    // the local file system; this one writes none.
+    val files = Files.walk(Paths.get(ckpt))
+    val names = try files.iterator().asScala.map(_.getFileName.toString).toSeq
+      finally files.close()
+    assert(names.contains("offsets") && names.contains("commits"))
+    assert(!names.exists(_.endsWith(".crc")), s"written by another manager: $names")
   }
 
   test("h1 tumbling twin runs green on the sharded source") {
@@ -363,5 +389,42 @@ class ShardedSourceSpec extends SparkTestBase {
     drain(ShardedEvents.readStream(spark, root12), tmp("ckpt"), got)
     assert(got.map(_._2).distinct.size == dirs.size, "every page of shards must be read")
     assert(got.size == batchDF.count())
+  }
+
+  /** Shard lines in the dump layout for the given sequence numbers (ids
+    * and timestamps follow the sequence number).
+    */
+  private def lines(seqs: Range): java.util.List[String] =
+    seqs.map(i => s"$i\t${100 + i}\t${1000L * (i + 1)}\t7\tclick\t1.0\t\\N").asJava
+
+  test("a slice longer than its shard's files fails instead of ending early") {
+    val r = tmp("graft-shards-short")
+    val shard = Files.createDirectories(Paths.get(r, "shard_id=s1"))
+    Files.write(shard.resolve("part-00000.txt"), lines(0 until 3))
+    val reader = new ShardSliceReader(ShardSlice(r, "s1", 0L, 5L))
+    try {
+      assert((1 to 3).forall(_ => reader.next()))
+      val e = intercept[IllegalStateException](reader.next())
+      for (part <- Seq("s1", "[0, 5)", "3 lines"))
+        assert(e.getMessage.contains(part), e.getMessage)
+    } finally reader.close()
+  }
+
+  test("latestOffset counts lines appended to a part file and a new part file") {
+    val r = tmp("graft-shards-grow")
+    val shard = Files.createDirectories(Paths.get(r, "shard_id=s1"))
+    val part0 = shard.resolve("part-00000.txt")
+    Files.write(part0, lines(0 until 3))
+    val stream = new ShardedEventsStream(r, Long.MinValue, None)
+    def end(): Long = stream.latestOffset(stream.initialOffset(), ReadLimit.allAvailable())
+      .asInstanceOf[ShardOffsets].positions("s1")
+    assert(end() == 3L)
+    Files.write(part0, lines(3 until 5), StandardOpenOption.APPEND)
+    Files.write(shard.resolve("part-00001.txt"), lines(5 until 8))
+    assert(end() == 8L)
+    assert(stream.cachedLineCounts == 2)
+    Files.delete(part0)
+    assert(end() == 3L)
+    assert(stream.cachedLineCounts == 1, "a file no longer listed must leave the cache")
   }
 }

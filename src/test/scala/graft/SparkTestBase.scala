@@ -15,6 +15,16 @@ object SparkTestBase {
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
 
+  /** Names of the entries in `java.io.tmpdir` that start with `prefix`. */
+  def tempEntries(prefix: String): Set[String] = {
+    val s = java.nio.file.Files.list(
+      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith(prefix)).toSet
+    } finally s.close()
+  }
+
   /** Order-insensitive row comparison on stringified cells. */
   def rowSet(df: DataFrame): Set[Seq[String]] =
     df.collect().map(_.toSeq.map(String.valueOf)).map(_.toSeq).toSet

@@ -285,6 +285,17 @@ class StreamingSpec extends SparkTestBase {
     assert(table.count() == eventSeq.size)
   }
 
+  test("Replay deletes each query's checkpoint dir once the query stops") {
+    val before = tempEntries("graft-ckpt")
+    val logic = (ds: Dataset[Event]) => ds.toDF().select(col("event_id"))
+    assert(Replay.run(spark, eventSeq, 3, OutputMode.Append())(logic).count() == eventSeq.size)
+    Replay.runForeach(spark, eventSeq, 3, OutputMode.Append())(logic)((_, _) => ())
+    val (q, _) = Replay.runOneShot(spark, eventSeq, OutputMode.Append())(logic)
+    assert(!q.isActive)
+    val left = tempEntries("graft-ckpt") -- before
+    assert(left.isEmpty, s"left behind: $left")
+  }
+
   test("h8 stream-stream interval join == batch") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
