@@ -1,10 +1,17 @@
 package graft
 
-import java.io.PrintStream
+import java.io.{ByteArrayOutputStream, DataOutputStream, PrintStream}
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.concurrent.ExecutionContext
 
 import org.apache.commons.io.FileUtils
 import org.apache.commons.lang3.exception.ExceptionUtils
+import org.apache.spark.FutureAction
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
@@ -199,17 +206,17 @@ object Tail {
             // removed once the query has stopped, on every exit path.
             val ckpt = java.nio.file.Files.createTempDirectory("graft-tail-ckpt").toFile
             // stdout IS the sink (the reference's funnel, main.go:288-292),
-            // but drained through toLocalIterator so the driver holds ONE
-            // partition (= one shard's batch slice, ≤ the per-pull record
-            // limit) at a time — a collect() would materialize the whole
-            // micro-batch at once: 10M rows at 1000 shards × full pulls
-            // (VERDICT r13 #4). Partition-by-partition iteration keeps the
-            // same output order collect() had: shards in partition order,
-            // each shard's records in sequence order.
+            // drained by drainOrdered: the micro-batch's pieces render in
+            // parallel, but the driver holds at most two windows of
+            // 2 × defaultParallelism pieces' lines at a time — a collect()
+            // would materialize the whole micro-batch at once: 10M rows at
+            // 1000 shards × full pulls (VERDICT r13 #4). Lines print in the
+            // order collect() has: shards in partition order, each shard's
+            // records in sequence order.
             val writer = rendered.writeStream
               .option("checkpointLocation", ckpt.toString)
               .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-                batch.toLocalIterator().forEachRemaining(r => out.println(r.getString(0)))
+                drainOrdered(batch.queryExecution.toRdd, out)
                 out.flush()
               }
             try {
@@ -239,6 +246,85 @@ object Tail {
             } finally FileUtils.deleteQuietly(ckpt)
         }
     }
+  }
+
+  /** One partition's rows of a single string column as one block: per
+    * row, its UTF-8 length (-1 for null) and its bytes.
+    */
+  private val renderBlock: Iterator[InternalRow] => Array[Byte] = rows => {
+    val bytes = new ByteArrayOutputStream(1 << 16)
+    val data = new DataOutputStream(bytes)
+    rows.foreach { r =>
+      if (r.isNullAt(0)) data.writeInt(-1)
+      else {
+        val s = r.getUTF8String(0)
+        data.writeInt(s.numBytes())
+        s.writeTo(data)
+      }
+    }
+    data.flush()
+    bytes.toByteArray
+  }
+
+  private def printBlock(block: Array[Byte], out: PrintStream): Unit = {
+    val b = ByteBuffer.wrap(block)
+    while (b.hasRemaining) {
+      val len = b.getInt()
+      if (len < 0) out.println(null: String)
+      else {
+        out.println(new String(block, b.position(), len, UTF_8))
+        b.position(b.position() + len)
+      }
+    }
+  }
+
+  /** Prints every row of `rows` (one string column) to `out`, one
+    * `println` per row, in partition order — the order `collect()` has —
+    * while the partitions run in parallel. Partitions go out as jobs of
+    * `2 × defaultParallelism` (a window), two windows at a time: window
+    * `w + 2` is submitted once window `w` is printed, so the driver never
+    * holds more than two windows of rendered blocks. A failed job or an
+    * interrupt cancels the jobs still running and rethrows. Returns the
+    * most blocks held at once.
+    */
+  private[graft] def drainOrdered(rows: RDD[InternalRow], out: PrintStream): Int = {
+    val sc = rows.sparkContext
+    val n = rows.getNumPartitions
+    val window = 2 * sc.defaultParallelism
+    val slots = new Array[Array[Byte]](n)
+    val jobs = new Array[FutureAction[Unit]]((n + window - 1) / window)
+    var held, peak = 0
+    def submit(w: Int): Unit = if (w < jobs.length) {
+      val lo = w * window
+      val job = sc.submitJob(rows, renderBlock, lo until math.min(n, lo + window),
+        (k: Int, block: Array[Byte]) => slots.synchronized {
+          slots(lo + k) = block
+          held += 1
+          peak = math.max(peak, held)
+          slots.notifyAll()
+        }, ())
+      job.onComplete(_ => slots.synchronized(slots.notifyAll()))(ExecutionContext.parasitic)
+      jobs(w) = job
+    }
+    try {
+      submit(0)
+      submit(1)
+      for (i <- 0 until n) {
+        val block = slots.synchronized {
+          while (slots(i) == null) {
+            jobs(i / window).value.foreach(_.get) // a failed job rethrows here
+            slots.wait()
+          }
+          val b = slots(i)
+          slots(i) = null
+          held -= 1
+          b
+        }
+        printBlock(block, out)
+        if ((i + 1) % window == 0) submit((i + 1) / window + 1)
+      }
+      peak
+    } finally jobs.foreach(j => if (j != null && !j.isCompleted) j.cancel())
   }
 
   def main(args: Array[String]): Unit =

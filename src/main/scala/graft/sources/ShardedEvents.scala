@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.io.{BufferedReader, File, FileReader}
+import java.io.{ByteArrayOutputStream, Closeable, File, FileInputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -30,9 +31,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     (a reshard) are picked up — strictly more than the reference, which
   *     lists once at startup.
   *   - **per-shard ordered read** (`main.go:295-396`, one goroutine per
-  *     shard advancing `NextShardIterator` sequentially): one
-  *     [[InputPartition]] per shard per micro-batch, whose reader walks the
-  *     shard's files/lines strictly in sequence order.
+  *     shard advancing `NextShardIterator` sequentially): each shard's
+  *     slice of a micro-batch is cut into contiguous pieces, one
+  *     [[InputPartition]] each, in shard-then-sequence order; a piece's
+  *     reader seeks to the nearest indexed line and walks the shard's
+  *     files/lines strictly in sequence order.
   *   - **sequence-number offsets** (`main.go:362`, `latestSequenceNumber`):
   *     a stream offset is the map shard → next line position. Spark's
   *     offset log persists it per micro-batch, so a killed query restarted
@@ -52,10 +55,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * connector jar exists; SURVEY §7 H6). The listing layer is the only
   * thing a real-service binding would replace; the offset/order/resume
   * semantics proved by `ShardedSourceSpec` are the part that matters.
-  * Scale note: one shard = one input partition = one task, the same
-  * parallelism contract as the reference's goroutine-per-shard — a
-  * 1000-shard stream fans out to 1000 tasks, and no stage ever holds more
-  * than one shard's micro-batch slice in memory.
+  * Scale note: one shard maps to one or more contiguous pieces, one task
+  * each — the reference's goroutine-per-shard, split further so a hot
+  * shard's pull is not one task. A piece holds
+  * `ceil(rows / (8 × defaultParallelism))` lines of the micro-batch, and
+  * never fewer than one index stride (1,024 lines), so a 1000-shard
+  * stream fans out to at least 1000 tasks and no task holds more than
+  * one piece in memory. Lines end in `\n` only, as [[dump]] and Spark's
+  * text writer write them.
   */
 object ShardedEvents {
   val SHORT_NAME = "sharded-events"
@@ -107,13 +114,71 @@ object ShardedEvents {
       .sortBy(_.getName)
       .toSeq
 
-  /** Record count of one shard file. */
-  private[sources] def lineCount(f: File): Long = {
-    var n = 0L
-    val r = new BufferedReader(new FileReader(f))
-    try { while (r.readLine() != null) n += 1 }
-    finally r.close()
-    n
+  /** Lines between two index points of a shard file. */
+  private[sources] val IndexStride = 1024
+
+  /** A shard file's line count and the byte offset of lines 0, 1024,
+    * 2048, … (every [[IndexStride]]-th line).
+    */
+  private[sources] final case class LineIndex(lines: Long, offsets: Array[Long])
+
+  /** One pass over `f` counting `\n` bytes; a last line without one
+    * still counts, as [[LineReader]] returns it.
+    */
+  private[sources] def indexLines(f: File): LineIndex = {
+    val offsets = Array.newBuilder[Long]
+    offsets += 0L
+    val buf = new Array[Byte](1 << 16)
+    var lines = 0L
+    var at = 0L
+    var last: Byte = '\n'
+    val in = new FileInputStream(f)
+    try {
+      var len = in.read(buf)
+      while (len > 0) {
+        var i = 0
+        while (i < len) {
+          if (buf(i) == '\n') {
+            lines += 1
+            if (lines % IndexStride == 0) offsets += at + i + 1
+          }
+          i += 1
+        }
+        last = buf(len - 1)
+        at += len
+        len = in.read(buf)
+      }
+    } finally in.close()
+    LineIndex(if (last == '\n') lines else lines + 1, offsets.result())
+  }
+
+  /** Rows of a micro-batch per piece: enough pieces for eight per core,
+    * but never fewer rows than one index stride.
+    */
+  private[sources] def pieceRows(rows: Long, parallelism: Int): Long =
+    math.max(IndexStride.toLong, (rows + 8L * parallelism - 1) / (8L * parallelism))
+
+  /** `[from, until)` of a shard cut into near-equal pieces of at most
+    * `size` lines, each starting from its nearest index point in `files`
+    * (the shard's files in order).
+    */
+  private[sources] def pieces(root: String, shard: String, files: Seq[LineIndex],
+      from: Long, until: Long, size: Long): Seq[ShardSlice] = {
+    val n = (until - from + size - 1) / size
+    (0L until n).map { j =>
+      val a = from + (until - from) * j / n
+      val b = from + (until - from) * (j + 1) / n
+      var f = 0
+      var first = 0L
+      while (f < files.size && first + files(f).lines <= a) { first += files(f).lines; f += 1 }
+      // Past the files' end the reader starts at line 0 and reports
+      // the shortfall.
+      if (f == files.size) ShardSlice(root, shard, a, b)
+      else {
+        val k = ((a - first) / IndexStride).toInt
+        ShardSlice(root, shard, a, b, f, files(f).offsets(k), first + k.toLong * IndexStride)
+      }
+    }
   }
 
   /** First position with record ts >= startUs — the `AT_TIMESTAMP`
@@ -125,13 +190,13 @@ object ShardedEvents {
     if (startUs == Long.MinValue) return 0L
     var pos = 0L
     shardFiles(root, shard).foreach { f =>
-      val r = new BufferedReader(new FileReader(f))
+      val r = new LineReader(f, 0L)
       try {
-        var line = r.readLine()
+        var line = r.next(keep = true)
         while (line != null) {
           if (tsUsOf(line) >= startUs) return pos
           pos += 1
-          line = r.readLine()
+          line = r.next(keep = true)
         }
       } finally r.close()
     }
@@ -223,8 +288,13 @@ object ShardOffsets {
       .map(m => m.group(1) -> m.group(2).toLong).toMap)
 }
 
-/** One shard's slice of a micro-batch: lines [from, until). */
-case class ShardSlice(root: String, shard: String, from: Long, until: Long)
+/** One piece of a shard's slice of a micro-batch: lines [from, until).
+  * The reader starts at byte `offset` of the shard's `file`-th file,
+  * which is where line `line` (an index point at or before `from`)
+  * begins.
+  */
+case class ShardSlice(root: String, shard: String, from: Long, until: Long,
+    file: Int = 0, offset: Long = 0L, line: Long = 0L)
   extends InputPartition
 
 /** The V2 provider — registered as `sharded-events` via
@@ -285,33 +355,39 @@ class ShardedEventsStream(root: String, startUs: Long, maxPerTrigger: Option[Lon
   private def allAvailable(): ShardOffsets =
     ShardOffsets(shardEnds(ShardedEvents.listShards(root)))
 
-  // Line counts per shard file as (length, mtime, lines): a trigger counts
-  // only the files that changed since the last one, not the whole stream.
-  private val lineCounts = scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
+  // Line indexes per shard file as (length, mtime, index): a trigger
+  // indexes only the files that changed since the last one, not the
+  // whole stream.
+  private val lineIndexes =
+    scala.collection.mutable.Map.empty[String, (Long, Long, ShardedEvents.LineIndex)]
+
+  /** A shard's files with their line indexes, in file order. */
+  private def shardIndex(shard: String): Seq[(String, ShardedEvents.LineIndex)] = synchronized {
+    ShardedEvents.shardFiles(root, shard).map { f =>
+      val (key, len, mtime) = (f.getPath, f.length(), f.lastModified())
+      key -> (lineIndexes.get(key) match {
+        case Some((`len`, `mtime`, ix)) => ix
+        case _ =>
+          val ix = ShardedEvents.indexLines(f)
+          lineIndexes(key) = (len, mtime, ix)
+          ix
+      })
+    }
+  }
 
   /** Each shard's record count (the service's "latest sequence"). Files
     * no longer listed leave the cache.
     */
   private def shardEnds(shards: Seq[String]): Map[String, Long] = synchronized {
-    val listed = scala.collection.mutable.Set.empty[String]
-    val ends = shards.map { shard =>
-      shard -> ShardedEvents.shardFiles(root, shard).map { f =>
-        val (key, len, mtime) = (f.getPath, f.length(), f.lastModified())
-        listed += key
-        lineCounts.get(key) match {
-          case Some((`len`, `mtime`, n)) => n
-          case _ =>
-            val n = ShardedEvents.lineCount(f)
-            lineCounts(key) = (len, mtime, n)
-            n
-        }
-      }.sum
-    }.toMap
-    lineCounts.filterInPlace((k, _) => listed(k))
-    ends
+    val files = shards.map(shard => shard -> shardIndex(shard))
+    val listed = files.flatMap(_._2.map(_._1)).toSet
+    lineIndexes.filterInPlace((k, _) => listed(k))
+    files.map { case (shard, ixs) => shard -> ixs.map(_._2.lines).sum }.toMap
   }
 
-  private[graft] def cachedLineCounts: Int = synchronized(lineCounts.size)
+  private[graft] def cachedLineCounts: Int = synchronized(lineIndexes.size)
+
+  private lazy val parallelism = SparkSession.active.sparkContext.defaultParallelism
 
   override def initialOffset(): Offset =
     ShardOffsets(ShardedEvents.listShards(root)
@@ -330,7 +406,9 @@ class ShardedEventsStream(root: String, startUs: Long, maxPerTrigger: Option[Lon
   /** Advance each shard from its committed position toward the shard end,
     * capped per shard by the read limit — the GetRecords pull
     * (`main.go:218,300-327`): `Limit` bounds one pull, and a shard first
-    * seen mid-query starts at its AT_TIMESTAMP position.
+    * seen mid-query starts at its AT_TIMESTAMP position. A shard that
+    * holds fewer records than its committed position fails the query:
+    * skipping it would hide the loss.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startPos = start.asInstanceOf[ShardOffsets].positions
@@ -342,6 +420,10 @@ class ShardedEventsStream(root: String, startUs: Long, maxPerTrigger: Option[Lon
       val end = target match {
         case Some(t) => t.positions.getOrElse(shard, from)
         case None => ends(shard)
+      }
+      startPos.get(shard).foreach { committed =>
+        if (end < committed) throw new IllegalStateException(
+          s"shard $shard holds $end records, fewer than its committed offset $committed")
       }
       val capped = limit match {
         case m: ReadMaxRows => math.min(end, from + m.maxRows())
@@ -358,9 +440,13 @@ class ShardedEventsStream(root: String, startUs: Long, maxPerTrigger: Option[Lon
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[ShardOffsets].positions
     val e = end.asInstanceOf[ShardOffsets].positions
-    e.toSeq.sorted.flatMap { case (shard, until) =>
+    val slices = e.toSeq.sorted.flatMap { case (shard, until) =>
       val from = s.getOrElse(shard, initialPositionOf(shard))
-      if (until > from) Some(ShardSlice(root, shard, from, until)) else None
+      if (until > from) Some((shard, from, until)) else None
+    }
+    val size = ShardedEvents.pieceRows(slices.map(x => x._3 - x._2).sum, parallelism)
+    slices.flatMap { case (shard, from, until) =>
+      ShardedEvents.pieces(root, shard, shardIndex(shard).map(_._2), from, until, size)
     }.toArray
   }
 
@@ -376,41 +462,39 @@ class ShardedEventsReaderFactory extends PartitionReaderFactory {
     new ShardSliceReader(partition.asInstanceOf[ShardSlice])
 }
 
-/** Sequential reader over one shard's [from, until) lines — per-shard
-  * order is the file order, exactly one reader per shard per batch.
+/** Sequential reader over one piece's [from, until) lines — per-shard
+  * order is the file order. It seeks to the piece's index point and
+  * skips the lines before `from` without decoding them.
   */
 class ShardSliceReader(slice: ShardSlice) extends PartitionReader[InternalRow] {
-  private val files = ShardedEvents.shardFiles(slice.root, slice.shard).iterator
-  private var reader: BufferedReader = _
-  private var pos = 0L
+  private val files =
+    ShardedEvents.shardFiles(slice.root, slice.shard).drop(slice.file).iterator
+  private var reader: LineReader = _
+  private var offset = slice.offset
+  private var pos = slice.line
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    while (pos < slice.until) {
-      val line = readLine()
-      // The offset was committed past the files' end: emitting fewer rows
-      // would advance the stream over records never delivered.
-      if (line == null) throw new IllegalStateException(
-        s"shard ${slice.shard} holds $pos lines, fewer than its slice " +
-          s"[${slice.from}, ${slice.until}) needs")
-      if (pos >= slice.from) {
-        current = ShardedEvents.parse(slice.shard, line)
-        pos += 1
-        return true
-      }
-      pos += 1
-    }
-    false
+    while (pos < slice.from) { line(keep = false); pos += 1 }
+    if (pos >= slice.until) return false
+    current = ShardedEvents.parse(slice.shard, line(keep = true))
+    pos += 1
+    true
   }
 
-  private def readLine(): String = {
+  private def line(keep: Boolean): String = {
     while (true) {
       if (reader == null) {
-        if (!files.hasNext) return null
-        reader = new BufferedReader(new FileReader(files.next()))
+        // The offset was committed past the files' end: emitting fewer
+        // rows would advance the stream over records never delivered.
+        if (!files.hasNext) throw new IllegalStateException(
+          s"shard ${slice.shard} holds $pos lines, fewer than its slice " +
+            s"[${slice.from}, ${slice.until}) needs")
+        reader = new LineReader(files.next(), offset)
+        offset = 0L
       }
-      val line = reader.readLine()
-      if (line != null) return line
+      val l = reader.next(keep)
+      if (l != null) return l
       reader.close()
       reader = null
     }
@@ -419,4 +503,47 @@ class ShardSliceReader(slice: ShardSlice) extends PartitionReader[InternalRow] {
 
   override def get(): InternalRow = current
   override def close(): Unit = if (reader != null) reader.close()
+}
+
+/** `\n`-terminated UTF-8 lines of `f` from byte `offset` on; a last line
+  * without `\n` is returned too. A bare `\r` is data, not a terminator.
+  */
+private[sources] final class LineReader(f: File, offset: Long) extends Closeable {
+  private val in = new FileInputStream(f)
+  in.getChannel.position(offset)
+  private val buf = new Array[Byte](1 << 16)
+  private var pos = 0
+  private var lim = 0
+  private val spill = new ByteArrayOutputStream()
+
+  /** The next line without its `\n` (`""` when `keep` is false), or null
+    * at the end of the file.
+    */
+  def next(keep: Boolean): String = {
+    spill.reset()
+    var any = false
+    while (true) {
+      if (pos == lim) {
+        lim = math.max(in.read(buf), 0)
+        pos = 0
+        if (lim == 0) return if (!any) null else if (keep) spill.toString(UTF_8) else ""
+      }
+      any = true
+      var i = pos
+      while (i < lim && buf(i) != '\n') i += 1
+      if (i < lim) {
+        val s =
+          if (!keep) ""
+          else if (spill.size() == 0) new String(buf, pos, i - pos, UTF_8)
+          else { spill.write(buf, pos, i - pos); spill.toString(UTF_8) }
+        pos = i + 1
+        return s
+      }
+      if (keep) spill.write(buf, pos, lim - pos)
+      pos = lim
+    }
+    null // unreachable
+  }
+
+  override def close(): Unit = in.close()
 }

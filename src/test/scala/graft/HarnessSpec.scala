@@ -9,17 +9,28 @@ import scala.jdk.CollectionConverters._
   */
 class HarnessSpec extends SparkTestBase {
 
-  test("no file in src/main builds a SparkSession outside Harness") {
+  /** Sources under src/main/scala, other than `except`, that contain `needle`. */
+  private def sitesOf(needle: String, except: String = ""): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
     val s = Files.walk(root)
-    val sites =
-      try s.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Harness.scala")
-        .filter(p => Files.readString(p).contains("SparkSession.builder"))
-        .map(root.relativize(_).toString).toList.sorted
-      finally s.close()
+    try s.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != except)
+      .filter(p => Files.readString(p).contains(needle))
+      .map(root.relativize(_).toString).toList.sorted
+    finally s.close()
+  }
+
+  test("no file in src/main builds a SparkSession outside Harness") {
+    val sites = sitesOf("SparkSession.builder", except = "Harness.scala")
     assert(sites.isEmpty, s"SparkSession.builder outside Harness.scala: ${sites.mkString(", ")}")
+  }
+
+  test("no file in src/main drains serially through toLocalIterator") {
+    // One job per partition, one after another: Tail.drainOrdered's
+    // parallel, ordered drain replaced it.
+    val sites = sitesOf("toLocalIterator")
+    assert(sites.isEmpty, s"toLocalIterator in: ${sites.mkString(", ")}")
   }
 
   test("isolate unpersists a localCheckpoint's RDD") {

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.operators.StreamingOps
 import graft.sources.{ShardOffsets, ShardSlice, ShardSliceReader, ShardedEvents, ShardedEventsStream}
@@ -426,5 +426,94 @@ class ShardedSourceSpec extends SparkTestBase {
     Files.delete(part0)
     assert(end() == 3L)
     assert(stream.cachedLineCounts == 1, "a file no longer listed must leave the cache")
+  }
+
+  /** Seq numbers a reader over `slice` returns. */
+  private def seqsOf(slice: ShardSlice): Seq[Long] = {
+    val reader = new ShardSliceReader(slice)
+    try Iterator.continually(reader.next()).takeWhile(identity).map(_ => reader.get().getLong(1)).toList
+    finally reader.close()
+  }
+
+  test("a shard truncated below its committed offset fails the restarted query") {
+    val r = tmp("graft-shards-shrink")
+    val shard = Files.createDirectories(Paths.get(r, "shard_id=s1"))
+    val part = shard.resolve("part-00000.txt")
+    Files.write(part, lines(0 until 10))
+    val ckpt = tmp("ckpt")
+    val run1 = ArrayBuffer.empty[(Long, String, Long, Long)]
+    drain(ShardedEvents.readStream(spark, r), ckpt, run1)
+    assert(run1.size == 10)
+    Files.write(part, lines(0 until 4))
+    val e = intercept[StreamingQueryException](
+      drain(ShardedEvents.readStream(spark, r), ckpt, ArrayBuffer.empty))
+    val msg = org.apache.commons.lang3.exception.ExceptionUtils.getRootCauseMessage(e)
+    for (part <- Seq("shard s1", "4 records", "committed offset 10"))
+      assert(msg.contains(part), msg)
+  }
+
+  test("pieces tile each shard's slice in shard-then-sequence order and read their own lines") {
+    val r = tmp("graft-shards-pieces")
+    val s1 = Files.createDirectories(Paths.get(r, "shard_id=s1"))
+    Files.write(s1.resolve("part-00000.txt"), lines(0 until 1500))
+    Files.write(s1.resolve("part-00001.txt"), lines(1500 until 4100))
+    val s2 = Files.createDirectories(Paths.get(r, "shard_id=s2"))
+    Files.write(s2.resolve("part-00000.txt"), lines(0 until 3000))
+    val stream = new ShardedEventsStream(r, Long.MinValue, None)
+    val (start, end) = (Map("s1" -> 100L, "s2" -> 0L), Map("s1" -> 4000L, "s2" -> 2999L))
+    val slices = stream.planInputPartitions(ShardOffsets(start), ShardOffsets(end))
+      .map(_.asInstanceOf[ShardSlice]).toSeq
+    assert(slices.map(_.shard).distinct == Seq("s1", "s2"))
+    assert(slices.map(_.shard) == slices.map(_.shard).sorted, "shard-then-sequence order")
+    for ((shard, ps) <- slices.groupBy(_.shard)) {
+      assert(ps.size > 1, s"shard $shard must be cut into pieces: $ps")
+      assert(ps.head.from == start(shard) && ps.last.until == end(shard))
+      ps.zip(ps.tail).foreach { case (a, b) => assert(a.until == b.from, s"gap or overlap: $a $b") }
+      ps.foreach { p =>
+        assert(p.line <= p.from && p.from - p.line < 1024, s"not the nearest index point: $p")
+        assert(seqsOf(p) == (p.from until p.until), s"piece $p read other lines")
+      }
+    }
+    val s1p = slices.filter(_.shard == "s1")
+    assert(s1p.exists(p => p.from < 1500 && p.until > 1500), s"no piece spans the two files: $s1p")
+    assert(s1p.exists(p => p.file == 1 && p.offset > 0 && p.line < p.from),
+      s"no piece seeks into the second file and starts past its index point: $s1p")
+  }
+
+  test("a piece starting between index points and one spanning two files read their own lines") {
+    val r = tmp("graft-shards-seek")
+    val shard = Files.createDirectories(Paths.get(r, "shard_id=s1"))
+    Files.write(shard.resolve("part-00000.txt"), lines(0 until 1500))
+    Files.write(shard.resolve("part-00001.txt"), lines(1500 until 4100))
+    val stream = new ShardedEventsStream(r, Long.MinValue, None)
+    def plan(from: Long, until: Long): ShardSlice = {
+      val ps = stream.planInputPartitions(ShardOffsets(Map("s1" -> from)),
+        ShardOffsets(Map("s1" -> until))).map(_.asInstanceOf[ShardSlice])
+      assert(ps.length == 1, ps.toSeq)
+      ps.head
+    }
+    val mid = plan(1500 + 1030, 1500 + 1100) // 6 lines past the second file's index point 1024
+    assert(mid.file == 1 && mid.line == 1500 + 1024 && mid.offset > 0, mid)
+    assert(seqsOf(mid) == (mid.from until mid.until))
+    val span = plan(1400, 1600)
+    assert(span.file == 0 && span.line == 1024, span)
+    assert(seqsOf(span) == (1400L until 1600L))
+  }
+
+  test("appending to a part file rebuilds that file's index") {
+    val r = tmp("graft-shards-reindex")
+    val shard = Files.createDirectories(Paths.get(r, "shard_id=s1"))
+    val part = shard.resolve("part-00000.txt")
+    Files.write(part, lines(0 until 1500))
+    val stream = new ShardedEventsStream(r, Long.MinValue, None)
+    def plan(from: Long, until: Long): Seq[ShardSlice] =
+      stream.planInputPartitions(ShardOffsets(Map("s1" -> from)),
+        ShardOffsets(Map("s1" -> until))).map(_.asInstanceOf[ShardSlice]).toSeq
+    assert(plan(0, 1500).map(_.line).toSet == Set(0L)) // indexes the 1,500-line file
+    Files.write(part, lines(1500 until 3500), StandardOpenOption.APPEND)
+    val Seq(p) = plan(2500, 3400)
+    val want = lines(0 until 2048).asScala.map(_.getBytes("UTF-8").length + 1L).sum
+    assert(p.line == 2048L && p.offset == want, p)
+    assert(seqsOf(p) == (2500L until 3400L))
   }
 }
