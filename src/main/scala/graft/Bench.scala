@@ -22,12 +22,6 @@ object Bench {
   // objects as every other tool (ADVICE r18 — the flat r17 key layout
   // was the one remaining artifact-shape exception).
   def main(args: Array[String]): Unit = {
-    // Raw jiffies bracket for the promote gate (VERDICT r19 ask #1): the
-    // gate needs the WINDOW's steal fraction, which only a start/end
-    // counter diff can give — captured before the start stamp's own disk
-    // probes so their cost sits inside the bracketed window like
-    // everything else the draw pays for.
-    val (stealStart, totalStart) = HealthStamp.cpuJiffies()
     val healthStart = HealthStamp.json()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session(Harness.cpus(4))
@@ -71,45 +65,32 @@ object Bench {
       .mkString("{", ",", "}")
     val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    val (stealEnd, totalEnd) = HealthStamp.cpuJiffies()
     val healthEnd = HealthStamp.json()
+    // The window verdict is a pure function of the two stamps. Each reads
+    // its jiffies before its disk probes, so the start stamp's probes sit
+    // inside the window like everything else the draw pays for.
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val (stampStart, stampEnd) = (mapper.readTree(healthStart), mapper.readTree(healthEnd))
+    val verdicts = tools.ClassifyWindow.classify(stampStart, stampEnd)
+    val stealFrac = tools.ClassifyWindow.stealFrac(stampStart, stampEnd)
+      .fold(-1.0)(f => math.rint(f * 10000) / 10000)
     val loadJson =
-      s""""health_start":$healthStart,"health_end":$healthEnd"""
-    // PROMOTE gate (VERDICT r19 ask #1): a promote request must survive
-    // the two checks a point-in-time stamp cannot fake — the window's
-    // steal fraction and a fresh sustained-write floor — or carry an
-    // explicit --force with the readings recorded. Draw C (r19, 496.4 s
-    // with unremarkable stamps) is the episode this mechanizes away.
+      s""""health_start":$healthStart,"health_end":$healthEnd,""" +
+        s""""window_verdict":${mapper.writeValueAsString(tools.ClassifyWindow.windowVerdict(verdicts))},""" +
+        s""""steal_frac":$stealFrac"""
+    // PROMOTE gate (VERDICT r19 ask #1): a promote request is refused
+    // when the window implicates a gated mechanism
+    // ([[tools.ClassifyWindow.PromoteGate]]), unless --force records the
+    // verdicts and promotes anyway.
     val promoteRequested = args.contains("--promote") ||
       sys.env.get("SPARK_GRAFT_PROMOTE").contains("1")
     val force = args.contains("--force")
-    val gateSustained = if (promoteRequested) HealthStamp.writeSustainedMbps() else -1.0
-    // The draw's bracketing cold-read figures, pulled from the stamps
-    // already taken (min of whichever ends were measurable; -1 abstains).
-    val gateColdRead = {
-      def coldOf(stamp: String): Double =
-        try {
-          val v = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(stamp).get("cold_read_mbps").asDouble(-1.0)
-          v
-        } catch { case NonFatal(_) => -1.0 }
-      val vs = Seq(coldOf(healthStart), coldOf(healthEnd)).filter(_ >= 0)
-      if (vs.isEmpty) -1.0 else vs.min
-    }
     val violations =
-      if (promoteRequested)
-        HealthStamp.promoteViolations(stealStart, totalStart, stealEnd, totalEnd,
-          gateSustained, gateColdRead)
-      else Seq.empty
+      if (promoteRequested) tools.ClassifyWindow.promoteRefusals(verdicts).map(_.line) else Seq.empty
     val promote = promoteRequested && (violations.isEmpty || force)
-    val stealFrac =
-      if (totalEnd > totalStart && stealStart >= 0)
-        math.rint((stealEnd - stealStart).toDouble / (totalEnd - totalStart) * 10000) / 10000
-      else -1.0
     val gateJson =
       if (promoteRequested)
-        s""","promote_gate":{"steal_frac":$stealFrac,"write_sustained_mbps":$gateSustained,"cold_read_min_mbps":$gateColdRead,""" +
-          s""""violations":${violations.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+        s""","promote_gate":{"violations":${violations.map(mapper.writeValueAsString).mkString("[", ",", "]")},""" +
           s""""forced":${force && violations.nonEmpty},"promoted":$promote}"""
       else ""
     if (promoteRequested && violations.nonEmpty) {

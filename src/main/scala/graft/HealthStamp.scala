@@ -17,9 +17,9 @@ import scala.util.control.NonFatal
   * stamps it the same way, making an unadjudicatable artifact (like the
   * r17 `BENCH_sf1_r17.json`) structurally impossible.
   *
-  * Healthy-draw gate used by the round ritual: all three loadavg fields
-  * < 3, `other_spark_jvms` == 0, `fault_us_per_page` < 5 at BOTH ends
-  * of the run.
+  * This object only measures. What a pair of stamps says about the
+  * window, and which verdicts refuse a promote, is decided in one place:
+  * [[graft.tools.ClassifyWindow]].
   */
 object HealthStamp {
 
@@ -36,13 +36,6 @@ object HealthStamp {
       finally f.close()
     } catch { case NonFatal(_) => "[]" }
 
-  /** Count of OTHER live JVMs on the box that look like Spark/sbt work
-    * (commandline mentions spark or sbt) — >0 at either stamp means the
-    * draw shared the machine and its envelope is suspect. The run's own
-    * ancestor chain (the sbt launcher that forked this JVM) is
-    * excluded, so an sbt-launched idle draw reads 0, not a constant
-    * false 1.
-    */
   /** The calling process plus up to 15 ancestors (the sbt/shell chain
     * that forked this JVM). Factored out so the spec can assert the
     * exclusion DIRECTLY (ADVICE r18: the prior test's `>= 0` on a count
@@ -62,6 +55,13 @@ object HealthStamp {
       p.info().commandLine().map[Boolean](c =>
         c.contains("spark") || c.contains("sbt")).orElse(false)
 
+  /** Count of OTHER live JVMs on the box that look like Spark/sbt work
+    * (commandline mentions spark or sbt) — >0 at either stamp means the
+    * draw shared the machine and its envelope is suspect. The run's own
+    * ancestor chain (the sbt launcher that forked this JVM) is
+    * excluded, so an sbt-launched idle draw reads 0, not a constant
+    * false 1.
+    */
   def otherSparkJvms(): Long = {
     val ancestors = ancestorPids()
     import scala.jdk.CollectionConverters._
@@ -89,8 +89,8 @@ object HealthStamp {
     * of every page, so the fault cost lands inside the timer, at the
     * price of a higher healthy baseline than the bare ~0.25 µs fault
     * floor: measured ~1.9–2.3 µs/page idle on this box (alloc + 64 MiB
-    * zero + accessor loop). Still well under the 5 µs/page gate, and
-    * the r17 episode read 60–1300.
+    * zero + accessor loop). Still well under `ClassifyWindow`'s
+    * contamination gate, and the r17 episode read 60–1300.
     */
   def faultUsPerPage(): Double = {
     val bytes = 64 * 1024 * 1024
@@ -128,20 +128,6 @@ object HealthStamp {
       } finally f.close()
     } catch { case NonFatal(_) => -1L }
 
-  /** Cold-file first-touch read rate in MB/s (VERDICT r18 ask #2's
-    * second probe; -1 when the O_DIRECT path is unavailable). The r18
-    * episode's big-scan tail hydrated evicted files at ~10 MB/s while
-    * warm re-reads ran ~5 GB/s — a gap only a read that BYPASSES the
-    * guest cache can see. The probe keeps a small pool of 10 MB files
-    * under /tmp/graft_coldprobe (created once, fsync'd); each stamp
-    * reads the LEAST-RECENTLY-read one through `O_DIRECT`
-    * (`ExtendedOpenOption.DIRECT` — no guest page-cache hit possible),
-    * times the full sweep, then touches the file's mtime so successive
-    * stamps rotate through the pool. Files age between stamps, so by
-    * the time one is re-read the host has had the same opportunity to
-    * evict it as the real parquet working set. Healthy figure on this
-    * box: several hundred MB/s+; the r18 episode would read ~10.
-    */
   /** Runs `body` holding the probe directory's advisory lock, retrying
     * briefly; returns the failure sentinel instead when another process
     * holds it. Two concurrent stamps (a HealthProbe watcher running
@@ -150,9 +136,10 @@ object HealthStamp {
     * and both bump the cold-read pool's mtimes mid-read (ADVICE r19). A
     * sentinel from a collided stamp is honest — the artifact reader sees
     * "this reading was unavailable", never a number measured against a
-    * concurrently-thrashed file.
+    * concurrently-thrashed file. `body` gets the probe directory; a
+    * non-fatal failure inside it also yields the sentinel.
     */
-  private def withProbeLock[A](sentinel: A)(body: => A): A =
+  private def withProbeLock[A](sentinel: A)(body: java.nio.file.Path => A): A =
     try {
       val dir = java.nio.file.Paths.get("/tmp/graft_coldprobe")
       java.nio.file.Files.createDirectories(dir)
@@ -171,109 +158,77 @@ object HealthStamp {
           if (lock == null) { Thread.sleep(100); tries += 1 }
         }
         if (lock == null) sentinel
-        else try body finally lock.release()
+        else try body(dir) finally lock.release()
       } finally ch.close()
     } catch { case NonFatal(_) => sentinel }
 
-  def coldReadMbps(): Double = withProbeLock(-1.0) {
-    try {
-      val dir = java.nio.file.Paths.get("/tmp/graft_coldprobe")
-      java.nio.file.Files.createDirectories(dir)
-      val poolSize = 6
-      val fileBytes = 10 * 1024 * 1024
-      val files = (0 until poolSize).map(i => dir.resolve(f"probe_$i%02d.bin"))
-      files.foreach { p =>
-        if (!java.nio.file.Files.exists(p) ||
-            java.nio.file.Files.size(p) != fileBytes.toLong) {
-          val ch = java.nio.channels.FileChannel.open(p,
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.WRITE,
-            java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
-          try {
-            // Non-constant content so no storage layer can dedup/compress
-            // the probe into an unrepresentatively-fast read.
-            val buf = java.nio.ByteBuffer.allocate(1 << 20)
-            var written = 0L
-            val rnd = new java.util.Random(0x5DEECE66DL + p.hashCode())
-            while (written < fileBytes) {
-              buf.clear(); rnd.nextBytes(buf.array()); buf.limit(buf.capacity())
-              written += ch.write(buf)
-            }
-            ch.force(true)
-          } finally ch.close()
-        }
-      }
-      val target = files.minBy(p => java.nio.file.Files.getLastModifiedTime(p).toMillis)
-      val align = 4096
-      val raw = java.nio.ByteBuffer.allocateDirect((1 << 20) + align)
-      val buf = raw.alignedSlice(align)
-      val ch = java.nio.channels.FileChannel.open(target,
-        java.nio.file.StandardOpenOption.READ,
-        com.sun.nio.file.ExtendedOpenOption.DIRECT)
-      val t0 = System.nanoTime()
-      try {
-        var total = 0L
-        var n = 0
-        while ({ buf.clear(); n = ch.read(buf); n > 0 }) total += n
-        val sec = (System.nanoTime() - t0) / 1e9
-        java.nio.file.Files.setLastModifiedTime(target,
-          java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-        math.rint(total / 1e6 / sec * 10) / 10
-      } finally ch.close()
-    } catch { case NonFatal(_) => -1.0 }
-  }
-
-  /** Durable-write rate in MB/s (-1 on failure): 32 MB written and
-    * `force(true)`'d to the probe directory, timed end-to-end. The
-    * THIRD environmental mechanism, caught in the r19 session: the
-    * host's write path intermittently throttles to ~14–16 MB/s
-    * (healthy: ~500 MB/s, measured minutes apart on the same box),
-    * which lands exactly on shuffle-heavy joins — every wide Exchange
-    * writes its map outputs to local disk, so a throttled write path
-    * inflates the big-join tail while scans and allocation-bound
-    * queries read normally. Neither the fault probe (anon memory) nor
-    * the O_DIRECT read probe can see it; this one makes the mechanism
-    * a mechanical read of any stamped artifact.
+  /** Cold-file first-touch read rate in MB/s (VERDICT r18 ask #2's
+    * second probe; -1 when the O_DIRECT path is unavailable). The r18
+    * episode's big-scan tail hydrated evicted files at ~10 MB/s while
+    * warm re-reads ran ~5 GB/s — a gap only a read that BYPASSES the
+    * guest cache can see. The probe keeps a small pool of 10 MB files
+    * under /tmp/graft_coldprobe (created once, fsync'd); each stamp
+    * reads the LEAST-RECENTLY-read one through `O_DIRECT`
+    * (`ExtendedOpenOption.DIRECT` — no guest page-cache hit possible),
+    * times the full sweep, then touches the file's mtime so successive
+    * stamps rotate through the pool. Files age between stamps, so by
+    * the time one is re-read the host has had the same opportunity to
+    * evict it as the real parquet working set. Healthy figure on this
+    * box: several hundred MB/s+; the r18 episode would read ~10.
     */
-  def writeMbps(): Double = withProbeLock(-1.0) {
-    try {
-      val dir = java.nio.file.Paths.get("/tmp/graft_coldprobe")
-      java.nio.file.Files.createDirectories(dir)
-      // Per-process filename (ADVICE r19): two concurrent JVMs must not
-      // truncate each other's in-flight probe file even if one slips
-      // past the advisory lock (e.g. a pre-r20 build on the same box).
-      val p = dir.resolve(s"writeprobe_${ProcessHandle.current().pid()}.bin")
-      val bytes = 32 * 1024 * 1024
-      val data = new Array[Byte](1 << 20)
-      new java.util.Random(0x57A7E5EEDL).nextBytes(data)
-      val ch = java.nio.channels.FileChannel.open(p,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE,
-        java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
-      try {
-        val t0 = System.nanoTime()
-        var written = 0L
-        while (written < bytes) {
-          val b = java.nio.ByteBuffer.wrap(data)
-          while (b.hasRemaining) ch.write(b)
-          written += data.length
-        }
-        ch.force(true)
-        val sec = (System.nanoTime() - t0) / 1e9
-        math.rint(bytes / 1e6 / sec * 10) / 10
-      } finally {
-        ch.close()
-        java.nio.file.Files.deleteIfExists(p)
+  def coldReadMbps(): Double = withProbeLock(-1.0) { dir =>
+    val poolSize = 6
+    val fileBytes = 10 * 1024 * 1024
+    val files = (0 until poolSize).map(i => dir.resolve(f"probe_$i%02d.bin"))
+    files.foreach { p =>
+      if (!java.nio.file.Files.exists(p) ||
+          java.nio.file.Files.size(p) != fileBytes.toLong) {
+        val ch = java.nio.channels.FileChannel.open(p,
+          java.nio.file.StandardOpenOption.CREATE,
+          java.nio.file.StandardOpenOption.WRITE,
+          java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
+        try {
+          // Non-constant content so no storage layer can dedup/compress
+          // the probe into an unrepresentatively-fast read.
+          val buf = java.nio.ByteBuffer.allocate(1 << 20)
+          var written = 0L
+          val rnd = new java.util.Random(0x5DEECE66DL + p.hashCode())
+          while (written < fileBytes) {
+            buf.clear(); rnd.nextBytes(buf.array()); buf.limit(buf.capacity())
+            written += ch.write(buf)
+          }
+          ch.force(true)
+        } finally ch.close()
       }
-    } catch { case NonFatal(_) => -1.0 }
+    }
+    val target = files.minBy(p => java.nio.file.Files.getLastModifiedTime(p).toMillis)
+    val align = 4096
+    val raw = java.nio.ByteBuffer.allocateDirect((1 << 20) + align)
+    val buf = raw.alignedSlice(align)
+    val ch = java.nio.channels.FileChannel.open(target,
+      java.nio.file.StandardOpenOption.READ,
+      com.sun.nio.file.ExtendedOpenOption.DIRECT)
+    val t0 = System.nanoTime()
+    try {
+      var total = 0L
+      var n = 0
+      while ({ buf.clear(); n = ch.read(buf); n > 0 }) total += n
+      val sec = (System.nanoTime() - t0) / 1e9
+      java.nio.file.Files.setLastModifiedTime(target,
+        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
+      math.rint(total / 1e6 / sec * 10) / 10
+    } finally ch.close()
   }
 
   /** SUSTAINED durable-write floor in MB/s: the WORST per-chunk rate over
-    * up to 8 fsync'd 32 MB chunks (-1 on failure). The burst probe above
-    * cannot prove write health in the positive direction (VERDICT r19
-    * asks #1/#2): mechanism #3's throttle admits ~32 MB bursts at
-    * ~500 MB/s while 256 MB of sustained writes drain at 5–16 MB/s —
-    * exactly the shuffle-spill profile that inflated the r19 sf10 tail
+    * up to 8 fsync'd 32 MB chunks (-1 on failure). The THIRD
+    * environmental mechanism (r19): the host's write path throttles at
+    * times, which lands on shuffle-heavy joins — every wide Exchange
+    * writes its map outputs to local disk — while scans read normally.
+    * A single 32 MB burst cannot prove write health (VERDICT r19 asks
+    * #1/#2): the throttle admits ~32 MB bursts at ~500 MB/s while 256 MB
+    * of sustained writes drain at 5–16 MB/s — exactly the
+    * shuffle-spill profile that inflated the r19 sf10 tail
     * 7.1×. Chunked writes with a per-chunk fsync exhaust the burst
     * window, and the MIN chunk rate is the figure a wide Exchange
     * actually experiences. Cost-bounded: the loop stops once ~12 s have
@@ -283,62 +238,58 @@ object HealthStamp {
     * Healthy on this box: several hundred MB/s; mechanism #3 reads
     * single digits.
     */
-  def writeSustainedMbps(): Double = withProbeLock(-1.0) {
+  def writeSustainedMbps(): Double = withProbeLock(-1.0) { dir =>
+    val p = dir.resolve(s"writeprobe_${ProcessHandle.current().pid()}.bin")
+    val chunkBytes = 32 * 1024 * 1024
+    val maxChunks = 8
+    val budgetNs = 12L * 1000 * 1000 * 1000
+    val data = new Array[Byte](1 << 20)
+    new java.util.Random(0x5057A1EDL).nextBytes(data)
+    val ch = java.nio.channels.FileChannel.open(p,
+      java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.WRITE,
+      java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
     try {
-      val dir = java.nio.file.Paths.get("/tmp/graft_coldprobe")
-      java.nio.file.Files.createDirectories(dir)
-      val p = dir.resolve(s"writeprobe_${ProcessHandle.current().pid()}.bin")
-      val chunkBytes = 32 * 1024 * 1024
-      val maxChunks = 8
-      val budgetNs = 12L * 1000 * 1000 * 1000
-      val data = new Array[Byte](1 << 20)
-      new java.util.Random(0x5057A1EDL).nextBytes(data)
-      val ch = java.nio.channels.FileChannel.open(p,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE,
-        java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
-      try {
-        val start = System.nanoTime()
-        var minRate = Double.MaxValue
-        var chunk = 0
-        while (chunk < maxChunks && System.nanoTime() - start < budgetNs) {
-          val t0 = System.nanoTime()
-          var written = 0L
-          var aborted = false
-          // fsync every 4 MB inside the chunk so a mid-chunk budget stop
-          // still has durable progress to rate (the partial-chunk case).
-          while (!aborted && written < chunkBytes) {
-            var sub = 0
-            while (sub < 4 && written < chunkBytes) {
-              val b = java.nio.ByteBuffer.wrap(data)
-              while (b.hasRemaining) ch.write(b)
-              written += data.length
-              sub += 1
-            }
-            ch.force(true)
-            if (written < chunkBytes && System.nanoTime() - start >= budgetNs) {
-              // Budget exhausted mid-chunk: rate the durable partial
-              // (≥ 4 MB by construction — one sub-block always lands
-              // before the first budget check).
-              val sec = (System.nanoTime() - t0) / 1e9
-              minRate = math.min(minRate, written / 1e6 / sec)
-              aborted = true
-            }
+      val start = System.nanoTime()
+      var minRate = Double.MaxValue
+      var chunk = 0
+      while (chunk < maxChunks && System.nanoTime() - start < budgetNs) {
+        val t0 = System.nanoTime()
+        var written = 0L
+        var aborted = false
+        // fsync every 4 MB inside the chunk so a mid-chunk budget stop
+        // still has durable progress to rate (the partial-chunk case).
+        while (!aborted && written < chunkBytes) {
+          var sub = 0
+          while (sub < 4 && written < chunkBytes) {
+            val b = java.nio.ByteBuffer.wrap(data)
+            while (b.hasRemaining) ch.write(b)
+            written += data.length
+            sub += 1
           }
-          if (!aborted) {
+          ch.force(true)
+          if (written < chunkBytes && System.nanoTime() - start >= budgetNs) {
+            // Budget exhausted mid-chunk: rate the durable partial
+            // (≥ 4 MB by construction — one sub-block always lands
+            // before the first budget check).
             val sec = (System.nanoTime() - t0) / 1e9
-            minRate = math.min(minRate, chunkBytes / 1e6 / sec)
+            minRate = math.min(minRate, written / 1e6 / sec)
+            aborted = true
           }
-          ch.truncate(0); ch.position(0) // re-dirty the same extent each chunk
-          chunk += 1
         }
-        if (minRate == Double.MaxValue) -1.0
-        else math.rint(minRate * 10) / 10
-      } finally {
-        ch.close()
-        java.nio.file.Files.deleteIfExists(p)
+        if (!aborted) {
+          val sec = (System.nanoTime() - t0) / 1e9
+          minRate = math.min(minRate, chunkBytes / 1e6 / sec)
+        }
+        ch.truncate(0); ch.position(0) // re-dirty the same extent each chunk
+        chunk += 1
       }
-    } catch { case NonFatal(_) => -1.0 }
+      if (minRate == Double.MaxValue) -1.0
+      else math.rint(minRate * 10) / 10
+    } finally {
+      ch.close()
+      java.nio.file.Files.deleteIfExists(p)
+    }
   }
 
   /** Raw cumulative (steal, total) jiffies from `/proc/stat`'s
@@ -349,9 +300,9 @@ object HealthStamp {
     * which no point-in-time guest probe can see. Steal is a COUNTER,
     * so the stamp emits the raw cumulative values and a reader diffs
     * the start/end stamps: steal fraction over the measured window =
-    * Δsteal / Δtotal. Healthy: ~0; a draw with Δsteal/Δtotal ≳ 0.05
-    * was CPU-starved by the host regardless of what its other stamps
-    * say.
+    * Δsteal / Δtotal (`ClassifyWindow.stealFrac`). Healthy: ~0; past
+    * `ClassifyWindow`'s steal gate the draw was CPU-starved by the host
+    * regardless of what its other stamps say.
     */
   def cpuJiffies(): (Long, Long) =
     try {
@@ -376,43 +327,8 @@ object HealthStamp {
     s"""{"load":${loadavg()},"other_spark_jvms":${otherSparkJvms()},""" +
       s""""fault_us_per_page":${faultUsPerPage()},""" +
       s""""page_cache_mb":${pageCacheMb()},"cold_read_mbps":${coldReadMbps()},""" +
-      s""""write_mbps":${writeMbps()},""" +
       s""""write_sustained_mbps":${writeSustainedMbps()},""" +
       s""""cpu_steal_jiffies":$steal,"cpu_total_jiffies":$total}"""
   }
 
-  /** The mechanical promote gate (VERDICT r19 ask #1): given the draw's
-    * bracketing jiffies counters and a fresh sustained-write reading,
-    * returns the list of violations — empty means the window is
-    * promotable. Draw C (r19) proved a host-starved window can carry
-    * UNREMARKABLE point-in-time stamps, so the gate consumes the two
-    * dimensions a point stamp cannot fake: the steal fraction ACROSS the
-    * measured window (Δsteal/Δtotal ≥ 5% = the draw was CPU-starved) and
-    * the sustained min-chunk write floor (< 50 MB/s = mechanism #3 is
-    * active and every wide Exchange in the draw paid it). Sentinel
-    * counter values (-1: off-Linux or probe collision) make the gate
-    * abstain on that dimension rather than fabricate a verdict.
-    */
-  def promoteViolations(
-      stealStart: Long, totalStart: Long,
-      stealEnd: Long, totalEnd: Long,
-      writeSustained: Double,
-      coldReadMin: Double = -1.0): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    if (totalStart >= 0 && totalEnd > totalStart && stealStart >= 0 && stealEnd >= stealStart) {
-      val frac = (stealEnd - stealStart).toDouble / (totalEnd - totalStart)
-      if (frac >= 0.05)
-        out += f"cpu steal ${frac * 100}%.1f%% of the window (gate: < 5%%)"
-    }
-    if (writeSustained >= 0 && writeSustained < 50.0)
-      out += f"sustained write floor $writeSustained%.1f MB/s (gate: >= 50)"
-    // Third criterion, added after the r20 draw-A episode: a window can
-    // pass the steal and write gates while the READ path is degraded
-    // (mechanism #2 — draw A read cold at 48.5 MB/s and promoted a
-    // 476.5 s envelope, 1.7x the lineage). Gate at the classifier's
-    // own cache-reclaim threshold so the two tools tell one story.
-    if (coldReadMin >= 0 && coldReadMin < 100.0)
-      out += f"cold O_DIRECT read $coldReadMin%.1f MB/s (gate: >= 100)"
-    out.result()
-  }
 }

@@ -63,14 +63,15 @@ object Tables {
 
   private def loadFresh(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
-      // events.ts is parquet TIMESTAMP(NANOS). How Spark reads it differs
-      // across 4.x builds: some refuse a native read (PARQUET_TYPE_ILLEGAL)
-      // and need the legacy nanosAsLong conf to expose the raw int64;
-      // current 4.1.2 reads it natively as TIMESTAMP_NTZ truncated to µs
-      // (and silently ignores the legacy conf). GenScale-written copies
-      // store plain int64. Normalize ADAPTIVELY on the type actually read
-      // rather than assuming either behavior — both paths land on the same
-      // µs values DuckDB sees, as TimestampType.
+      // events.ts comes in more than one physical layout. The installed
+      // test data stores TIMESTAMP(MICROS, isAdjustedToUTC=false), which
+      // Spark 4.1.2 reads as TIMESTAMP_NTZ; a TIMESTAMP(NANOS) file reads
+      // as NTZ truncated to µs on 4.1.2, while some 4.x builds refuse it
+      // (PARQUET_TYPE_ILLEGAL) and need the legacy nanosAsLong conf to
+      // expose the raw int64; GenScale-written copies store plain int64
+      // nanos. Normalize ADAPTIVELY on the type actually read rather than
+      // assuming any one layout — every path lands on the same µs values
+      // DuckDB sees, as TimestampType.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       normalizeEventsTs(spark.read.parquet(s"$dir/$name.parquet"))
     } else spark.read.parquet(s"$dir/$name.parquet")
@@ -194,36 +195,17 @@ object Tables {
   def writePartitioned(df: DataFrame, path: String, cols: String*): Unit =
     df.write.partitionBy(cols: _*).mode("overwrite").parquet(path)
 
-  /** Events at-or-after `startMicros`, with the predicate applied to the
-    * NATIVE column the reader produced so it pushes down into the parquet
-    * scan (row-group/page skipping) — the engine form of the reference's
-    * server-side `AT_TIMESTAMP` start offset (reference `main.go:300-305`).
-    *   - int64 raw-nanos read: filter the raw long; a filter on the
-    *     converted timestamp could never reach the scan because
-    *     `timestamp_micros(ts div 1000)` is a derived expression. Exact
-    *     equivalence: `truncate_µs(ns) >= T  ⇔  ns >= T·1000`.
-    *   - TIMESTAMP_NTZ native read: filter with an NTZ literal at the same
-    *     micros (wall-clock == UTC instant, see normalizeEventsTs) — a bare
-    *     attribute predicate, pushable as-is. The reader already truncated
-    *     ns→µs, so `ts_µs >= T` is the same row set as the raw-ns form.
+  /** Events at-or-after `startMicros` — the engine form of the
+    * reference's server-side `AT_TIMESTAMP` start offset (reference
+    * `main.go:300-305`). One filter on the normalized `ts`, read through
+    * the relation cache; it still reaches the parquet scan
+    * (row-group/page skipping): on a native TIMESTAMP_NTZ read Spark
+    * unwraps the cast to TimestampType, and on a raw int64-nanos read
+    * [[graft.plans.NsTimestampPushdown]] rewrites it to `ns >= T·1000`.
     */
   def eventsSince(spark: SparkSession, dir: String, startMicros: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    val filtered = raw.schema("ts").dataType match {
-      case LongType =>
-        raw.filter(col("ts") >= startMicros * 1000L)
-      case TimestampNTZType =>
-        raw.filter(col("ts") >= lit(java.time.LocalDateTime.ofEpochSecond(
-          java.lang.Math.floorDiv(startMicros, 1000000L),
-          (java.lang.Math.floorMod(startMicros, 1000000L) * 1000L).toInt,
-          java.time.ZoneOffset.UTC)))
-      case _ =>
-        raw.filter(col("ts") >= timestamp_micros(lit(startMicros)))
-    }
-    normalizeEventsTs(filtered)
+    load(spark, dir, "events").filter(col("ts") >= timestamp_micros(lit(startMicros)))
   }
 
   def events(spark: SparkSession, dir: String): Dataset[Event] = {

@@ -50,11 +50,6 @@ import graft.streaming.LocalCheckpointFileManager
   */
 object Tail {
 
-  /** The reference CLI's exact default (`main.go:65`); `.Timestamp`
-    * renders as the engine's canonical timestamp string.
-    */
-  val DefaultTemplate: String = "{{.ShortHostId}} {{.Timestamp}} {{.LogEntry}}"
-
   def usage(w: PrintStream): Unit = w.print(
     s"""graft-tail [options] <stream-dir>
        |
@@ -79,7 +74,7 @@ object Tail {
        |  -h, --help               Show this usage information.
        |  -O, --one-shot           Display logs only once.
        |  -f, --format <template>  Format template for log entries.
-       |                           [$DefaultTemplate]
+       |                           [${Template.DefaultTemplate}]
        |  -s, --start <duration>   Start time, as a duration before now. [5m]
        |  -w, --watch <duration>   Watch/poll time. [10s]
        |  -r, --region <region>    Accepted for compatibility; unused offline.
@@ -118,7 +113,7 @@ object Tail {
   private case class Opts(
       help: Boolean = false,
       oneShot: Boolean = false,
-      format: String = DefaultTemplate,
+      format: String = Template.DefaultTemplate,
       start: String = "5m",
       watch: String = "10s",
       positional: List[String] = Nil)

@@ -407,13 +407,18 @@ class ShardedEventsStream(root: String, startUs: Long, maxPerTrigger: Option[Lon
     * capped per shard by the read limit — the GetRecords pull
     * (`main.go:218,300-327`): `Limit` bounds one pull, and a shard first
     * seen mid-query starts at its AT_TIMESTAMP position. A shard that
-    * holds fewer records than its committed position fails the query:
-    * skipping it would hide the loss.
+    * holds fewer records than its committed position, or is no longer
+    * listed at all, fails the query: skipping it would hide the loss.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startPos = start.asInstanceOf[ShardOffsets].positions
     val target = availableNowTarget
     val shards = ShardedEvents.listShards(root)
+    val listed = shards.toSet
+    startPos.find { case (shard, _) => !listed(shard) }.foreach { case (shard, committed) =>
+      throw new IllegalStateException(
+        s"shard $shard at committed offset $committed is no longer listed under $root")
+    }
     lazy val ends = shardEnds(shards)
     val next = shards.map { shard =>
       val from = startPos.getOrElse(shard, initialPositionOf(shard))

@@ -40,6 +40,28 @@ object ClassifyWindow {
     Option(n.get(field)).filter(_.canConvertToLong).map(_.asLong)
       .filter(_ != -1L)
 
+  /** The lower of whichever ends were measured, so a -1 sentinel at one
+    * end cannot hide a low reading at the other. None when neither end
+    * was measured.
+    */
+  private def worstMeasured(ends: (Option[Double], Option[Double])): Option[Double] =
+    (ends._1 ++ ends._2).minOption
+
+  private def pair(ends: (Option[Double], Option[Double])): String =
+    Seq(ends._1, ends._2).map(_.fold("n/a")(v => f"$v%.0f")).mkString(" -> ")
+
+  /** The window's CPU steal fraction, Δsteal/Δtotal between the two
+    * stamps' cumulative jiffies. None when a counter is missing (pre-r19-
+    * close artifact) or a sentinel, or the window is empty.
+    */
+  def stealFrac(start: JsonNode, end: JsonNode): Option[Double] =
+    (lng(start, "cpu_steal_jiffies"), lng(start, "cpu_total_jiffies"),
+      lng(end, "cpu_steal_jiffies"), lng(end, "cpu_total_jiffies")) match {
+      case (Some(s1), Some(t1), Some(s2), Some(t2)) if t2 > t1 && s2 >= s1 =>
+        Some((s2 - s1).toDouble / (t2 - t1))
+      case _ => None
+    }
+
   /** The decision table over a (start, end) stamp pair. Thresholds are
     * the documented gates: fault ≥ 5 µs/page contaminated / ≥ 1 above
     * the healthy re-anchor bar; cold read < 100 MB/s = hydration-bound;
@@ -66,31 +88,31 @@ object ClassifyWindow {
     }
 
     // #2 — page-cache reclaim / cold-read hydration (r18; healthy >= 100 MB/s)
-    both("cold_read_mbps") match {
-      case (Some(a), Some(b)) =>
-        val worst = math.min(a, b)
+    val cold = both("cold_read_mbps")
+    worstMeasured(cold) match {
+      case Some(worst) =>
         val cache = (lng(start, "page_cache_mb"), lng(end, "page_cache_mb")) match {
           case (Some(c1), Some(c2)) => f"; cache $c1%d -> $c2%d MB"
           case _ => ""
         }
         out += Verdict("cache-reclaim",
           if (worst < 100) "IMPLICATED" else "CLEAR",
-          f"cold read $a%.0f -> $b%.0f MB/s (gate < 100)$cache")
-      case _ =>
-        out += Verdict("cache-reclaim", "INCONCLUSIVE", "cold_read_mbps missing from a stamp")
+          s"cold read ${pair(cold)} MB/s (gate < 100)$cache")
+      case None =>
+        out += Verdict("cache-reclaim", "INCONCLUSIVE", "cold_read_mbps missing from both stamps")
     }
 
     // #3 — sustained-write throttling (r19; gate < 50 MB/s min-chunk).
     // Pre-r20 artifacts carry only the 32 MB burst figure, which rides
     // the throttle's burst window: a LOW burst still implicates, but a
     // healthy-looking burst proves nothing.
-    both("write_sustained_mbps") match {
-      case (Some(a), Some(b)) =>
-        val worst = math.min(a, b)
+    val sustained = both("write_sustained_mbps")
+    worstMeasured(sustained) match {
+      case Some(worst) =>
         out += Verdict("write-throttle",
           if (worst < 50) "IMPLICATED" else "CLEAR",
-          f"sustained min-chunk $a%.0f -> $b%.0f MB/s (gate < 50)")
-      case _ =>
+          s"sustained min-chunk ${pair(sustained)} MB/s (gate < 50)")
+      case None =>
         both("write_mbps") match {
           case (Some(a), Some(b)) if math.min(a, b) < 50 =>
             out += Verdict("write-throttle", "IMPLICATED",
@@ -104,14 +126,12 @@ object ClassifyWindow {
     }
 
     // #4 — CPU steal (r19 draw C; gate: window Δsteal/Δtotal >= 5%)
-    (lng(start, "cpu_steal_jiffies"), lng(start, "cpu_total_jiffies"),
-      lng(end, "cpu_steal_jiffies"), lng(end, "cpu_total_jiffies")) match {
-      case (Some(s1), Some(t1), Some(s2), Some(t2)) if t2 > t1 && s2 >= s1 =>
-        val frac = (s2 - s1).toDouble / (t2 - t1)
+    stealFrac(start, end) match {
+      case Some(frac) =>
         out += Verdict("cpu-steal",
           if (frac >= 0.05) "IMPLICATED" else "CLEAR",
           f"${frac * 100}%.1f%% of window jiffies stolen (gate >= 5%%)")
-      case _ =>
+      case None =>
         out += Verdict("cpu-steal", "INCONCLUSIVE",
           "steal counters missing (pre-r19-close artifact) or window empty")
     }
@@ -143,6 +163,27 @@ object ClassifyWindow {
     out.result()
   }
 
+  /** The mechanisms that refuse a `Bench --promote` (unless `--force`):
+    * window CPU steal (r19 draw C: 496 s behind healthy-looking point
+    * stamps), the sustained-write floor (r19 mechanism #3, paid by every
+    * wide Exchange) and the cold read path (r20 draw A: promoted at 1.7x
+    * the lineage with steal and writes clean). shared-box stays advisory:
+    * its start-stamp 1-min load still carries a ladder's previous draw
+    * (the gate-clean sf1 envelope starts at 8.13). So does fault latency,
+    * ELEVATED in every promoted envelope since r19 and never gated.
+    */
+  val PromoteGate: Set[String] = Set("cpu-steal", "write-throttle", "cache-reclaim")
+
+  /** The verdicts that refuse a promote: IMPLICATED on a gated mechanism. */
+  def promoteRefusals(vs: Seq[Verdict]): Seq[Verdict] =
+    vs.filter(v => v.status == "IMPLICATED" && PromoteGate(v.mechanism))
+
+  /** One-line summary over every mechanism, gated or not. */
+  def windowVerdict(vs: Seq[Verdict]): String = {
+    val bad = vs.filter(_.status == "IMPLICATED").map(_.mechanism)
+    if (bad.isEmpty) "no mechanism implicated" else s"CONTAMINATED by ${bad.mkString(", ")}"
+  }
+
   /** Pulls the health_start/health_end pair out of an artifact object
     * (every tool writes the nested r19+ shape). */
   def classifyArtifact(artifactJson: String): Either[String, Seq[Verdict]] = {
@@ -164,9 +205,7 @@ object ClassifyWindow {
         case Left(err) => println(s"  $err")
         case Right(vs) =>
           vs.foreach(v => println("  " + v.line))
-          val bad = vs.filter(_.status == "IMPLICATED").map(_.mechanism)
-          println(if (bad.isEmpty) "  window: no mechanism implicated"
-                  else s"  window: CONTAMINATED by ${bad.mkString(", ")}")
+          println(s"  window: ${windowVerdict(vs)}")
       }
     }
   }

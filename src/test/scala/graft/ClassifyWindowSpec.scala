@@ -5,9 +5,12 @@ import graft.tools.ClassifyWindow
 
 /** The four-mode window classifier is the BASELINE.md mechanism decision
   * table as code (VERDICT r19 ask #6) — artifacts from every round feed
-  * it, so both the r20 nine-field shape and the pre-r19-close shapes
-  * (no steal counters, no sustained-write field) must classify without
-  * fabricating verdicts for fields an artifact does not carry.
+  * it, so the current eight-field shape, the r20 nine-field shape (with
+  * the burst `write_mbps`) and the pre-r19-close shapes (no steal
+  * counters, no sustained-write field) must classify without
+  * fabricating verdicts for fields an artifact does not carry. Bench's
+  * promote gate reads the same verdicts, so its refuse/pass cases live
+  * here too.
   */
 class ClassifyWindowSpec extends AnyFunSuite {
 
@@ -100,6 +103,82 @@ class ClassifyWindowSpec extends AnyFunSuite {
     val sentinel = healthy.replace("\"cold_read_mbps\":250.0", "\"cold_read_mbps\":-1.0")
     val Right(v2) = ClassifyWindow.classifyArtifact(artifact(sentinel, sentinel)): @unchecked
     assert(status(v2, "cache-reclaim") == "INCONCLUSIVE")
+  }
+
+  /** A stamp carrying the readings the promote gate judges: the jiffies
+    * counters, the sustained-write floor and the cold read (-1 is the
+    * probes' sentinel). The other fields read healthy.
+    */
+  private def gateStamp(steal: Long, total: Long,
+      sustained: Double = 400.0, cold: Double = 250.0): String =
+    s"""{"load":[0.5,0.6,0.7],"other_spark_jvms":0,"fault_us_per_page":0.8,""" +
+      s""""page_cache_mb":6000,"cold_read_mbps":$cold,"write_sustained_mbps":$sustained,""" +
+      s""""cpu_steal_jiffies":$steal,"cpu_total_jiffies":$total}"""
+
+  /** The gated mechanisms a (start, end) pair refuses a promote on. */
+  private def refusals(start: String, end: String): Set[String] = {
+    val Right(vs) = ClassifyWindow.classifyArtifact(artifact(start, end)): @unchecked
+    ClassifyWindow.promoteRefusals(vs).map(_.mechanism).toSet
+  }
+
+  test("promote gate: steal and sustained-write cases") {
+    // 10% window steal refuses; so does a 12.5 MB/s sustained floor.
+    assert(refusals(gateStamp(100, 1000, 500.0), gateStamp(200, 2000, 500.0)) == Set("cpu-steal"))
+    assert(refusals(gateStamp(0, 1000), gateStamp(0, 2000, 12.5)) == Set("write-throttle"))
+    assert(refusals(gateStamp(0, 1000), gateStamp(100, 2000, 5.0)) ==
+      Set("cpu-steal", "write-throttle"))
+    // A healthy window promotes.
+    assert(refusals(gateStamp(10, 1000), gateStamp(11, 2000)).isEmpty)
+    // Boundaries: 5% steal refuses, 4.9% passes; 50 MB/s passes, 49.9 refuses.
+    assert(refusals(gateStamp(0, 0, 50.0), gateStamp(50, 1000, 50.0)) == Set("cpu-steal"))
+    assert(refusals(gateStamp(0, 0, 50.0), gateStamp(49, 1000, 50.0)).isEmpty)
+    assert(refusals(gateStamp(0, 1000, 49.9), gateStamp(0, 2000, 400.0)) == Set("write-throttle"))
+    // Sentinels abstain (off-Linux counters, collided probes), and an
+    // empty jiffies window neither divides by zero nor refuses.
+    assert(refusals(gateStamp(-1, -1, -1.0, -1.0), gateStamp(-1, -1, -1.0, -1.0)).isEmpty)
+    assert(refusals(gateStamp(0, 1000, -1.0), gateStamp(0, 1000, -1.0)).isEmpty)
+  }
+
+  test("promote gate: r20 draw-A cold read path refuses") {
+    // Draw A (r20): steal 3.2%, sustained 57 MB/s, both clean, but the
+    // window read cold at 48.5 -> 76.5 MB/s and promoted at 1.7x the
+    // lineage.
+    assert(refusals(gateStamp(0, 1000, 57.0, 48.5), gateStamp(32, 2000, 57.0, 76.5)) ==
+      Set("cache-reclaim"))
+    assert(refusals(gateStamp(0, 1000, cold = 100.0), gateStamp(0, 2000, cold = 100.0)).isEmpty)
+    assert(refusals(gateStamp(0, 1000, cold = 99.9), gateStamp(0, 2000, cold = 100.0)).nonEmpty)
+    assert(refusals(gateStamp(0, 1000, cold = -1.0), gateStamp(0, 2000, cold = -1.0)).isEmpty)
+  }
+
+  test("promote gate judges floors on the measured end") {
+    // A sentinel at one end must not hide a low reading at the other.
+    assert(refusals(gateStamp(0, 1000, cold = -1.0), gateStamp(0, 2000, cold = 48.5)) ==
+      Set("cache-reclaim"))
+    assert(refusals(gateStamp(0, 1000, sustained = 12.5), gateStamp(0, 2000, sustained = -1.0)) ==
+      Set("write-throttle"))
+    val Right(vs) = ClassifyWindow.classifyArtifact(
+      artifact(gateStamp(0, 1000, cold = -1.0), gateStamp(0, 2000, cold = 480.0))): @unchecked
+    assert(status(vs, "cache-reclaim") == "CLEAR")
+    assert(vs.find(_.mechanism == "cache-reclaim").get.detail.startsWith("cold read n/a -> 480 "))
+  }
+
+  test("promote gate passes the committed envelopes") {
+    // The sf1 envelope starts at 1-min load 8.13, left over from the
+    // ladder's previous draw: shared-box implicates, but it is not gated.
+    for (f <- Seq("BENCH_FULL_sf0.1.json", "BENCH_FULL_sf1.json")) {
+      val Right(vs) = ClassifyWindow.classifyArtifact(
+        java.nio.file.Files.readString(java.nio.file.Paths.get(f))): @unchecked
+      assert(ClassifyWindow.promoteRefusals(vs).isEmpty, s"$f: $vs")
+      if (f == "BENCH_FULL_sf1.json") assert(status(vs, "shared-box") == "IMPLICATED")
+    }
+  }
+
+  test("stealFrac is the window fraction; None on sentinels") {
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    def frac(a: String, b: String) = ClassifyWindow.stealFrac(m.readTree(a), m.readTree(b))
+    assert(frac(gateStamp(0, 0), gateStamp(50, 1000)) == Some(0.05))
+    assert(frac(gateStamp(-1, -1), gateStamp(-1, -1)).isEmpty)
+    assert(frac(gateStamp(0, 1000), gateStamp(0, 1000)).isEmpty, "empty window")
   }
 
   test("an artifact without stamps reports the missing pair, not a crash") {

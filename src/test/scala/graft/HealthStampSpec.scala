@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class HealthStampSpec extends AnyFunSuite {
 
-  test("json() is a parseable object with the nine stamp fields") {
+  test("json() is a parseable object with the eight stamp fields") {
     val s = HealthStamp.json()
     // Parse with the same strictness a python json.load applies, via
     // Spark's bundled Jackson (no extra dependency).
@@ -25,70 +25,21 @@ class HealthStampSpec extends AnyFunSuite {
     // cache occupancy and the O_DIRECT first-touch read rate.
     assert(m.has("page_cache_mb") && m.get("page_cache_mb").canConvertToLong)
     assert(m.has("cold_read_mbps") && m.get("cold_read_mbps").isNumber)
-    // The r19 third-mechanism probe: durable-write throughput (the
-    // shuffle spill path a throttled host write channel inflates).
-    assert(m.has("write_mbps") && m.get("write_mbps").isNumber)
     // The r20 sustained-write floor (VERDICT r19 ask #2): min-chunk rate
-    // over fsync'd 32 MB chunks — the figure a wide Exchange pays, which
-    // the burst write_mbps upper bound cannot prove in either direction.
+    // over fsync'd 32 MB chunks — the figure a wide Exchange pays. The
+    // 32 MB burst probe it replaced is gone from the stamp.
     assert(m.has("write_sustained_mbps") && m.get("write_sustained_mbps").isNumber)
+    assert(!m.has("write_mbps"))
     // The r19 fourth-dimension counters: cumulative steal/total jiffies
     // (readers diff two stamps for the window's steal fraction).
     assert(m.has("cpu_steal_jiffies") && m.get("cpu_steal_jiffies").canConvertToLong)
     assert(m.has("cpu_total_jiffies") && m.get("cpu_total_jiffies").canConvertToLong)
+    assert(m.size() == 8)
   }
 
   test("sustained write probe returns a positive min-chunk rate (or the -1 sentinel)") {
     val v = HealthStamp.writeSustainedMbps()
     assert(v == -1.0 || (v > 0.0 && v < 1e6))
-    // The sustained figure is a MIN over chunks that each include an
-    // fsync; it can never exceed physics, and on the same box it should
-    // not wildly exceed the single-burst figure (allow generous noise —
-    // the burst may land in a throttled moment the sustained window
-    // escapes; this asserts order-of-magnitude sanity, not a ranking).
-    val burst = HealthStamp.writeMbps()
-    if (v > 0 && burst > 0) assert(v < burst * 100)
-  }
-
-  test("promote gate refuses steal >= 5% of the window and sustained write < 50 MB/s") {
-    // Violations fire (VERDICT r19 ask #1's two dimensions):
-    val starved = HealthStamp.promoteViolations(100, 1000, 200, 2000, writeSustained = 500.0)
-    assert(starved.size == 1 && starved.head.contains("steal"),
-      s"10% window steal must refuse: $starved")
-    val throttled = HealthStamp.promoteViolations(0, 1000, 0, 2000, writeSustained = 12.5)
-    assert(throttled.size == 1 && throttled.head.contains("sustained"),
-      s"12.5 MB/s floor must refuse: $throttled")
-    val both = HealthStamp.promoteViolations(0, 1000, 100, 2000, writeSustained = 5.0)
-    assert(both.size == 2)
-    // A healthy window promotes:
-    assert(HealthStamp.promoteViolations(10, 1000, 11, 2000, writeSustained = 400.0).isEmpty)
-    // Boundary: exactly 5% steal refuses (>= gate), 50 MB/s passes (< gate):
-    assert(HealthStamp.promoteViolations(0, 0, 50, 1000, writeSustained = 50.0)
-      .count(_.contains("steal")) == 1)
-    assert(HealthStamp.promoteViolations(0, 0, 49, 1000, writeSustained = 50.0).isEmpty)
-    // Sentinels abstain instead of fabricating a verdict (off-Linux
-    // counters, collided probe):
-    assert(HealthStamp.promoteViolations(-1, -1, -1, -1, writeSustained = -1.0).isEmpty)
-    assert(HealthStamp.promoteViolations(0, 1000, 0, 1000, writeSustained = -1.0).isEmpty,
-      "an empty jiffies window must not divide by zero or refuse")
-  }
-
-  test("promote gate third criterion: a cold-degraded read path refuses (the r20 draw-A episode)") {
-    // Draw A (r20): steal 3.2%, sustained 57 MB/s — both gates passed —
-    // but the window read cold at 48.5 MB/s and the promoted envelope
-    // came out 1.7x the lineage. The gate now consumes the classifier's
-    // cache-reclaim threshold.
-    val drawA = HealthStamp.promoteViolations(0, 1000, 32, 2000,
-      writeSustained = 57.0, coldReadMin = 48.5)
-    assert(drawA.size == 1 && drawA.head.contains("cold"), s"draw A must refuse: $drawA")
-    // A healthy read path passes; the boundary is the classifier's 100:
-    assert(HealthStamp.promoteViolations(0, 1000, 0, 2000,
-      writeSustained = 400.0, coldReadMin = 100.0).isEmpty)
-    assert(HealthStamp.promoteViolations(0, 1000, 0, 2000,
-      writeSustained = 400.0, coldReadMin = 99.9).nonEmpty)
-    // The sentinel (O_DIRECT unavailable / collided probe) abstains:
-    assert(HealthStamp.promoteViolations(0, 1000, 0, 2000,
-      writeSustained = 400.0, coldReadMin = -1.0).isEmpty)
   }
 
   test("cpu jiffies counters are monotone non-negative on Linux") {
@@ -98,11 +49,6 @@ class HealthStampSpec extends AnyFunSuite {
       val (s2, t2) = HealthStamp.cpuJiffies()
       assert(s2 >= s1 && t2 >= t1, "cumulative counters must not go backwards")
     }
-  }
-
-  test("write probe returns a positive rate (or the -1 sentinel)") {
-    val v = HealthStamp.writeMbps()
-    assert(v == -1.0 || (v > 0.0 && v < 1e6))
   }
 
   test("fault probe returns a positive finite latency") {

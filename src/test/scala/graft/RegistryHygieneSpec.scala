@@ -121,6 +121,22 @@ class RegistryHygieneSpec extends SparkTestBase {
         .select(unix_micros(col("ts"))).collect().map(_.getLong(0)).toSeq
       assert(us == wantUs, s"$d: µs mismatch: $us != $wantUs")
     }
+    // eventsSince on each layout: exactly the rows at or after the start
+    // (a start equal to a row's µs keeps it), with the predicate reaching
+    // the scan on the int64 and NTZ layouts.
+    val startUs = wantUs(2)
+    val wantIds = wantUs.indices.filter(i => wantUs(i) >= startUs).map(_.toLong)
+    for (d <- Seq(dLong, dNtz, dTs)) {
+      val since = Tables.eventsSince(spark, d.toString, startUs)
+      val ids = since.orderBy("event_id").select("event_id").collect().map(_.getLong(0)).toSeq
+      assert(ids == wantIds, s"$d: eventsSince kept $ids, want $wantIds")
+      if (d != dTs) {
+        val p = since.queryExecution.executedPlan.toString
+        assert(p.contains("PushedFilters") &&
+          p.replaceAll("\\s", "").contains("GreaterThanOrEqual(ts"),
+          s"$d: start predicate must reach the scan:\n$p")
+      }
+    }
   }
 
   test("driver ns-parquet: Tables.load equals an independent raw read of the same file") {

@@ -452,6 +452,24 @@ class ShardedSourceSpec extends SparkTestBase {
       assert(msg.contains(part), msg)
   }
 
+  test("a shard directory removed between runs fails the restarted query") {
+    val r = tmp("graft-shards-gone")
+    for (s <- Seq("s1", "s2")) {
+      val shard = Files.createDirectories(Paths.get(r, s"shard_id=$s"))
+      Files.write(shard.resolve("part-00000.txt"), lines(0 until 6))
+    }
+    val ckpt = tmp("ckpt")
+    val run1 = ArrayBuffer.empty[(Long, String, Long, Long)]
+    drain(ShardedEvents.readStream(spark, r), ckpt, run1)
+    assert(run1.size == 12)
+    org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(r, "shard_id=s2").toFile)
+    val e = intercept[StreamingQueryException](
+      drain(ShardedEvents.readStream(spark, r), ckpt, ArrayBuffer.empty))
+    val msg = org.apache.commons.lang3.exception.ExceptionUtils.getRootCauseMessage(e)
+    for (part <- Seq("shard s2", "committed offset 6", s"no longer listed under $r"))
+      assert(msg.contains(part), msg)
+  }
+
   test("pieces tile each shard's slice in shard-then-sequence order and read their own lines") {
     val r = tmp("graft-shards-pieces")
     val s1 = Files.createDirectories(Paths.get(r, "shard_id=s1"))

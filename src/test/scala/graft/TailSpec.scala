@@ -96,7 +96,7 @@ class TailSpec extends SparkTestBase {
     assert(code == 0)
     val got = out.split("\n").filter(_.nonEmpty).toSeq
     val want = EnvelopeOps.envelope(Tables.load(spark, dir, "events"))
-      .select(Template.compile(Tail.DefaultTemplate, EnvelopeOps.templateScope).as("l"))
+      .select(Template.compile(Template.DefaultTemplate, EnvelopeOps.templateScope).as("l"))
       .collect().map(_.getString(0)).toSeq
     assert(got.size == want.size, s"expected ${want.size} lines, got ${got.size}")
     assert(got.sorted == want.sorted)
