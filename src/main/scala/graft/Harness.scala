@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** The one place a main builds its `SparkSession` and isolates one query
-  * from the next — batch mains, the tailer and the tools all start the
-  * engine the same way (Structured Streaming runs batch and streaming on
-  * one session model).
+/** The one place a main builds its `SparkSession`, the engine materializes
+  * a frame, and a main isolates one query from the next — batch mains,
+  * the tailer and the tools all start the engine the same way (Structured
+  * Streaming runs batch and streaming on one session model).
   *
   * `SPARK_GRAFT_CPUS` sets the core count (each caller passes its own
   * default) and `SPARK_GRAFT_MASTER`, when set, replaces the
@@ -39,7 +40,41 @@ object Harness {
     s
   }
 
-  /** Per-query isolation, run after each query's time is captured.
+  /** The one way the engine materializes a frame. The rule: materialize
+    * only where at least two consumers would otherwise re-run a producer
+    * that has a shuffle, or where a loop must cut its lineage. A
+    * shuffle-free producer (a scan, an explode over one) stays
+    * materialized only where a same-window A/B shows its recompute costs
+    * more than the copy, as the PQ block explode over the embeddings
+    * scan does in i39, i42, i43 and i44.
+    *
+    * On a local master this is `df.localCheckpoint(eager)`: the frame is
+    * a `Scan ExistingRDD` over blocks in the one JVM, which no executor
+    * loss can take away. Off local mode a lost executor takes its blocks
+    * with it, and a local checkpoint has no lineage left to recompute
+    * them from, so the query fails. There the frame is a reliable
+    * `checkpoint(eager)` when the context has a checkpoint dir, and
+    * otherwise `persist(MEMORY_AND_DISK)` (counted when `eager`); either
+    * way a lost block is recomputed. A loop without a checkpoint dir then
+    * keeps its lineage, so a cluster that runs the iterative families
+    * should set one.
+    */
+  def materialize(df: DataFrame, eager: Boolean = true): DataFrame =
+    materialize(df, eager, df.sparkSession.sparkContext.isLocal)
+
+  private[graft] def materialize(df: DataFrame, eager: Boolean, local: Boolean): DataFrame =
+    if (local) df.localCheckpoint(eager)
+    else if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
+    else {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      if (eager) p.count()
+      p
+    }
+
+  /** Per-query isolation, run after each query's time is captured: drops
+    * the blocks [[materialize]] left behind (a reliable checkpoint's files
+    * stay in the checkpoint dir until the ContextCleaner removes them,
+    * which it does only with `spark.cleaner.referenceTracking.cleanCheckpoints`).
     *
     * r10 driver-run diagnosis: eager localCheckpoint blocks from the
     * dedup/kmeans pipelines stay pinned in the block manager until the

@@ -322,6 +322,17 @@ object Tail {
     } finally jobs.foreach(j => if (j != null && !j.isCompleted) j.cancel())
   }
 
-  def main(args: Array[String]): Unit =
-    sys.exit(run(args, () => Harness.session(Harness.cpus(4)), System.out, System.err))
+  /** A stream that prints lines as UTF-8 bytes onto `out`, whatever
+    * charset `out` encodes with: the JVM's stdout encodes with
+    * `file.encoding`, which is ASCII when `LANG` is unset, and would print
+    * every non-ASCII character of a record as `?`.
+    */
+  private[graft] def utf8(out: PrintStream): PrintStream = new PrintStream(out, false, UTF_8)
+
+  def main(args: Array[String]): Unit = {
+    val out = utf8(System.out)
+    val code = try run(args, () => Harness.session(Harness.cpus(4)), out, System.err)
+      finally out.flush()
+    sys.exit(code)
+  }
 }

@@ -19,7 +19,7 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
         // Same per-query isolation as Bench: drop this query's eager
-        // localCheckpoint blocks before the next one runs.
+        // materialized blocks before the next one runs.
         Harness.isolate(spark)
       }
     }

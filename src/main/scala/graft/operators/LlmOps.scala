@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Harness, Q, Tables}
 import graft.functions.{TextFunctions, VectorFunctions}
 
 /** Group D (SURVEY.md §2.D): LLM-data-pipeline operators over the
@@ -112,9 +112,9 @@ object LlmOps {
     // from the corpus scan (measured 3× the sketch cost at sf0.1). The
     // 100 TB form of the same decision is writing the sketch table out
     // and reading it back — sketches are the artifact a dedup pipeline
-    // persists; localCheckpoint is the in-session analog (blocks are
+    // persists; Harness.materialize is the in-session analog (blocks are
     // freed by the ContextCleaner once the plan is GC'd, as in i15).
-    val sets = hashedTokenSets(docs).localCheckpoint(true)
+    val sets = Harness.materialize(hashedTokenSets(docs))
     val prefixed = sets.select(col("doc_id"), col("source"),
       explode(slice(col("rks"), lit(1),
         prefixLen(col("n_tok"), thetaTenths = 9).cast("int"))).as("rk"))
@@ -141,7 +141,7 @@ object LlmOps {
     * pins every `...From` read path ≡ its in-query form.
     */
   def pairStats(docs: DataFrame, thetaTenths: Int): DataFrame = {
-    val sets = hashedTokenSets(docs).localCheckpoint(true)
+    val sets = Harness.materialize(hashedTokenSets(docs))
     val pref = sets.select(col("doc_id"), col("source"),
       explode(slice(col("rks"), lit(1),
         prefixLen(col("n_tok"), thetaTenths).cast("int"))).as("rk"))
@@ -179,7 +179,7 @@ object LlmOps {
     */
   def pairStatsIngest(corpusSets: DataFrame, batchSets: DataFrame,
       thetaTenths: Int): DataFrame = {
-    val allSets = corpusSets.unionByName(batchSets).localCheckpoint(true)
+    val allSets = Harness.materialize(corpusSets.unionByName(batchSets))
     def pref(s: DataFrame) = s.select(col("doc_id"), col("source"),
       explode(slice(col("rks"), lit(1),
         prefixLen(col("n_tok"), thetaTenths).cast("int"))).as("rk"))
@@ -229,7 +229,7 @@ object LlmOps {
     * denominators.
     */
   def containmentPairs(docs: DataFrame): DataFrame = {
-    val sets = hashedTokenSets(docs).localCheckpoint(true)
+    val sets = Harness.materialize(hashedTokenSets(docs))
     val aPref = sets.select(col("doc_id"), col("source"), col("n_tok").as("na"),
       explode(slice(col("rks"), lit(1),
         prefixLen(col("n_tok"), thetaTenths = 9).cast("int"))).as("rk"))
@@ -329,7 +329,7 @@ object LlmOps {
     * (equi-join + min agg on 8-byte id pairs); the driver only reads
     * the per-round count + a one-long emptiness probe that decide
     * convergence — no row data ever reaches the driver. Each round's
-    * edge set is eagerly localCheckpoint'ed so lineage stays flat; the
+    * edge set is materialized (Harness.materialize) so lineage stays flat; the
     * checkpoint blocks of superseded rounds are released by the
     * ContextCleaner when their plans are GC'd — transient storage is
     * #rounds small edge tables, bounded by the pair count, not the
@@ -362,11 +362,10 @@ object LlmOps {
     // Lineage truncation and block persistence are identical; only the
     // job count changes (2 per round → 1, plus the rare equal-count
     // anti-join probe).
-    val canon = pairs.select(
+    val canon = Harness.materialize(pairs.select(
         greatest(col("doc_id1"), col("doc_id2")).as("u"),
         least(col("doc_id1"), col("doc_id2")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(false)
+      .filter(col("u") =!= col("v")).distinct(), eager = false)
     val nodes = canon.select(explode(array(col("u"), col("v"))).as("doc_id"))
       .distinct()
     var cur = canon
@@ -374,7 +373,7 @@ object LlmOps {
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxRounds) {
-      val next = smallStar(largeStar(cur)).localCheckpoint(false)
+      val next = Harness.materialize(smallStar(largeStar(cur)), eager = false)
       val nextCnt = next.count()
       // Distinct edge sets of equal size are equal iff the anti-join is
       // empty; limit(1) keeps the probe a short-circuit, not a scan.
@@ -487,7 +486,7 @@ object LlmOps {
     val theta = thetaTenths / 10.0
     // One tokenize pass for its three consumers (both group tables + the
     // final expand), the nearDupPairs materialization rule.
-    val sets = hashedTokenSets(docs).localCheckpoint(true)
+    val sets = Harness.materialize(hashedTokenSets(docs))
     // Jaccard is a function of the token SET, so collapse each side to
     // its DISTINCT sets first and verify once per set PAIR, not per doc
     // pair — on dup-heavy corpora (the whole reason a fuzzy join runs)
@@ -574,8 +573,9 @@ object LlmOps {
     *
     * Scale: the corpus side is touched only through its PERSISTED
     * artifacts — the token-set sketch (the i2 table) and its band table
-    * (the i14 table), both computed once and checkpointed here as the
-    * in-session analog; corpus signatures are NOT recomputed per
+    * (the i14 table). In-session the sketch table is materialized once
+    * and the band table, an in-row fold over it with one consumer, is
+    * derived in the plan; corpus signatures are NOT recomputed per
     * ingest, and the batch computes sketches only for itself. Candidate
     * pairs come from band equi-joins (batch bands probe corpus bands;
     * minhash signatures depend only on each doc's token set, so
@@ -584,11 +584,10 @@ object LlmOps {
     * ids. Output: surviving (doc_id, source, n_tok), unordered.
     */
   def nearDedupIncremental(docs: DataFrame, boundary: Long): DataFrame = {
-    val sets = hashedTokenSets(docs).localCheckpoint(true)
+    val sets = Harness.materialize(hashedTokenSets(docs))
     nearDedupIncrementalFrom(
       sets.filter(col("doc_id") < boundary),
-      PipelineOps.minhashBands(
-        sets.filter(col("doc_id") < boundary)).localCheckpoint(true),
+      PipelineOps.minhashBands(sets.filter(col("doc_id") < boundary)),
       sets.filter(col("doc_id") >= boundary))
   }
 
@@ -597,11 +596,12 @@ object LlmOps {
     * corpus sketch (i2) and band (i14) tables here (PersistedIndexSpec
     * pins that the band screen then plans zero Exchange on the bucketed
     * side and corpus text is never re-tokenized), while the in-query
-    * registry form passes the freshly-derived frames.
+    * registry form passes the freshly-derived frames. `batchSets` is
+    * read by four consumers, so a caller whose batch sketch still holds
+    * its tokenize shuffle materializes it first.
     */
   def nearDedupIncrementalFrom(corpusSets: DataFrame, corpusBands: DataFrame,
-      batchSets0: DataFrame): DataFrame = {
-    val batchSets = batchSets0.localCheckpoint(true)
+      batchSets: DataFrame): DataFrame = {
     // The verify stage needs both sides' sketches; corpus sketches come
     // from the persisted table, never a re-tokenize.
     val sets = corpusSets
@@ -610,22 +610,20 @@ object LlmOps {
         .select(col("doc_id"), col("source"), col("rks"), col("n_tok")))
     // Two consumers (cross-probe + internal pairs) — materialize once,
     // the nearDupPairs rule.
-    val batchBands = PipelineOps.minhashBands(batchSets).localCheckpoint(true)
+    val batchBands = Harness.materialize(PipelineOps.minhashBands(batchSets))
     val candCross = batchBands.alias("p")
       .join(corpusBands.alias("c"),
         col("p.b") === col("c.b") && col("p.v") === col("c.v") &&
           col("p.source") === col("c.source"))
       .select(col("c.doc_id").as("doc_id1"), col("p.doc_id").as("doc_id2"))
       .distinct()
-    val corpusMatched = verifyJaccard(candCross, sets)
-      .select(col("doc_id2").as("doc_id")).distinct()
-      .localCheckpoint(true)
+    val corpusMatched = Harness.materialize(verifyJaccard(candCross, sets)
+      .select(col("doc_id2").as("doc_id")).distinct())
     // Both sides of the internal-pair self-join read the screened band
     // table — materialized once (the r20 rule: Catalyst shares no
     // subtree between self-join sides, so the anti-join screen re-ran
     // per side).
-    val cleanBands = batchBands.join(corpusMatched, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+    val cleanBands = Harness.materialize(batchBands.join(corpusMatched, Seq("doc_id"), "left_anti"))
     val candIn = cleanBands.alias("l")
       .join(cleanBands.alias("r"),
         col("l.b") === col("r.b") && col("l.v") === col("r.v") &&
@@ -683,13 +681,12 @@ object LlmOps {
     // exactly as the pair/sketch checkpoints above (the oracle gate
     // never sees engine state — each query still computes from the
     // parquet corpus).
-    nearDupPairs(docs)
+    Harness.materialize(nearDupPairs(docs)
       .select(explode(array(
         struct(col("doc_id1"), col("doc_id2")),
         struct(col("doc_id2").as("doc_id1"), col("doc_id1").as("doc_id2"))))
         .as("p"))
-      .select(col("p.doc_id1").as("doc_id1"), col("p.doc_id2").as("doc_id2"))
-      .localCheckpoint(true)
+      .select(col("p.doc_id1").as("doc_id1"), col("p.doc_id2").as("doc_id2")))
   }
 
   /** One label-propagation step (i82): majority neighbor `lang` over
@@ -738,10 +735,9 @@ object LlmOps {
     // before-plan, 48 Exchanges). The peel loop's state at 100 TB is
     // the residual edge table per round; checkpointing each round's
     // residual is that design in-session.
-    val ed1 = edges
+    val ed1 = Harness.materialize(edges
       .join(alive1.select(col("doc_id").as("doc_id1")), "doc_id1", "left_semi")
-      .join(alive1.select(col("doc_id").as("doc_id2")), "doc_id2", "left_semi")
-      .localCheckpoint(true)
+      .join(alive1.select(col("doc_id").as("doc_id2")), "doc_id2", "left_semi"))
     val deg1 = ed1.groupBy(col("doc_id1").as("doc_id"))
       .agg(count(lit(1)).as("deg1"))
     val alive2 = deg1.filter(col("deg1") >= 2).select(col("doc_id"))
@@ -1522,22 +1518,20 @@ object LlmOps {
         // worst plan in the r20 registry audit). Materialize each once:
         // the 100 TB triangle count persists exactly these two tables
         // (pairs, oriented edges) between stages.
-        val nd = nearDupPairs(t(s, dir, "documents"))
-          .select(col("doc_id1").as("u"), col("doc_id2").as("v"))
-          .localCheckpoint(true)
+        val nd = Harness.materialize(nearDupPairs(t(s, dir, "documents"))
+          .select(col("doc_id1").as("u"), col("doc_id2").as("v")))
         val deg = nd.select(explode(array(col("u"), col("v"))).as("doc_id"))
           .groupBy(col("doc_id")).agg(count(lit(1)).as("deg"))
         val du = deg.select(col("doc_id").as("u"), col("deg").as("dg_u"))
         val dv = deg.select(col("doc_id").as("v"), col("deg").as("dg_v"))
-        val ed = nd.join(du, "u").join(dv, "v")
+        val ed = Harness.materialize(nd.join(du, "u").join(dv, "v")
           .select(
             when(col("dg_u") < col("dg_v") ||
               (col("dg_u") === col("dg_v") && col("u") < col("v")),
               col("u")).otherwise(col("v")).as("src"),
             when(col("dg_u") < col("dg_v") ||
               (col("dg_u") === col("dg_v") && col("u") < col("v")),
-              col("v")).otherwise(col("u")).as("dst"))
-          .localCheckpoint(true)
+              col("v")).otherwise(col("u")).as("dst")))
         val tri = ed.alias("e1")
           .join(ed.alias("e2"), col("e1.dst") === col("e2.src"))
           .select(col("e1.src").as("x"), col("e1.dst").as("y"), col("e2.dst").as("z"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Harness, Q, Tables}
 import graft.functions.{TextFunctions, VectorFunctions}
 
 /** Training-data-pipeline operators beyond the core group D (SURVEY §2.D):
@@ -408,7 +408,7 @@ object PipelineOps {
     */
   def semDedup(emb: DataFrame, cent: DataFrame, theta: Double,
       hotThreshold: Long = 4096, salts: Int = 16, assignK: Int = 0): DataFrame = {
-    val assigned = assignToCentroids(emb, cent, assignK).localCheckpoint(true)
+    val assigned = Harness.materialize(assignToCentroids(emb, cent, assignK))
     // Candidate edges via the SALTED cluster self-join (saltedSelfPairs):
     // a semantically-hot cluster — the one shape IVF bucketing can't
     // bound, since cluster size is data-dependent — spreads its quadratic
@@ -544,13 +544,14 @@ object PipelineOps {
     * ingest can route a batch with the build's exact router instead of
     * silently re-deriving one (VERDICT r16 ask #2 — a trained base and
     * a stub-routed delta in one merged table is two routing semantics
-    * in one artifact, and the additivity law fails).
+    * in one artifact, and the additivity law fails). The result is
+    * [[trainCodebook]]'s, which is already materialized.
     */
   private[graft] def trainRoutingSupers(cent: DataFrame, k: Int,
       maxIters: Int = 8): DataFrame =
     trainCodebook(
       cent.select(col("cid").as("vec_id"), col("cemb").as("embedding")),
-      math.ceil(math.sqrt(k.toDouble)).toInt, maxIters).localCheckpoint(true)
+      math.ceil(math.sqrt(k.toDouble)).toInt, maxIters)
 
   /** Two-level routing against EXTERNALLY-SUPPLIED supers — the form
     * both the trained build ([[trainRoutingSupers]] fresh) and the
@@ -571,10 +572,10 @@ object PipelineOps {
   private[graft] def assignToCentroidsTwoLevelFromSupers(emb: DataFrame,
       cent: DataFrame, supers: DataFrame, k: Int,
       partitionedStage2: Option[Boolean] = None): DataFrame = {
-    val grouped = assignToCentroidsFlat(
+    val grouped = Harness.materialize(assignToCentroidsFlat(
         cent.select(col("cid").as("vec_id"), col("cemb").as("embedding")), supers)
       .select(col("cid").as("gid"), col("vec_id").as("mcid"),
-        col("embedding").as("mcemb")).localCheckpoint(true)
+        col("embedding").as("mcemb")))
     val presentSupers = supers.join(
       grouped.select(col("gid")).distinct(),
       supers("cid") === col("gid"), "left_semi")
@@ -814,24 +815,24 @@ object PipelineOps {
     * means can still 2-cycle), and the iteration-capped codebook is the
     * standard, usable answer — callers needing the distinction can
     * compare two more quantMeans rounds themselves. Empty clusters keep
-    * their previous centroid. Per-round localCheckpoint keeps lineage
+    * their previous centroid. Per-round materialization keeps lineage
     * flat; transient storage is one k·dim mean table per round. At
     * 100 TB each round is one linear corpus pass whose only shuffle
     * carries ≤ k·dim·partitions partial rows.
     */
   private[graft] def trainCodebook(emb: DataFrame, k: Int,
       maxIters: Int = 16): DataFrame = {
-    var cent = stubCodebook(emb, k).localCheckpoint(true)
+    var cent = Harness.materialize(stubCodebook(emb, k))
     var prevQ: Option[DataFrame] = None
     var prevCnt = -1L
     var converged = false
     var iters = 0
     while (!converged && iters < maxIters) {
-      val q = lloydQuantMeans(emb, cent).localCheckpoint(true)
+      val q = Harness.materialize(lloydQuantMeans(emb, cent))
       val cnt = q.count()
       converged = prevQ.exists(p => cnt == prevCnt &&
         q.join(p, Seq("cid", "pos", "mq"), "left_anti").limit(1).count() == 0L)
-      if (!converged) cent = lloydCodebook(q, cent).localCheckpoint(true)
+      if (!converged) cent = Harness.materialize(lloydCodebook(q, cent))
       prevQ = Some(q)
       prevCnt = cnt
       iters += 1
@@ -936,9 +937,9 @@ object PipelineOps {
     * error to come down, asserted in PipelineSpec).
     */
   private[graft] def pqTrainCodebook(sub: DataFrame, k: Int, iters: Int): DataFrame = {
-    var cent = pqStubCodebook(sub, k).localCheckpoint(true)
+    var cent = Harness.materialize(pqStubCodebook(sub, k))
     (0 until iters).foreach { _ =>
-      cent = pqTrainStep(sub, cent).localCheckpoint(true)
+      cent = Harness.materialize(pqTrainStep(sub, cent))
     }
     cent
   }
@@ -991,11 +992,9 @@ object PipelineOps {
   private[graft] def annIndexIngest(emb: DataFrame, boundary: Long): DataFrame = {
     val corpus = emb.filter(col("vec_id") < boundary)
     val c0 = stubCodebook(corpus, ivfParams.k)
-    val coarse = lloydCodebook(lloydQuantMeans(corpus, c0), c0)
-      .localCheckpoint(true)
-    val subC = pqBlocks(corpus, nBlocks = 4, blockDim = 16).localCheckpoint(true)
-    val pqCent = pqTrainStep(subC, pqStubCodebook(subC, ivfParams.k))
-      .localCheckpoint(true)
+    val coarse = Harness.materialize(lloydCodebook(lloydQuantMeans(corpus, c0), c0))
+    val subC = Harness.materialize(pqBlocks(corpus, nBlocks = 4, blockDim = 16))
+    val pqCent = Harness.materialize(pqTrainStep(subC, pqStubCodebook(subC, ivfParams.k)))
     val batch = emb.filter(col("vec_id") >= boundary)
     val routed = assignToCentroids(batch, coarse)
       .select(col("vec_id"), col("cid"))
@@ -1028,9 +1027,8 @@ object PipelineOps {
     val cent = stubCodebook(emb, ivfParams.k)
     val corpus = assignToCentroids(emb.filter(col("vec_id") < boundary), cent)
       .select(col("cid"), col("vec_id").as("cvid"), col("embedding").as("cemb"))
-    val batch = assignToCentroids(emb.filter(col("vec_id") >= boundary), cent)
-      .select(col("vec_id"), col("cid"), col("embedding"))
-      .localCheckpoint(true)
+    val batch = Harness.materialize(assignToCentroids(emb.filter(col("vec_id") >= boundary), cent)
+      .select(col("vec_id"), col("cid"), col("embedding")))
     val matches = batch.join(corpus, Seq("cid"))
       .select(col("vec_id"),
         round(VectorFunctions.dot(col("embedding"), col("cemb")), 3).as("sim"),
@@ -1078,15 +1076,13 @@ object PipelineOps {
     */
   private[graft] def annPqBatchFor(emb: DataFrame, queries: DataFrame,
       topK: Int): DataFrame = {
-    val sub = pqBlocks(emb, nBlocks = 4, blockDim = 16).localCheckpoint(true)
+    val sub = Harness.materialize(pqBlocks(emb, nBlocks = 4, blockDim = 16))
     // Codebook and code table materialize once — they ARE the persisted
     // index tables the i42 doc names; the counted read-path plan
     // (PlanSpec) starts from them, exactly as a production scan reads
     // the index parquet rather than retraining per query batch.
-    val cent = pqTrainStep(sub, pqStubCodebook(sub, ivfParams.k))
-      .localCheckpoint(true)
-    val codes = pqAssign(sub, cent).select(col("vec_id"), col("b"), col("cid"))
-      .localCheckpoint(true)
+    val cent = Harness.materialize(pqTrainStep(sub, pqStubCodebook(sub, ivfParams.k)))
+    val codes = Harness.materialize(pqAssign(sub, cent).select(col("vec_id"), col("b"), col("cid")))
     val qsub = pqBlocks(queries, nBlocks = 4, blockDim = 16)
       .select(col("vec_id").as("qid"), col("b"), col("sub").as("qv"))
     val lut = cent.join(broadcast(qsub), Seq("b"))
@@ -1496,11 +1492,10 @@ object PipelineOps {
     * on crafted corpora through the registry's code path.
     */
   def sourceTvd(docs: DataFrame): DataFrame = {
-    val cnt = docs
+    val cnt = Harness.materialize(docs
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
       .select(col("source"), col("w").as("tk"))
-      .groupBy(col("source"), col("tk")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .groupBy(col("source"), col("tk")).agg(count(lit(1)).as("c")))
     val tot = cnt.groupBy(col("source")).agg(sum(col("c")).as("n"))
     val pairs = tot.select(col("source").as("s1"), col("n").as("n1"))
       .join(broadcast(tot.select(col("source").as("s2"), col("n").as("n2"))),
@@ -1739,7 +1734,7 @@ object PipelineOps {
     */
   private[graft] def repeatGramsIncrementalFrom(batchDocs: DataFrame,
       corpusGrams: DataFrame, k: Int = 5): DataFrame = {
-    val batchOcc = gramOcc(batchDocs, k).localCheckpoint(true)
+    val batchOcc = Harness.materialize(gramOcc(batchDocs, k))
     val screened = batchOcc.join(corpusGrams, Seq("g"), "left_semi")
       .select(col("doc_id"), col("pos"))
     val byG = Window.partitionBy(col("g"))
@@ -2271,12 +2266,11 @@ object PipelineOps {
     // rounding; ties break on doc_id.
     Q("j12_lm_holdout",
       (s, dir) => {
-        val occ = t(s, dir, "documents")
+        val occ = Harness.materialize(t(s, dir, "documents")
           .select(col("doc_id"), explode(gramZip(col("text"), 2)).as("z"))
           .select(col("doc_id"),
             xxhash64(col("z.0"), col("z.1")).as("bk"),
-            xxhash64(col("z.0")).as("uk"))
-          .localCheckpoint(true)
+            xxhash64(col("z.0")).as("uk")))
         val own2 = occ.groupBy(col("doc_id"), col("bk"), col("uk"))
           .agg(count(lit(1)).as("own2"))
         val own1 = occ.groupBy(col("doc_id"), col("uk"))
@@ -2330,12 +2324,11 @@ object PipelineOps {
         // ONE tokenize pass for the three consumers (both count tables
         // + the scoring spine) — the nearDupPairs materialization rule;
         // the occurrence table carries (doc_id, two 8-byte hashes).
-        val occ = t(s, dir, "documents")
+        val occ = Harness.materialize(t(s, dir, "documents")
           .select(col("doc_id"), explode(gramZip(col("text"), 2)).as("z"))
           .select(col("doc_id"),
             xxhash64(col("z.0"), col("z.1")).as("bk"),
-            xxhash64(col("z.0")).as("uk"))
-          .localCheckpoint(true)
+            xxhash64(col("z.0")).as("uk")))
         val c2 = occ.groupBy(col("bk"), col("uk")).agg(count(lit(1)).as("c2"))
         val c1 = occ.groupBy(col("uk")).agg(count(lit(1)).as("c1"))
         // c1 (unigram-bounded) broadcasts by hint; c2 gets NO hint —
@@ -3069,21 +3062,20 @@ object PipelineOps {
         val emb = t(s, dir, "embeddings")
         val cent = stubCodebook(emb, ivfParams.k)
         val queries = queryBatch(emb, ivfParams.nQueries)
-        val qranks = queries.crossJoin(broadcast(centroidArray(cent)))
+        // nQ·k rows feeding both axes — materialize once.
+        val qranks = Harness.materialize(queries.crossJoin(broadcast(centroidArray(cent)))
           .select(col("qid"), posexplode(array_sort(transform(col("cents"), c =>
             struct(
               (-round(VectorFunctions.dot(col("qemb"), c.getField("cemb")), 6)).as("nqd"),
               c.getField("cid").as("cid"))))).as(Seq("pos", "pc")))
           .select(col("qid"), (col("pos") + 1).cast("long").as("prank"),
-            col("pc.cid").as("cid"))
-          // nQ·k rows feeding both axes — materialize once.
-          .localCheckpoint(true)
+            col("pc.cid").as("cid")))
         // The assignment table is corpus-sized and feeds three branches
         // (cluster sizes, the coverage join, and its own build) — one
-        // eager localCheckpoint materializes it once (the i83/i84
+        // eager Harness.materialize builds it once (the i83/i84
         // rule); everything downstream reads the ExistingRDD.
-        val assigned = assignToCentroids(emb, cent)
-          .select(col("vec_id"), col("cid")).localCheckpoint(true)
+        val assigned = Harness.materialize(assignToCentroids(emb, cent)
+          .select(col("vec_id"), col("cid")))
         val sz = assigned.groupBy(col("cid")).agg(count(lit(1)).as("sz"))
         val massCols = (1 to 8).map(d =>
           sum(when(col("prank") <= d, col("sz")).otherwise(0L)).as(s"m$d")) :+
@@ -3272,11 +3264,10 @@ object PipelineOps {
         // shingle-set sketch feeds the prefix explode AND both verify
         // sides — uncheckpointed, each consumer re-runs the shingle
         // explode + hash + collect_set shuffle from the corpus scan.
-        val docSets = sh
+        val docSets = Harness.materialize(sh
           .groupBy(col("doc_id"), col("source"))
           .agg(sort_array(collect_set(col("s"))).as("rks"))
-          .withColumn("n", size(col("rks")).cast("long"))
-          .localCheckpoint(true)
+          .withColumn("n", size(col("rks")).cast("long")))
         val prefixed = docSets.select(col("doc_id"), col("source"),
           explode(slice(col("rks"), lit(1),
             LlmOps.prefixLen(col("n"), thetaTenths = 5).cast("int"))).as("rk"))
@@ -3337,7 +3328,7 @@ object PipelineOps {
         // Verify consumes the set sketch twice (both join sides) and the
         // signature build once more — materialized once, as in
         // LlmOps.nearDupPairs.
-        val sets = LlmOps.hashedTokenSets(docs).localCheckpoint(true)
+        val sets = Harness.materialize(LlmOps.hashedTokenSets(docs))
         // Band build factored into minhashBands (narrow per-row folds,
         // NOT explode+groupBy — the i14 trade: short in-row HOFs over
         // the materialized hash array beat re-exploding the corpus
@@ -3787,8 +3778,7 @@ object PipelineOps {
         // One-step codebook materialized once: the two-stage broadcast
         // assignment references it per stage, re-running the corpus
         // means pass each time when left as a live subtree (guide §2.4).
-        val c1 = lloydCodebook(lloydQuantMeans(emb, c0), c0)
-          .localCheckpoint(true)
+        val c1 = Harness.materialize(lloydCodebook(lloydQuantMeans(emb, c0), c0))
         assignToCentroids(emb, c1)
           .select(col("cid"), posexplode(col("embedding")))
           .select(col("cid"), col("pos").cast("long").as("pos"),
@@ -3912,13 +3902,12 @@ object PipelineOps {
     Q("i37_pq_quantize",
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val sub = pqBlocks(emb, nBlocks = 4, blockDim = 16).localCheckpoint(true)
+        val sub = pqBlocks(emb, nBlocks = 4, blockDim = 16)
         // Trained codebook materialized once (the i44/i43 rule):
         // pqQuantize references it on both the assign and reconstruction
         // sides, and uncheckpointed the one-step Lloyd training re-ran
         // per reference (guide §2.4).
-        val cent = pqTrainStep(sub, pqStubCodebook(sub, ivfParams.k))
-          .localCheckpoint(true)
+        val cent = Harness.materialize(pqTrainStep(sub, pqStubCodebook(sub, ivfParams.k)))
         pqQuantize(sub, cent, nBlocks = 4).orderBy("vec_id")
       },
       Some(sql("""WITH blocks AS (SELECT unnest(range(0, 4)) AS b),
@@ -4005,11 +3994,10 @@ object PipelineOps {
     Q("i39_ann_pq_adc",
       (s, dir) => {
         val emb = t(s, dir, "embeddings")
-        val sub = pqBlocks(emb, nBlocks = 4, blockDim = 16).localCheckpoint(true)
+        val sub = Harness.materialize(pqBlocks(emb, nBlocks = 4, blockDim = 16))
         // Trained codebook materialized once (the i44/i43 rule) — it
         // feeds both the code assignment and the broadcast LUT below.
-        val cent = pqTrainStep(sub, pqStubCodebook(sub, ivfParams.k))
-          .localCheckpoint(true)
+        val cent = Harness.materialize(pqTrainStep(sub, pqStubCodebook(sub, ivfParams.k)))
         val codes = pqAssign(sub, cent).select(col("vec_id"), col("b"), col("cid"))
         val qsub = sub.filter(col("vec_id") === 0)
           .select(col("b"), col("sub").as("qv"))
@@ -4104,11 +4092,10 @@ object PipelineOps {
         val coarse = stubCodebook(emb, ivfParams.k)
         val assigned = assignToCentroids(emb, coarse)
           .select(col("vec_id"), col("cid"))
-        val sub = pqBlocks(emb, nBlocks = 4, blockDim = 16).localCheckpoint(true)
+        val sub = Harness.materialize(pqBlocks(emb, nBlocks = 4, blockDim = 16))
         // Trained codebook materialized once (the i44/i43 rule) — it
         // feeds both the code assignment and the broadcast LUT below.
-        val cent = pqTrainStep(sub, pqStubCodebook(sub, ivfParams.k))
-          .localCheckpoint(true)
+        val cent = Harness.materialize(pqTrainStep(sub, pqStubCodebook(sub, ivfParams.k)))
         val codes = pqAssign(sub, cent)
           .select(col("vec_id"), col("b"), col("cid").as("pcid"))
         ivfPqSearch(emb, coarse, cent, assigned, codes)
@@ -4467,13 +4454,12 @@ object PipelineOps {
     // joins raw shingle strings.
     Q("i38_source_overlap",
       (s, dir) => {
-        val grouped = t(s, dir, "documents")
+        val grouped = Harness.materialize(t(s, dir, "documents")
           .select(col("source"), explode(shingleZip(col("text"))).as("z"))
           .select(col("source"),
             xxhash64(col("z.0"), col("z.1"), col("z.2")).as("sh"))
           .groupBy(col("sh"))
-          .agg(sort_array(collect_set(col("source"))).as("srcs"))
-          .localCheckpoint(true)
+          .agg(sort_array(collect_set(col("source"))).as("srcs")))
         val sz = grouped.select(explode(col("srcs")).as("source"))
           .groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
         val arr = col("srcs")
@@ -4574,7 +4560,7 @@ object PipelineOps {
         // is valid only below hierRouteMin (every driver-gate SF); at
         // sf >= 1 the gate swaps to tools/i24_sf1_oracle.py, which
         // mirrors the dispatcher exactly (check.py --cc-numpy).
-        val assigned = assignToCentroids(emb, cent, k).localCheckpoint(true)
+        val assigned = Harness.materialize(assignToCentroids(emb, cent, k))
         saltedSelfPairs(
             assigned.select(col("cid"), col("vec_id"), col("embedding")), "cid")
           .select(col("cid"), col("i"), col("j"),
@@ -5256,10 +5242,9 @@ object PipelineOps {
     // checkpoint each consumer re-plans the corpus explode+shuffle.
     Q("i59_bpe_merge_apply",
       (s, dir) => {
-        val words = t(s, dir, "documents")
+        val words = Harness.materialize(t(s, dir, "documents")
           .select(explode(split(col("text"), " ")).as("w"))
-          .groupBy(col("w")).agg(count(lit(1)).as("n"))
-          .localCheckpoint(true)
+          .groupBy(col("w")).agg(count(lit(1)).as("n")))
         val top = words.filter(length(col("w")) >= 2)
           .select(col("n"), explode(transform(
             sequence(lit(1), length(col("w")) - 1),
@@ -5313,10 +5298,9 @@ object PipelineOps {
       (s, dir) => {
         // Materialized once (the nearDupPairs rule): the word table feeds
         // the corpus-stats aggregate AND the ranked regression subtree.
-        val words = t(s, dir, "documents")
+        val words = Harness.materialize(t(s, dir, "documents")
           .select(explode(split(col("text"), " ")).as("w"))
-          .groupBy(col("w")).agg(count(lit(1)).as("n"))
-          .localCheckpoint(true)
+          .groupBy(col("w")).agg(count(lit(1)).as("n")))
         val corpus = words.agg(count(lit(1)).as("n_types"),
           sum(col("n")).as("n_tokens"))
         val byFreq = Window.orderBy(col("n").desc, col("w").asc)
@@ -5440,7 +5424,7 @@ object PipelineOps {
     // grows with the corpus — j10's rule; AQE broadcasts it locally),
     // the totals are two 1-row aggregates folded in by broadcast, and
     // the top-25 is a TakeOrderedAndProject. One tokenize pass
-    // (localCheckpoint) feeds the raw counts, target counts, totals,
+    // (materialized) feeds the raw counts, target counts, totals,
     // and the scoring spine.
     Q("i60_dsir_importance",
       (s, dir) => dsirImportance(t(s, dir, "documents"), topK = 25),
@@ -6746,13 +6730,12 @@ object PipelineOps {
     // join of the ≤60-row threshold table — a pure filter pass.
     Q("j21_ccnet_buckets",
       (s, dir) => {
-        val occ = t(s, dir, "documents")
+        val occ = Harness.materialize(t(s, dir, "documents")
           .select(col("doc_id"), col("source"),
             explode(gramZip(col("text"), 2)).as("z"))
           .select(col("doc_id"), col("source"),
             xxhash64(col("z.0"), col("z.1")).as("bk"),
-            xxhash64(col("z.0")).as("uk"))
-          .localCheckpoint(true)
+            xxhash64(col("z.0")).as("uk")))
         // Reference model: counts over the src0 slice only. c1r is
         // reference-vocabulary-bounded (broadcast hint); c2r grows with
         // the reference corpus — no hint, AQE broadcasts locally (the
@@ -6867,10 +6850,9 @@ object PipelineOps {
     * law tests provably score against the same state definition.
     */
   def dsirState(corpus: DataFrame): (DataFrame, DataFrame) = {
-    val occ = corpus
+    val occ = Harness.materialize(corpus
       .select(col("lang"), explode(gramZip(col("text"), 2)).as("z"))
-      .select(col("lang"), xxhash64(col("z.0"), col("z.1")).as("bk"))
-      .localCheckpoint(true)
+      .select(col("lang"), xxhash64(col("z.0"), col("z.1")).as("bk")))
     val raw = occ.groupBy(col("bk")).agg(count(lit(1)).as("cs"))
     val tgt = occ.filter(col("lang") === "en")
       .groupBy(col("bk")).agg(count(lit(1)).as("ct"))
@@ -6962,12 +6944,11 @@ object PipelineOps {
     * corpus through the SAME code path the registry runs.
     */
   def dsirImportance(docs: DataFrame, topK: Int): DataFrame = {
-    val occ = docs
+    val occ = Harness.materialize(docs
       .select(col("doc_id"), col("lang"),
         explode(gramZip(col("text"), 2)).as("z"))
       .select(col("doc_id"), col("lang"),
-        xxhash64(col("z.0"), col("z.1")).as("bk"))
-      .localCheckpoint(true)
+        xxhash64(col("z.0"), col("z.1")).as("bk")))
     val raw = occ.groupBy(col("bk")).agg(count(lit(1)).as("cs"))
     val tgt = occ.filter(col("lang") === "en")
       .groupBy(col("bk")).agg(count(lit(1)).as("ct"))
@@ -7018,9 +6999,8 @@ object PipelineOps {
     */
   private[graft] def trainBpeMerges(docs: DataFrame,
       nMerges: Int): (Seq[String], DataFrame) = {
-    var words = docs.select(explode(split(col("text"), " ")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    var words = Harness.materialize(docs.select(explode(split(col("text"), " ")).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("n")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[String]
     var done = false
     while (!done && merges.size < nMerges) {
@@ -7038,10 +7018,9 @@ object PipelineOps {
         merges += pair
         // replace(w, pair, sym) via the codegen'd ternary replace —
         // lit() operands, no string interpolation into SQL.
-        words = words
+        words = Harness.materialize(words
           .groupBy(replaceExpr(col("w"), pair, sym).as("w"))
-          .agg(sum(col("n")).as("n"))
-          .localCheckpoint(true)
+          .agg(sum(col("n")).as("n")))
       }
     }
     (merges.toSeq, words)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Harness, Q, Tables}
 
 /** Group B (SURVEY.md §2.B): the relational core, run on the TPC-H-ish
   * tables. Everything is declared through the DataFrame API so Catalyst
@@ -840,19 +840,18 @@ object RelationalOps {
         // transfer to the deviation domain by re-keying, no second pass
         // over rows. Materialized once (three consumers would otherwise
         // re-run the corpus aggregate each).
-        val dist = cents.groupBy(col("g"), col("vc"))
-          .agg(count(lit(1)).as("cnt")).localCheckpoint(true)
+        val dist = Harness.materialize(cents.groupBy(col("g"), col("vc"))
+          .agg(count(lit(1)).as("cnt")))
         val med = distMedianW(dist, "vc", "m")
         // 2·|cents − m| is an exact integer (m moves in half-cent steps).
         // Materialized once (the r20 rule): the MAD median and the final
         // rollup both read the deviation distribution — uncheckpointed,
         // the broadcast join + re-key aggregate ran twice.
-        val devDist = dist.join(broadcast(med), "g")
+        val devDist = Harness.materialize(dist.join(broadcast(med), "g")
           .select(col("g"), col("cnt"), col("m"),
             abs(lit(2L) * col("vc") - (lit(2.0) * col("m")).cast("long")).as("d2"))
           .groupBy(col("g"), col("d2"))
-          .agg(sum(col("cnt")).as("cnt"), min(col("m")).as("m"))
-          .localCheckpoint(true)
+          .agg(sum(col("cnt")).as("cnt"), min(col("m")).as("m")))
         val mad = distMedianW(devDist, "d2", "mad2")
         // m/mad2 are per-group constants riding the aggregate (min) —
         // no re-join of the median tables after the rollup.

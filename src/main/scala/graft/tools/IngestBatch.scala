@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Harness
 import graft.operators.{LlmOps, PipelineOps}
 
 /** PRODUCTION incremental ingest — the daily-crawl command composing the
@@ -85,7 +86,7 @@ object IngestBatch {
       coarseCodebook: DataFrame, pqCent: DataFrame,
       batchDocs: DataFrame, batchEmb: DataFrame,
       routeSupers: Option[DataFrame] = None): Seq[(String, DataFrame)] = {
-    val batchSets = LlmOps.hashedTokenSets(batchDocs).localCheckpoint(true)
+    val batchSets = Harness.materialize(LlmOps.hashedTokenSets(batchDocs))
     // Encode against the persisted codebook at ITS k (the dispatcher
     // picks flat/two-level from the codebook's own size — the same k
     // the base build routed with). A trained base additionally supplies
@@ -158,7 +159,7 @@ object IngestBatch {
     * documents. Laws (PersistedIndexSpec): readMerged before ≡
     * readMerged after, zero delta segments remain, idempotent (a second
     * run is a no-op rewrite of the base). Single-box mechanics: the
-    * merged frame is EAGERLY materialized (localCheckpoint) before the
+    * merged frame is EAGERLY materialized (Harness.materialize) before the
     * directories it was read from are replaced, so the rewrite can
     * never stream its own half-deleted input; a petabyte deployment
     * writes the compacted segment to a NEW directory and swaps a
@@ -178,7 +179,7 @@ object IngestBatch {
           .filter(f => f.isDirectory &&
             f.getName.startsWith(s"${name}__delta_")).toSeq
         val t0 = System.nanoTime()
-        val m = readMerged(spark, indexDir, name).localCheckpoint(true)
+        val m = Harness.materialize(readMerged(spark, indexDir, name))
         (deltaDirs :+ baseDir).foreach { d =>
           spark.sql(s"DROP TABLE IF EXISTS ${d.getName}")
           rmrf(d)
@@ -244,10 +245,8 @@ object IngestBatch {
     // is output-identical, BuildIndexes' documented contract).
     def base(name: String): DataFrame =
       spark.read.parquet(s"$indexDir/$name")
-    val batchDocs = spark.read.parquet(s"$batchDir/documents.parquet")
-      .localCheckpoint(true)
-    val batchEmb = spark.read.parquet(s"$batchDir/embeddings.parquet")
-      .localCheckpoint(true)
+    val batchDocs = Harness.materialize(spark.read.parquet(s"$batchDir/documents.parquet"))
+    val batchEmb = Harness.materialize(spark.read.parquet(s"$batchDir/embeddings.parquet"))
 
     // Idempotence: a re-run of the SAME tag must not read its own stale
     // delta back as prior corpus state (a duplicated doc_id in the
@@ -281,7 +280,7 @@ object IngestBatch {
         }
       }
     val routeSupers =
-      if (trained) Some(base("route_supers").localCheckpoint(true)) else None
+      if (trained) Some(Harness.materialize(base("route_supers"))) else None
     if (trained) println("[ingest-batch] trained-routing base: batch " +
       "routed with persisted route_supers")
 

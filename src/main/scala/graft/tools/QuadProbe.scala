@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.Harness
 import graft.operators.PipelineOps
 
 /** Dev tool: the PRODUCTION-SIZING datapoint for the cluster-bucketed
@@ -44,7 +45,7 @@ object QuadProbe {
 
     // Workload size: candidate pairs the bucketed self-join emits (the
     // quadratic term the sizing rule bounds).
-    val assigned = PipelineOps.assignToCentroids(emb, cent, k).localCheckpoint(true)
+    val assigned = Harness.materialize(PipelineOps.assignToCentroids(emb, cent, k))
     val pairs = PipelineOps.saltedSelfPairs(
       assigned.select(col("cid"), col("vec_id"), col("embedding")), "cid")
     val nPairs = pairs.count()

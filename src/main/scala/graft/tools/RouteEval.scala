@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.Harness
 import graft.operators.PipelineOps
 
 /** Dev tool (VERDICT r14 ask #9): re-grade the ANN evals against the
@@ -50,19 +51,19 @@ object RouteEval {
     val ks = pos(1).split(",").map(_.trim.toInt)
     val spark = graft.Harness.session(graft.Harness.cpus(32))
 
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet").localCheckpoint(true)
+    val emb = Harness.materialize(spark.read.parquet(s"$dir/embeddings.parquet"))
     val n = emb.count()
     val q = PipelineOps.queryBatch(emb, 20)
 
     def timedCk(df: org.apache.spark.sql.DataFrame)
         : (org.apache.spark.sql.DataFrame, Double) = {
       val t0 = System.nanoTime()
-      val c = df.localCheckpoint(true) // eager: times the full materialization
+      val c = Harness.materialize(df) // eager: times the full materialization
       (c, (System.nanoTime() - t0) / 1e9)
     }
 
     val rows = if (scaleMode) ks.map { k =>
-      val cent = PipelineOps.stubCodebook(emb, k).localCheckpoint(true)
+      val cent = Harness.materialize(PipelineOps.stubCodebook(emb, k))
       val (two, wTwo) = timedCk(PipelineOps.assignToCentroidsTwoLevel(emb, cent, k))
       val (part, wPart) = timedCk(
         PipelineOps.assignToCentroidsTwoLevelPartitioned(emb, cent, k))
@@ -95,7 +96,7 @@ object RouteEval {
       // wall(sample) · N/m bounds the full run from below (same
       // broadcast, same codegen, less data).
       val m = math.max(1L, n / 100L)
-      val sample = emb.filter(col("vec_id") < m).localCheckpoint(true)
+      val sample = Harness.materialize(emb.filter(col("vec_id") < m))
       val (_, wFlatS) = timedCk(PipelineOps.assignToCentroidsFlat(sample, cent))
       def recallSum(assigned: org.apache.spark.sql.DataFrame, nprobe: Int): Long =
         PipelineOps.annRecallAssigned(assigned, emb, cent, q, nprobe)
@@ -116,13 +117,10 @@ object RouteEval {
         s""""wall_flat_projected_sec":${wFlatS * n / m},"recall":$rj}"""
     }
     else ks.map { k =>
-      val cent = PipelineOps.stubCodebook(emb, k).localCheckpoint(true)
-      val flat = PipelineOps.assignToCentroidsFlat(emb, cent)
-        .localCheckpoint(true)
-      val two = PipelineOps.assignToCentroids(emb, cent, k)
-        .localCheckpoint(true)
-      val trained = PipelineOps.assignToCentroidsTwoLevelTrained(emb, cent, k)
-        .localCheckpoint(true)
+      val cent = Harness.materialize(PipelineOps.stubCodebook(emb, k))
+      val flat = Harness.materialize(PipelineOps.assignToCentroidsFlat(emb, cent))
+      val two = Harness.materialize(PipelineOps.assignToCentroids(emb, cent, k))
+      val trained = Harness.materialize(PipelineOps.assignToCentroidsTwoLevelTrained(emb, cent, k))
       def recallSum(assigned: org.apache.spark.sql.DataFrame, nprobe: Int): Long =
         PipelineOps.annRecallAssigned(assigned, emb, cent, q, nprobe)
           .agg(sum(col("n_hit"))).head.getLong(0)
@@ -130,8 +128,8 @@ object RouteEval {
       def stats(a: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
         val f = flat.select(col("vec_id"), col("cid").as("fcid"),
           col("best_sim").as("fsim"))
-        val j = a.select(col("vec_id"), col("cid"), col("best_sim"))
-          .join(f, "vec_id").localCheckpoint(true)
+        val j = Harness.materialize(a.select(col("vec_id"), col("cid"), col("best_sim"))
+          .join(f, "vec_id"))
         (j.filter(col("cid") === col("fcid")).count(),
           j.filter(col("best_sim") > col("fsim")).count(),
           a.groupBy(col("cid")).agg(count(lit(1)).as("c"))

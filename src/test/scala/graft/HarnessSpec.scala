@@ -4,6 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.commons.io.FileUtils
+import org.apache.commons.lang3.exception.ExceptionUtils
+import org.apache.spark.SparkException
+import org.apache.spark.sql.functions.col
+
 /** [[Harness]] is the one place the engine builds a `SparkSession` and
   * isolates one query from the next.
   */
@@ -31,6 +36,49 @@ class HarnessSpec extends SparkTestBase {
     // parallel, ordered drain replaced it.
     val sites = sitesOf("toLocalIterator")
     assert(sites.isEmpty, s"toLocalIterator in: ${sites.mkString(", ")}")
+  }
+
+  test("no file in src/main materializes a frame outside Harness") {
+    // Harness.materialize picks the form per deployment; a raw call
+    // elsewhere fails its query on a cluster once an executor is lost.
+    val sites = Seq(".localCheckpoint(", ".checkpoint(", ".persist(", ".cache()")
+      .flatMap(n => sitesOf(n, except = "Harness.scala").map(f => s"$f ($n)"))
+    assert(sites.isEmpty, s"materialized outside Harness.scala: ${sites.mkString(", ")}")
+  }
+
+  /** A frame with a shuffle, and its rows. */
+  private def grouped() = {
+    val df = spark.range(0, 2000, 1, 4).groupBy((col("id") % 7).as("k")).count()
+    (df, rowSet(df))
+  }
+
+  test("off local mode a materialized frame recomputes its lost blocks; a local checkpoint cannot") {
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val (df, want) = grouped()
+    val m = Harness.materialize(df, eager = true, local = false)
+    assert(rowSet(m) == want)
+    Harness.isolate(spark) // drops every block, as losing the executor that held them would
+    assert(rowSet(m) == want)
+    val raw = df.localCheckpoint(eager = true)
+    assert(rowSet(raw) == want)
+    Harness.isolate(spark)
+    val e = intercept[SparkException](raw.collect())
+    assert(ExceptionUtils.getRootCauseMessage(e).contains("Checkpoint block"), e)
+  }
+
+  test("off local mode with a checkpoint dir a materialized frame reads its reliable checkpoint") {
+    // A SparkContext's checkpoint dir cannot be unset, so it stays set for
+    // the suites after this one; on a local master materialize never
+    // reads it.
+    val dir = Files.createTempDirectory("graft-harness-ckpt")
+    try {
+      spark.sparkContext.setCheckpointDir(dir.toString)
+      val (df, want) = grouped()
+      val m = Harness.materialize(df, eager = true, local = false)
+      assert(m.queryExecution.executedPlan.toString.contains("ExistingRDD"))
+      Harness.isolate(spark)
+      assert(rowSet(m) == want)
+    } finally FileUtils.deleteQuietly(dir.toFile)
   }
 
   test("isolate unpersists a localCheckpoint's RDD") {

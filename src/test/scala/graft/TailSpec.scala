@@ -215,6 +215,33 @@ class TailSpec extends SparkTestBase {
     assert(got.size == 1 && got.head.endsWith(" before\rafter"), got)
   }
 
+  test("a non-ASCII props value prints as the shard file's bytes through a US-ASCII stdout") {
+    // With LANG unset the JVM's stdout encodes with ANSI_X3.4-1968, and a
+    // line printed straight through it shows every non-ASCII character as
+    // '?'. Tail.main wraps its stdout with Tail.utf8, as here.
+    import spark.implicits._
+    val root = Files.createTempDirectory("tail-utf8").toString
+    val value = "naïve café · 中文 ✓ 😀"
+    ShardedEvents.dump(Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 7L,
+      "click", 1.0, value)).toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+      root, 1)
+    val utf8 = value.getBytes("UTF-8").toSeq
+    val files = Files.walk(java.nio.file.Paths.get(root))
+    val inShard =
+      try files.iterator().asScala.filter(Files.isRegularFile(_))
+        .exists(p => Files.readAllBytes(p).toSeq.containsSlice(utf8))
+      finally files.close()
+    assert(inShard, "the shard file must hold the value's UTF-8 bytes")
+    val o = new ByteArrayOutputStream(); val e = new ByteArrayOutputStream()
+    val out = Tail.utf8(new PrintStream(o, true, "US-ASCII"))
+    val code = Tail.run(Array("-O", "-s", "0", root), () => spark,
+      out, new PrintStream(e, true, "UTF-8"), 0L)
+    out.flush()
+    assert(code == 0, e.toString("UTF-8"))
+    assert(o.toByteArray.toSeq.endsWith((" " + value + "\n").getBytes("UTF-8").toSeq),
+      o.toString("UTF-8"))
+  }
+
   private def window: Int = 2 * spark.sparkContext.defaultParallelism
 
   private val discard = new PrintStream(OutputStream.nullOutputStream())
