@@ -37,9 +37,19 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    // A subset's first query would otherwise pay its family's JIT and
+    // codegen warm-up inside its timed region (i37 read 6.0-9.6 s first
+    // in a subset against a 2.18 s envelope), so a subset also runs that
+    // query once untimed. A full-registry run keeps the entry warm-up
+    // only.
+    if (only.isDefined) selected.headOption.foreach { case (_, fn) =>
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case NonFatal(_) => () }
+      Harness.isolate(spark)
+    }
+    val results = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }

@@ -43,7 +43,8 @@ import org.apache.spark.sql.functions._
   *     — Go's `fmt`-verb formatting, compiled to `format_string` with
   *     per-verb argument casts (verb dialect translated: `%v`→`%s`,
   *     `%t`→`%b`; the pipeline value becomes the LAST argument, exactly
-  *     Go's pipeline rule)
+  *     Go's pipeline rule). A value its verb cannot format renders as
+  *     Go's `%!verb(string=value)`, never failing the record.
   *
   * Everything else — `{{if}}`/`{{range}}`/`{{with}}` control structures,
   * `$variables`, other functions — fails at COMPILE time with a message
@@ -176,10 +177,28 @@ object Template {
   private def goTimeString(c: Column): Column =
     concat(c.cast("string"), lit(" +0000 UTC"))
 
+  /** One non-string verb's rendering of `value`. Go's fmt never fails
+    * on a verb/type mismatch: it prints `%!verb(type=value)` in place
+    * (fmt docs, "Format errors"), and the reference never drops a
+    * stream over a render. So the cast is a `try_cast`, and a non-null
+    * value that fails it renders in that form. Every value a template
+    * reads at runtime is a string, so the type is `string` — except
+    * under `%x`/`%X`, which Go accepts for strings (hex of the bytes).
+    */
+  private def verbCol(v: Char, spec: String, castTo: String, value: Column): Column = {
+    val cast = value.try_cast(castTo)
+    val mismatch = v match {
+      case 'x' => lower(hex(value))
+      case 'X' => hex(value)
+      case _ => concat(lit(s"%!$v(string="), value.cast("string"), lit(")"))
+    }
+    when(value.isNotNull && cast.isNull, mismatch).otherwise(format_string(spec, cast))
+  }
+
   /** Compiles one `printf "fmt" args…` into `format_string`: the Go fmt
-    * string is rewritten verb-by-verb to the java.util.Formatter dialect
-    * and every argument gets the verb's cast (format_string is strict
-    * about JVM types where Go's fmt is reflective). A bare-Timestamp
+    * string is rewritten verb-by-verb to the java.util.Formatter dialect.
+    * A `%s`/`%v` argument is cast to string; any other verb renders its
+    * argument through [[verbCol]] into a `%s` slot. A bare-Timestamp
     * argument consumed by a `%s`/`%v` verb renders through
     * [[goTimeString]] — Go's fmt calls the Stringer for both verbs.
     */
@@ -196,10 +215,15 @@ object Template {
         if (ai >= args.length)
           fail(s"""printf "$fmt" has more verbs than arguments (${args.length} given)""")
         val (jv, castTo) = verbSpec(v, fmt)
-        sb.append(m.matched.dropRight(1)).append(jv)
-        casts += (if (castTo == "string" && args(ai).isBareTimestamp)
-          goTimeString(args(ai).col)
-        else args(ai).col.cast(castTo))
+        val spec = m.matched.dropRight(1) + jv
+        if (castTo != "string") {
+          sb.append("%s")
+          casts += verbCol(v, spec, castTo, args(ai).col)
+        } else {
+          sb.append(spec)
+          casts += (if (args(ai).isBareTimestamp) goTimeString(args(ai).col)
+            else args(ai).col.cast("string"))
+        }
         ai += 1
       }
       last = m.end

@@ -192,10 +192,9 @@ object PipelineOps {
     * quadratic, the exact inversion of the problem here; a production
     * deployment that scales their k recovers the probed-fraction
     * contract by scaling nprobe with it (see IvfParams scaladoc) and
-    * the assignment cost by passing k into the dispatcher, which routes
-    * hierarchically from [[hierRouteMin]] up (r15 — the scaledK
-    * consumers i24/i29 already do; O(N·√k·dim) multiplies, recall
-    * parity at the sf10 k=800 point per BASELINE.md).
+    * the assignment cost by passing k into [[assignToCentroids]], as
+    * the scaledK consumers i24/i29 already do (recall parity at the
+    * sf10 k=800 point per BASELINE.md).
     */
   private[graft] def scaledK(emb: DataFrame): Int =
     math.max(8, (emb.count() / 250).toInt)
@@ -257,16 +256,6 @@ object PipelineOps {
       hotThreshold: Long = 4096, salts: Int = 16): DataFrame =
     saltedSelfPairs(e, "label", hotThreshold, salts)
 
-  /** Nearest-centroid assignment with ZERO corpus shuffle: the codebook
-    * broadcasts as a 1-row array and the argmax runs INLINE per corpus
-    * row — `array_max` over (6dp-rounded dot, -cid) structs, so ties
-    * break to the smallest cid exactly like the `row_number` formulation,
-    * without fanning every vector into k rows and hash-Exchanging 8× the
-    * widest column in the system to re-group what one task already held.
-    * The k-element HOF is trivial next to an Exchange (the repo's
-    * "HOF lambdas are interpreted" caveat measured 2-3× on per-TOKEN
-    * lambdas; here it is k=8 dots per row, all index-ordered doubles).
-    */
   /** Oracle CTE block for nearest-centroid assignment — `cent` (the
     * vec_id<8 codebook), `adot` (6dp-rounded dot per vector x centroid),
     * `assigned` (smallest-cid argmax winner): the SQL twin of
@@ -430,26 +419,122 @@ object PipelineOps {
       .select(col("vec_id"), col("cid"))
   }
 
-  /** Routing dispatcher: FLAT inline argmax below [[hierRouteMin]]
-    * centroids (every fixed-k fixture consumer and every driver-gate SF
-    * under the scaledK rule — k = 8 there, so CORRECTNESS plans are
-    * bit-identical to r14's), TWO-LEVEL hierarchical routing at or above
-    * it (the scaledK production consumers i24/i29 from sf1 up, where the
-    * flat form's O(N·k·dim) = O(N²·dim/250) total work is the one
-    * asymptotic defect VERDICT r14 found), and GID-PARTITIONED stage 2
-    * from [[partitionedRouteMin]] up (r16 — the sf100 measurement; all
-    * three rungs are output-identical, so the sf1 numpy oracle mirrors
-    * ONE semantic function regardless of the physical rung). Callers
-    * that size k dynamically pass it; the default 0 keeps
-    * fixed-small-codebook callers on the flat path with zero signature
-    * churn.
+  /** Nearest-centroid routing — the ONE entry point, and the one place
+    * the routing rule is stated.
+    *
+    *   - Below [[hierRouteMin]] centroids: FLAT inline argmax
+    *     ([[assignToCentroidsFlat]]). Every fixed-k fixture consumer and
+    *     every correctness-gate SF under the scaledK rule (k = 8) plans
+    *     here, and `supers` is ignored: flat routing has no stage 1.
+    *   - From [[hierRouteMin]] up: TWO-LEVEL routing. Stage 1 sends each
+    *     row to its TOP-2 of g = ⌈√k⌉ SUPER-centroids (two probes, not
+    *     one, roughly halve the boundary-miss rate — the standard IVF
+    *     multi-probe mitigation, +14 pp flat agreement at sf1 k = 80);
+    *     tie-break the (−6dp dot, gid) sort, the annBatchTop3 probe
+    *     idiom. Stage 2 takes the (6dp dot, −cid) argmax over the union
+    *     of the two routed groups' members. Members are centroids
+    *     pre-assigned to their nearest super by the SAME flat argmax,
+    *     run once over the k-row codebook (codebook-sized work, never
+    *     corpus). Per-row multiply work drops from k·dim to about
+    *     3√k·dim, so the scaledK consumers' total falls from
+    *     O(N²·dim/250) to O(N^1.5·dim/√250). The winner is exact WITHIN
+    *     the routed groups — the standard IVF approximation; PipelineSpec
+    *     pins the best_sim ≤ flat law and a window-formulated oracle.
+    *
+    * Stage 2 has two physical forms with identical output, picked by k:
+    *   - below [[partitionedRouteMin]], BROADCAST: the grouped codebook
+    *     is one 1-row array, and each row takes each routed group's
+    *     local argmax in place and the max of the ≤ 2 winners — zero
+    *     corpus shuffle (PlanSpec pins the plan);
+    *   - from [[partitionedRouteMin]] up, GID-PARTITIONED: the exploded
+    *     top-2 probe rows join a distributed (gid → members) table and
+    *     the winners merge by vec_id — one more corpus shuffle for a
+    *     per-row cost that no longer grows with g.
+    *
+    * The supers come in two forms, and they differ only in how the
+    * (supers, member table) pair is prepared:
+    *   - stub (`supers = None`): the g lowest-cid codebook entries (cids
+    *     are 0..k−1 everywhere). A super is PINNED to its own group:
+    *     under unnormalized dot-argmax a super need not be its own
+    *     nearest super, and a routed-to group must never be
+    *     member-empty. The sf1 numpy oracle (tools/ivf_common.py)
+    *     mirrors this form.
+    *   - trained (`supers = Some(...)`, from [[trainRoutingSupers]]):
+    *     trained supers are not codebook members, so the self-pin does
+    *     not apply; member-empty groups are excluded from stage 1
+    *     instead (rows take their next-best super). BuildIndexes
+    *     `--trained-routing` opts in and persists them as
+    *     `route_supers`, so IngestBatch routes a batch with the build's
+    *     exact router.
+    *
+    * Output: (vec_id, embedding, cid, best_sim) on every path.
     */
   private[graft] def assignToCentroids(emb: DataFrame, cent: DataFrame,
-      k: Int = 0): DataFrame =
-    if (k >= partitionedRouteMin)
-      assignToCentroidsTwoLevelPartitioned(emb, cent, k)
-    else if (k >= hierRouteMin) assignToCentroidsTwoLevel(emb, cent, k)
-    else assignToCentroidsFlat(emb, cent)
+      k: Int = 0, supers: Option[DataFrame] = None): DataFrame =
+    if (k < hierRouteMin) assignToCentroidsFlat(emb, cent)
+    else {
+      val codebook = cent.select(col("cid").as("vec_id"), col("cemb").as("embedding"))
+      val (routeSupers, grouped) = supers match {
+        case None =>
+          val g = math.ceil(math.sqrt(k.toDouble)).toInt
+          val stub = cent.filter(col("cid") < g)
+          (stub, assignToCentroidsFlat(codebook, stub).select(
+            when(col("vec_id") < g, col("vec_id")).otherwise(col("cid")).as("gid"),
+            col("vec_id").as("mcid"), col("embedding").as("mcemb")))
+        case Some(trained) =>
+          val grouped = Harness.materialize(assignToCentroidsFlat(codebook, trained)
+            .select(col("cid").as("gid"), col("vec_id").as("mcid"),
+              col("embedding").as("mcemb")))
+          (trained.join(grouped.select(col("gid")).distinct(),
+            trained("cid") === col("gid"), "left_semi"), grouped)
+      }
+      val groupTable = grouped.groupBy(col("gid"))
+        .agg(collect_list(struct(col("mcid").as("cid"),
+          col("mcemb").as("cemb"))).as("members"))
+      val probed = emb.crossJoin(broadcast(centroidArray(routeSupers)))
+        .withColumn("pr", slice(array_sort(transform(col("cents"), c =>
+          struct(
+            (-round(VectorFunctions.dot(col("embedding"), c.getField("cemb")), 6)).as("ngd"),
+            c.getField("cid").as("gid")))), 1, 2))
+      val best =
+        if (k >= partitionedRouteMin)
+          probed.select(col("vec_id"), col("embedding"),
+              explode(expr("array_distinct(transform(pr, x -> x.gid))")).as("gid"))
+            .join(groupTable, Seq("gid"))
+            .withColumn("best", nearestOf(col("members")))
+            .groupBy(col("vec_id"))
+            .agg(first(col("embedding")).as("embedding"), max(col("best")).as("best"))
+        else
+          probed.select(col("vec_id"), col("embedding"),
+              col("pr").getItem(0).getField("gid").as("gid1"),
+              col("pr").getItem(1).getField("gid").as("gid2"))
+            .crossJoin(broadcast(
+              groupTable.agg(collect_list(struct(col("gid"), col("members"))).as("groups"))))
+            // MAX-OF-GROUP-MAXES, not flatten-of-filter: building the
+            // union member array per row deep-copies ~2√k·dim floats of
+            // broadcast structs per row (at sf100 k = 8000 that copy cost
+            // 5.7× the dots). argmax(A ∪ B) = max(argmax A, argmax B)
+            // under the same total (cd, ncid) order, so the output is
+            // the same. A missing gid2 (g = 1, or an ungrouped super id)
+            // contributes no candidate instead of NULLing a concat.
+            .withColumn("best", array_max(filter(
+              transform(col("groups"), x =>
+                when(x.getField("gid") === col("gid1") ||
+                  x.getField("gid") === col("gid2"), nearestOf(x.getField("members")))),
+              b => b.isNotNull)))
+      best.select(col("vec_id"), col("embedding"),
+        (-col("best").getField("ncid")).as("cid"),
+        col("best").getField("cd").as("best_sim"))
+    }
+
+  /** The row's nearest of an array of (cid, cemb) centroids as a
+    * (cd = 6dp dot, ncid = −cid) struct: `array_max` breaks ties to the
+    * smallest cid.
+    */
+  private def nearestOf(cents: Column): Column = array_max(transform(cents, c =>
+    struct(
+      round(VectorFunctions.dot(col("embedding"), c.getField("cemb")), 6).as("cd"),
+      (-c.getField("cid")).as("ncid"))))
 
   /** k at and above which [[assignToCentroids]] routes hierarchically.
     * Below it the flat argmax's k dots/row are cheaper than two routing
@@ -458,28 +543,32 @@ object PipelineOps {
     */
   private[graft] val hierRouteMin = 64
 
-  /** k at and above which the dispatcher takes the GID-PARTITIONED
-    * stage 2 instead of the broadcast form — the r16 sf100 measurement
-    * (2M vectors, `data/ROUTEEVAL_sf100_r16.json`): the broadcast
-    * form's per-row scan of the g-group array is interpreted
-    * expression work that grows with g, and by g ≈ 54 (k = 2828) the
-    * partitioned join's two corpus shuffles are 3.8× cheaper (25.7 s
-    * vs 98.4 s; 51.1 vs 142.9 at k = 8000) — outputs bit-identical
-    * (diff_rows = 0 at full 2M scale; PipelineSpec pins the law at
-    * k = 256). 1024 keeps every driver-gate and bench-ladder path
-    * (k ≤ 800 through sf10) on the zero-shuffle broadcast plan the
-    * PlanSpec pins, and moves only the k ≳ 10³ regime where the
-    * shuffle pays for itself (at k = 800/N = 2M the gap is only 1.3×,
-    * inside shuffle-amortization noise).
+  /** k at and above which [[assignToCentroids]] takes the GID-PARTITIONED
+    * stage 2. Above it the broadcast form's per-row scan of the g-group
+    * array is what grows: at 2M vectors (`data/ROUTEEVAL_sf100_r16.json`)
+    * the partitioned form read 19.6 s vs 21.1 s at k = 800, 38.8 s vs
+    * 54.3 s at k = 2828 and 45.0 s vs 124.6 s at k = 8000. Below it the
+    * extra corpus shuffle can cost more than it saves: in a same-window
+    * A/B, i24 at sf1 (k = 80) read 4.71 s against the broadcast form's
+    * 4.23 s (medians of 6 pairs, ROADMAP N4). So every correctness-gate
+    * and bench-ladder path (k ≤ 800 through sf10) stays on the
+    * zero-shuffle broadcast plan.
     */
   private[graft] val partitionedRouteMin = 1024
 
+  /** The flat rung of [[assignToCentroids]], with ZERO corpus shuffle:
+    * the codebook broadcasts as a 1-row array and the argmax runs INLINE
+    * per corpus row ([[nearestOf]]), so ties break to the smallest cid
+    * exactly like the `row_number` formulation, without fanning every
+    * vector into k rows and hash-Exchanging 8× the widest column in the
+    * system to re-group what one task already held.
+    * The k-element HOF is trivial next to an Exchange (the repo's
+    * "HOF lambdas are interpreted" caveat measured 2-3× on per-TOKEN
+    * lambdas; here it is k=8 dots per row, all index-ordered doubles).
+    */
   private[graft] def assignToCentroidsFlat(emb: DataFrame, cent: DataFrame): DataFrame =
     emb.crossJoin(broadcast(centroidArray(cent)))
-      .withColumn("best", array_max(transform(col("cents"), c =>
-        struct(
-          round(VectorFunctions.dot(col("embedding"), c.getField("cemb")), 6).as("cd"),
-          (-c.getField("cid")).as("ncid")))))
+      .withColumn("best", nearestOf(col("cents")))
       .select(col("vec_id"), col("embedding"),
         (-col("best").getField("ncid")).as("cid"),
         // The winning similarity rides along for free (it is already in
@@ -487,235 +576,18 @@ object PipelineOps {
         // other consumer projects it away before its first shuffle.
         col("best").getField("cd").as("best_sim"))
 
-  /** TWO-LEVEL hierarchical routing (VERDICT r14 ask #1): stage 1 routes
-    * each row to its TOP-2 of g = ⌈√k⌉ SUPER-centroids (the g
-    * lowest-cid codebook entries — cids are 0..k−1 everywhere, stub and
-    * trained alike; two probes, not one, halve the boundary-miss rate —
-    * the standard IVF multi-probe mitigation, measured +14pp flat-
-    * agreement at sf1 k=80); stage 2 takes the argmax over only those
-    * groups' members (centroids pre-assigned to their nearest super by
-    * the SAME flat argmax, run once over the k-row codebook —
-    * codebook-sized work, never corpus). Per-row multiply work drops
-    * from k·dim to (g + 2·|group|)·dim ≈ 3√k·dim, so the scaledK
-    * consumers' assignment
-    * total falls from O(N²·dim/250) to O(N^1.5·dim/√250). Both corpus
-    * stages are the broadcast-inline shape — 1-row-array crossJoins,
-    * ZERO corpus shuffle (PlanSpec pins both stages; the only hash
-    * Exchange in the plan is the k-row member groupBy). Tie-breaks
-    * match the flat form stage-local ((6dp dot, −cid/−gid) argmax), and
-    * the stage-2 winner is exact WITHIN the routed group — the standard
-    * IVF approximation: a row whose true nearest centroid lives in
-    * another super's group takes its group-local best instead
-    * (PipelineSpec measures the agreement rate and pins the
-    * best_sim ≤ flat law). The contract consumers inherit is unchanged:
-    * (vec_id, embedding, cid, best_sim).
-    *
-    * Broadcast footprint: the grouped codebook is still one O(k·dim)
-    * broadcast (stage 2 needs every member reachable row-locally);
-    * the asymptotic win this round is the MULTIPLY count. When k itself
-    * outgrows a broadcast (≳10⁷·dim), the gid-partitioned join variant
-    * — rows hash-partitioned by gid against a (gid → members) table —
-    * is the documented next rung; it trades one corpus shuffle for an
-    * O(√k·dim) per-task footprint.
-    */
-  /** OPT-IN routing-quality upgrade over [[assignToCentroidsTwoLevel]]:
-    * the supers are TRAINED (Lloyd over the k-row codebook — codebook-
-    * sized work, ~8 tiny jobs, never corpus) instead of the first-g
-    * stub, so they tile the centroid set instead of being g arbitrary
-    * directions. Trained supers are not codebook members, so the
-    * self-pin doesn't apply; member-empty groups are excluded from the
-    * stage-1 routing array instead (a super no centroid picked cannot
-    * be routed to — rows take their next-best super). Measured by
-    * RouteEval (BASELINE.md r15): closes most of the small-k recall gap
-    * the stub supers pay on isotropic fixtures. NOT wired into the
-    * default dispatcher: the scaledK consumers keep the stub form the
-    * sf1 numpy oracle mirrors; a deployment opts in at BuildIndexes
-    * time, where the training cost amortizes into the build.
-    */
-  private[graft] def assignToCentroidsTwoLevelTrained(emb: DataFrame,
-      cent: DataFrame, k: Int, maxIters: Int = 8): DataFrame =
-    assignToCentroidsTwoLevelFromSupers(emb, cent,
-      trainRoutingSupers(cent, k, maxIters), k)
-
-  /** The trained stage-1 supers on their own: Lloyd over the k-row
-    * codebook (codebook-sized work, ~`maxIters` tiny jobs, never
-    * corpus). Split out of [[assignToCentroidsTwoLevelTrained]] so
-    * BuildIndexes can PERSIST them (the `route_supers` artifact) and an
-    * ingest can route a batch with the build's exact router instead of
-    * silently re-deriving one (VERDICT r16 ask #2 — a trained base and
-    * a stub-routed delta in one merged table is two routing semantics
-    * in one artifact, and the additivity law fails). The result is
+  /** Trained stage-1 supers for [[assignToCentroids]]: Lloyd over the
+    * k-row codebook (codebook-sized work, ~`maxIters` tiny jobs, never
+    * corpus), g = ⌈√k⌉ of them. None below [[hierRouteMin]], where
+    * routing is flat and has no stage 1. BuildIndexes persists the
+    * result (the `route_supers` artifact). The frame is
     * [[trainCodebook]]'s, which is already materialized.
     */
   private[graft] def trainRoutingSupers(cent: DataFrame, k: Int,
-      maxIters: Int = 8): DataFrame =
-    trainCodebook(
+      maxIters: Int = 8): Option[DataFrame] =
+    Option.when(k >= hierRouteMin)(trainCodebook(
       cent.select(col("cid").as("vec_id"), col("cemb").as("embedding")),
-      math.ceil(math.sqrt(k.toDouble)).toInt, maxIters)
-
-  /** Two-level routing against EXTERNALLY-SUPPLIED supers — the form
-    * both the trained build ([[trainRoutingSupers]] fresh) and the
-    * trained-base ingest (route_supers read back) share, so base and
-    * delta provably route identically. Trained supers are not codebook
-    * members, so the stub form's self-pin doesn't apply; member-empty
-    * groups are excluded from the stage-1 routing array instead (a
-    * super no centroid picked cannot be routed to — rows take their
-    * next-best super). Stage 2 dispatches like the stub dispatcher:
-    * broadcast below [[partitionedRouteMin]], the gid-partitioned join
-    * at/above it (VERDICT r16 ask #3 — at the sf100 k = 8000 point the
-    * broadcast form costs 2.8× the partitioned rung, and trained
-    * routing exists precisely for the large-k regime). The two rungs
-    * are output-identical (PipelineSpec pins it at k = 256 via the
-    * `partitionedStage2` override, which exists only for that law —
-    * production callers leave it None and take the k dispatch).
-    */
-  private[graft] def assignToCentroidsTwoLevelFromSupers(emb: DataFrame,
-      cent: DataFrame, supers: DataFrame, k: Int,
-      partitionedStage2: Option[Boolean] = None): DataFrame = {
-    val grouped = Harness.materialize(assignToCentroidsFlat(
-        cent.select(col("cid").as("vec_id"), col("cemb").as("embedding")), supers)
-      .select(col("cid").as("gid"), col("vec_id").as("mcid"),
-        col("embedding").as("mcemb")))
-    val presentSupers = supers.join(
-      grouped.select(col("gid")).distinct(),
-      supers("cid") === col("gid"), "left_semi")
-    val groupTable = grouped
-      .groupBy(col("gid"))
-      .agg(collect_list(struct(col("mcid").as("cid"),
-        col("mcemb").as("cemb"))).as("members"))
-    if (partitionedStage2.getOrElse(k >= partitionedRouteMin))
-      twoLevelRoutePartitioned(emb, presentSupers, groupTable)
-    else twoLevelRoute(emb, presentSupers,
-      groupTable.agg(collect_list(struct(col("gid"), col("members")))
-        .as("groups")))
-  }
-
-  private[graft] def assignToCentroidsTwoLevel(emb: DataFrame, cent: DataFrame,
-      k: Int): DataFrame = {
-    val g = math.ceil(math.sqrt(k.toDouble)).toInt
-    val supers = cent.filter(col("cid") < g)
-    // Codebook grouping: k rows through the flat argmax against the g
-    // supers, then one k-row groupBy — both codebook-sized. A super is
-    // PINNED to its own group: under unnormalized dot-argmax a super
-    // need not be its own nearest super, and rows route by the same
-    // argmax a super loses — a routed-to group must never be
-    // member-empty (stage 2's lookup would go NULL).
-    val groupArray = assignToCentroidsFlat(
-        cent.select(col("cid").as("vec_id"), col("cemb").as("embedding")), supers)
-      .select(when(col("vec_id") < g, col("vec_id")).otherwise(col("cid")).as("gid"),
-        col("vec_id").as("mcid"), col("embedding").as("mcemb"))
-      .groupBy(col("gid"))
-      .agg(collect_list(struct(col("mcid").as("cid"),
-        col("mcemb").as("cemb"))).as("members"))
-      .agg(collect_list(struct(col("gid"), col("members"))).as("groups"))
-    twoLevelRoute(emb, supers, groupArray)
-  }
-
-  /** The GID-PARTITIONED form of two-level routing — the documented next
-    * rung when k itself outgrows a comfortable broadcast (≳10⁷·dim):
-    * stage 1 is unchanged (the supers broadcast is only O(√k·dim)), but
-    * stage 2 JOINS the probe rows against a distributed (gid → members)
-    * table instead of broadcasting the whole grouped codebook — each
-    * task holds only the ≤√k·dim member arrays of the gids it received.
-    * The trade is explicit: two corpus shuffles (probe rows by gid, then
-    * the 2-probe merge by vec_id) for an O(√k·dim) per-task footprint;
-    * below broadcast-comfort the broadcast form wins and stays the
-    * dispatcher default. Output-identical to
-    * [[assignToCentroidsTwoLevel]] (PipelineSpec pins equality at
-    * k=256): same grouping (self-pinned supers), same top-2 stage 1,
-    * same (6dp, −cid) argmax — only the DISTRIBUTION of stage 2 moves.
-    */
-  private[graft] def assignToCentroidsTwoLevelPartitioned(emb: DataFrame,
-      cent: DataFrame, k: Int): DataFrame = {
-    val g = math.ceil(math.sqrt(k.toDouble)).toInt
-    val supers = cent.filter(col("cid") < g)
-    val groupTable = assignToCentroidsFlat(
-        cent.select(col("cid").as("vec_id"), col("cemb").as("embedding")), supers)
-      .select(when(col("vec_id") < g, col("vec_id")).otherwise(col("cid")).as("gid"),
-        col("vec_id").as("mcid"), col("embedding").as("mcemb"))
-      .groupBy(col("gid"))
-      .agg(collect_list(struct(col("mcid").as("cid"),
-        col("mcemb").as("cemb"))).as("members"))
-    twoLevelRoutePartitioned(emb, supers, groupTable)
-  }
-
-  /** The shared GID-PARTITIONED stage 2 over a prepared super table and
-    * a DISTRIBUTED (gid → members) table — stub and trained routing
-    * differ only in how they prepare those two inputs (self-pinned
-    * grouping vs present-super exclusion), so the partitioned physical
-    * form is one definition, exactly as [[twoLevelRoute]] is for the
-    * broadcast form. Stage 1 is unchanged (the supers broadcast is only
-    * O(√k·dim)); stage 2 joins the exploded top-2 probe rows against
-    * the member table — two corpus shuffles for an O(√k·dim) per-task
-    * footprint, the trade that wins from [[partitionedRouteMin]] up.
-    */
-  private def twoLevelRoutePartitioned(emb: DataFrame, supers: DataFrame,
-      groupTable: DataFrame): DataFrame = {
-    val probes = emb.crossJoin(broadcast(centroidArray(supers)))
-      .withColumn("pr", slice(array_sort(transform(col("cents"), c =>
-        struct(
-          (-round(VectorFunctions.dot(col("embedding"), c.getField("cemb")), 6)).as("ngd"),
-          c.getField("cid").as("gid")))), 1, 2))
-      .select(col("vec_id"), col("embedding"),
-        explode(expr("array_distinct(transform(pr, x -> x.gid))")).as("gid"))
-    probes.join(groupTable, Seq("gid"))
-      .withColumn("best", array_max(transform(col("members"), c =>
-        struct(
-          round(VectorFunctions.dot(col("embedding"), c.getField("cemb")), 6).as("cd"),
-          (-c.getField("cid")).as("ncid")))))
-      .groupBy(col("vec_id"))
-      .agg(first(col("embedding")).as("embedding"),
-        max(col("best")).as("gbest"))
-      .select(col("vec_id"), col("embedding"),
-        (-col("gbest").getField("ncid")).as("cid"),
-        col("gbest").getField("cd").as("best_sim"))
-  }
-
-  /** The shared corpus stages of two-level routing over a prepared super
-    * table and 1-row grouped-member array — stage 1 routes to the TOP-2
-    * supers (multi-probe, the standard IVF coarse-quantizer mitigation:
-    * a row near a super boundary evaluates BOTH groups' members,
-    * roughly halving the boundary-miss rate for one extra √k-sized
-    * group scan — per-row work stays (g + ~2√k)·dim; tie-break the
-    * (−6dp dot, gid) sort, the annBatchTop3 probe idiom); stage 2 takes
-    * the argmax over the union of the two routed groups' members.
-    */
-  private def twoLevelRoute(emb: DataFrame, supers: DataFrame,
-      groupArray: DataFrame): DataFrame =
-    emb.crossJoin(broadcast(centroidArray(supers)))
-      .withColumn("pr", slice(array_sort(transform(col("cents"), c =>
-        struct(
-          (-round(VectorFunctions.dot(col("embedding"), c.getField("cemb")), 6)).as("ngd"),
-          c.getField("cid").as("gid")))), 1, 2))
-      .select(col("vec_id"), col("embedding"),
-        col("pr").getItem(0).getField("gid").as("gid1"),
-        col("pr").getItem(1).getField("gid").as("gid2"))
-      .crossJoin(broadcast(groupArray))
-      // MAX-OF-GROUP-MAXES, not flatten-of-filter: building the union
-      // member array per row deep-copies ~2√k·dim floats of broadcast
-      // structs per row, and at sf100 k=8000 that copy dominated the
-      // dots 5.7× (data/ROUTEEVAL_sf100_r16.json: 255.7 s vs the
-      // copy-free partitioned form's 45.0 s). Taking each group's local
-      // argmax in place and max-ing the ≤2 winners evaluates the same
-      // dots over the same members with ZERO per-row array
-      // materialization — argmax(A ∪ B) = max(argmax A, argmax B) under
-      // the same total (cd, ncid) struct order, so the output is
-      // bit-identical (the sf1 numpy oracle and PipelineSpec's k=256
-      // window-oracle equality both still pin it). A missing gid2
-      // (g = 1, or an ungrouped super id) contributes no candidate
-      // (filter-of-nulls) instead of NULLing a concat.
-      .withColumn("best", array_max(filter(
-        transform(col("groups"), x =>
-          when(x.getField("gid") === col("gid1") ||
-              x.getField("gid") === col("gid2"),
-            array_max(transform(x.getField("members"), c =>
-              struct(
-                round(VectorFunctions.dot(col("embedding"), c.getField("cemb")), 6).as("cd"),
-                (-c.getField("cid")).as("ncid")))))),
-        b => b.isNotNull)))
-      .select(col("vec_id"), col("embedding"),
-        (-col("best").getField("ncid")).as("cid"),
-        col("best").getField("cd").as("best_sim"))
+      math.ceil(math.sqrt(k.toDouble)).toInt, maxIters))
 
   /** The batch-ANN pipeline (per-query nprobe routing + top-3), fully
     * parameterized over corpus, codebook, query batch and nprobe:
@@ -4553,9 +4425,9 @@ object PipelineOps {
         val emb = t(s, dir, "embeddings")
         val k = scaledK(emb)
         val cent = stubCodebook(emb, k)
-        // k rides into the dispatcher: flat at every driver-gate SF
-        // (k = 8 there), TWO-LEVEL from sf1 up (k ≥ 80) — the r14
-        // asymptote fix (see assignToCentroidsTwoLevel). The SQL
+        // k rides into the dispatcher (see assignToCentroids): flat at
+        // every correctness-gate SF (k = 8 there), two-level from sf1 up
+        // (k ≥ 80). The SQL
         // oracle below interpolates the FLAT centroidAssignCte, so it
         // is valid only below hierRouteMin (every driver-gate SF); at
         // sf >= 1 the gate swaps to tools/i24_sf1_oracle.py, which

@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -25,8 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Reference semantics mapped 1:1 (reference `main.go`):
   *   - **shard enumeration** (`main.go:148-172`, paginated ListShards with
-  *     a NextToken loop): [[ShardedEvents.listShards]] walks the stream
-  *     directory in pages; each `shard_id=<id>` partition directory is one
+  *     a NextToken loop): [[ShardedEvents.listShards]] lists the stream
+  *     directory once; each `shard_id=<id>` partition directory is one
   *     shard. Re-enumerated every trigger, so shards appearing mid-stream
   *     (a reshard) are picked up — strictly more than the reference, which
   *     lists once at startup.
@@ -77,34 +77,17 @@ object ShardedEvents {
   /** Null sentinel for the text payload column (`props`). */
   private[sources] val NullToken = "\\N"
 
-  /** Shard-directory pagination page size — small on purpose so every
-    * multi-shard test exercises the NextToken loop (`main.go:148-172`).
+  /** The stream's shard ids (`shard_id=<id>` directories), sorted for
+    * determinism. The reference pages through ListShards
+    * (`main.go:148-172`); a directory listing arrives whole.
     */
-  private val ListPageSize = 5
-
-  /** Enumerate shard directories page-by-page (the reference's paginated
-    * ListShards loop). Returns shard ids sorted for determinism.
-    */
-  private[sources] def listShards(root: String): Seq[String] = {
-    val dirs = Option(new File(root).listFiles())
+  private[sources] def listShards(root: String): Seq[String] =
+    Option(new File(root).listFiles())
       .getOrElse(Array.empty[File])
       .filter(f => f.isDirectory && f.getName.startsWith("shard_id="))
       .map(_.getName.stripPrefix("shard_id="))
       .sorted
-    // NextToken pagination over the sorted listing: consume one page at a
-    // time until no token remains, accumulating ids — deliberately shaped
-    // like main.go:152-171 rather than a single readdir.
-    val out = Seq.newBuilder[String]
-    var token = 0
-    var done = false
-    while (!done) {
-      val page = dirs.slice(token, token + ListPageSize)
-      out ++= page
-      token += ListPageSize
-      if (token >= dirs.length) done = true
-    }
-    out.result()
-  }
+      .toSeq
 
   /** A shard's data files in sequence order. */
   private[sources] def shardFiles(root: String, shard: String): Seq[File] =
@@ -432,7 +415,6 @@ class ShardedEventsStream(root: String, startUs: Long, maxPerTrigger: Option[Lon
       }
       val capped = limit match {
         case m: ReadMaxRows => math.min(end, from + m.maxRows())
-        case _: ReadAllAvailable => end
         case _ => end
       }
       shard -> math.max(from, capped)

@@ -94,7 +94,7 @@ object BuildIndexes {
     write("truth_pairs", LlmOps.pairStats(docs, 7), Seq("doc_id1", "doc_id2"))
 
     // ANN-side artifacts: coarse assignment at the production scaledK
-    // (two-level routed at k >= hierRouteMin), plus the PQ pair.
+    // (routed by PipelineOps.assignToCentroids), plus the PQ pair.
     // --trained-routing opts into trained supers (RouteEval: +15 pp
     // agreement and half the bucket skew at sf1 k=80 vs stub supers —
     // the training cost amortizes into the build, which is exactly
@@ -110,19 +110,19 @@ object BuildIndexes {
     // semantics in one merged coarse_assign and the additivity law
     // breaks (VERDICT r16 ask #2). A stub build removes any stale
     // route_supers so artifact presence always equals manifest truth.
-    val useTrained = trainedRouting && k >= PipelineOps.hierRouteMin
-    val assigned =
-      if (useTrained) {
-        val supers = PipelineOps.trainRoutingSupers(coarse, k)
-        write("route_supers", supers, Seq())
-        PipelineOps.assignToCentroidsTwoLevelFromSupers(emb, coarse, supers, k)
-      } else {
+    // No supers come back where routing is flat (small k): that build
+    // is a stub build.
+    val supers =
+      if (trainedRouting) PipelineOps.trainRoutingSupers(coarse, k) else None
+    supers match {
+      case Some(sup) => write("route_supers", sup, Seq())
+      case None =>
         spark.sql("DROP TABLE IF EXISTS route_supers")
         rmrf(new java.io.File(s"$outDir/route_supers"))
-        PipelineOps.assignToCentroids(emb, coarse, k)
-      }
-    write("coarse_assign", assigned.select(col("vec_id"), col("cid")),
-      Seq("vec_id"))
+    }
+    write("coarse_assign",
+      PipelineOps.assignToCentroids(emb, coarse, k, supers)
+        .select(col("vec_id"), col("cid")), Seq("vec_id"))
     val sub = PipelineOps.pqBlocks(emb, nBlocks = 4, blockDim = 16)
     val pqCent = Harness.materialize(PipelineOps.pqTrainStep(
       sub, PipelineOps.pqStubCodebook(sub, 8)))
@@ -184,7 +184,7 @@ object BuildIndexes {
     val tag = java.nio.file.Paths.get(dir).getFileName.toString
       .replaceAll("[^A-Za-z0-9._-]", "_")
     val line = s"""{"sf_dir":"$dir","out_dir":"$outDir",""" +
-      s""""trained_routing":$useTrained,""" +
+      s""""trained_routing":${supers.isDefined},""" +
       s""""artifacts":${built.mkString("[", ",", "]")},""" +
       s""""read_paths":${measured.mkString("[", ",", "]")},""" +
       s""""health_start":$healthStart,"health_end":${graft.HealthStamp.json()}}"""

@@ -87,10 +87,9 @@ object IngestBatch {
       batchDocs: DataFrame, batchEmb: DataFrame,
       routeSupers: Option[DataFrame] = None): Seq[(String, DataFrame)] = {
     val batchSets = Harness.materialize(LlmOps.hashedTokenSets(batchDocs))
-    // Encode against the persisted codebook at ITS k (the dispatcher
-    // picks flat/two-level from the codebook's own size — the same k
-    // the base build routed with). A trained base additionally supplies
-    // its persisted route_supers, and the batch routes through the SAME
+    // Encode against the persisted codebook at ITS k (the same k the
+    // base build routed with). A trained base additionally supplies its
+    // persisted route_supers, so the batch routes through the SAME
     // trained router (VERDICT r16 ask #2) — otherwise the merged
     // coarse_assign would mix stub-routed delta rows into a
     // trained-routed base, and build(c ∪ b) ≡ base ∪ delta fails.
@@ -107,10 +106,7 @@ object IngestBatch {
           .join(corpusGrams, Seq("g"), "left_anti"),
       "truth_pairs" -> LlmOps.pairStatsIngest(corpusSets, batchSets, 7),
       "coarse_assign" ->
-        routeSupers.fold(
-            PipelineOps.assignToCentroids(batchEmb, coarseCodebook, k))(sup =>
-            PipelineOps.assignToCentroidsTwoLevelFromSupers(
-              batchEmb, coarseCodebook, sup, k))
+        PipelineOps.assignToCentroids(batchEmb, coarseCodebook, k, routeSupers)
           .select(col("vec_id"), col("cid")),
       "pq_codes" ->
         PipelineOps.pqAssign(

@@ -235,11 +235,14 @@ class PersistedIndexSpec extends SparkTestBase {
     import spark.implicits._
     persistedTables
     val emb = Tables.load(spark, dir, "embeddings")
-    val coarse = PipelineOps.stubCodebook(emb, 8).localCheckpoint(true)
+    // The smallest k that routes two-level, so the supers are trained
+    // (below it BuildIndexes writes a stub build).
+    val k = PipelineOps.hierRouteMin
+    val coarse = PipelineOps.stubCodebook(emb, k).localCheckpoint(true)
     spark.sql("DROP TABLE IF EXISTS coarse_assign_trained_pt")
     rmrf(new java.io.File("/tmp/graft-test-warehouse/coarse_assign_trained_pt"))
-    val trainedInQuery = PipelineOps.assignToCentroidsTwoLevelTrained(
-      emb, coarse, 8).localCheckpoint(true)
+    val trainedInQuery = PipelineOps.assignToCentroids(emb, coarse, k,
+      PipelineOps.trainRoutingSupers(coarse, k)).localCheckpoint(true)
     trainedInQuery.select(col("vec_id"), col("cid")).write.format("parquet")
       .bucketBy(8, "vec_id").sortBy("vec_id")
       .mode("overwrite").saveAsTable("coarse_assign_trained_pt")
@@ -253,7 +256,7 @@ class PersistedIndexSpec extends SparkTestBase {
     assert(res.nonEmpty && res.length <= 10)
     // (a) probe membership under the TRAINED assignment.
     val cidOf = assignedT.as[(Long, Long)].collect().toMap
-    val cents = emb.filter(col("vec_id") < 8)
+    val cents = emb.filter(col("vec_id") < k)
       .select("vec_id", "embedding").as[(Long, Seq[Float])].collect()
     val qv = emb.filter(col("vec_id") === 0)
       .select("embedding").as[Seq[Float]].head()
@@ -263,7 +266,8 @@ class PersistedIndexSpec extends SparkTestBase {
       .map { case (cid, ce) =>
         (BigDecimal(dot(qv, ce))
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, cid) }
-      .sortBy { case (d, cid) => (-d, cid) }.take(2).map(_._2).toSet
+      .sortBy { case (d, cid) => (-d, cid) }.take(PipelineOps.ivfParams.nprobe)
+      .map(_._2).toSet
     res.foreach { case (v, _) =>
       assert(probes(cidOf(v)),
         s"vec $v (trained cluster ${cidOf(v)}) outside probed clusters $probes")
@@ -437,6 +441,7 @@ class PersistedIndexSpec extends SparkTestBase {
     // codebook (what BuildIndexes writes as route_supers and the ingest
     // reads back) — NOT retrained on ingest.
     val sup = PipelineOps.trainRoutingSupers(cb, k)
+    assert(sup.isDefined, s"k = $k >= hierRouteMin must train supers")
     val sub = PipelineOps.pqBlocks(ce, nBlocks = 4, blockDim = 16)
       .localCheckpoint(true)
     val pqCent = PipelineOps.pqTrainStep(
@@ -445,9 +450,9 @@ class PersistedIndexSpec extends SparkTestBase {
     val corpusGrams = PipelineOps.gramOcc(cd, 5).select(col("g")).distinct()
       .localCheckpoint(true)
     val d = IngestBatch.deltas(corpusSets, corpusGrams, cb, pqCent,
-      bd, be, routeSupers = Some(sup)).toMap
+      bd, be, routeSupers = sup).toMap
     def trainedAssign(e: org.apache.spark.sql.DataFrame) =
-      PipelineOps.assignToCentroidsTwoLevelFromSupers(e, cb, sup, k)
+      PipelineOps.assignToCentroids(e, cb, k, sup)
         .select(col("vec_id"), col("cid"))
     // The delta IS the trained routing of the batch...
     assertSameRows(d("coarse_assign"), trainedAssign(be))

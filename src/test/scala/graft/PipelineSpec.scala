@@ -1512,17 +1512,15 @@ class PipelineSpec extends SparkTestBase {
       s"non-starved source keeps its best level: $s2")
   }
 
-  test("two-level routing == the window-formulated two-stage oracle (k=256)") {
-    // The r15 hierarchical router's inline argmaxes (stage 1 supers,
-    // stage 2 group members, + the super self-pin in the grouping) must
-    // reproduce an INDEPENDENT row_number formulation of the same
-    // two-stage semantics exactly — the same law the flat form's SQL
-    // oracle pins at the gate SFs, where k stays below hierRouteMin.
+  /** An INDEPENDENT row_number formulation of stub two-level routing
+    * (stage 1 top-2 of the g lowest-cid supers, stage 2 argmax over the
+    * routed groups' members, each super pinned to its own group):
+    * (vec_id, cid, best_sim).
+    */
+  private def twoStageOracle(emb: org.apache.spark.sql.DataFrame,
+      cent: org.apache.spark.sql.DataFrame, k: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val emb = Tables.load(spark, dir, "embeddings")
-    val k = 256
     val g = math.ceil(math.sqrt(k.toDouble)).toInt
-    val cent = PipelineOps.stubCodebook(emb, k).localCheckpoint(true)
     val supers = cent.filter(col("cid") < g)
     def rankTo(rows: org.apache.spark.sql.DataFrame, keep: Int, idOut: String) =
       rows.crossJoin(supers.select(col("cid").as("xid"), col("cemb").as("xemb")))
@@ -1539,15 +1537,37 @@ class PipelineSpec extends SparkTestBase {
     // stage 1 keeps the TOP-2 supers; joining both routed rows to the
     // (disjoint) groups unions their members, and the final argmax over
     // the union is the two-level winner.
-    val expect = rankTo(emb, 2, "gid").join(grouping, "gid")
+    rankTo(emb, 2, "gid").join(grouping, "gid")
       .withColumn("d", round(VectorFunctions.dot(col("embedding"), col("cemb")), 6))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("d").desc, col("mcid"))))
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("mcid").as("cid"), col("d").as("best_sim"))
-    val got = PipelineOps.assignToCentroids(emb, cent, k)
+  }
+
+  /** `body` with every broadcast join below a hint turned off. */
+  private def withoutBroadcastJoins(body: => Unit): Unit = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try body finally spark.conf.set(key, old)
+  }
+
+  test("two-level routing == the window-formulated two-stage oracle (k=256)") {
+    // The hierarchical router's inline argmaxes (stage 1 supers, stage 2
+    // group members, + the super self-pin in the grouping) must
+    // reproduce the row_number formulation of the same two-stage
+    // semantics exactly — the same law the flat form's SQL oracle pins
+    // at the gate SFs, where k stays below hierRouteMin. Broadcast joins
+    // off must not change a row.
+    val emb = Tables.load(spark, dir, "embeddings")
+    val k = 256
+    val cent = PipelineOps.stubCodebook(emb, k).localCheckpoint(true)
+    val expect = twoStageOracle(emb, cent, k)
+    def got = PipelineOps.assignToCentroids(emb, cent, k)
       .select(col("vec_id"), col("cid"), col("best_sim"))
     assertSameRows(got, expect)
+    withoutBroadcastJoins(assertSameRows(got, expect))
   }
 
   test("two-level routing laws: best_sim never exceeds flat; dispatcher honors hierRouteMin") {
@@ -1572,22 +1592,25 @@ class PipelineSpec extends SparkTestBase {
     assert(agree > 0, "routing must recover at least some flat winners")
     // Dispatcher: below hierRouteMin the k hint still plans FLAT (the
     // gate-SF guarantee — CORRECTNESS plans bit-identical to r14).
+    // Supplied supers are ignored there: flat routing has no stage 1.
     val small = PipelineOps.stubCodebook(emb, 8)
-    assertSameRows(PipelineOps.assignToCentroids(emb, small, 8),
-      PipelineOps.assignToCentroidsFlat(emb, small))
-    // Dispatcher, third rung (r16): at k >= partitionedRouteMin the
-    // SAME call routes stage 2 through the distributed gid join — the
-    // plan gains hash Exchanges (the broadcast form has none) and the
-    // output stays identical to the broadcast form at the same k.
+    Seq(None, Some(small)).foreach(sup =>
+      assertSameRows(PipelineOps.assignToCentroids(emb, small, 8, sup),
+        PipelineOps.assignToCentroidsFlat(emb, small)))
+    // Dispatcher, partitioned stage 2: at k >= partitionedRouteMin the
+    // SAME call routes stage 2 through the gid join — the plan gains the
+    // vec_id merge Exchange (the broadcast form has none) — and still
+    // matches the two-stage oracle, with broadcast joins on and off.
     val kp = PipelineOps.partitionedRouteMin
-    val dispatched = PipelineOps.assignToCentroids(emb, cent, kp)
-    assert("Exchange hashpartitioning".r
-        .findAllIn(dispatched.queryExecution.executedPlan.toString).nonEmpty,
+    def dispatched = PipelineOps.assignToCentroids(emb, cent, kp)
+    assert(!two.queryExecution.executedPlan.toString.contains("hashpartitioning(vec_id"),
+      "below partitionedRouteMin stage 2 must stay broadcast")
+    assert(dispatched.queryExecution.executedPlan.toString.contains("hashpartitioning(vec_id"),
       "k >= partitionedRouteMin must plan the partitioned stage 2")
-    assertSameRows(
-      dispatched.select(col("vec_id"), col("cid"), col("best_sim")),
-      PipelineOps.assignToCentroidsTwoLevel(emb, cent, kp)
-        .select(col("vec_id"), col("cid"), col("best_sim")))
+    val expect = twoStageOracle(emb, cent, kp)
+    assertSameRows(dispatched.select(col("vec_id"), col("cid"), col("best_sim")), expect)
+    withoutBroadcastJoins(assertSameRows(
+      dispatched.select(col("vec_id"), col("cid"), col("best_sim")), expect))
   }
 
   test("BPE trainer: deterministic merge list, strict per-round compression, replay == trainer state") {
@@ -1615,30 +1638,6 @@ class PipelineSpec extends SparkTestBase {
     // Deployment replay of the merge list reproduces the trainer's
     // final word table exactly.
     assertSameRows(PipelineOps.bpeApplyMerges(base, merges), finalWords)
-  }
-
-  test("gid-partitioned two-level routing == the broadcast form (k=256), incl. no-broadcast plan") {
-    // The documented next rung for k beyond broadcast comfort: stage 2
-    // joins a distributed (gid -> members) table instead of broadcasting
-    // the grouped codebook. Semantics must be IDENTICAL — only the
-    // distribution moves — and the plan must survive with broadcasts
-    // disabled (the regime it exists for).
-    val emb = Tables.load(spark, dir, "embeddings")
-    val k = 256
-    val cent = PipelineOps.stubCodebook(emb, k).localCheckpoint(true)
-    val want = PipelineOps.assignToCentroidsTwoLevel(emb, cent, k)
-      .select("vec_id", "cid", "best_sim")
-    val gotDefault = PipelineOps.assignToCentroidsTwoLevelPartitioned(emb, cent, k)
-      .select("vec_id", "cid", "best_sim")
-    assertSameRows(gotDefault, want)
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
-      val gotShuffled = PipelineOps.assignToCentroidsTwoLevelPartitioned(emb, cent, k)
-        .select("vec_id", "cid", "best_sim")
-      assertSameRows(gotShuffled, want)
-    } finally spark.conf.set(key, old)
   }
 
   test("PCA power trainer: planted direction recovered, Rayleigh quotient non-decreasing, partition-invariant") {
@@ -1682,7 +1681,9 @@ class PipelineSpec extends SparkTestBase {
     val emb = Tables.load(spark, dir, "embeddings")
     val k = 64
     val cent = PipelineOps.stubCodebook(emb, k).localCheckpoint(true)
-    val tr = PipelineOps.assignToCentroidsTwoLevelTrained(emb, cent, k)
+    val sup = PipelineOps.trainRoutingSupers(cent, k)
+    assert(sup.isDefined, s"k = $k >= hierRouteMin must train supers")
+    val tr = PipelineOps.assignToCentroids(emb, cent, k, sup)
       .select(col("vec_id"), col("cid"), col("best_sim"))
       .localCheckpoint(true)
     assert(tr.count() == emb.count(), "every row must be assigned")
@@ -1695,46 +1696,29 @@ class PipelineSpec extends SparkTestBase {
       "trained-routed best_sim must not exceed the flat global best")
     assert(j.filter(col("cid") === col("fcid") &&
       col("best_sim") =!= col("fsim")).count() == 0)
+    // Below hierRouteMin routing is flat: there are no supers to train.
+    assert(PipelineOps.trainRoutingSupers(cent, PipelineOps.hierRouteMin - 1).isEmpty)
   }
 
   test("trained router: gid-partitioned stage 2 == broadcast stage 2 (k=256), dispatched at partitionedRouteMin") {
-    // VERDICT r16 ask #3: the trained router gets the same partitioned
-    // stage-2 rung the stub dispatcher has — at the sf100 k=8000 point
-    // the broadcast form costs 2.8× the partitioned one, and trained
-    // routing exists precisely for that large-k regime. Laws: the two
-    // physical rungs are output-identical over TRAINED supers, the
-    // partitioned form survives with broadcasts disabled, and the k
-    // dispatch inside assignToCentroidsTwoLevelFromSupers plans the
-    // partitioned stage 2 (hash Exchanges appear) from
-    // partitionedRouteMin up.
+    // The trained router runs the same two stage-2 rungs as the stub
+    // one. Over the SAME trained supers, k picks only the rung: k = 256
+    // plans the broadcast stage 2 and k = partitionedRouteMin the gid
+    // join (hash Exchange on vec_id), and the rows are identical, with
+    // broadcast joins on and off.
     val emb = Tables.load(spark, dir, "embeddings")
     val k = 256
     val cent = PipelineOps.stubCodebook(emb, k).localCheckpoint(true)
     val sup = PipelineOps.trainRoutingSupers(cent, k)
-    val want = PipelineOps.assignToCentroidsTwoLevelFromSupers(
-        emb, cent, sup, k, partitionedStage2 = Some(false))
+    val want = PipelineOps.assignToCentroids(emb, cent, k, sup)
       .select("vec_id", "cid", "best_sim")
-    val got = PipelineOps.assignToCentroidsTwoLevelFromSupers(
-        emb, cent, sup, k, partitionedStage2 = Some(true))
-      .select("vec_id", "cid", "best_sim")
-    assertSameRows(got, want)
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
-      val gotShuffled = PipelineOps.assignToCentroidsTwoLevelFromSupers(
-          emb, cent, sup, k, partitionedStage2 = Some(true))
-        .select("vec_id", "cid", "best_sim")
-      assertSameRows(gotShuffled, want)
-    } finally spark.conf.set(key, old)
-    // The k dispatch: at k >= partitionedRouteMin the default (no
-    // override) plans the distributed stage 2; below it, it doesn't.
-    val kp = PipelineOps.partitionedRouteMin
-    val dispatched = PipelineOps.assignToCentroidsTwoLevelFromSupers(
-      emb, cent, sup, kp)
-    assert("Exchange hashpartitioning".r
-        .findAllIn(dispatched.queryExecution.executedPlan.toString).nonEmpty,
+    def dispatched = PipelineOps.assignToCentroids(emb, cent,
+      PipelineOps.partitionedRouteMin, sup)
+    assert(!want.queryExecution.executedPlan.toString.contains("hashpartitioning(vec_id"))
+    assert(dispatched.queryExecution.executedPlan.toString.contains("hashpartitioning(vec_id"),
       "trained k >= partitionedRouteMin must plan the partitioned stage 2")
     assertSameRows(dispatched.select("vec_id", "cid", "best_sim"), want)
+    withoutBroadcastJoins(
+      assertSameRows(dispatched.select("vec_id", "cid", "best_sim"), want))
   }
 }

@@ -242,6 +242,22 @@ class TailSpec extends SparkTestBase {
       o.toString("UTF-8"))
   }
 
+  test("a printf value that fails its verb prints Go's %!verb form and the stream goes on") {
+    // The reference never dies on a render: Go's fmt prints a verb/type
+    // mismatch as %!d(string=abc) in place.
+    import spark.implicits._
+    val root = Files.createTempDirectory("tail-printf").toString
+    val ks = Seq("1", "2", "\"abc\"", "4", "5")
+    ShardedEvents.dump(ks.zipWithIndex.map { case (k, i) =>
+      (i.toLong, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 7L, "click", 1.0,
+        s"""{"k":$k}""")
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props"), root, 1)
+    val (code, out, err) = tail(0L, "-O", "-s", "0", "-f", """{{printf "%d" .Log.k}}""", root)
+    assert(code == 0, err)
+    assert(out.split("\n").filter(_.nonEmpty).toSeq == Seq("1", "2", "%!d(string=abc)", "4", "5"),
+      out)
+  }
+
   private def window: Int = 2 * spark.sparkContext.defaultParallelism
 
   private val discard = new PrintStream(OutputStream.nullOutputStream())

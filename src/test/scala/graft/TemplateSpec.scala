@@ -186,6 +186,26 @@ class TemplateSpec extends SparkTestBase {
     assert(eFn.getMessage.toLowerCase.contains("len"))
   }
 
+  test("""a printf value its verb cannot format renders Go's %!verb(string=value)""") {
+    // Go's fmt prints a verb/type mismatch in place instead of failing
+    // (fmt docs, "Format errors"): one pin per verb class. %x/%X accept
+    // strings in Go and print the bytes in hex; %s/%v format anything.
+    val bad = Seq((1L, """{"k":"z!"}"""), (2L, """{"k":"7"}""")).toDF("seq", "props")
+    val lines = bad.orderBy("seq").select(Template.compile(
+        """{{printf "%d" .Log.k}}|{{printf "%05o" .Log.k}}|{{printf "%x" .Log.k}}|""" +
+          """{{printf "%X" .Log.k}}|{{printf "%c" .Log.k}}|{{printf "%.2f" .Log.k}}|""" +
+          """{{printf "%e" .Log.k}}|{{printf "%g" .Log.k}}|{{printf "%t" .Log.k}}|""" +
+          """{{.Log.k | printf "%s=%v" "k"}}""",
+        deepFields).as("line"))
+      .as[String].collect()
+    assert(lines(0) == "%!d(string=z!)|%!o(string=z!)|7a21|7A21|%!c(string=z!)|" +
+      "%!f(string=z!)|%!e(string=z!)|%!g(string=z!)|%!t(string=z!)|k=z!")
+    // A value that fits its verb still formats through the verb (%g is
+    // left out: java.util.Formatter's %g is not Go's).
+    assert(lines(1).split('|').toSeq.patch(7, Nil, 1) ==
+      Seq("7", "00007", "7", "7", "\u0007", "7.00", "7.000000e+00", "%!t(string=7)", "k=7"))
+  }
+
   test("printf arity and verb errors fail at compile time") {
     val eArity = intercept[IllegalArgumentException] {
       Template.compile("""{{printf "%s %s" .Log}}""", deepFields)

@@ -128,7 +128,7 @@ def route(emb, vec_id, k):
     sids = cids[smask]
     # codebook grouping: each centroid -> nearest super (flat rule),
     # EXCEPT a super is pinned to its own group (a routed-to group must
-    # never be member-empty — mirrors assignToCentroidsTwoLevel).
+    # never be member-empty — mirrors assignToCentroids).
     cgrp = round6_argmax(
         refine_boundary(cents @ sups.T, cents, sups, label='grouping dots'),
         sids, label='grouping')
