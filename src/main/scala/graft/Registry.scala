@@ -6,6 +6,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * over a scale-factor directory, and (when SQL-expressible) a hand-written
   * DuckDB oracle that must hash-match the builder's output.
   *
+  * A pure-SQL query (the engine's SQL surface) is declared with
+  * [[Q.sql]] and ships ONE text: Spark runs it over views named after the
+  * tables, and the same text is the oracle. A separate `duck` text is only
+  * for a real dialect difference (`::BIGINT`, `<<`, `//`).
+  *
   * Determinism contract (SURVEY.md §7): every oracled query ends in a
   * total-order ORDER BY; float aggregates are rounded or computed in
   * DECIMAL; timestamps are emitted as TIMESTAMP_NTZ so both engines write
@@ -20,6 +25,29 @@ final case class Q(
     build: (SparkSession, String) => DataFrame,
     oracle: Option[String]
 )
+
+object Q {
+
+  /** A query written once as SQL: Spark runs `text` over the views
+    * [[views]] registers, and DuckDB runs `duck.getOrElse(text)` over the
+    * same tables. Both texts are margin-stripped onto one line.
+    */
+  def sql(id: String, text: String, duck: Option[String] = None): Q = {
+    val line = oneLine(text)
+    Q(id, (s, dir) => { views(s, dir, line); s.sql(line) }, Some(duck.fold(line)(oneLine)))
+  }
+
+  /** Registers a temp view, under the table's own name, for every
+    * [[Tables.names]] table that `text` names as a word. A word that is
+    * not a table reference (a column alias `nation`) only registers a
+    * view nothing reads.
+    */
+  def views(s: SparkSession, dir: String, text: String): Unit =
+    Tables.names.filter(n => s"\\b$n\\b".r.findFirstIn(text).isDefined)
+      .foreach(n => Tables.load(s, dir, n).createOrReplaceTempView(n))
+
+  private def oneLine(s: String): String = s.stripMargin.replace("\n", " ").trim
+}
 
 object Registry {
   import graft.operators._

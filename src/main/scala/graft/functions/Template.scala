@@ -192,7 +192,88 @@ object Template {
       case 'X' => hex(value)
       case _ => concat(lit(s"%!$v(string="), value.cast("string"), lit(")"))
     }
-    when(value.isNotNull && cast.isNull, mismatch).otherwise(format_string(spec, cast))
+    val render = if (v == 'g' || v == 'G') udf(goG(spec)).apply(cast) else format_string(spec, cast)
+    when(value.isNotNull && cast.isNull, mismatch).otherwise(render)
+  }
+
+  private val GSpec = raw"%([#0\- +]*)(\d*)(?:\.(\d+))?([gG])".r
+
+  /** Go's `%g`/`%G` for one verb spec (flags, width, precision): fmt's
+    * fmtFloat over strconv's 'g' form, which java.util.Formatter's `%g`
+    * is not (it prints `7.00000` where Go prints `7`). Without a
+    * precision the digits are the shortest that round-trip: the first
+    * HALF_EVEN rounding to 1..17 significant digits that parses back to
+    * the value (JDK 17's `Double.toString` is not always shortest). With
+    * `.N` they are N significant digits, trailing zeros dropped. The
+    * exponent form is used when exp < -4 or exp >= the precision (6 when
+    * shortest), with at least two exponent digits; `#` keeps zeros up to
+    * the precision. A null argument renders `null`, as format_string does.
+    */
+  private[graft] def goG(spec: String): java.lang.Double => String = {
+    val GSpec(flags, w, p, verb) = spec
+    val width = if (w.isEmpty) 0 else w.toInt
+    val prec = Option(p).map(_.toInt)
+    val (plus, space, sharp) = (flags.contains('+'), flags.contains(' '), flags.contains('#'))
+    val minus = flags.contains('-')
+    val zero = flags.contains('0') && !minus
+
+    def padded(sign: String, num: String, zeros: Boolean): String = {
+      val fill = width - sign.length - num.length
+      if (fill <= 0) sign + num
+      else if (minus) sign + num + " " * fill
+      else if (zeros) sign + "0" * fill + num
+      else " " * fill + sign + num
+    }
+
+    def gForm(a: Double): String = {
+      val exact = new java.math.BigDecimal(a)
+      def round(n: Int) = exact.round(new java.math.MathContext(n, java.math.RoundingMode.HALF_EVEN))
+      val r = prec.fold((1 to 17).iterator.map(round).find(_.doubleValue == a).get)(n => round(n max 1))
+      val z = r.stripTrailingZeros
+      val digs = if (z.signum == 0) "" else z.unscaledValue.toString
+      val nd = digs.length
+      val dp = if (nd == 0) 0 else nd - z.scale
+      val pr = prec.fold(nd)(_ max 1)
+      val eprec = prec.fold(6)(_ => if (pr > nd && nd >= dp) nd else pr)
+      val exp = dp - 1
+      def digit(j: Int): Char = if (j >= 0 && j < nd) digs(j) else '0'
+      if (exp < -4 || exp >= eprec) {
+        val ep = (pr min nd) - 1
+        val frac = if (ep > 0) "." + digs.substring(1, 1 + ep) else ""
+        val e = math.abs(exp).toString
+        s"${digit(0)}$frac${if (verb == "G") 'E' else 'e'}${if (exp < 0) '-' else '+'}" +
+          (if (e.length < 2) "0" + e else e)
+      } else {
+        val fp = ((if (pr > dp) nd else pr) - dp) max 0
+        val int = if (dp > 0) (0 until dp).map(digit).mkString else "0"
+        int + (if (fp > 0) "." + (dp until dp + fp).map(digit).mkString else "")
+      }
+    }
+
+    def keepZeros(num: String): String = {
+      val (mant, tail) = num.splitAt(num.indexWhere(c => c == 'e' || c == 'E') match {
+        case -1 => num.length
+        case i => i
+      })
+      val sig = mant.dropWhile(c => c == '0' || c == '.').count(_.isDigit)
+      val point = mant.contains('.')
+      val fill = prec.getOrElse(6) - sig - (if (!point && mant == "0") 1 else 0)
+      mant + (if (point) "" else ".") + "0" * fill + tail
+    }
+
+    boxed =>
+      if (boxed == null) padded("", "null", zeros = false)
+      else {
+        val d = boxed.doubleValue
+        val pos = if (plus) "+" else if (space) " " else ""
+        if (d.isNaN) padded(pos, "NaN", zeros = false)
+        else if (d.isInfinite)
+          padded(if (d < 0) "-" else if (space && !plus) " " else "+", "Inf", zeros = false)
+        else {
+          val num = gForm(math.abs(d))
+          padded(if (d < 0 || 1 / d < 0) "-" else pos, if (sharp) keepZeros(num) else num, zero)
+        }
+      }
   }
 
   /** Compiles one `printf "fmt" args…` into `format_string`: the Go fmt

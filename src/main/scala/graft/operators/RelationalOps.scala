@@ -614,24 +614,14 @@ object RelationalOps {
                   | GROUP BY CUBE(c_mktsegment, o_orderpriority)
                   | ORDER BY g_seg, g_pri, c_mktsegment ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST"""))),
 
-    Q("c5_agg_grouping_sets",
-      (s, dir) => {
-        t(s, dir, "lineitem").createOrReplaceTempView("graft_li_gs")
-        s.sql(sql(s"""SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-                     | ${duckSumMoney("l_quantity")} AS sum_qty,
-                     | CAST(grouping(l_returnflag) AS INT) AS g_rf,
-                     | CAST(grouping(l_linestatus) AS INT) AS g_ls
-                     | FROM graft_li_gs
-                     | GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-                     | ORDER BY g_rf, g_ls, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""))
-      },
-      Some(sql(s"""SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-                  | ${duckSumMoney("l_quantity")} AS sum_qty,
-                  | CAST(grouping(l_returnflag) AS INT) AS g_rf,
-                  | CAST(grouping(l_linestatus) AS INT) AS g_ls
-                  | FROM lineitem
-                  | GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-                  | ORDER BY g_rf, g_ls, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""))),
+    Q.sql("c5_agg_grouping_sets",
+      s"""SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
+         | ${duckSumMoney("l_quantity")} AS sum_qty,
+         | CAST(grouping(l_returnflag) AS INT) AS g_rf,
+         | CAST(grouping(l_linestatus) AS INT) AS g_ls
+         | FROM lineitem
+         | GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
+         | ORDER BY g_rf, g_ls, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""),
 
     Q("c6_agg_stats",
       (s, dir) =>
@@ -2386,38 +2376,23 @@ object RelationalOps {
                  | ORDER BY l_orderkey"""))),
 
     // Pure-SQL entry point: the engine's surface is also reachable as SQL
-    // text over registered views (a reference user keeps their SQL). The
+    // text over views named after the tables (a user keeps their SQL). The
     // TPC-H Q3 shape: join + filtered agg + ordered top-k; Catalyst plans
-    // it identically to the DataFrame form.
-    Q("b9_sql_q3",
-      (s, dir) => {
-        t(s, dir, "customer").createOrReplaceTempView("v_customer")
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        // Factors enter DECIMAL before multiply/sum: the arithmetic is
-        // exact and order-independent. The OUTPUT is cast to double per
-        // the Registry determinism contract (a scale-6 decimal output
-        // stringifies padded and fails the driver hash); the exact
-        // decimal sum makes the double cast — and hence the ORDER BY /
-        // LIMIT selection — identical on both engines.
-        s.sql("""SELECT l_orderkey,
-                |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-                |FROM v_customer c
-                |JOIN v_orders o ON c.c_custkey = o.o_custkey
-                |JOIN v_lineitem l ON l.l_orderkey = o.o_orderkey
-                |WHERE c.c_mktsegment = 'BUILDING'
-                |GROUP BY l_orderkey
-                |ORDER BY revenue DESC, l_orderkey
-                |LIMIT 20""".stripMargin)
-      },
-      Some(sql("""SELECT l_orderkey,
-                 | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-                 | FROM customer c
-                 | JOIN orders o ON c.c_custkey = o.o_custkey
-                 | JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-                 | WHERE c.c_mktsegment = 'BUILDING'
-                 | GROUP BY l_orderkey
-                 | ORDER BY revenue DESC, l_orderkey LIMIT 20"""))),
+    // it identically to the DataFrame form. Factors enter DECIMAL before
+    // multiply/sum: the arithmetic is exact and order-independent. The
+    // OUTPUT is cast to double per the Registry determinism contract (a
+    // scale-6 decimal output stringifies padded and fails the driver
+    // hash); the exact decimal sum makes the double cast — and hence the
+    // ORDER BY / LIMIT selection — identical on both engines.
+    Q.sql("b9_sql_q3",
+      """SELECT l_orderkey,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        | FROM customer c
+        | JOIN orders o ON c.c_custkey = o.o_custkey
+        | JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        | WHERE c.c_mktsegment = 'BUILDING'
+        | GROUP BY l_orderkey
+        | ORDER BY revenue DESC, l_orderkey LIMIT 20"""),
 
     // The TPC-H Q5 shape: a six-table join tree (two fact-fact shuffles +
     // a dimension chain) with a region filter and a one-year date window.
@@ -2425,41 +2400,20 @@ object RelationalOps {
     // broadcasts nation/region; the c_nationkey = s_nationkey predicate
     // rides the supplier join as a filter, never a cross product. Same
     // DECIMAL-internal / double-output money arithmetic as b9.
-    Q("b10_sql_q5",
-      (s, dir) => {
-        t(s, dir, "customer").createOrReplaceTempView("v_customer")
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        t(s, dir, "supplier").createOrReplaceTempView("v_supplier")
-        t(s, dir, "nation").createOrReplaceTempView("v_nation")
-        t(s, dir, "region").createOrReplaceTempView("v_region")
-        s.sql("""SELECT n_name,
-                |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-                |FROM v_customer
-                |JOIN v_orders ON c_custkey = o_custkey
-                |JOIN v_lineitem ON l_orderkey = o_orderkey
-                |JOIN v_supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-                |JOIN v_nation ON s_nationkey = n_nationkey
-                |JOIN v_region ON n_regionkey = r_regionkey
-                |WHERE r_name = 'ASIA'
-                |  AND o_orderdate >= TIMESTAMP '1995-01-01'
-                |  AND o_orderdate < TIMESTAMP '1996-01-01'
-                |GROUP BY n_name
-                |ORDER BY revenue DESC, n_name""".stripMargin)
-      },
-      Some(sql("""SELECT n_name,
-                 | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-                 | FROM customer
-                 | JOIN orders ON c_custkey = o_custkey
-                 | JOIN lineitem ON l_orderkey = o_orderkey
-                 | JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-                 | JOIN nation ON s_nationkey = n_nationkey
-                 | JOIN region ON n_regionkey = r_regionkey
-                 | WHERE r_name = 'ASIA'
-                 |   AND o_orderdate >= TIMESTAMP '1995-01-01'
-                 |   AND o_orderdate < TIMESTAMP '1996-01-01'
-                 | GROUP BY n_name
-                 | ORDER BY revenue DESC, n_name"""))),
+    Q.sql("b10_sql_q5",
+      """SELECT n_name,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        | FROM customer
+        | JOIN orders ON c_custkey = o_custkey
+        | JOIN lineitem ON l_orderkey = o_orderkey
+        | JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        | JOIN nation ON s_nationkey = n_nationkey
+        | JOIN region ON n_regionkey = r_regionkey
+        | WHERE r_name = 'ASIA'
+        |   AND o_orderdate >= TIMESTAMP '1995-01-01'
+        |   AND o_orderdate < TIMESTAMP '1996-01-01'
+        | GROUP BY n_name
+        | ORDER BY revenue DESC, n_name"""),
 
     // The TPC-H Q17 shape: a CORRELATED SCALAR SUBQUERY (per-part average
     // quantity gating each lineitem row). Catalyst decorrelates it into a
@@ -2471,25 +2425,14 @@ object RelationalOps {
     // DECIMAL and the single final /7.0 is one IEEE division over
     // identical doubles. (The reference's test tables have no
     // p_container; p_brand alone supplies the Q17 part filter.)
-    Q("b11_sql_q17",
-      (s, dir) => {
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        t(s, dir, "part").createOrReplaceTempView("v_part")
-        s.sql("""SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly
-                |FROM v_lineitem l
-                |JOIN v_part p ON p.p_partkey = l.l_partkey
-                |WHERE p.p_brand = 'Brand#23'
-                |  AND l.l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
-                |                      FROM v_lineitem l2
-                |                      WHERE l2.l_partkey = p.p_partkey)""".stripMargin)
-      },
-      Some(sql("""SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly
-                 | FROM lineitem l
-                 | JOIN part p ON p.p_partkey = l.l_partkey
-                 | WHERE p.p_brand = 'Brand#23'
-                 |   AND l.l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
-                 |                       FROM lineitem l2
-                 |                       WHERE l2.l_partkey = p.p_partkey)"""))),
+    Q.sql("b11_sql_q17",
+      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly
+        | FROM lineitem l
+        | JOIN part p ON p.p_partkey = l.l_partkey
+        | WHERE p.p_brand = 'Brand#23'
+        |   AND l.l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
+        |                       FROM lineitem l2
+        |                       WHERE l2.l_partkey = p.p_partkey)"""),
 
     // The TPC-H Q18 shape: an IN subquery over a grouped HAVING (large-
     // quantity orders). Catalyst rewrites the IN into a left-semi join
@@ -2498,34 +2441,18 @@ object RelationalOps {
     // per-row membership probe. total_qty is an exact integer sum emitted
     // as BIGINT; the top-k is a total order (unique o_orderkey tie-break)
     // before LIMIT.
-    Q("b12_sql_q18",
-      (s, dir) => {
-        t(s, dir, "customer").createOrReplaceTempView("v_customer")
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        s.sql("""SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-                |  CAST(SUM(l_quantity) AS BIGINT) AS total_qty
-                |FROM v_customer c
-                |JOIN v_orders o ON c.c_custkey = o.o_custkey
-                |JOIN v_lineitem l ON o.o_orderkey = l.l_orderkey
-                |WHERE o.o_orderkey IN (SELECT l_orderkey FROM v_lineitem
-                |                       GROUP BY l_orderkey
-                |                       HAVING SUM(l_quantity) > 250)
-                |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-                |ORDER BY o_totalprice DESC, o_orderkey
-                |LIMIT 100""".stripMargin)
-      },
-      Some(sql("""SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-                 |  CAST(SUM(l_quantity) AS BIGINT) AS total_qty
-                 | FROM customer c
-                 | JOIN orders o ON c.c_custkey = o.o_custkey
-                 | JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-                 | WHERE o.o_orderkey IN (SELECT l_orderkey FROM lineitem
-                 |                        GROUP BY l_orderkey
-                 |                        HAVING SUM(l_quantity) > 250)
-                 | GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-                 | ORDER BY o_totalprice DESC, o_orderkey
-                 | LIMIT 100"""))),
+    Q.sql("b12_sql_q18",
+      """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
+        |  CAST(SUM(l_quantity) AS BIGINT) AS total_qty
+        | FROM customer c
+        | JOIN orders o ON c.c_custkey = o.o_custkey
+        | JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+        | WHERE o.o_orderkey IN (SELECT l_orderkey FROM lineitem
+        |                        GROUP BY l_orderkey
+        |                        HAVING SUM(l_quantity) > 250)
+        | GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
+        | ORDER BY o_totalprice DESC, o_orderkey
+        | LIMIT 100"""),
 
     // The TPC-H Q4 shape: order-priority checking via a CORRELATED
     // EXISTS whose inner predicate mixes the equi-key with a
@@ -2536,29 +2463,16 @@ object RelationalOps {
     // condition (PlanSpec) — one pass over lineitem, no per-order
     // probe. Date arithmetic is exact (UTC timestamps, +INTERVAL 60
     // DAY identical in both engines); order_count is an integer count.
-    Q("b13_sql_q4",
-      (s, dir) => {
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        s.sql("""SELECT o_orderpriority, count(*) AS order_count
-                |FROM v_orders o
-                |WHERE o.o_orderdate >= TIMESTAMP '1995-01-01'
-                |  AND o.o_orderdate < TIMESTAMP '1995-07-01'
-                |  AND EXISTS (SELECT 1 FROM v_lineitem l
-                |              WHERE l.l_orderkey = o.o_orderkey
-                |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-                |GROUP BY o_orderpriority
-                |ORDER BY o_orderpriority""".stripMargin)
-      },
-      Some(sql("""SELECT o_orderpriority, count(*) AS order_count
-                 | FROM orders o
-                 | WHERE o.o_orderdate >= TIMESTAMP '1995-01-01'
-                 |   AND o.o_orderdate < TIMESTAMP '1995-07-01'
-                 |   AND EXISTS (SELECT 1 FROM lineitem l
-                 |               WHERE l.l_orderkey = o.o_orderkey
-                 |                 AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-                 | GROUP BY o_orderpriority
-                 | ORDER BY o_orderpriority"""))),
+    Q.sql("b13_sql_q4",
+      """SELECT o_orderpriority, count(*) AS order_count
+        | FROM orders o
+        | WHERE o.o_orderdate >= TIMESTAMP '1995-01-01'
+        |   AND o.o_orderdate < TIMESTAMP '1995-07-01'
+        |   AND EXISTS (SELECT 1 FROM lineitem l
+        |               WHERE l.l_orderkey = o.o_orderkey
+        |                 AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
+        | GROUP BY o_orderpriority
+        | ORDER BY o_orderpriority"""),
 
     // The TPC-H Q22 shape with the two remaining subquery forms in one
     // text: an UNCORRELATED SCALAR subquery threshold (above-average
@@ -2570,29 +2484,16 @@ object RelationalOps {
     // so no last-ulp boundary flip at any SF — and Catalyst plans the
     // scalars as one-row broadcasts and the NOT EXISTS as a LeftAnti
     // join carrying the inequality (PlanSpec).
-    Q("b14_sql_q22",
-      (s, dir) => {
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        s.sql("""SELECT o_orderpriority, count(*) AS order_count
-                |FROM v_orders o
-                |WHERE CAST(o.o_totalprice AS DECIMAL(18,2)) * (SELECT count(*) FROM v_orders) >
-                |      (SELECT SUM(CAST(o2.o_totalprice AS DECIMAL(18,2))) FROM v_orders o2)
-                |  AND NOT EXISTS (SELECT 1 FROM v_lineitem l
-                |                  WHERE l.l_orderkey = o.o_orderkey
-                |                    AND l.l_shipdate < o.o_orderdate + INTERVAL 30 DAY)
-                |GROUP BY o_orderpriority
-                |ORDER BY o_orderpriority""".stripMargin)
-      },
-      Some(sql("""SELECT o_orderpriority, count(*) AS order_count
-                 | FROM orders o
-                 | WHERE CAST(o.o_totalprice AS DECIMAL(18,2)) * (SELECT count(*) FROM orders) >
-                 |       (SELECT SUM(CAST(o2.o_totalprice AS DECIMAL(18,2))) FROM orders o2)
-                 |   AND NOT EXISTS (SELECT 1 FROM lineitem l
-                 |                   WHERE l.l_orderkey = o.o_orderkey
-                 |                     AND l.l_shipdate < o.o_orderdate + INTERVAL 30 DAY)
-                 | GROUP BY o_orderpriority
-                 | ORDER BY o_orderpriority"""))),
+    Q.sql("b14_sql_q22",
+      """SELECT o_orderpriority, count(*) AS order_count
+        | FROM orders o
+        | WHERE CAST(o.o_totalprice AS DECIMAL(18,2)) * (SELECT count(*) FROM orders) >
+        |       (SELECT SUM(CAST(o2.o_totalprice AS DECIMAL(18,2))) FROM orders o2)
+        |   AND NOT EXISTS (SELECT 1 FROM lineitem l
+        |                   WHERE l.l_orderkey = o.o_orderkey
+        |                     AND l.l_shipdate < o.o_orderdate + INTERVAL 30 DAY)
+        | GROUP BY o_orderpriority
+        | ORDER BY o_orderpriority"""),
 
     // The TPC-H Q21 shape — the HARDEST decorrelation in the benchmark
     // and the one subquery form the b11–b14 matrix lacked: an EXISTS and
@@ -2606,47 +2507,24 @@ object RelationalOps {
     // 4-table join tree (PlanSpec pins LeftSemi + LeftAnti carrying the
     // non-equi conjuncts, no CartesianProduct); the two-sided
     // numwait-desc/s_name-asc order makes the top-100 deterministic.
-    Q("b17_sql_q21",
-      (s, dir) => {
-        t(s, dir, "supplier").createOrReplaceTempView("v_supplier")
-        t(s, dir, "nation").createOrReplaceTempView("v_nation")
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        s.sql("""SELECT s_name, count(*) AS numwait
-                |FROM v_supplier s
-                |JOIN v_lineitem l1 ON s.s_suppkey = l1.l_suppkey
-                |JOIN v_orders o ON o.o_orderkey = l1.l_orderkey
-                |JOIN v_nation n ON s.s_nationkey = n.n_nationkey
-                |WHERE o.o_orderstatus = 'F'
-                |  AND l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-                |  AND EXISTS (SELECT 1 FROM v_lineitem l2
-                |              WHERE l2.l_orderkey = l1.l_orderkey
-                |                AND l2.l_suppkey <> l1.l_suppkey)
-                |  AND NOT EXISTS (SELECT 1 FROM v_lineitem l3
-                |                  WHERE l3.l_orderkey = l1.l_orderkey
-                |                    AND l3.l_suppkey <> l1.l_suppkey
-                |                    AND l3.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-                |GROUP BY s_name
-                |ORDER BY numwait DESC, s_name
-                |LIMIT 100""".stripMargin)
-      },
-      Some(sql("""SELECT s_name, count(*) AS numwait
-                 | FROM supplier s
-                 | JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-                 | JOIN orders o ON o.o_orderkey = l1.l_orderkey
-                 | JOIN nation n ON s.s_nationkey = n.n_nationkey
-                 | WHERE o.o_orderstatus = 'F'
-                 |   AND l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-                 |   AND EXISTS (SELECT 1 FROM lineitem l2
-                 |               WHERE l2.l_orderkey = l1.l_orderkey
-                 |                 AND l2.l_suppkey <> l1.l_suppkey)
-                 |   AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                 |                   WHERE l3.l_orderkey = l1.l_orderkey
-                 |                     AND l3.l_suppkey <> l1.l_suppkey
-                 |                     AND l3.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-                 | GROUP BY s_name
-                 | ORDER BY numwait DESC, s_name
-                 | LIMIT 100"""))),
+    Q.sql("b17_sql_q21",
+      """SELECT s_name, count(*) AS numwait
+        | FROM supplier s
+        | JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
+        | JOIN orders o ON o.o_orderkey = l1.l_orderkey
+        | JOIN nation n ON s.s_nationkey = n.n_nationkey
+        | WHERE o.o_orderstatus = 'F'
+        |   AND l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
+        |   AND EXISTS (SELECT 1 FROM lineitem l2
+        |               WHERE l2.l_orderkey = l1.l_orderkey
+        |                 AND l2.l_suppkey <> l1.l_suppkey)
+        |   AND NOT EXISTS (SELECT 1 FROM lineitem l3
+        |                   WHERE l3.l_orderkey = l1.l_orderkey
+        |                     AND l3.l_suppkey <> l1.l_suppkey
+        |                     AND l3.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
+        | GROUP BY s_name
+        | ORDER BY numwait DESC, s_name
+        | LIMIT 100"""),
 
     // The TPC-H Q7 shape (volume shipping): the one Q* pattern the b9-b17
     // battery lacked — a fact table joined through TWO roles of the SAME
@@ -2657,44 +2535,37 @@ object RelationalOps {
     // date window prunes lineitem at the scan. Money arithmetic follows
     // the b9 rule: DECIMAL internally (exact, order-independent), double
     // on output.
-    Q("b18_sql_q7",
-      (s, dir) => {
-        t(s, dir, "supplier").createOrReplaceTempView("v_supplier")
-        t(s, dir, "nation").createOrReplaceTempView("v_nation")
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        t(s, dir, "customer").createOrReplaceTempView("v_customer")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        s.sql("""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                |  year(l.l_shipdate) AS l_year,
-                |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-                |FROM v_supplier s
-                |JOIN v_lineitem l ON s.s_suppkey = l.l_suppkey
-                |JOIN v_orders o ON o.o_orderkey = l.l_orderkey
-                |JOIN v_customer c ON c.c_custkey = o.o_custkey
-                |JOIN v_nation n1 ON s.s_nationkey = n1.n_nationkey
-                |JOIN v_nation n2 ON c.c_nationkey = n2.n_nationkey
-                |WHERE ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
-                |    OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3'))
-                |  AND l.l_shipdate >= DATE '1995-01-01'
-                |  AND l.l_shipdate < DATE '1997-01-01'
-                |GROUP BY n1.n_name, n2.n_name, year(l.l_shipdate)
-                |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)
-      },
-      Some(sql("""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-                 | year(l.l_shipdate)::BIGINT AS l_year,
-                 | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-                 | FROM supplier s
-                 | JOIN lineitem l ON s.s_suppkey = l.l_suppkey
-                 | JOIN orders o ON o.o_orderkey = l.l_orderkey
-                 | JOIN customer c ON c.c_custkey = o.o_custkey
-                 | JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-                 | JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-                 | WHERE ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
-                 |     OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3'))
-                 |   AND l.l_shipdate >= DATE '1995-01-01'
-                 |   AND l.l_shipdate < DATE '1997-01-01'
-                 | GROUP BY n1.n_name, n2.n_name, year(l.l_shipdate)
-                 | ORDER BY supp_nation, cust_nation, l_year"""))),
+    Q.sql("b18_sql_q7",
+      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |  year(l.l_shipdate) AS l_year,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM supplier s
+        |JOIN lineitem l ON s.s_suppkey = l.l_suppkey
+        |JOIN orders o ON o.o_orderkey = l.l_orderkey
+        |JOIN customer c ON c.c_custkey = o.o_custkey
+        |JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
+        |JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
+        |WHERE ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
+        |    OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3'))
+        |  AND l.l_shipdate >= DATE '1995-01-01'
+        |  AND l.l_shipdate < DATE '1997-01-01'
+        |GROUP BY n1.n_name, n2.n_name, year(l.l_shipdate)
+        |ORDER BY supp_nation, cust_nation, l_year""",
+      duck = Some("""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+                    | year(l.l_shipdate)::BIGINT AS l_year,
+                    | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+                    | FROM supplier s
+                    | JOIN lineitem l ON s.s_suppkey = l.l_suppkey
+                    | JOIN orders o ON o.o_orderkey = l.l_orderkey
+                    | JOIN customer c ON c.c_custkey = o.o_custkey
+                    | JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
+                    | JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
+                    | WHERE ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
+                    |     OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3'))
+                    |   AND l.l_shipdate >= DATE '1995-01-01'
+                    |   AND l.l_shipdate < DATE '1997-01-01'
+                    | GROUP BY n1.n_name, n2.n_name, year(l.l_shipdate)
+                    | ORDER BY supp_nation, cust_nation, l_year""")),
 
     // The TPC-H Q19 shape (discounted revenue), adapted to the fixture's
     // columns: a fact⋈dimension join whose WHERE is a DISJUNCTION of
@@ -2705,29 +2576,16 @@ object RelationalOps {
     // lineitem) below the join, and evaluates only the cross-side
     // disjunction post-join — the naive plan filters nothing before a
     // fact-wide join. One-row output, exact DECIMAL sum cast to double.
-    Q("b19_sql_q19",
-      (s, dir) => {
-        t(s, dir, "part").createOrReplaceTempView("v_part")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        s.sql("""SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-                |  COUNT(*) AS n_items
-                |FROM v_lineitem l JOIN v_part p ON p.p_partkey = l.l_partkey
-                |WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
-                |       AND l.l_quantity BETWEEN 1 AND 11)
-                |   OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 1 AND 25
-                |       AND l.l_quantity BETWEEN 10 AND 20)
-                |   OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 35
-                |       AND l.l_quantity BETWEEN 20 AND 30)""".stripMargin)
-      },
-      Some(sql("""SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-                 | COUNT(*) AS n_items
-                 | FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-                 | WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
-                 |        AND l.l_quantity BETWEEN 1 AND 11)
-                 |    OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 1 AND 25
-                 |        AND l.l_quantity BETWEEN 10 AND 20)
-                 |    OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 35
-                 |        AND l.l_quantity BETWEEN 20 AND 30)"""))),
+    Q.sql("b19_sql_q19",
+      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        | COUNT(*) AS n_items
+        | FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+        | WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
+        |        AND l.l_quantity BETWEEN 1 AND 11)
+        |    OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 1 AND 25
+        |        AND l.l_quantity BETWEEN 10 AND 20)
+        |    OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 35
+        |        AND l.l_quantity BETWEEN 20 AND 30)"""),
 
     // The TPC-H Q14 shape (promo revenue): a RATIO OF CONDITIONAL
     // AGGREGATES over one fact⋈dimension join — both the CASE-guarded
@@ -2735,27 +2593,15 @@ object RelationalOps {
     // aggregation pass (never two scans), the month window prunes
     // lineitem at the scan, part broadcasts. Both sums are exact DECIMAL;
     // only the final ratio is floating, rounded per the display contract.
-    Q("b20_sql_q14",
-      (s, dir) => {
-        t(s, dir, "part").createOrReplaceTempView("v_part")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        s.sql("""SELECT ROUND(100.0 * CAST(SUM(CASE WHEN p.p_type LIKE 'PROMO%'
-                |    THEN CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))
-                |    ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
-                |  / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 6) AS promo_revenue,
-                |  COUNT(*) AS n_items
-                |FROM v_lineitem l JOIN v_part p ON l.l_partkey = p.p_partkey
-                |WHERE l.l_shipdate >= DATE '1995-09-01'
-                |  AND l.l_shipdate < DATE '1995-10-01'""".stripMargin)
-      },
-      Some(sql("""SELECT ROUND(100.0 * CAST(SUM(CASE WHEN p.p_type LIKE 'PROMO%'
-                 |     THEN CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))
-                 |     ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
-                 |   / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 6) AS promo_revenue,
-                 |   COUNT(*) AS n_items
-                 | FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-                 | WHERE l.l_shipdate >= DATE '1995-09-01'
-                 |   AND l.l_shipdate < DATE '1995-10-01'"""))),
+    Q.sql("b20_sql_q14",
+      """SELECT ROUND(100.0 * CAST(SUM(CASE WHEN p.p_type LIKE 'PROMO%'
+        |     THEN CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))
+        |     ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
+        |   / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 6) AS promo_revenue,
+        |   COUNT(*) AS n_items
+        | FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+        | WHERE l.l_shipdate >= DATE '1995-09-01'
+        |   AND l.l_shipdate < DATE '1995-10-01'"""),
 
     // The TPC-H Q10 shape (returned-item report): a three-fact chain
     // (customer⋈orders⋈lineitem) closed by a broadcast dimension
@@ -2767,39 +2613,20 @@ object RelationalOps {
     // sort. Revenue follows the b9 money rule; the tie-break on
     // c_custkey makes the top-20 total-ordered (TPC-H's bare
     // `ORDER BY revenue DESC` is not deterministic under ties).
-    Q("b21_sql_q10",
-      (s, dir) => {
-        t(s, dir, "customer").createOrReplaceTempView("v_customer")
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        t(s, dir, "nation").createOrReplaceTempView("v_nation")
-        s.sql("""SELECT c.c_custkey, c.c_name,
-                |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-                |  n.n_name
-                |FROM v_customer c
-                |JOIN v_orders o ON c.c_custkey = o.o_custkey
-                |JOIN v_lineitem l ON l.l_orderkey = o.o_orderkey
-                |JOIN v_nation n ON c.c_nationkey = n.n_nationkey
-                |WHERE o.o_orderdate >= DATE '1996-01-01'
-                |  AND o.o_orderdate < DATE '1996-04-01'
-                |  AND l.l_returnflag = 'R'
-                |GROUP BY c.c_custkey, c.c_name, n.n_name
-                |ORDER BY revenue DESC, c_custkey
-                |LIMIT 20""".stripMargin)
-      },
-      Some(sql("""SELECT c.c_custkey, c.c_name,
-                 | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-                 | n.n_name
-                 | FROM customer c
-                 | JOIN orders o ON c.c_custkey = o.o_custkey
-                 | JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-                 | JOIN nation n ON c.c_nationkey = n.n_nationkey
-                 | WHERE o.o_orderdate >= DATE '1996-01-01'
-                 |   AND o.o_orderdate < DATE '1996-04-01'
-                 |   AND l.l_returnflag = 'R'
-                 | GROUP BY c.c_custkey, c.c_name, n.n_name
-                 | ORDER BY revenue DESC, c_custkey
-                 | LIMIT 20"""))),
+    Q.sql("b21_sql_q10",
+      """SELECT c.c_custkey, c.c_name,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        | n.n_name
+        | FROM customer c
+        | JOIN orders o ON c.c_custkey = o.o_custkey
+        | JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        | JOIN nation n ON c.c_nationkey = n.n_nationkey
+        | WHERE o.o_orderdate >= DATE '1996-01-01'
+        |   AND o.o_orderdate < DATE '1996-04-01'
+        |   AND l.l_returnflag = 'R'
+        | GROUP BY c.c_custkey, c.c_name, n.n_name
+        | ORDER BY revenue DESC, c_custkey
+        | LIMIT 20"""),
 
     // The TPC-H Q13 shape (customer order-count distribution): the one
     // OUTER-join aggregation pattern the battery lacked — a LEFT OUTER
@@ -2812,27 +2639,15 @@ object RelationalOps {
     // level 1 shuffles on custkey (the join's own key — AQE coalesces
     // the reused partitioning), level 2 aggregates a ≤|distinct counts|
     // frame, effectively constant-sized.
-    Q("b22_sql_q13",
-      (s, dir) => {
-        t(s, dir, "customer").createOrReplaceTempView("v_customer")
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        s.sql("""SELECT c_count, COUNT(*) AS custdist FROM (
-                |  SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-                |  FROM v_customer c LEFT OUTER JOIN v_orders o
-                |    ON c.c_custkey = o.o_custkey
-                |   AND o.o_orderpriority <> '4-NOT SPECIFIED'
-                |  GROUP BY c.c_custkey) co
-                |GROUP BY c_count
-                |ORDER BY custdist DESC, c_count DESC""".stripMargin)
-      },
-      Some(sql("""SELECT c_count, COUNT(*) AS custdist FROM (
-                 |  SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-                 |  FROM customer c LEFT OUTER JOIN orders o
-                 |    ON c.c_custkey = o.o_custkey
-                 |   AND o.o_orderpriority <> '4-NOT SPECIFIED'
-                 |  GROUP BY c.c_custkey) co
-                 | GROUP BY c_count
-                 | ORDER BY custdist DESC, c_count DESC"""))),
+    Q.sql("b22_sql_q13",
+      """SELECT c_count, COUNT(*) AS custdist FROM (
+        |  SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
+        |  FROM customer c LEFT OUTER JOIN orders o
+        |    ON c.c_custkey = o.o_custkey
+        |   AND o.o_orderpriority <> '4-NOT SPECIFIED'
+        |  GROUP BY c.c_custkey) co
+        | GROUP BY c_count
+        | ORDER BY custdist DESC, c_count DESC"""),
 
     // The TPC-H Q15 shape (top supplier): an aggregated view consumed
     // TWICE — once as the join input, once inside an uncorrelated scalar
@@ -2844,35 +2659,19 @@ object RelationalOps {
     // CTE — Q15's canonical self-referential shape; a 100 TB deployment
     // materializes the revenue view once (the i47 MV pattern) so both
     // consumers read one physical aggregate.
-    Q("b23_sql_q15",
-      (s, dir) => {
-        t(s, dir, "supplier").createOrReplaceTempView("v_supplier")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        s.sql("""WITH revenue AS (
-                |  SELECT l_suppkey AS supplier_no,
-                |    SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS total_revenue
-                |  FROM v_lineitem
-                |  WHERE l_shipdate >= DATE '1996-01-01'
-                |    AND l_shipdate < DATE '1996-04-01'
-                |  GROUP BY l_suppkey)
-                |SELECT s.s_suppkey, s.s_name,
-                |  CAST(r.total_revenue AS DOUBLE) AS total_revenue
-                |FROM v_supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
-                |WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-                |ORDER BY s.s_suppkey""".stripMargin)
-      },
-      Some(sql("""WITH revenue AS (
-                 |  SELECT l_suppkey AS supplier_no,
-                 |    SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS total_revenue
-                 |  FROM lineitem
-                 |  WHERE l_shipdate >= DATE '1996-01-01'
-                 |    AND l_shipdate < DATE '1996-04-01'
-                 |  GROUP BY l_suppkey)
-                 | SELECT s.s_suppkey, s.s_name,
-                 |  CAST(r.total_revenue AS DOUBLE) AS total_revenue
-                 | FROM supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
-                 | WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-                 | ORDER BY s.s_suppkey"""))),
+    Q.sql("b23_sql_q15",
+      """WITH revenue AS (
+        |  SELECT l_suppkey AS supplier_no,
+        |    SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4))) AS total_revenue
+        |  FROM lineitem
+        |  WHERE l_shipdate >= DATE '1996-01-01'
+        |    AND l_shipdate < DATE '1996-04-01'
+        |  GROUP BY l_suppkey)
+        | SELECT s.s_suppkey, s.s_name,
+        |  CAST(r.total_revenue AS DOUBLE) AS total_revenue
+        | FROM supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
+        | WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
+        | ORDER BY s.s_suppkey"""),
 
     // The TPC-H Q8 shape (national market share): the deepest join tree
     // in the battery — a fact spine (lineitem⋈orders⋈customer) closed by
@@ -2884,60 +2683,51 @@ object RelationalOps {
     // broadcast semi-like joins rather than scanned wide; the two-year
     // order-date window prunes orders. Both sums exact DECIMAL, one
     // double division per output row, rounded per the display contract.
-    Q("b24_sql_q8",
-      (s, dir) => {
-        t(s, dir, "part").createOrReplaceTempView("v_part")
-        t(s, dir, "supplier").createOrReplaceTempView("v_supplier")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        t(s, dir, "customer").createOrReplaceTempView("v_customer")
-        t(s, dir, "nation").createOrReplaceTempView("v_nation")
-        t(s, dir, "region").createOrReplaceTempView("v_region")
-        s.sql("""SELECT o_year,
-                |  ROUND(CAST(SUM(CASE WHEN nation = 'NATION_3' THEN volume
-                |    ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
-                |    / CAST(SUM(volume) AS DOUBLE), 6) AS mkt_share
-                |FROM (
-                |  SELECT year(o.o_orderdate) AS o_year,
-                |    CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4)) AS volume,
-                |    n2.n_name AS nation
-                |  FROM v_part p
-                |  JOIN v_lineitem l ON p.p_partkey = l.l_partkey
-                |  JOIN v_supplier s ON s.s_suppkey = l.l_suppkey
-                |  JOIN v_orders o ON o.o_orderkey = l.l_orderkey
-                |  JOIN v_customer c ON c.c_custkey = o.o_custkey
-                |  JOIN v_nation n1 ON n1.n_nationkey = c.c_nationkey
-                |  JOIN v_region r ON r.r_regionkey = n1.n_regionkey
-                |  JOIN v_nation n2 ON n2.n_nationkey = s.s_nationkey
-                |  WHERE r.r_name = 'EUROPE'
-                |    AND p.p_type = 'PROMO'
-                |    AND o.o_orderdate >= DATE '1995-01-01'
-                |    AND o.o_orderdate < DATE '1997-01-01') vol
-                |GROUP BY o_year
-                |ORDER BY o_year""".stripMargin)
-      },
-      Some(sql("""SELECT o_year,
-                 |  ROUND(CAST(SUM(CASE WHEN nation = 'NATION_3' THEN volume
-                 |    ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
-                 |    / CAST(SUM(volume) AS DOUBLE), 6) AS mkt_share
-                 | FROM (
-                 |  SELECT year(o.o_orderdate)::BIGINT AS o_year,
-                 |    CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4)) AS volume,
-                 |    n2.n_name AS nation
-                 |  FROM part p
-                 |  JOIN lineitem l ON p.p_partkey = l.l_partkey
-                 |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-                 |  JOIN orders o ON o.o_orderkey = l.l_orderkey
-                 |  JOIN customer c ON c.c_custkey = o.o_custkey
-                 |  JOIN nation n1 ON n1.n_nationkey = c.c_nationkey
-                 |  JOIN region r ON r.r_regionkey = n1.n_regionkey
-                 |  JOIN nation n2 ON n2.n_nationkey = s.s_nationkey
-                 |  WHERE r.r_name = 'EUROPE'
-                 |    AND p.p_type = 'PROMO'
-                 |    AND o.o_orderdate >= DATE '1995-01-01'
-                 |    AND o.o_orderdate < DATE '1997-01-01') vol
-                 | GROUP BY o_year
-                 | ORDER BY o_year"""))),
+    Q.sql("b24_sql_q8",
+      """SELECT o_year,
+        |  ROUND(CAST(SUM(CASE WHEN nation = 'NATION_3' THEN volume
+        |    ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
+        |    / CAST(SUM(volume) AS DOUBLE), 6) AS mkt_share
+        |FROM (
+        |  SELECT year(o.o_orderdate) AS o_year,
+        |    CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4)) AS volume,
+        |    n2.n_name AS nation
+        |  FROM part p
+        |  JOIN lineitem l ON p.p_partkey = l.l_partkey
+        |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+        |  JOIN orders o ON o.o_orderkey = l.l_orderkey
+        |  JOIN customer c ON c.c_custkey = o.o_custkey
+        |  JOIN nation n1 ON n1.n_nationkey = c.c_nationkey
+        |  JOIN region r ON r.r_regionkey = n1.n_regionkey
+        |  JOIN nation n2 ON n2.n_nationkey = s.s_nationkey
+        |  WHERE r.r_name = 'EUROPE'
+        |    AND p.p_type = 'PROMO'
+        |    AND o.o_orderdate >= DATE '1995-01-01'
+        |    AND o.o_orderdate < DATE '1997-01-01') vol
+        |GROUP BY o_year
+        |ORDER BY o_year""",
+      duck = Some("""SELECT o_year,
+                    |  ROUND(CAST(SUM(CASE WHEN nation = 'NATION_3' THEN volume
+                    |    ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
+                    |    / CAST(SUM(volume) AS DOUBLE), 6) AS mkt_share
+                    | FROM (
+                    |  SELECT year(o.o_orderdate)::BIGINT AS o_year,
+                    |    CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,4)) AS volume,
+                    |    n2.n_name AS nation
+                    |  FROM part p
+                    |  JOIN lineitem l ON p.p_partkey = l.l_partkey
+                    |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+                    |  JOIN orders o ON o.o_orderkey = l.l_orderkey
+                    |  JOIN customer c ON c.c_custkey = o.o_custkey
+                    |  JOIN nation n1 ON n1.n_nationkey = c.c_nationkey
+                    |  JOIN region r ON r.r_regionkey = n1.n_regionkey
+                    |  JOIN nation n2 ON n2.n_nationkey = s.s_nationkey
+                    |  WHERE r.r_name = 'EUROPE'
+                    |    AND p.p_type = 'PROMO'
+                    |    AND o.o_orderdate >= DATE '1995-01-01'
+                    |    AND o.o_orderdate < DATE '1997-01-01') vol
+                    | GROUP BY o_year
+                    | ORDER BY o_year""")),
 
     // The TPC-H Q6 shape (forecasting revenue change): the SCAN-ONLY
     // aggregate archetype — no join, no group, one row out; its entire
@@ -2948,24 +2738,14 @@ object RelationalOps {
     // else. The discount band uses exact DECIMAL(18,4) bounds — a
     // double BETWEEN on 0.05/0.07 literals risks representation-edge
     // flips; the cast compares cents-exact on both engines.
-    Q("b25_sql_q6",
-      (s, dir) => {
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        s.sql("""SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-                |  COUNT(*) AS n_items
-                |FROM v_lineitem
-                |WHERE l_shipdate >= DATE '1996-01-01'
-                |  AND l_shipdate < DATE '1997-01-01'
-                |  AND CAST(l_discount AS DECIMAL(18,4)) BETWEEN CAST(0.05 AS DECIMAL(18,4)) AND CAST(0.07 AS DECIMAL(18,4))
-                |  AND l_quantity < 24""".stripMargin)
-      },
-      Some(sql("""SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-                 | COUNT(*) AS n_items
-                 | FROM lineitem
-                 | WHERE l_shipdate >= DATE '1996-01-01'
-                 |   AND l_shipdate < DATE '1997-01-01'
-                 |   AND CAST(l_discount AS DECIMAL(18,4)) BETWEEN CAST(0.05 AS DECIMAL(18,4)) AND CAST(0.07 AS DECIMAL(18,4))
-                 |   AND l_quantity < 24"""))),
+    Q.sql("b25_sql_q6",
+      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        | COUNT(*) AS n_items
+        | FROM lineitem
+        | WHERE l_shipdate >= DATE '1996-01-01'
+        |   AND l_shipdate < DATE '1997-01-01'
+        |   AND CAST(l_discount AS DECIMAL(18,4)) BETWEEN CAST(0.05 AS DECIMAL(18,4)) AND CAST(0.07 AS DECIMAL(18,4))
+        |   AND l_quantity < 24"""),
 
     // The TPC-H Q12 shape (shipping-mode priority split), adapted to the
     // fixture's columns (l_returnflag stands in for shipmode; lateness =
@@ -2976,29 +2756,25 @@ object RelationalOps {
     // cross-table lateness inequality can't push to either scan, so it
     // rides the join as a post-join filter while the per-side IsNotNulls
     // still prune. Pure integer counts — no float anywhere.
-    Q("b26_sql_q12",
-      (s, dir) => {
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        s.sql("""SELECT l.l_returnflag,
-                |  SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                |      THEN 1 ELSE 0 END) AS high_line_count,
-                |  SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                |      THEN 1 ELSE 0 END) AS low_line_count
-                |FROM v_orders o JOIN v_lineitem l ON o.o_orderkey = l.l_orderkey
-                |WHERE l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
-                |GROUP BY l.l_returnflag
-                |ORDER BY l.l_returnflag""".stripMargin)
-      },
-      Some(sql("""SELECT l.l_returnflag,
-                 | SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                 |     THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
-                 | SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                 |     THEN 1 ELSE 0 END)::BIGINT AS low_line_count
-                 | FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-                 | WHERE l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
-                 | GROUP BY l.l_returnflag
-                 | ORDER BY l.l_returnflag"""))),
+    Q.sql("b26_sql_q12",
+      """SELECT l.l_returnflag,
+        |  SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |      THEN 1 ELSE 0 END) AS high_line_count,
+        |  SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+        |      THEN 1 ELSE 0 END) AS low_line_count
+        |FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+        |WHERE l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
+        |GROUP BY l.l_returnflag
+        |ORDER BY l.l_returnflag""",
+      duck = Some("""SELECT l.l_returnflag,
+                    | SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
+                    |     THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
+                    | SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                    |     THEN 1 ELSE 0 END)::BIGINT AS low_line_count
+                    | FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+                    | WHERE l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
+                    | GROUP BY l.l_returnflag
+                    | ORDER BY l.l_returnflag""")),
 
     // The TPC-H Q2 shape (min-cost supplier): the fixture has no partsupp,
     // so lineitem stands in as the part↔supplier catalog with
@@ -3012,50 +2788,25 @@ object RelationalOps {
     // TakeOrderedAndProject (no global sort). Output is raw columns only —
     // the min is an existing double, compared for equality, never
     // re-derived arithmetically — so the hash compare is exact.
-    Q("b27_sql_q2",
-      (s, dir) => {
-        t(s, dir, "part").createOrReplaceTempView("v_part")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        t(s, dir, "supplier").createOrReplaceTempView("v_supplier")
-        t(s, dir, "nation").createOrReplaceTempView("v_nation")
-        t(s, dir, "region").createOrReplaceTempView("v_region")
-        s.sql("""SELECT DISTINCT s.s_acctbal, s.s_name, n.n_name, p.p_partkey,
-                |  p.p_name, s.s_suppkey, l.l_extendedprice AS min_cost
-                |FROM v_part p
-                |JOIN v_lineitem l ON p.p_partkey = l.l_partkey
-                |JOIN v_supplier s ON s.s_suppkey = l.l_suppkey
-                |JOIN v_nation n ON s.s_nationkey = n.n_nationkey
-                |JOIN v_region r ON n.n_regionkey = r.r_regionkey
-                |WHERE p.p_size < 15 AND p.p_type LIKE '%ECONOMY%'
-                |  AND r.r_name = 'EUROPE'
-                |  AND l.l_extendedprice = (
-                |    SELECT min(l2.l_extendedprice)
-                |    FROM v_lineitem l2
-                |    JOIN v_supplier s2 ON s2.s_suppkey = l2.l_suppkey
-                |    JOIN v_nation n2 ON s2.s_nationkey = n2.n_nationkey
-                |    JOIN v_region r2 ON n2.n_regionkey = r2.r_regionkey
-                |    WHERE l2.l_partkey = p.p_partkey AND r2.r_name = 'EUROPE')
-                |ORDER BY s.s_acctbal DESC, s.s_name, p.p_partkey, s.s_suppkey
-                |LIMIT 100""".stripMargin)
-      },
-      Some(sql("""SELECT DISTINCT s.s_acctbal, s.s_name, n.n_name, p.p_partkey,
-                 |  p.p_name, s.s_suppkey, l.l_extendedprice AS min_cost
-                 | FROM part p
-                 | JOIN lineitem l ON p.p_partkey = l.l_partkey
-                 | JOIN supplier s ON s.s_suppkey = l.l_suppkey
-                 | JOIN nation n ON s.s_nationkey = n.n_nationkey
-                 | JOIN region r ON n.n_regionkey = r.r_regionkey
-                 | WHERE p.p_size < 15 AND p.p_type LIKE '%ECONOMY%'
-                 |   AND r.r_name = 'EUROPE'
-                 |   AND l.l_extendedprice = (
-                 |     SELECT min(l2.l_extendedprice)
-                 |     FROM lineitem l2
-                 |     JOIN supplier s2 ON s2.s_suppkey = l2.l_suppkey
-                 |     JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
-                 |     JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
-                 |     WHERE l2.l_partkey = p.p_partkey AND r2.r_name = 'EUROPE')
-                 | ORDER BY s.s_acctbal DESC, s.s_name, p.p_partkey, s.s_suppkey
-                 | LIMIT 100"""))),
+    Q.sql("b27_sql_q2",
+      """SELECT DISTINCT s.s_acctbal, s.s_name, n.n_name, p.p_partkey,
+        |  p.p_name, s.s_suppkey, l.l_extendedprice AS min_cost
+        | FROM part p
+        | JOIN lineitem l ON p.p_partkey = l.l_partkey
+        | JOIN supplier s ON s.s_suppkey = l.l_suppkey
+        | JOIN nation n ON s.s_nationkey = n.n_nationkey
+        | JOIN region r ON n.n_regionkey = r.r_regionkey
+        | WHERE p.p_size < 15 AND p.p_type LIKE '%ECONOMY%'
+        |   AND r.r_name = 'EUROPE'
+        |   AND l.l_extendedprice = (
+        |     SELECT min(l2.l_extendedprice)
+        |     FROM lineitem l2
+        |     JOIN supplier s2 ON s2.s_suppkey = l2.l_suppkey
+        |     JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
+        |     JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
+        |     WHERE l2.l_partkey = p.p_partkey AND r2.r_name = 'EUROPE')
+        | ORDER BY s.s_acctbal DESC, s.s_name, p.p_partkey, s.s_suppkey
+        | LIMIT 100"""),
 
     // The TPC-H Q9 shape (product-type profit by nation and year), adapted
     // to the fixture: no partsupp means supply cost is surrogated as
@@ -3069,48 +2820,41 @@ object RelationalOps {
     // engines compute the same rational number, the final cast emits
     // double. Only the part rows matching the name filter flow up the
     // join (predicate pushdown to the part scan).
-    Q("b28_sql_q9",
-      (s, dir) => {
-        t(s, dir, "part").createOrReplaceTempView("v_part")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        t(s, dir, "supplier").createOrReplaceTempView("v_supplier")
-        t(s, dir, "nation").createOrReplaceTempView("v_nation")
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        s.sql("""SELECT nation, o_year,
-                |  CAST(CAST(sum(amount) AS DECIMAL(18,6)) AS DOUBLE) AS sum_profit
-                |FROM (
-                |  SELECT n.n_name AS nation,
-                |    CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
-                |    CAST(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                |        * (1 - CAST(l.l_discount AS DECIMAL(6,4)))
-                |      - CAST(0.1 AS DECIMAL(2,1)) * CAST(p.p_retailprice AS DECIMAL(12,2))
-                |        * CAST(l.l_quantity AS DECIMAL(10,0)) AS DECIMAL(18,6)) AS amount
-                |  FROM v_lineitem l
-                |  JOIN v_supplier s ON s.s_suppkey = l.l_suppkey
-                |  JOIN v_part p ON p.p_partkey = l.l_partkey
-                |  JOIN v_orders o ON o.o_orderkey = l.l_orderkey
-                |  JOIN v_nation n ON s.s_nationkey = n.n_nationkey
-                |  WHERE p.p_name LIKE '%bolt%') profit
-                |GROUP BY nation, o_year
-                |ORDER BY nation, o_year DESC""".stripMargin)
-      },
-      Some(sql("""SELECT nation, o_year,
-                 |  CAST(CAST(sum(amount) AS DECIMAL(18,6)) AS DOUBLE) AS sum_profit
-                 | FROM (
-                 |  SELECT n.n_name AS nation,
-                 |    CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
-                 |    CAST(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                 |        * (1 - CAST(l.l_discount AS DECIMAL(6,4)))
-                 |      - CAST(0.1 AS DECIMAL(2,1)) * CAST(p.p_retailprice AS DECIMAL(12,2))
-                 |        * CAST(l.l_quantity AS DECIMAL(10,0)) AS DECIMAL(18,6)) AS amount
-                 |  FROM lineitem l
-                 |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-                 |  JOIN part p ON p.p_partkey = l.l_partkey
-                 |  JOIN orders o ON o.o_orderkey = l.l_orderkey
-                 |  JOIN nation n ON s.s_nationkey = n.n_nationkey
-                 |  WHERE p.p_name LIKE '%bolt%') profit
-                 | GROUP BY nation, o_year
-                 | ORDER BY nation, o_year DESC"""))),
+    Q.sql("b28_sql_q9",
+      """SELECT nation, o_year,
+        |  CAST(CAST(sum(amount) AS DECIMAL(18,6)) AS DOUBLE) AS sum_profit
+        |FROM (
+        |  SELECT n.n_name AS nation,
+        |    CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
+        |    CAST(CAST(l.l_extendedprice AS DECIMAL(12,2))
+        |        * (1 - CAST(l.l_discount AS DECIMAL(6,4)))
+        |      - CAST(0.1 AS DECIMAL(2,1)) * CAST(p.p_retailprice AS DECIMAL(12,2))
+        |        * CAST(l.l_quantity AS DECIMAL(10,0)) AS DECIMAL(18,6)) AS amount
+        |  FROM lineitem l
+        |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+        |  JOIN part p ON p.p_partkey = l.l_partkey
+        |  JOIN orders o ON o.o_orderkey = l.l_orderkey
+        |  JOIN nation n ON s.s_nationkey = n.n_nationkey
+        |  WHERE p.p_name LIKE '%bolt%') profit
+        |GROUP BY nation, o_year
+        |ORDER BY nation, o_year DESC""",
+      duck = Some("""SELECT nation, o_year,
+                    |  CAST(CAST(sum(amount) AS DECIMAL(18,6)) AS DOUBLE) AS sum_profit
+                    | FROM (
+                    |  SELECT n.n_name AS nation,
+                    |    CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS o_year,
+                    |    CAST(CAST(l.l_extendedprice AS DECIMAL(12,2))
+                    |        * (1 - CAST(l.l_discount AS DECIMAL(6,4)))
+                    |      - CAST(0.1 AS DECIMAL(2,1)) * CAST(p.p_retailprice AS DECIMAL(12,2))
+                    |        * CAST(l.l_quantity AS DECIMAL(10,0)) AS DECIMAL(18,6)) AS amount
+                    |  FROM lineitem l
+                    |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+                    |  JOIN part p ON p.p_partkey = l.l_partkey
+                    |  JOIN orders o ON o.o_orderkey = l.l_orderkey
+                    |  JOIN nation n ON s.s_nationkey = n.n_nationkey
+                    |  WHERE p.p_name LIKE '%bolt%') profit
+                    | GROUP BY nation, o_year
+                    | ORDER BY nation, o_year DESC""")),
 
     // The TPC-H Q11 shape (important stock): a grouped value per key
     // filtered against GLOBAL scalar subqueries that re-aggregate the
@@ -3125,58 +2869,30 @@ object RelationalOps {
     // 2×(18,2)→(19,2), exact — neither engine ever rounds). Nation
     // broadcasts, all three aggregation passes partial-combine
     // map-side.
-    Q("b29_sql_q11",
-      (s, dir) => {
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        t(s, dir, "supplier").createOrReplaceTempView("v_supplier")
-        t(s, dir, "nation").createOrReplaceTempView("v_nation")
-        s.sql("""SELECT l_partkey, CAST(v AS DOUBLE) AS value FROM (
-                |  SELECT l.l_partkey,
-                |    CAST(sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                |      * CAST(l.l_quantity AS DECIMAL(10,0))) AS DECIMAL(18,2)) AS v
-                |  FROM v_lineitem l
-                |  JOIN v_supplier s ON s.s_suppkey = l.l_suppkey
-                |  JOIN v_nation n ON s.s_nationkey = n.n_nationkey
-                |  WHERE n.n_name = 'NATION_3'
-                |  GROUP BY l.l_partkey) g
-                |WHERE v * (
-                |  SELECT CAST(count(DISTINCT l.l_partkey) AS DECIMAL(8,0))
-                |  FROM v_lineitem l
-                |  JOIN v_supplier s ON s.s_suppkey = l.l_suppkey
-                |  JOIN v_nation n ON s.s_nationkey = n.n_nationkey
-                |  WHERE n.n_name = 'NATION_3')
-                |> 2 * (
-                |  SELECT CAST(sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                |    * CAST(l.l_quantity AS DECIMAL(10,0))) AS DECIMAL(18,2))
-                |  FROM v_lineitem l
-                |  JOIN v_supplier s ON s.s_suppkey = l.l_suppkey
-                |  JOIN v_nation n ON s.s_nationkey = n.n_nationkey
-                |  WHERE n.n_name = 'NATION_3')
-                |ORDER BY value DESC, l_partkey""".stripMargin)
-      },
-      Some(sql("""SELECT l_partkey, CAST(v AS DOUBLE) AS value FROM (
-                 |  SELECT l.l_partkey,
-                 |    CAST(sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                 |      * CAST(l.l_quantity AS DECIMAL(10,0))) AS DECIMAL(18,2)) AS v
-                 |  FROM lineitem l
-                 |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-                 |  JOIN nation n ON s.s_nationkey = n.n_nationkey
-                 |  WHERE n.n_name = 'NATION_3'
-                 |  GROUP BY l.l_partkey) g
-                 | WHERE v * (
-                 |  SELECT CAST(count(DISTINCT l.l_partkey) AS DECIMAL(8,0))
-                 |  FROM lineitem l
-                 |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-                 |  JOIN nation n ON s.s_nationkey = n.n_nationkey
-                 |  WHERE n.n_name = 'NATION_3')
-                 | > 2 * (
-                 |  SELECT CAST(sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
-                 |    * CAST(l.l_quantity AS DECIMAL(10,0))) AS DECIMAL(18,2))
-                 |  FROM lineitem l
-                 |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-                 |  JOIN nation n ON s.s_nationkey = n.n_nationkey
-                 |  WHERE n.n_name = 'NATION_3')
-                 | ORDER BY value DESC, l_partkey"""))),
+    Q.sql("b29_sql_q11",
+      """SELECT l_partkey, CAST(v AS DOUBLE) AS value FROM (
+        |  SELECT l.l_partkey,
+        |    CAST(sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
+        |      * CAST(l.l_quantity AS DECIMAL(10,0))) AS DECIMAL(18,2)) AS v
+        |  FROM lineitem l
+        |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+        |  JOIN nation n ON s.s_nationkey = n.n_nationkey
+        |  WHERE n.n_name = 'NATION_3'
+        |  GROUP BY l.l_partkey) g
+        | WHERE v * (
+        |  SELECT CAST(count(DISTINCT l.l_partkey) AS DECIMAL(8,0))
+        |  FROM lineitem l
+        |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+        |  JOIN nation n ON s.s_nationkey = n.n_nationkey
+        |  WHERE n.n_name = 'NATION_3')
+        | > 2 * (
+        |  SELECT CAST(sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
+        |    * CAST(l.l_quantity AS DECIMAL(10,0))) AS DECIMAL(18,2))
+        |  FROM lineitem l
+        |  JOIN supplier s ON s.s_suppkey = l.l_suppkey
+        |  JOIN nation n ON s.s_nationkey = n.n_nationkey
+        |  WHERE n.n_name = 'NATION_3')
+        | ORDER BY value DESC, l_partkey"""),
 
     // The TPC-H Q16 shape (parts/supplier relationship): COUNT(DISTINCT)
     // per part attribute triple with a NOT IN anti-subquery on the
@@ -3185,30 +2901,16 @@ object RelationalOps {
     // null-aware anti join against a 100-row table (broadcast), the
     // distinct count shuffles once on the group keys; all output columns
     // are strings/ints so the hash compare is trivially exact.
-    Q("b30_sql_q16",
-      (s, dir) => {
-        t(s, dir, "part").createOrReplaceTempView("v_part")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        t(s, dir, "supplier").createOrReplaceTempView("v_supplier")
-        s.sql("""SELECT p.p_brand, p.p_type, p.p_size,
-                |  count(DISTINCT l.l_suppkey) AS supplier_cnt
-                |FROM v_lineitem l JOIN v_part p ON p.p_partkey = l.l_partkey
-                |WHERE p.p_brand <> 'Brand#9' AND p.p_type NOT LIKE 'MEDIUM%'
-                |  AND p.p_size IN (1,4,9,14,19,24,29)
-                |  AND l.l_suppkey NOT IN (
-                |    SELECT s_suppkey FROM v_supplier WHERE s_name LIKE '%7')
-                |GROUP BY p.p_brand, p.p_type, p.p_size
-                |ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size""".stripMargin)
-      },
-      Some(sql("""SELECT p.p_brand, p.p_type, p.p_size,
-                 |  count(DISTINCT l.l_suppkey) AS supplier_cnt
-                 | FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-                 | WHERE p.p_brand <> 'Brand#9' AND p.p_type NOT LIKE 'MEDIUM%'
-                 |   AND p.p_size IN (1,4,9,14,19,24,29)
-                 |   AND l.l_suppkey NOT IN (
-                 |     SELECT s_suppkey FROM supplier WHERE s_name LIKE '%7')
-                 | GROUP BY p.p_brand, p.p_type, p.p_size
-                 | ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size"""))),
+    Q.sql("b30_sql_q16",
+      """SELECT p.p_brand, p.p_type, p.p_size,
+        |  count(DISTINCT l.l_suppkey) AS supplier_cnt
+        | FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+        | WHERE p.p_brand <> 'Brand#9' AND p.p_type NOT LIKE 'MEDIUM%'
+        |   AND p.p_size IN (1,4,9,14,19,24,29)
+        |   AND l.l_suppkey NOT IN (
+        |     SELECT s_suppkey FROM supplier WHERE s_name LIKE '%7')
+        | GROUP BY p.p_brand, p.p_type, p.p_size
+        | ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size"""),
 
     // The TPC-H Q20 shape (potential part promotion): a semi-join (IN)
     // whose subquery is itself a GROUP BY carrying a correlated scalar
@@ -3221,43 +2923,22 @@ object RelationalOps {
     // BIGINT; DuckDB's HUGEINT sum and Spark's BIGINT sum agree exactly).
     // Catalyst decorrelates both scalar subqueries into per-part
     // aggregates joined back on l_partkey.
-    Q("b31_sql_q20",
-      (s, dir) => {
-        t(s, dir, "part").createOrReplaceTempView("v_part")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        t(s, dir, "supplier").createOrReplaceTempView("v_supplier")
-        t(s, dir, "nation").createOrReplaceTempView("v_nation")
-        s.sql("""SELECT s.s_name, s.s_acctbal
-                |FROM v_supplier s JOIN v_nation n ON s.s_nationkey = n.n_nationkey
-                |WHERE n.n_name IN ('NATION_1','NATION_3','NATION_5',
-                |                   'NATION_7','NATION_9','NATION_11')
-                |  AND s.s_suppkey IN (
-                |    SELECT l1.l_suppkey
-                |    FROM v_lineitem l1 JOIN v_part p ON p.p_partkey = l1.l_partkey
-                |    WHERE p.p_name LIKE 'small%'
-                |    GROUP BY l1.l_partkey, l1.l_suppkey
-                |    HAVING 2 * sum(CAST(l1.l_quantity AS BIGINT))
-                |             * (SELECT count(DISTINCT l2.l_suppkey) FROM v_lineitem l2
-                |                WHERE l2.l_partkey = l1.l_partkey)
-                |         > 3 * (SELECT sum(CAST(l3.l_quantity AS BIGINT)) FROM v_lineitem l3
-                |                WHERE l3.l_partkey = l1.l_partkey))
-                |ORDER BY s.s_name""".stripMargin)
-      },
-      Some(sql("""SELECT s.s_name, s.s_acctbal
-                 | FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
-                 | WHERE n.n_name IN ('NATION_1','NATION_3','NATION_5',
-                 |                    'NATION_7','NATION_9','NATION_11')
-                 |   AND s.s_suppkey IN (
-                 |     SELECT l1.l_suppkey
-                 |     FROM lineitem l1 JOIN part p ON p.p_partkey = l1.l_partkey
-                 |     WHERE p.p_name LIKE 'small%'
-                 |     GROUP BY l1.l_partkey, l1.l_suppkey
-                 |     HAVING 2 * sum(CAST(l1.l_quantity AS BIGINT))
-                 |              * (SELECT count(DISTINCT l2.l_suppkey) FROM lineitem l2
-                 |                 WHERE l2.l_partkey = l1.l_partkey)
-                 |          > 3 * (SELECT sum(CAST(l3.l_quantity AS BIGINT)) FROM lineitem l3
-                 |                 WHERE l3.l_partkey = l1.l_partkey))
-                 | ORDER BY s.s_name"""))),
+    Q.sql("b31_sql_q20",
+      """SELECT s.s_name, s.s_acctbal
+        | FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
+        | WHERE n.n_name IN ('NATION_1','NATION_3','NATION_5',
+        |                    'NATION_7','NATION_9','NATION_11')
+        |   AND s.s_suppkey IN (
+        |     SELECT l1.l_suppkey
+        |     FROM lineitem l1 JOIN part p ON p.p_partkey = l1.l_partkey
+        |     WHERE p.p_name LIKE 'small%'
+        |     GROUP BY l1.l_partkey, l1.l_suppkey
+        |     HAVING 2 * sum(CAST(l1.l_quantity AS BIGINT))
+        |              * (SELECT count(DISTINCT l2.l_suppkey) FROM lineitem l2
+        |                 WHERE l2.l_partkey = l1.l_partkey)
+        |          > 3 * (SELECT sum(CAST(l3.l_quantity AS BIGINT)) FROM lineitem l3
+        |                 WHERE l3.l_partkey = l1.l_partkey))
+        | ORDER BY s.s_name"""),
 
     // Recursive CTE — Spark 4's WITH RECURSIVE (UnionLoop) walking a
     // synthesized containment hierarchy (parent = doc_id DIV 2, an
@@ -3271,8 +2952,15 @@ object RelationalOps {
     // independent recursion engine.
     Q("b32_recursive_cte",
       (s, dir) => {
-        val docs = t(s, dir, "documents")
-        docs.createOrReplaceTempView("v_documents")
+        val text = """WITH RECURSIVE anc(doc_id, anc_id, depth) AS (
+                     |  SELECT doc_id, doc_id, CAST(0 AS BIGINT) FROM documents
+                     |  UNION ALL
+                     |  SELECT a.doc_id, a.anc_id DIV 2, a.depth + 1
+                     |  FROM anc a WHERE a.anc_id > 0)
+                     |SELECT doc_id, max(depth) AS depth, count(*) AS n_anc,
+                     |  CAST(min(anc_id) AS BIGINT) AS root
+                     |FROM anc GROUP BY doc_id ORDER BY doc_id""".stripMargin
+        Q.views(s, dir, text)
         // Spark's recursion row-limit valve (1M default) is sized for
         // runaway-fixpoint mistakes, not corpus walks: this recursion
         // emits exactly Σ(depth+1) ≈ N·log₂(maxId) rows (9.5M at the
@@ -3280,18 +2968,11 @@ object RelationalOps {
         // REAL termination guard is structural (anc_id strictly halves).
         // Size the valve from the corpus with 2× margin — the b34/scaledK
         // build-side sizing rule applied to a safety limit.
-        val st = docs.agg(count(lit(1)), max(col("doc_id"))).head
+        val st = t(s, dir, "documents").agg(count(lit(1)), max(col("doc_id"))).head
         val bitlen = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, st.getLong(1)))
         s.conf.set("spark.sql.cteRecursionRowLimit",
           math.max(1000000L, st.getLong(0) * (bitlen + 2) * 2).toString)
-        s.sql("""WITH RECURSIVE anc(doc_id, anc_id, depth) AS (
-                |  SELECT doc_id, doc_id, CAST(0 AS BIGINT) FROM v_documents
-                |  UNION ALL
-                |  SELECT a.doc_id, a.anc_id DIV 2, a.depth + 1
-                |  FROM anc a WHERE a.anc_id > 0)
-                |SELECT doc_id, max(depth) AS depth, count(*) AS n_anc,
-                |  CAST(min(anc_id) AS BIGINT) AS root
-                |FROM anc GROUP BY doc_id ORDER BY doc_id""".stripMargin)
+        s.sql(text)
       },
       Some(sql("""WITH RECURSIVE anc(doc_id, anc_id, depth) AS (
                  |  SELECT doc_id, doc_id, CAST(0 AS BIGINT) FROM documents
@@ -3313,26 +2994,14 @@ object RelationalOps {
     // (n_items=0, max_price NULL) on both engines. At scale this is a
     // plain fact-fact equi join — bucketing both sides on orderkey
     // removes even that shuffle.
-    Q("b33_lateral_agg",
-      (s, dir) => {
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
-        s.sql("""SELECT o.o_orderkey, o.o_totalprice, t.n_items, t.max_price
-                |FROM v_orders o,
-                |LATERAL (SELECT count(*) AS n_items,
-                |                CAST(max(l.l_extendedprice) AS DOUBLE) AS max_price
-                |         FROM v_lineitem l WHERE l.l_orderkey = o.o_orderkey) t
-                |WHERE o.o_orderpriority = '1-URGENT'
-                |ORDER BY o.o_orderkey
-                |LIMIT 100""".stripMargin)
-      },
-      Some(sql("""SELECT o.o_orderkey, o.o_totalprice, t.n_items, t.max_price
-                 | FROM orders o,
-                 | LATERAL (SELECT count(*) AS n_items,
-                 |                 CAST(max(l.l_extendedprice) AS DOUBLE) AS max_price
-                 |          FROM lineitem l WHERE l.l_orderkey = o.o_orderkey) t
-                 | WHERE o.o_orderpriority = '1-URGENT'
-                 | ORDER BY o.o_orderkey LIMIT 100"""))),
+    Q.sql("b33_lateral_agg",
+      """SELECT o.o_orderkey, o.o_totalprice, t.n_items, t.max_price
+        | FROM orders o,
+        | LATERAL (SELECT count(*) AS n_items,
+        |                 CAST(max(l.l_extendedprice) AS DOUBLE) AS max_price
+        |          FROM lineitem l WHERE l.l_orderkey = o.o_orderkey) t
+        | WHERE o.o_orderpriority = '1-URGENT'
+        | ORDER BY o.o_orderkey LIMIT 100"""),
 
     // SCD Type 2 merge — the CDC shape every warehouse dimension ships:
     // an initial snapshot (every customer starts at attr 'NONE') merged
@@ -3701,24 +3370,21 @@ object RelationalOps {
     // is the order-free parity fingerprint replication checks use. All
     // integer, map-side combinable (each is associative+commutative —
     // they partial-aggregate like sums).
-    Q("g11_bitwise_agg",
-      (s, dir) => {
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        s.sql("""SELECT o_orderstatus,
-                |  CAST(bit_or(shiftleft(1L, CAST(o_orderkey % 16 AS INT))) AS BIGINT) AS seen_mask,
-                |  CAST(bit_count(bit_or(shiftleft(1L, CAST(o_orderkey % 16 AS INT)))) AS BIGINT) AS n_classes,
-                |  CAST(bit_and(o_custkey) AS BIGINT) AS and_custkey,
-                |  CAST(bit_xor(o_custkey) AS BIGINT) AS xor_custkey
-                |FROM v_orders
-                |GROUP BY o_orderstatus
-                |ORDER BY o_orderstatus""".stripMargin)
-      },
-      Some(sql("""SELECT o_orderstatus,
-                 | CAST(bit_or((1::BIGINT) << ((o_orderkey % 16)::INT)) AS BIGINT) AS seen_mask,
-                 | CAST(bit_count(bit_or((1::BIGINT) << ((o_orderkey % 16)::INT))) AS BIGINT) AS n_classes,
-                 | CAST(bit_and(o_custkey) AS BIGINT) AS and_custkey,
-                 | CAST(bit_xor(o_custkey) AS BIGINT) AS xor_custkey
-                 | FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"""))),
+    Q.sql("g11_bitwise_agg",
+      """SELECT o_orderstatus,
+        |  CAST(bit_or(shiftleft(1L, CAST(o_orderkey % 16 AS INT))) AS BIGINT) AS seen_mask,
+        |  CAST(bit_count(bit_or(shiftleft(1L, CAST(o_orderkey % 16 AS INT)))) AS BIGINT) AS n_classes,
+        |  CAST(bit_and(o_custkey) AS BIGINT) AS and_custkey,
+        |  CAST(bit_xor(o_custkey) AS BIGINT) AS xor_custkey
+        |FROM orders
+        |GROUP BY o_orderstatus
+        |ORDER BY o_orderstatus""",
+      duck = Some("""SELECT o_orderstatus,
+                    | CAST(bit_or((1::BIGINT) << ((o_orderkey % 16)::INT)) AS BIGINT) AS seen_mask,
+                    | CAST(bit_count(bit_or((1::BIGINT) << ((o_orderkey % 16)::INT))) AS BIGINT) AS n_classes,
+                    | CAST(bit_and(o_custkey) AS BIGINT) AS and_custkey,
+                    | CAST(bit_xor(o_custkey) AS BIGINT) AS xor_custkey
+                    | FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""")),
 
     // Bloom SEMI-JOIN pruning — the runtime-filter pattern that keeps a
     // 100 TB fact scan from shuffling rows a selective dimension filter
@@ -3733,8 +3399,6 @@ object RelationalOps {
     // stats-independent spelling).
     Q("b34_bloom_semi_prune",
       (s, dir) => {
-        t(s, dir, "orders").createOrReplaceTempView("v_orders")
-        t(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
         // Size the bitmap from the BUILD side, not a fixture constant
         // (ADVICE r13): fixed (10000, 81920) saturates ~30x over at sf1+
         // and the prescreen silently degrades to pass-everything. The
@@ -3745,16 +3409,18 @@ object RelationalOps {
         val nUrgent = math.max(10000L,
           t(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT").count())
         val nBits = math.min(nUrgent * 8L, 67108864L)
-        s.sql(s"""WITH u AS (SELECT o_orderkey FROM v_orders WHERE o_orderpriority = '1-URGENT'),
-                |pre AS (SELECT l_orderkey, l_extendedprice FROM v_lineitem
-                |  WHERE graft_might_contain(
-                |    (SELECT graft_bloom_agg(o_orderkey, ${nUrgent}L, ${nBits}L) FROM u), l_orderkey)),
-                |ex AS (SELECT l_orderkey, l_extendedprice
-                |       FROM pre LEFT SEMI JOIN u ON pre.l_orderkey = u.o_orderkey)
-                |SELECT l_orderkey,
-                |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS revenue
-                |FROM ex GROUP BY l_orderkey
-                |ORDER BY revenue DESC, l_orderkey LIMIT 20""".stripMargin)
+        val text = s"""WITH u AS (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT'),
+                     |pre AS (SELECT l_orderkey, l_extendedprice FROM lineitem
+                     |  WHERE graft_might_contain(
+                     |    (SELECT graft_bloom_agg(o_orderkey, ${nUrgent}L, ${nBits}L) FROM u), l_orderkey)),
+                     |ex AS (SELECT l_orderkey, l_extendedprice
+                     |       FROM pre LEFT SEMI JOIN u ON pre.l_orderkey = u.o_orderkey)
+                     |SELECT l_orderkey,
+                     |  CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS revenue
+                     |FROM ex GROUP BY l_orderkey
+                     |ORDER BY revenue DESC, l_orderkey LIMIT 20""".stripMargin
+        Q.views(s, dir, text)
+        s.sql(text)
       },
       Some(sql("""WITH u AS (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT'),
                  | ex AS (SELECT l_orderkey, l_extendedprice FROM lineitem

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -67,16 +68,10 @@ object BuildIndexes {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }
     val built = scala.collection.mutable.ArrayBuffer.empty[String]
-    def write(name: String, df: DataFrame, bucketCols: Seq[String]): Unit = {
+    def write(name: String, df: DataFrame): Unit = {
       spark.sql(s"DROP TABLE IF EXISTS $name")
-      rmrf(new java.io.File(s"$outDir/$name"))
-      val (_, sec) = timed {
-        val w = df.write.format("parquet").mode("overwrite")
-        (if (bucketCols.nonEmpty)
-          w.bucketBy(8, bucketCols.head, bucketCols.tail: _*)
-            .sortBy(bucketCols.head, bucketCols.tail: _*)
-        else w).saveAsTable(name)
-      }
+      FileUtils.deleteQuietly(new java.io.File(s"$outDir/$name"))
+      val (_, sec) = timed(IngestBatch.saveBucketed(df, name, name))
       val rows = spark.table(name).count()
       built += s"""{"table":"$name","rows":$rows,"build_sec":$sec}"""
       println(s"[build-indexes] $name: $rows rows in ${f"$sec%.1f"}s")
@@ -84,14 +79,13 @@ object BuildIndexes {
 
     // Dedup-side artifacts.
     write("corpus_fp",
-      docs.select(col("doc_id"), md5(col("text")).as("fp")), Seq("fp"))
+      docs.select(col("doc_id"), md5(col("text")).as("fp")))
     val sets = Harness.materialize(LlmOps.hashedTokenSets(docs))
-    write("corpus_sets", sets, Seq("doc_id"))
-    write("corpus_bands", PipelineOps.minhashBands(sets),
-      Seq("b", "v", "source"))
+    write("corpus_sets", sets)
+    write("corpus_bands", PipelineOps.minhashBands(sets))
     write("corpus_grams",
-      PipelineOps.gramOcc(docs, 5).select(col("g")).distinct(), Seq("g"))
-    write("truth_pairs", LlmOps.pairStats(docs, 7), Seq("doc_id1", "doc_id2"))
+      PipelineOps.gramOcc(docs, 5).select(col("g")).distinct())
+    write("truth_pairs", LlmOps.pairStats(docs, 7))
 
     // ANN-side artifacts: coarse assignment at the production scaledK
     // (routed by PipelineOps.assignToCentroids), plus the PQ pair.
@@ -102,7 +96,7 @@ object BuildIndexes {
     val trainedRouting = args.contains("--trained-routing")
     val k = PipelineOps.scaledK(emb)
     val coarse = Harness.materialize(PipelineOps.stubCodebook(emb, k))
-    write("coarse_codebook", coarse, Seq())
+    write("coarse_codebook", coarse)
     // A trained build PERSISTS its stage-1 supers (route_supers, the
     // 14th artifact) and the manifest records the router, so IngestBatch
     // can route a later batch with the build's EXACT router — without
@@ -115,32 +109,32 @@ object BuildIndexes {
     val supers =
       if (trainedRouting) PipelineOps.trainRoutingSupers(coarse, k) else None
     supers match {
-      case Some(sup) => write("route_supers", sup, Seq())
+      case Some(sup) => write("route_supers", sup)
       case None =>
         spark.sql("DROP TABLE IF EXISTS route_supers")
-        rmrf(new java.io.File(s"$outDir/route_supers"))
+        FileUtils.deleteQuietly(new java.io.File(s"$outDir/route_supers"))
     }
     write("coarse_assign",
       PipelineOps.assignToCentroids(emb, coarse, k, supers)
-        .select(col("vec_id"), col("cid")), Seq("vec_id"))
+        .select(col("vec_id"), col("cid")))
     val sub = PipelineOps.pqBlocks(emb, nBlocks = 4, blockDim = 16)
     val pqCent = Harness.materialize(PipelineOps.pqTrainStep(
       sub, PipelineOps.pqStubCodebook(sub, 8)))
-    write("pq_cent", pqCent, Seq())
+    write("pq_cent", pqCent)
     write("pq_codes",
       PipelineOps.pqAssign(sub, pqCent)
-        .select(col("vec_id"), col("b"), col("cid").as("pcid")), Seq("vec_id"))
+        .select(col("vec_id"), col("b"), col("cid").as("pcid")))
 
     // Pack-state scalar (i52's prefix-additivity anchor).
     write("pack_state",
       docs.agg(coalesce(sum(size(split(col("text"), " ")).cast("long")),
-        lit(0L)).as("base_tok")), Seq())
+        lit(0L)).as("base_tok")))
 
     // DSIR count state (i62's additive artifact): per-bigram corpus and
     // target-language counts, bucketed on the 8-byte hash the score
     // join keys on. Counts, not ratios — counts are what an ingest can
     // merge by sum (dsirStateFromCounts derives the scoring state).
-    write("dsir_counts", PipelineOps.dsirCounts(docs), Seq("bk"))
+    write("dsir_counts", PipelineOps.dsirCounts(docs))
 
     // Trained artifacts (r15 trainer loops): the BPE merge list in
     // training order and the corpus's dominant PCA direction — both
@@ -149,11 +143,11 @@ object BuildIndexes {
     val (bpe, _) = PipelineOps.trainBpeMerges(docs, nMerges = 16)
     write("bpe_merges",
       spark.createDataFrame(bpe.zipWithIndex.map { case (p, i) =>
-        (i.toLong, p) }).toDF("merge_idx", "pair"), Seq())
+        (i.toLong, p) }).toDF("merge_idx", "pair"))
     val pca = PipelineOps.trainPcaDirection(emb)
     write("pca_direction",
       spark.createDataFrame(pca.zipWithIndex.map { case (x, i) =>
-        (i.toLong, x) }).toDF("pos", "v"), Seq())
+        (i.toLong, x) }).toDF("pos", "v"))
 
     // Read-path measurement: persisted-artifact form vs in-query form,
     // same session, noop-drained (the Bench rule).
@@ -192,10 +186,5 @@ object BuildIndexes {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/manifest_$tag.json"), line + "\n")
     spark.stop()
-  }
-
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rmrf)
-    f.delete(): Unit
   }
 }

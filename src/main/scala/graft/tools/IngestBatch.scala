@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -74,6 +75,18 @@ object IngestBatch {
     "pq_codes" -> Seq("vec_id"),
     "pack_state" -> Seq(),
     "dsir_counts" -> Seq("bk"))
+
+  /** Writes `df` as the parquet table `table` in artifact `name`'s layout:
+    * 8 buckets, sorted, on its [[bucketKeys]] (unbucketed when it has
+    * none), EXTERNAL at `path` when one is given.
+    */
+  def saveBucketed(df: DataFrame, name: String, table: String,
+      path: Option[String] = None): Unit = {
+    val keys = bucketKeys.getOrElse(name, Nil)
+    val w = path.foldLeft(df.write.format("parquet").mode("overwrite"))(_.option("path", _))
+    (if (keys.nonEmpty) w.bucketBy(8, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
+    else w).saveAsTable(table)
+  }
 
   /** The delta of every artifact, as pure frames — shared verbatim by
     * the tool main and PersistedIndexSpec's additivity assertions.
@@ -166,7 +179,7 @@ object IngestBatch {
     * from the directory are skipped (partial indexes stay partial).
     */
   def compactIndex(spark: SparkSession, indexDir: String): Seq[String] =
-    bucketKeys.toSeq.sortBy(_._1).flatMap { case (name, keys) =>
+    bucketKeys.keys.toSeq.sorted.flatMap { name =>
       val baseDir = new java.io.File(s"$indexDir/$name")
       if (!baseDir.isDirectory) None
       else {
@@ -178,14 +191,9 @@ object IngestBatch {
         val m = Harness.materialize(readMerged(spark, indexDir, name))
         (deltaDirs :+ baseDir).foreach { d =>
           spark.sql(s"DROP TABLE IF EXISTS ${d.getName}")
-          rmrf(d)
+          FileUtils.deleteQuietly(d)
         }
-        val w = m.write.format("parquet").mode("overwrite")
-          .option("path", s"$indexDir/$name")
-        (if (keys.nonEmpty)
-          w.bucketBy(8, keys.head, keys.tail: _*)
-            .sortBy(keys.head, keys.tail: _*)
-        else w).saveAsTable(name)
+        saveBucketed(m, name, name, Some(s"$indexDir/$name"))
         val sec = (System.nanoTime() - t0) / 1e9
         val rows = spark.table(name).count()
         println(s"[compact] $name: $rows rows, ${deltaDirs.length} delta " +
@@ -228,7 +236,7 @@ object IngestBatch {
     // own 'sf0.1' data-dir convention) break saveAsTable/DROP TABLE on
     // multipart identifiers, and uppercase is silently lowercased by
     // the catalog when the table directory is created while the
-    // idempotence rmrf below uses the raw-case path — a same-tag re-run
+    // idempotence delete below uses the raw-case path — a same-tag re-run
     // would miss the stale segment and read its own prior delta back as
     // corpus state (silent data loss on the corpus_grams overwrite).
     val tag = (if (pos.length > 2) pos(2)
@@ -250,7 +258,7 @@ object IngestBatch {
     // tag's segments are dropped BEFORE the merge-on-read below.
     IngestBatch.bucketKeys.keys.foreach { name =>
       spark.sql(s"DROP TABLE IF EXISTS ${name}__delta_$tag")
-      rmrf(new java.io.File(s"$indexDir/${name}__delta_$tag"))
+      FileUtils.deleteQuietly(new java.io.File(s"$indexDir/${name}__delta_$tag"))
     }
     // Router detection (VERDICT r16 ask #2): a --trained-routing base
     // persists its stage-1 supers as route_supers and its manifest
@@ -291,11 +299,7 @@ object IngestBatch {
       batchDocs, batchEmb, routeSupers).map { case (name, df) =>
       val delta = s"${name}__delta_$tag"
       val t0 = System.nanoTime()
-      val keys = bucketKeys(name)
-      val w = df.write.format("parquet").mode("overwrite")
-      (if (keys.nonEmpty)
-        w.bucketBy(8, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
-      else w).saveAsTable(delta)
+      saveBucketed(df, name, delta)
       val sec = (System.nanoTime() - t0) / 1e9
       val rows = spark.table(delta).count()
       // Base row counts are TELEMETRY, not ingest work: counting all
@@ -318,10 +322,5 @@ object IngestBatch {
       java.nio.file.Paths.get(s"$indexDir/ingest_manifest_$tag.json"),
       line + "\n")
     spark.stop()
-  }
-
-  private def rmrf(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rmrf)
-    f.delete(): Unit
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.regex.Pattern
 
 import scala.jdk.CollectionConverters._
 
@@ -44,6 +45,18 @@ class HarnessSpec extends SparkTestBase {
     val sites = Seq(".localCheckpoint(", ".checkpoint(", ".persist(", ".cache()")
       .flatMap(n => sitesOf(n, except = "Harness.scala").map(f => s"$f ($n)"))
     assert(sites.isEmpty, s"materialized outside Harness.scala: ${sites.mkString(", ")}")
+  }
+
+  test("no file in src/main registers a temp view outside Q.views and i68's derived frame") {
+    // A SQL-surface query ships one text through Q.sql, whose views
+    // Q.views registers; a hand-registered view is where a Spark-only
+    // twin of an oracle text starts.
+    val needle = "createOrReplaceTempView("
+    val counts = sitesOf(needle).map { f =>
+      f -> (Files.readString(Paths.get("src/main/scala", f)).split(Pattern.quote(needle), -1).length - 1)
+    }.toMap
+    assert(counts == Map("graft/Registry.scala" -> 1, "graft/operators/PipelineOps.scala" -> 1),
+      s"createOrReplaceTempView sites per file: $counts")
   }
 
   /** A frame with a shuffle, and its rows. */

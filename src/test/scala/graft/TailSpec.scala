@@ -264,16 +264,17 @@ class TailSpec extends SparkTestBase {
 
   /** `parts` partitions of 250 rows rendered as lines: non-ASCII text, some
     * nulls, some with an embedded `\n` or `\r`. Partition `slow` sleeps
-    * before its first row, `fail` throws there, and `stall` waits there
-    * until its task is killed (60 s at most).
+    * before its first row, `fail` throws there, and each `stall` piece
+    * waits there until its task is killed (60 s at most).
     */
-  private def drainLines(parts: Int, slow: Int = -1, fail: Int = -1, stall: Int = -1): DataFrame = {
+  private def drainLines(parts: Int, slow: Int = -1, fail: Int = -1,
+      stall: Set[Int] = Set.empty): DataFrame = {
     val render = udf { (p: Int, id: Long) =>
       if (id % 250 == 0) {
         if (p == slow) Thread.sleep(400)
         if (p == fail) throw new IllegalStateException(s"piece $p fails")
         val t0 = System.nanoTime()
-        while (p == stall && !TaskContext.get().isInterrupted() && System.nanoTime() - t0 < 60e9)
+        while (stall(p) && !TaskContext.get().isInterrupted() && System.nanoTime() - t0 < 60e9)
           Thread.sleep(20)
       }
       if (id % 97 == 5) null
@@ -307,19 +308,26 @@ class TailSpec extends SparkTestBase {
   }
 
   test("an interrupted drain cancels the windows still running and rethrows") {
-    val rows = drainLines(4 * window, stall = 1).queryExecution.toRdd
+    // One stalled piece in each of the first two windows keeps both jobs
+    // running until the drain cancels them.
+    val rows = drainLines(4 * window, stall = Set(1, window + 1)).queryExecution.toRdd
     val thrown = new java.util.concurrent.atomic.AtomicReference[InterruptedException]()
     val drain = new Thread(() =>
       try Tail.drainOrdered(rows, discard)
       catch { case e: InterruptedException => thrown.set(e) })
     drain.start()
-    eventually(timeout(Span(20, Seconds)), interval(Span(50, Millis))) {
-      assert(spark.sparkContext.statusTracker.getActiveJobIds.length == 2)
+    try {
+      eventually(timeout(Span(20, Seconds)), interval(Span(50, Millis))) {
+        assert(spark.sparkContext.statusTracker.getActiveJobIds.length == 2)
+      }
+      drain.interrupt()
+      drain.join(20000L)
+      assert(thrown.get() != null, "the drain must rethrow the interrupt")
+      noActiveJobs() // the stalled pieces' jobs would run on for 60 s
+    } finally {
+      drain.interrupt()
+      spark.sparkContext.cancelAllJobs()
     }
-    drain.interrupt()
-    drain.join(20000L)
-    assert(thrown.get() != null, "the drain must rethrow the interrupt")
-    noActiveJobs() // the stalled piece's job would run on for 60 s
   }
 
   test("a task failing in a later drain window makes -O exit 1 and leaves no job running") {

@@ -200,10 +200,57 @@ class TemplateSpec extends SparkTestBase {
       .as[String].collect()
     assert(lines(0) == "%!d(string=z!)|%!o(string=z!)|7a21|7A21|%!c(string=z!)|" +
       "%!f(string=z!)|%!e(string=z!)|%!g(string=z!)|%!t(string=z!)|k=z!")
-    // A value that fits its verb still formats through the verb (%g is
-    // left out: java.util.Formatter's %g is not Go's).
-    assert(lines(1).split('|').toSeq.patch(7, Nil, 1) ==
-      Seq("7", "00007", "7", "7", "\u0007", "7.00", "7.000000e+00", "%!t(string=7)", "k=7"))
+    // A value that fits its verb still formats through the verb.
+    assert(lines(1).split('|').toSeq ==
+      Seq("7", "00007", "7", "7", "\u0007", "7.00", "7.000000e+00", "7", "%!t(string=7)", "k=7"))
+  }
+
+  test("""printf %g/%G render Go's strconv 'g' form, not java.util.Formatter's""") {
+    val nums = Seq("7", "0.5", "123456", "1234567", "0.00001", "1234")
+      .zipWithIndex.map { case (k, i) => (i.toLong, s"""{"k":"$k"}""") }.toDF("seq", "props")
+    val lines = nums.orderBy("seq").select(Template.compile(
+        """{{printf "%g" .Log.k}}|{{printf "%.3g" .Log.k}}|{{printf "%G" .Log.k}}""",
+        deepFields).as("line"))
+      .as[String].collect().toSeq
+    assert(lines == Seq(
+      "7|7|7",
+      "0.5|0.5|0.5",
+      "123456|1.23e+05|123456",
+      "1.234567e+06|1.23e+06|1.234567E+06",
+      "1e-05|1e-05|1E-05",
+      "1234|1.23e+03|1234"))
+  }
+
+  test("Go %g: shortest round-trip digits, flags, width and non-finite values") {
+    def g(spec: String, d: java.lang.Double) = Template.goG(spec)(d)
+    assert(g("%g", 0.1 + 0.2) == "0.30000000000000004")
+    assert(g("%g", 100.0) == "100")
+    assert(g("%g", 1e6) == "1e+06")
+    assert(g("%g", 1e21) == "1e+21")
+    assert(g("%g", 2e-3) == "0.002")
+    assert(g("%g", 1e-7) == "1e-07")
+    assert(g("%g", Double.MinPositiveValue) == "5e-324")
+    assert(g("%g", -0.0) == "-0")
+    assert(g("%g", 0.0) == "0")
+    assert(g("%.3g", 0.0) == "0")
+    assert(g("%.0g", 7.5) == "8")
+    assert(g("%.1g", 2.5) == "2") // exact tie rounds half to even, as strconv does
+    assert(g("%.3g", 100.0) == "100")
+    assert(g("%.2g", 100.0) == "1e+02")
+    assert(g("%+g", 1.5) == "+1.5")
+    assert(g("% g", 1.5) == " 1.5")
+    assert(g("%8.3g", 3.14159) == "    3.14")
+    assert(g("%-8g", 3.5) == "3.5     ")
+    assert(g("%08.3g", -1.5) == "-00001.5")
+    assert(g("%#g", 7.0) == "7.00000")
+    assert(g("%#.3g", 1234.0) == "1.23e+03")
+    assert(g("%#g", 0.0) == "0.00000")
+    assert(g("%g", Double.PositiveInfinity) == "+Inf")
+    assert(g("% g", Double.PositiveInfinity) == " Inf")
+    assert(g("%06g", Double.NegativeInfinity) == "  -Inf")
+    assert(g("%g", Double.NaN) == "NaN")
+    assert(g("%+g", Double.NaN) == "+NaN")
+    assert(g("%g", null) == "null")
   }
 
   test("printf arity and verb errors fail at compile time") {
