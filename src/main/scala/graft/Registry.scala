@@ -46,7 +46,10 @@ object Q {
     Tables.names.filter(n => s"\\b$n\\b".r.findFirstIn(text).isDefined)
       .foreach(n => Tables.load(s, dir, n).createOrReplaceTempView(n))
 
-  private def oneLine(s: String): String = s.stripMargin.replace("\n", " ").trim
+  /** `s` margin-stripped onto one line: the normal form of every SQL
+    * text the registry ships, to Spark or to the oracle.
+    */
+  private[graft] def oneLine(s: String): String = s.stripMargin.replace("\n", " ").trim
 }
 
 object Registry {

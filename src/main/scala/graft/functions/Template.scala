@@ -168,14 +168,11 @@ object Template {
     */
   private final case class PVal(col: Column, isBareTimestamp: Boolean)
 
-  /** Go's `time.Time.String()` render of the envelope timestamp: the
-    * UTC-session timestamp→string cast produces the identical
-    * `yyyy-MM-dd HH:mm:ss[.fraction]` body (same trailing-zero trim),
-    * so the zone suffix is a constant (`main.go:265` — the envelope's
-    * Timestamp is always UTC).
+  /** Go's `time.Time.String()` render of the envelope timestamp,
+    * `yyyy-MM-dd HH:mm:ss[.fraction] +0000 UTC`, always in UTC
+    * (`main.go:265`): the native [[GoTimeString]].
     */
-  private def goTimeString(c: Column): Column =
-    concat(c.cast("string"), lit(" +0000 UTC"))
+  private def goTimeString(c: Column): Column = call_function("graft_go_time", c)
 
   /** One non-string verb's rendering of `value`. Go's fmt never fails
     * on a verb/type mismatch: it prints `%!verb(type=value)` in place

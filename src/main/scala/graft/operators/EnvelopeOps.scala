@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
+import graft.Q.oneLine
 import graft.functions.{Strftime, Template}
 
 /** Group A (SURVEY.md §2.A): the reference's literal operator surface —
@@ -30,11 +31,15 @@ object EnvelopeOps {
       .otherwise(concat(lit("uuid:instance/"), userId.cast("string")))
 
   /** `ShortHostId` derivation (reference `main.go:252-262`): last
-    * `:`-segment of the partition key, with `task/` / `instance/`
-    * prefixes stripped.
+    * `:`-segment of the partition key, with one leading `task/` or
+    * `instance/` stripped. Every step works on the value's UTF-8 bytes.
     */
-  def shortHostId(hostId: Column): Column =
-    regexp_replace(element_at(split(hostId, ":"), -1), "^(task/|instance/)", "")
+  def shortHostId(hostId: Column): Column = {
+    val last = substring_index(hostId, ":", -1)
+    when(last.startsWith("task/"), substring(last, 6, Int.MaxValue))
+      .when(last.startsWith("instance/"), substring(last, 10, Int.MaxValue))
+      .otherwise(last)
+  }
 
   /** Full envelope projection (reference `main.go:264-279`):
     * ts / host_id / short_host_id / seq / log_entry (+ raw json props).
@@ -70,15 +75,13 @@ object EnvelopeOps {
 
   // DuckDB fragment for the same host_id/short_host_id derivation.
   private val duckHostId =
-    """CASE WHEN user_id % 3 = 0 THEN 'arn:aws:ecs:cluster/default:task/' || CAST(user_id AS VARCHAR)
+    oneLine("""CASE WHEN user_id % 3 = 0 THEN 'arn:aws:ecs:cluster/default:task/' || CAST(user_id AS VARCHAR)
       |     WHEN user_id % 3 = 1 THEN 'ip-address:10.0.0.' || CAST(user_id % 256 AS VARCHAR)
-      |     ELSE 'uuid:instance/' || CAST(user_id AS VARCHAR) END""".stripMargin.replace("\n", " ")
+      |     ELSE 'uuid:instance/' || CAST(user_id AS VARCHAR) END""")
   private val duckShort =
     "regexp_replace(list_extract(string_split(host_id, ':'), -1), '^(task/|instance/)', '')"
 
   private def ev(s: SparkSession, dir: String): DataFrame = Tables.load(s, dir, "events")
-
-  private def sql(s: String): String = s.stripMargin.replace("\n", " ").trim
 
   val qs: Seq[Q] = Seq(
     Q("a1_source_scan",
@@ -95,9 +98,9 @@ object EnvelopeOps {
           .select(col("event_id"), col("ts").cast("timestamp_ntz").as("ts"),
             col("host_id"), col("short_host_id"))
           .orderBy("event_id"),
-      Some(s"""SELECT event_id, ts, host_id, $duckShort AS short_host_id
+      Some(oneLine(s"""SELECT event_id, ts, host_id, $duckShort AS short_host_id
               | FROM (SELECT event_id, ts, $duckHostId AS host_id FROM events)
-              | ORDER BY event_id""".stripMargin.replace("\n", " "))),
+              | ORDER BY event_id"""))),
 
     Q("a3_json_parse",
       (s, dir) =>
@@ -106,9 +109,9 @@ object EnvelopeOps {
           get_json_object(col("props"), "$.k").cast("double").as("k_val"),
           get_json_object(col("props"), "$.missing").as("missing_val"))
           .orderBy("event_id"),
-      Some("""SELECT event_id, CAST(json_extract_string(props, '$.k') AS DOUBLE) AS k_val,
+      Some(oneLine("""SELECT event_id, CAST(json_extract_string(props, '$.k') AS DOUBLE) AS k_val,
              | json_extract_string(props, '$.missing') AS missing_val
-             | FROM events ORDER BY event_id""".stripMargin.replace("\n", " "))),
+             | FROM events ORDER BY event_id"""))),
 
     // Oracle renders with concat + coalesce('' for NULL) to match the
     // compiled template's null semantics exactly (a NULL field renders
@@ -125,9 +128,9 @@ object EnvelopeOps {
     // ' +0000 UTC' past a NULL timestamp.
     Q("a4_template_render",
       (s, dir) => renderPipeline(ev(s, dir)).orderBy("event_id"),
-      Some(s"""SELECT event_id, concat($duckShort, ' ', coalesce(rtrim(rtrim(strftime(ts, '%Y-%m-%d %H:%M:%S.%f'), '0'), '.') || ' +0000 UTC', ''), ' ', coalesce(props, '')) AS line
+      Some(oneLine(s"""SELECT event_id, concat($duckShort, ' ', coalesce(rtrim(rtrim(strftime(ts, '%Y-%m-%d %H:%M:%S.%f'), '0'), '.') || ' +0000 UTC', ''), ' ', coalesce(props, '')) AS line
               | FROM (SELECT event_id, ts, props, $duckHostId AS host_id FROM events)
-              | ORDER BY event_id""".stripMargin.replace("\n", " "))),
+              | ORDER BY event_id"""))),
 
     // Nested JSON field access in a template ({{.Log.k}} — the reference's
     // `{{.Log.FieldName}}` navigation, main.go:50-51 / README.md:19).
@@ -141,9 +144,9 @@ object EnvelopeOps {
               "ShortHostId" -> col("short_host_id"),
               "Log" -> col("props"))).as("line"))
           .orderBy("event_id"),
-      Some(s"""SELECT event_id, concat($duckShort, ' k=', coalesce(json_extract_string(props, '$$.k'), '')) AS line
+      Some(oneLine(s"""SELECT event_id, concat($duckShort, ' k=', coalesce(json_extract_string(props, '$$.k'), '')) AS line
               | FROM (SELECT event_id, props, $duckHostId AS host_id FROM events)
-              | ORDER BY event_id""".stripMargin.replace("\n", " "))),
+              | ORDER BY event_id"""))),
 
     // The round-14 template-language surface under the hash gate:
     // MULTI-LEVEL JSON navigation ({{.Env.outer.inner.k}} — Go fields
@@ -166,7 +169,7 @@ object EnvelopeOps {
               "User" -> col("user_id"))).as("line"))
           .orderBy("event_id")
       },
-      Some(sql("""SELECT event_id,
+      Some(oneLine("""SELECT event_id,
                  | concat('k=', coalesce(json_extract_string(env, '$.outer.inner.k'), ''),
                  |   ' tag=', coalesce(json_extract_string(env, '$.outer.tag'), ''),
                  |   ' n=', printf('%05d', event_id),
@@ -196,7 +199,7 @@ object EnvelopeOps {
               "Timestamp" -> col("ts"),
               "SequenceNumber" -> col("event_id"))).as("line"))
           .orderBy("event_id"),
-      Some(sql("""SELECT event_id,
+      Some(oneLine("""SELECT event_id,
                  | concat('v=[', coalesce(rtrim(rtrim(strftime(ts, '%Y-%m-%d %H:%M:%S.%f'), '0'), '.') || ' +0000 UTC', ''),
                  |   '] s=[', coalesce(rtrim(rtrim(strftime(ts, '%Y-%m-%d %H:%M:%S.%f'), '0'), '.') || ' +0000 UTC', ''),
                  |   '] n=', printf('%d', event_id)) AS line
@@ -211,9 +214,9 @@ object EnvelopeOps {
           Strftime.format(col("ts"), "%Y-%m-%dT%H:%M:%S").as("iso"),
           Strftime.format(col("ts"), "%Y/%m/%d %H:%M").as("slashed"))
           .orderBy("event_id"),
-      Some("""SELECT event_id, strftime(ts, '%Y-%m-%d') AS d, strftime(ts, '%H:%M:%S') AS t,
+      Some(oneLine("""SELECT event_id, strftime(ts, '%Y-%m-%d') AS d, strftime(ts, '%H:%M:%S') AS t,
              | strftime(ts, '%Y-%m-%dT%H:%M:%S') AS iso, strftime(ts, '%Y/%m/%d %H:%M') AS slashed
-             | FROM events ORDER BY event_id""".stripMargin.replace("\n", " "))),
+             | FROM events ORDER BY event_id"""))),
 
     // The computed day-of-week / week-number tokens under the hash gate:
     // these are the structural formulas java.time patterns can't express
@@ -229,9 +232,9 @@ object EnvelopeOps {
           Strftime.format(col("ts"), "%U|%W|%V").as("weeks"),
           Strftime.format(col("ts"), "%j %T").as("yday_time"))
           .orderBy("event_id"),
-      Some("""SELECT event_id, strftime(ts, '%u|%w') AS dow, strftime(ts, '%U|%W|%V') AS weeks,
+      Some(oneLine("""SELECT event_id, strftime(ts, '%u|%w') AS dow, strftime(ts, '%U|%W|%V') AS weeks,
              | strftime(ts, '%j %T') AS yday_time
-             | FROM events ORDER BY event_id""".stripMargin.replace("\n", " "))),
+             | FROM events ORDER BY event_id"""))),
 
     // The start-offset predicate is applied to the raw ns column inside
     // Tables.eventsSince so it pushes into the parquet scan (the
@@ -245,8 +248,8 @@ object EnvelopeOps {
           .select(col("event_id"), col("ts").cast("timestamp_ntz").as("ts"), col("event_type"))
           .orderBy("event_id")
       },
-      Some("""SELECT event_id, ts, event_type FROM events
-             | WHERE ts >= TIMESTAMP '2024-01-15 00:00:00' ORDER BY event_id""".stripMargin.replace("\n", " "))),
+      Some(oneLine("""SELECT event_id, ts, event_type FROM events
+             | WHERE ts >= TIMESTAMP '2024-01-15 00:00:00' ORDER BY event_id"""))),
 
     Q("a7_batch_limit",
       (s, dir) =>
@@ -266,8 +269,8 @@ object EnvelopeOps {
               .cast("long"))
           .orderBy("event_id")
       },
-      Some("""SELECT event_id, user_id % 4 AS shard,
+      Some(oneLine("""SELECT event_id, user_id % 4 AS shard,
              | row_number() OVER (PARTITION BY user_id % 4 ORDER BY event_id) AS seq
-             | FROM events ORDER BY event_id""".stripMargin.replace("\n", " ")))
+             | FROM events ORDER BY event_id""")))
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Harness, Q, Tables}
+import graft.Q.oneLine
 import graft.functions.{TextFunctions, VectorFunctions}
 
 /** Group D (SURVEY.md §2.D): LLM-data-pipeline operators over the
@@ -33,8 +34,6 @@ import graft.functions.{TextFunctions, VectorFunctions}
 object LlmOps {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables.load(s, dir, n)
-  private def sql(s: String): String = s.stripMargin.replace("\n", " ").trim
-
   /** Distinct tokens per document, with the doc's distinct-token count
     * carried along so the pair-join needs no extra sizes join.
     */
@@ -834,7 +833,7 @@ object LlmOps {
   /** DuckDB form of the exact J ≥ 0.9 same-source near-dup (UNFILTERED —
     * any lossless candidate filter on the Spark side must reproduce it).
     */
-  val exactNearDupOracle: String = sql(
+  val exactNearDupOracle: String = oneLine(
     s"""WITH $nearDupPairsCte
       | SELECT doc_id1, doc_id2, jaccard FROM nd
       | ORDER BY doc_id1, doc_id2""")
@@ -855,7 +854,7 @@ object LlmOps {
           .select(col("doc_id"), col("fp"), col("n_dups"))
           .orderBy("doc_id")
       },
-      Some(sql("""SELECT doc_id, fp, n_dups FROM (
+      Some(oneLine("""SELECT doc_id, fp, n_dups FROM (
                  |   SELECT doc_id, md5(text) AS fp,
                  |     row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn,
                  |     count(*) OVER (PARTITION BY md5(text)) AS n_dups
@@ -882,7 +881,7 @@ object LlmOps {
     // prefix filter must be lossless.
     Q("i70_containment_dedup",
       (s, dir) => containmentPairs(t(s, dir, "documents")),
-      Some(sql("""WITH dtok AS (
+      Some(oneLine("""WITH dtok AS (
                  |   SELECT doc_id, source, token,
                  |     count(*) OVER (PARTITION BY doc_id) AS n_tok
                  |   FROM (SELECT DISTINCT doc_id, source,
@@ -916,7 +915,7 @@ object LlmOps {
     // independent of the contraction schedule.
     Q("i15_dedup_clusters",
       (s, dir) => nearDupClusters(nearDupPairs(t(s, dir, "documents"))),
-      Some(sql(s"""WITH RECURSIVE $nearDupPairsCte,
+      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
                   | edges AS (
                   |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
                   |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
@@ -946,7 +945,7 @@ object LlmOps {
           .select(col("doc_id"), col("source"), col("lang"))
           .orderBy("doc_id")
       },
-      Some(sql(s"""WITH RECURSIVE $nearDupPairsCte,
+      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
                   | edges AS (
                   |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
                   |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
@@ -989,7 +988,7 @@ object LlmOps {
           .select(col("doc_id"), col("source"), col("lang"))
           .orderBy("doc_id")
       },
-      Some(sql(s"""WITH RECURSIVE $nearDupPairsCte,
+      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
                   | edges AS (
                   |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
                   |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
@@ -1036,7 +1035,7 @@ object LlmOps {
           .select(col("doc_id"), col("source"), col("lang"))
           .orderBy("doc_id")
       },
-      Some(sql(s"""WITH RECURSIVE $nearDupPairsCte,
+      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
                   | edges AS (
                   |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
                   |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
@@ -1084,7 +1083,7 @@ object LlmOps {
             when(coalesce(col("rnk"), lit(1)) <= 2, 1L).otherwise(0L).as("kept"))
           .orderBy("doc_id")
       },
-      Some(sql(s"""WITH RECURSIVE $nearDupPairsCte,
+      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
                   | edges AS (
                   |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
                   |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
@@ -1122,7 +1121,7 @@ object LlmOps {
     Q("i36_near_dedup_incremental",
       (s, dir) => nearDedupIncremental(t(s, dir, "documents"), 400)
         .orderBy("doc_id"),
-      Some(sql(s"""WITH RECURSIVE $nearDupPairsCte,
+      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
                   | crossm AS (SELECT DISTINCT doc_id2 AS doc_id FROM nd
                   |   WHERE doc_id1 < 400 AND doc_id2 >= 400),
                   | bi AS (SELECT doc_id1, doc_id2 FROM nd
@@ -1153,7 +1152,7 @@ object LlmOps {
     // arithmetic, fp-group windows, and the recursive-CC membership.
     Q("i45_delete_cascade",
       (s, dir) => deleteCascade(t(s, dir, "documents")).orderBy("doc_id"),
-      Some(sql(s"""WITH RECURSIVE $nearDupPairsCte,
+      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
                   | edges AS (
                   |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
                   |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
@@ -1195,7 +1194,7 @@ object LlmOps {
     // state (a fingerprint survives its first batch only).
     Q("i25_dedup_incremental",
       (s, dir) => incrementalDedup(t(s, dir, "documents"), 400).orderBy("doc_id"),
-      Some(sql("""WITH fps AS (SELECT doc_id, md5(text) AS fp FROM documents),
+      Some(oneLine("""WITH fps AS (SELECT doc_id, md5(text) AS fp FROM documents),
                  | batch AS (SELECT * FROM fps WHERE doc_id >= 400),
                  | canon AS (
                  |   SELECT doc_id, fp FROM (
@@ -1221,7 +1220,7 @@ object LlmOps {
     // Streaming twin: foreachBatch merge-upserts in StreamingSpec.
     Q("i47_mv_maintain",
       (s, dir) => mvMaintain(t(s, dir, "documents"), 400).orderBy("source", "lang"),
-      Some(sql("""SELECT source, lang, count(*) AS n_docs,
+      Some(oneLine("""SELECT source, lang, count(*) AS n_docs,
                  |   CAST(sum(n_chars) AS BIGINT) AS sum_chars,
                  |   min(n_chars) AS min_chars, max(n_chars) AS max_chars,
                  |   CAST((CAST(sum(n_chars) AS BIGINT) * 10000) // count(*) AS BIGINT) AS avg_chars_x1e4
@@ -1247,7 +1246,7 @@ object LlmOps {
     // engines.
     Q("i30_fuzzy_join",
       (s, dir) => fuzzyJoin(t(s, dir, "documents"), 400).orderBy("probe_id"),
-      Some(sql("""WITH dtok AS (
+      Some(oneLine("""WITH dtok AS (
                  |   SELECT doc_id, token,
                  |     count(*) OVER (PARTITION BY doc_id) AS n_tok
                  |   FROM (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS token
@@ -1284,7 +1283,7 @@ object LlmOps {
           .select(col("doc_id"), col("source"), splitBucket.as("bucket"))
           .withColumn("split", splitBand(col("bucket")))
           .orderBy("doc_id"),
-      Some(sql("""SELECT doc_id, source,
+      Some(oneLine("""SELECT doc_id, source,
                  |   ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS bucket,
                  |   CASE WHEN ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train'
                  |        WHEN ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'validation'
@@ -1307,7 +1306,7 @@ object LlmOps {
           .orderBy(col("sim").desc, col("vec_id").asc)
           .limit(20)
       },
-      Some(sql("""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
+      Some(oneLine("""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
                  | prod AS (
                  |   SELECT e.vec_id,
                  |     unnest(e.embedding)::DOUBLE * unnest(q.qe)::DOUBLE AS p
@@ -1327,7 +1326,7 @@ object LlmOps {
           .agg(count(lit(1)).as("freq"))
           .orderBy(col("freq").desc, col("term").asc)
           .limit(20),
-      Some(sql("""SELECT term, count(*) AS freq
+      Some(oneLine("""SELECT term, count(*) AS freq
                  | FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
                  | GROUP BY term ORDER BY freq DESC, term ASC LIMIT 20"""))),
 
@@ -1361,7 +1360,7 @@ object LlmOps {
             col("term"), col("score"))
           .orderBy("doc_id", "rank")
       },
-      Some(sql("""WITH tf AS (
+      Some(oneLine("""WITH tf AS (
                  |   SELECT doc_id, term, count(*) AS tf
                  |   FROM (SELECT doc_id, unnest(string_split(text,' ')) AS term FROM documents)
                  |   GROUP BY 1, 2),
@@ -1387,7 +1386,7 @@ object LlmOps {
             round(avg(col("n_chars")), 2).as("avg_chars"),
             round(avg(size(split(col("text"), " "))), 2).as("avg_tokens"))
           .orderBy("lang", "source"),
-      Some(sql("""SELECT lang, source, count(*) AS n_docs,
+      Some(oneLine("""SELECT lang, source, count(*) AS n_docs,
                  | round(avg(n_chars), 2) AS avg_chars,
                  | round(avg(len(string_split(text, ' '))), 2) AS avg_tokens
                  | FROM documents GROUP BY lang, source ORDER BY lang, source"""))),
@@ -1405,7 +1404,7 @@ object LlmOps {
           .select(col("doc_id"), col("label"), col("n_chars"), col("lang"), col("vnorm"))
           .orderBy("doc_id")
       },
-      Some(sql("""WITH nn AS (
+      Some(oneLine("""WITH nn AS (
                  |   SELECT vec_id, label, round(sqrt(sum(p)), 3) AS vnorm
                  |   FROM (SELECT vec_id, label,
                  |           unnest(embedding)::DOUBLE * unnest(embedding)::DOUBLE AS p
@@ -1437,7 +1436,7 @@ object LlmOps {
           .select(col("doc_id"), col("source"), w.as("weight"), coin.as("coin"))
           .orderBy("doc_id")
       },
-      Some(sql("""SELECT doc_id, source, least(n_chars, 2000) AS weight,
+      Some(oneLine("""SELECT doc_id, source, least(n_chars, 2000) AS weight,
                  |   ('0x' || substr(md5('wsamp:' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT % 20000 AS coin
                  | FROM documents
                  | WHERE ('0x' || substr(md5('wsamp:' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT % 20000
@@ -1481,7 +1480,7 @@ object LlmOps {
               lit(0.85) * coalesce(col("csum"), lit(0L)) / lit(1e9), 6).as("pr"))
           .orderBy("doc_id")
       },
-      Some(sql(s"""WITH $nearDupPairsCte,
+      Some(oneLine(s"""WITH $nearDupPairsCte,
                  | edges AS (SELECT doc_id1 AS src, doc_id2 AS dst FROM nd
                  |           UNION ALL SELECT doc_id2, doc_id1 FROM nd),
                  | deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
@@ -1546,7 +1545,7 @@ object LlmOps {
               (col("deg") * (col("deg") - lit(1L))), 4).as("clust_coef"))
           .orderBy("doc_id")
       },
-      Some(sql(s"""WITH $nearDupPairsCte,
+      Some(oneLine(s"""WITH $nearDupPairsCte,
                  | e AS (SELECT doc_id1 AS a, doc_id2 AS b FROM nd),
                  | tri AS (
                  |   SELECT e1.a AS x, e1.b AS y, e2.b AS z
@@ -1579,7 +1578,7 @@ object LlmOps {
           .select(col("cluster_size"), col("n_clusters"),
             ((col("cluster_size") - 1) * col("n_clusters")).as("dup_docs"))
           .orderBy("cluster_size"),
-      Some(sql(s"""WITH RECURSIVE $nearDupPairsCte,
+      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
                   | edges AS (
                   |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
                   |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
@@ -1616,7 +1615,7 @@ object LlmOps {
             expr("bit_xor(fp48)").as("xor_fp"),
             sum(col("n_chars")).as("sum_chars"))
           .orderBy("shard"),
-      Some(sql("""SELECT
+      Some(oneLine("""SELECT
                  |   ('0x'||substr(md5('shard:'||CAST(doc_id AS VARCHAR)),1,8))::BIGINT % 16 AS shard,
                  |   count(*) AS n_docs,
                  |   CAST(bit_xor(('0x'||substr(md5(text),1,12))::BIGINT) AS BIGINT) AS xor_fp,
@@ -1637,7 +1636,7 @@ object LlmOps {
     // the corpus scan narrow (doc_id, lang only).
     Q("i82_label_propagation",
       (s, dir) => labelPropagateStep(t(s, dir, "documents")),
-      Some(sql(s"""WITH $nearDupPairsCte,
+      Some(oneLine(s"""WITH $nearDupPairsCte,
                  | edges AS (SELECT doc_id1, doc_id2 FROM nd
                  |           UNION ALL SELECT doc_id2, doc_id1 FROM nd),
                  | votes AS (
@@ -1672,7 +1671,7 @@ object LlmOps {
     // contraction discipline — never a driver-side adjacency).
     Q("i83_kcore_peel",
       (s, dir) => kcorePeel(t(s, dir, "documents")),
-      Some(sql(s"""WITH $nearDupPairsCte,
+      Some(oneLine(s"""WITH $nearDupPairsCte,
                  | edges AS (SELECT doc_id1, doc_id2 FROM nd
                  |           UNION ALL SELECT doc_id2, doc_id1 FROM nd),
                  | deg0 AS (SELECT doc_id1 AS doc_id, count(*) AS deg0
@@ -1733,7 +1732,7 @@ object LlmOps {
               - col("sum_qm") / col("n_docs")) / 1000.0, 4).as("shift"))
           .orderBy("source")
       },
-      Some(sql(s"""WITH RECURSIVE $nearDupPairsCte,
+      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
                  | edges AS (
                  |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
                  |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Harness, Q, Tables}
+import graft.Q.oneLine
 import graft.functions.{TextFunctions, VectorFunctions}
 
 /** Training-data-pipeline operators beyond the core group D (SURVEY §2.D):
@@ -34,8 +35,6 @@ import graft.functions.{TextFunctions, VectorFunctions}
 object PipelineOps {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables.load(s, dir, n)
-  private def sql(s: String): String = s.stripMargin.replace("\n", " ").trim
-
   /** The i21 mixture-sample projection+filter over a (doc_id, source)
     * frame: salted content-addressed bucket under the per-source rate
     * (rate(srcK) = 100 − 4K). One definition shared by the batch registry
@@ -1715,7 +1714,7 @@ object PipelineOps {
     Q("i7_minhash_sig",
       (s, dir) => minhashSig(t(s, dir, "documents"))
         .drop("source").orderBy("doc_id"),
-      Some(sql(s"""WITH $duckSigCte
+      Some(oneLine(s"""WITH $duckSigCte
                   | SELECT doc_id, mh0, mh1, mh2, mh3, mh4, mh5, mh6, mh7
                   | FROM sig ORDER BY doc_id"""))),
 
@@ -1744,7 +1743,7 @@ object PipelineOps {
             round(col("nm") / 8.0, 3).as("est_jaccard"))
           .orderBy("doc_id1", "doc_id2")
       },
-      Some(sql(s"""WITH $duckSigCte,
+      Some(oneLine(s"""WITH $duckSigCte,
                   | bands AS (
                   |   SELECT *, 0 AS b, mh0 AS x, mh1 AS y FROM sig UNION ALL
                   |   SELECT *, 1, mh2, mh3 FROM sig UNION ALL
@@ -1785,7 +1784,7 @@ object PipelineOps {
           .filter(col("hamming") <= 2)
           .orderBy("doc_id1", "doc_id2")
       },
-      Some(sql(s"""WITH $duckSimhashCte,
+      Some(oneLine(s"""WITH $duckSimhashCte,
                   | nib AS (
                   |   SELECT doc_id, source, sh, 0 AS i, sh & 15 AS v FROM sh UNION ALL
                   |   SELECT doc_id, source, sh, 1, (sh>>4)&15 FROM sh UNION ALL
@@ -1814,7 +1813,7 @@ object PipelineOps {
             val rest = langs.drop(i + 1).map(o => s"s_$o").mkString(", ")
             s"CASE WHEN s_$l >= greatest($rest) THEN '$l' ELSE $els END"
         }
-        sql(s"""SELECT doc_id, $pred AS pred_lang, ${langs.map(l => s"s_$l").mkString(", ")}
+        oneLine(s"""SELECT doc_id, $pred AS pred_lang, ${langs.map(l => s"s_$l").mkString(", ")}
                | FROM (SELECT doc_id, $scores FROM documents)
                | ORDER BY doc_id""")
       }),
@@ -1829,7 +1828,7 @@ object PipelineOps {
             round(lit(1.0) - col("n_uniq") / col("n_tok"), 3).as("dup_ratio"),
             qualityExpr.as("quality"))
           .orderBy("doc_id"),
-      Some(sql("""SELECT doc_id, n_tok,
+      Some(oneLine("""SELECT doc_id, n_tok,
                  | round(n_stop/n_tok, 3) AS stop_ratio,
                  | round(1.0 - n_uniq/n_tok, 3) AS dup_ratio,
                  | round(least(n_tok/100.0, 1.0)*0.4 + (n_uniq/n_tok)*0.3 + (1.0 - n_stop/n_tok)*0.3, 3) AS quality
@@ -1851,7 +1850,7 @@ object PipelineOps {
               .cast("long").as("re_tokens"),
             ceil(col("n_chars") / 4.0).cast("long").as("bpe_est"))
           .orderBy("doc_id"),
-      Some(sql("""SELECT doc_id,
+      Some(oneLine("""SELECT doc_id,
                  | len(string_split(text,' '))::BIGINT AS ws_tokens,
                  | len(regexp_extract_all(text, '\w+|[^\w\s]'))::BIGINT AS re_tokens,
                  | ceil(n_chars/4.0)::BIGINT AS bpe_est
@@ -1866,7 +1865,7 @@ object PipelineOps {
           .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
           .withColumn("n_same", count(lit(1)).over(Window.partitionBy(col("fp"))).cast("long"))
           .orderBy("doc_id"),
-      Some(sql("""WITH fp AS (
+      Some(oneLine("""WITH fp AS (
                  |   SELECT doc_id,
                  |     list_reduce(
                  |       list_prepend(0::BIGINT,
@@ -1897,7 +1896,7 @@ object PipelineOps {
             count(lit(1)).as("n_docs"))
           .orderBy("source")
       },
-      Some(sql("""SELECT source,
+      Some(oneLine("""SELECT source,
                  |   round(quantile_cont(n_tok, 0.25), 3) AS p25,
                  |   round(quantile_cont(n_tok, 0.5), 3) AS p50,
                  |   round(quantile_cont(n_tok, 0.75), 3) AS p75,
@@ -1947,7 +1946,7 @@ object PipelineOps {
             round(col("m3") / (col("n_tok") - 2), 4).as("top_trigram_frac"))
           .orderBy("doc_id")
       },
-      Some(sql("""WITH toks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
+      Some(oneLine("""WITH toks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
                  | t1 AS (SELECT doc_id, max(c) AS m1 FROM (
                  |   SELECT doc_id, g, count(*) AS c FROM
                  |     (SELECT doc_id, unnest(tk) AS g FROM toks) GROUP BY 1,2) GROUP BY 1),
@@ -1987,7 +1986,7 @@ object PipelineOps {
     // the scan.
     Q("j11_normalize",
       (s, dir) => normalizeText(t(s, dir, "documents")).orderBy("doc_id"),
-      Some(sql("""WITH noised AS (
+      Some(oneLine("""WITH noised AS (
                  |   SELECT doc_id,
                  |     upper(substr(text, 1, (doc_id % 4)::INT)) ||
                  |     substr(text, (doc_id % 4)::INT + 1) ||
@@ -2006,7 +2005,7 @@ object PipelineOps {
 
     Q("j7_pii_redact",
       (s, dir) => piiRedact(t(s, dir, "documents")).orderBy("doc_id"),
-      Some(sql("""WITH pii AS (
+      Some(oneLine("""WITH pii AS (
                  |   SELECT doc_id,
                  |     text || ' contact user' || doc_id || '@mail.example.com or call +1-555-' ||
                  |     lpad(doc_id::VARCHAR, 4, '0') || ' from 10.0.' || (doc_id % 256) || '.' || (doc_id % 100) AS p
@@ -2051,7 +2050,7 @@ object PipelineOps {
             round(col("n_new") / col("n_sh"), 4).as("novelty"))
           .orderBy("doc_id")
       },
-      Some(sql("""WITH sh AS (
+      Some(oneLine("""WITH sh AS (
                  |   SELECT DISTINCT doc_id,
                  |     unnest(list_transform(range(1, len(tk)-1),
                  |       i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS g
@@ -2080,7 +2079,7 @@ object PipelineOps {
     // (the j5 sketch-twin rule).
     Q("j9_corpus_profile",
       (s, dir) => corpusProfile(t(s, dir, "documents")).orderBy("source"),
-      Some(sql("""WITH tok AS (
+      Some(oneLine("""WITH tok AS (
                  |   SELECT source, unnest(string_split(text, ' ')) AS token
                  |   FROM documents),
                  | tf AS (SELECT source, token, count(*) AS n FROM tok GROUP BY 1, 2),
@@ -2165,7 +2164,7 @@ object PipelineOps {
             round(col("sq").cast("double") / col("n_bigrams") / 1e6, 4)
               .as("loo_score"))
       },
-      Some(sql("""WITH occ AS (
+      Some(oneLine("""WITH occ AS (
                  |   SELECT doc_id,
                  |     unnest(list_transform(range(1, len(toks)),
                  |       i -> toks[i] || ' ' || toks[i+1])) AS bg
@@ -2222,7 +2221,7 @@ object PipelineOps {
             round(col("sq").cast("double") / col("n_bigrams") / 1e6, 4).as("lm_score"))
           .orderBy("doc_id")
       },
-      Some(sql("""WITH occ AS (
+      Some(oneLine("""WITH occ AS (
                  |   SELECT doc_id,
                  |     unnest(list_transform(range(1, len(toks)),
                  |       i -> toks[i] || ' ' || toks[i+1])) AS bg
@@ -2259,7 +2258,7 @@ object PipelineOps {
             round(VectorFunctions.dot(col("embedding"), col("qemb")), 3).as("sim"))
           .orderBy(col("sim").desc, col("vec_id")).limit(10)
       },
-      Some(sql(s"""WITH q AS (SELECT embedding AS qemb FROM embeddings WHERE vec_id = 0),
+      Some(oneLine(s"""WITH q AS (SELECT embedding AS qemb FROM embeddings WHERE vec_id = 0),
                  | ${centroidAssignCte()},
                  | probe AS (
                  |   SELECT cid FROM (
@@ -2289,7 +2288,7 @@ object PipelineOps {
       (s, dir) => annBatchTop3(s, dir)
         .select(col("qid"), col("rank"), col("vec_id"), col("sim"))
         .orderBy("qid", "rank"),
-      Some(sql(s"""WITH $annBatchCte
+      Some(oneLine(s"""WITH $annBatchCte
                  | SELECT qid, rank, vec_id, sim FROM ivf
                  | ORDER BY qid, rank"""))),
 
@@ -2311,7 +2310,7 @@ object PipelineOps {
           queryBatch(emb, ivfParams.nQueries), ivfParams.nprobe)
           .orderBy("qid")
       },
-      Some(sql(s"""WITH $annBatchCte,
+      Some(oneLine(s"""WITH $annBatchCte,
                  | exsims AS (
                  |   SELECT qid, vec_id, round(sum(p), 3) AS sim
                  |   FROM (SELECT q.qid, e.vec_id,
@@ -2387,7 +2386,7 @@ object PipelineOps {
             round(coalesce(col("n_hit"), lit(0L)) / 3.0, 4).as("recall"))
           .orderBy("qid", "dim")
       },
-      Some(sql(s"""WITH q AS (SELECT vec_id AS qid, embedding AS qemb
+      Some(oneLine(s"""WITH q AS (SELECT vec_id AS qid, embedding AS qemb
                  |     FROM embeddings WHERE vec_id < ${ivfParams.nQueries}),
                  | dims AS (SELECT unnest([8, 16, 32]) AS dim),
                  | sim64 AS (
@@ -2462,7 +2461,7 @@ object PipelineOps {
               / (col("z.depth") * ivfParams.nQueries)).cast("long").as("overlap_ppm"))
           .orderBy("depth")
       },
-      Some(sql(s"""WITH ${annBatchCteK(10)},
+      Some(oneLine(s"""WITH ${annBatchCteK(10)},
                  | exsims AS (
                  |   SELECT qid, vec_id, round(sum(p), 3) AS sim
                  |   FROM (SELECT q.qid, e.vec_id,
@@ -2508,7 +2507,7 @@ object PipelineOps {
         .select(col("bucket"), col("n_docs"),
           expr("qsum * 1000 div n_docs").as("mean_micro"))
         .orderBy("bucket"),
-      Some(sql("""WITH st AS (SELECT
+      Some(oneLine("""WITH st AS (SELECT
                  |     ('0x' || substr(md5('stab:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 16 AS bucket,
                  |     len(string_split(text,' '))::BIGINT AS n_tok,
                  |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
@@ -2574,7 +2573,7 @@ object PipelineOps {
           .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
           .orderBy("stage")
       },
-      Some(sql("""WITH base AS (SELECT doc_id, lang, text, string_split(text,' ') AS toks FROM documents),
+      Some(oneLine("""WITH base AS (SELECT doc_id, lang, text, string_split(text,' ') AS toks FROM documents),
                  | st AS (SELECT doc_id, lang, text, toks, len(toks)::BIGINT AS n_tok,
                  |     len(list_distinct(toks))::BIGINT AS n_uniq,
                  |     len(list_filter(toks, t -> t IN ('a','the')))::BIGINT AS n_stop
@@ -2635,7 +2634,7 @@ object PipelineOps {
     // keep-set broadcast back (the i63 shape).
     Q("i95_quota_select",
       (s, dir) => quotaSelect(t(s, dir, "documents")),
-      Some(sql("""WITH st AS (SELECT source,
+      Some(oneLine("""WITH st AS (SELECT source,
                  |     len(string_split(text,' '))::BIGINT AS n_tok,
                  |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
                  |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
@@ -2689,7 +2688,7 @@ object PipelineOps {
             expr("(2 * cum - cnt) * 1000000 div (2 * n)").as("qrank_ppm"))
           .orderBy("source", "qm")
       },
-      Some(sql("""WITH st AS (SELECT source,
+      Some(oneLine("""WITH st AS (SELECT source,
                  |     len(string_split(text,' '))::BIGINT AS n_tok,
                  |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
                  |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
@@ -2732,7 +2731,7 @@ object PipelineOps {
             expr("pad_tokens * 1000000 div (cap * n_docs)"))
           .orderBy("cap")
       },
-      Some(sql("""WITH b AS (SELECT len(string_split(text, ' '))::BIGINT AS n_tok
+      Some(oneLine("""WITH b AS (SELECT len(string_split(text, ' '))::BIGINT AS n_tok
                  |   FROM documents),
                  | c AS (SELECT n_tok,
                  |     coalesce(list_min(list_filter([16, 32, 64, 128, 256, 512, 1024],
@@ -2791,7 +2790,7 @@ object PipelineOps {
             (col("z.violations") === 0).cast("long").as("pass"))
           .orderBy("cname")
       },
-      Some(sql("""WITH a AS (SELECT count(*)::BIGINT AS n,
+      Some(oneLine("""WITH a AS (SELECT count(*)::BIGINT AS n,
                  |     count(DISTINCT o_orderkey)::BIGINT AS uk,
                  |     sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)::BIGINT AS nulls,
                  |     sum(CASE WHEN o_totalprice < 0 OR o_totalprice > 1000000
@@ -2837,7 +2836,7 @@ object PipelineOps {
           expr("re_tokens * 1000000 div ws_tokens").as("fert_re_ppm"),
           expr("bpe_est * 1000000 div ws_tokens").as("fert_bpe_ppm"))
         .orderBy("lang"),
-      Some(sql("""WITH b AS (SELECT lang,
+      Some(oneLine("""WITH b AS (SELECT lang,
                  |     len(string_split(text, ' '))::BIGINT AS ws,
                  |     len(regexp_extract_all(text, '\w+|[^\w\s]'))::BIGINT AS re,
                  |     ceil(n_chars / 4.0)::BIGINT AS bpe
@@ -2875,7 +2874,7 @@ object PipelineOps {
         lshRecallSweep(LlmOps.pairStats(docs, 7),
           bandCandidates(minhashSig(docs)).withColumn("is_cand", lit(1L)))
       },
-      Some(sql("""WITH dt AS (SELECT DISTINCT doc_id, source,
+      Some(oneLine("""WITH dt AS (SELECT DISTINCT doc_id, source,
                  |     unnest(string_split(text, ' ')) AS token FROM documents),
                  | dtn AS (SELECT doc_id, source, token,
                  |     count(*) OVER (PARTITION BY doc_id) AS n_tok FROM dt),
@@ -2974,7 +2973,7 @@ object PipelineOps {
           .select(col("z.nprobe"), col("z.coverage_ppm"), col("z.probed_ppm"))
           .orderBy("nprobe")
       },
-      Some(sql(s"""WITH ${annBatchCteK(3)},
+      Some(oneLine(s"""WITH ${annBatchCteK(3)},
                  | qr AS (SELECT qid, cid,
                  |     row_number() OVER (PARTITION BY qid ORDER BY qd DESC, cid) AS prank
                  |   FROM qdot),
@@ -3041,7 +3040,7 @@ object PipelineOps {
             col("vec_id"), col("rrf"))
           .orderBy("qid", "frank")
       },
-      Some(sql(s"""WITH ${annBatchCteK(10)},
+      Some(oneLine(s"""WITH ${annBatchCteK(10)},
                  | exsims AS (
                  |   SELECT qid, vec_id, round(sum(p), 3) AS sim
                  |   FROM (SELECT q.qid, e.vec_id,
@@ -3088,7 +3087,7 @@ object PipelineOps {
           .agg(aggs.head, aggs.tail: _*)
           .orderBy("doc_id")
       },
-      Some(sql("""WITH sh AS (
+      Some(oneLine("""WITH sh AS (
                  |   SELECT doc_id, md5(unnest(list_transform(range(1, len(toks)-1),
                  |     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS h
                  |   FROM (SELECT doc_id, string_split(text,' ') AS toks FROM documents))
@@ -3161,7 +3160,7 @@ object PipelineOps {
           .select(col("doc_id1"), col("doc_id2"), round(jac, 3).as("jaccard"))
           .orderBy("doc_id1", "doc_id2")
       },
-      Some(sql("""WITH sh AS (
+      Some(oneLine("""WITH sh AS (
                  |   SELECT doc_id, source, unnest(list_distinct(list_transform(range(1, len(toks)-1),
                  |     i -> ('0x'||substr(md5(toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]),1,15))::BIGINT))) AS s
                  |   FROM (SELECT doc_id, source, string_split(text,' ') AS toks FROM documents)),
@@ -3228,7 +3227,7 @@ object PipelineOps {
     Q("i35_span_dedup",
       (s, dir) => duplicateSpans(t(s, dir, "documents"))
         .orderBy("doc_id", "span_start"),
-      Some(sql("""WITH tks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
+      Some(oneLine("""WITH tks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
                  | g AS (SELECT doc_id,
                  |     unnest(range(1, len(tk)-3)) - 1 AS pos,
                  |     unnest(list_transform(range(1, len(tk)-3),
@@ -3265,7 +3264,7 @@ object PipelineOps {
     // partitioned by doc_id.
     Q("i40_span_excise",
       (s, dir) => spanExcise(t(s, dir, "documents")).orderBy("doc_id"),
-      Some(sql("""WITH tks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
+      Some(oneLine("""WITH tks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
                  | g AS (SELECT doc_id,
                  |     unnest(range(1, len(tk)-3)) - 1 AS pos,
                  |     unnest(list_transform(range(1, len(tk)-3),
@@ -3309,7 +3308,7 @@ object PipelineOps {
     // delivery step can verify the excision without shipping text.
     Q("i89_intradoc_excise",
       (s, dir) => intradocExcise(t(s, dir, "documents")).orderBy("doc_id"),
-      Some(sql("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      Some(oneLine("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
                  | s AS (SELECT doc_id, list_transform(range(0, (len(toks) + 1) // 2),
                  |     i -> array_to_string(toks[i*2+1 : i*2+2], ' ')) AS segs FROM t),
                  | k AS (SELECT doc_id, segs,
@@ -3339,7 +3338,7 @@ object PipelineOps {
     Q("i41_span_dedup_incremental",
       (s, dir) => spanExciseIncremental(t(s, dir, "documents"), 400)
         .orderBy("doc_id"),
-      Some(sql("""WITH tks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
+      Some(oneLine("""WITH tks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
                  | g AS (SELECT doc_id,
                  |     unnest(range(1, len(tk)-3)) - 1 AS pos,
                  |     unnest(list_transform(range(1, len(tk)-3),
@@ -3406,7 +3405,7 @@ object PipelineOps {
             round(containment, 3).as("containment"))
           .orderBy("doc_id")
       },
-      Some(sql("""WITH sh AS (
+      Some(oneLine("""WITH sh AS (
                  |   SELECT DISTINCT doc_id,
                  |     unnest(list_transform(range(1, len(toks)-1),
                  |       i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s
@@ -3443,7 +3442,7 @@ object PipelineOps {
           .select(col("label"), col("i"), col("j"), col("sim"))
           .orderBy("label", "i", "j")
       },
-      Some(sql("""WITH prod AS (
+      Some(oneLine("""WITH prod AS (
                  |   SELECT a.label, a.vec_id AS i, b.vec_id AS j,
                  |     unnest(a.embedding)::DOUBLE * unnest(b.embedding)::DOUBLE AS p
                  |   FROM embeddings a JOIN embeddings b
@@ -3478,7 +3477,7 @@ object PipelineOps {
           .select(col("doc_id"), col("quality"),
             LlmOps.splitBand(LlmOps.splitBucket).as("split"))
           .orderBy("doc_id"),
-      Some(sql("""WITH q AS (
+      Some(oneLine("""WITH q AS (
                  |   SELECT doc_id, text,
                  |     round(least(n_tok/100.0, 1.0)*0.4 + (n_uniq/n_tok)*0.3 + (1.0 - n_stop/n_tok)*0.3, 3) AS quality
                  |   FROM (SELECT doc_id, text,
@@ -3513,7 +3512,7 @@ object PipelineOps {
             when(col("h") % 3 === 0, "png")
               .when(col("h") % 3 === 1, "jpeg").otherwise("webp").as("fmt"))
           .orderBy("doc_id"),
-      Some(sql("""SELECT doc_id,
+      Some(oneLine("""SELECT doc_id,
                  | octet_length(text::BLOB)::BIGINT AS n_bytes,
                  | (16 + h % 240)::BIGINT AS width,
                  | (16 + (h // 240) % 240)::BIGINT AS height,
@@ -3556,7 +3555,7 @@ object PipelineOps {
       // position 2i+1 — IS the 16-bin histogram bin. Docs sharing no bin
       // with doc 0 keep sim 0 via the LEFT join, matching Spark's dense
       // vectors.
-      Some(sql("""WITH hx AS (SELECT doc_id, hex(text::BLOB) AS h, octet_length(text::BLOB) AS n
+      Some(oneLine("""WITH hx AS (SELECT doc_id, hex(text::BLOB) AS h, octet_length(text::BLOB) AS n
                  |   FROM documents WHERE octet_length(text::BLOB) > 0),
                  | ch AS (SELECT doc_id,
                  |     unnest(list_transform(range(0, n), i -> substr(h, 2*i+1, 1))) AS nib
@@ -3610,7 +3609,7 @@ object PipelineOps {
             round(col("sq").cast("double") / col("n_members") / 1e6, 6).as("cmean"))
           .orderBy("cid", "pos")
       },
-      Some(sql(s"""WITH ${centroidAssignCte()},
+      Some(oneLine(s"""WITH ${centroidAssignCte()},
                  | px AS (
                  |   SELECT a.cid,
                  |     unnest(range(0, len(e.embedding))) AS pos,
@@ -3661,7 +3660,7 @@ object PipelineOps {
             round(col("sq").cast("double") / col("n_members")).cast("long").as("cmean_q"))
           .orderBy("cid", "pos")
       },
-      Some(sql(s"""WITH ${centroidAssignCte()},
+      Some(oneLine(s"""WITH ${centroidAssignCte()},
                  | q1 AS (
                  |   SELECT a.cid,
                  |     unnest(range(0, len(e.embedding))) AS pos,
@@ -3734,7 +3733,7 @@ object PipelineOps {
             round(max(col("amax")), 6).as("amax6"))
           .orderBy("vec_id")
       },
-      Some(sql("""WITH am AS (
+      Some(oneLine("""WITH am AS (
                  |   SELECT vec_id, embedding,
                  |     list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS amax
                  |   FROM embeddings),
@@ -3782,7 +3781,7 @@ object PipelineOps {
         val cent = Harness.materialize(pqTrainStep(sub, pqStubCodebook(sub, ivfParams.k)))
         pqQuantize(sub, cent, nBlocks = 4).orderBy("vec_id")
       },
-      Some(sql("""WITH blocks AS (SELECT unnest(range(0, 4)) AS b),
+      Some(oneLine("""WITH blocks AS (SELECT unnest(range(0, 4)) AS b),
                  | sub AS (SELECT e.vec_id, b.b,
                  |     list_slice(e.embedding, b.b * 16 + 1, b.b * 16 + 16) AS sv
                  |   FROM embeddings e, blocks b),
@@ -3883,7 +3882,7 @@ object PipelineOps {
           .agg(sum(col("d2q")).as("adc_q"))
           .orderBy(col("adc_q"), col("vec_id")).limit(20)
       },
-      Some(sql("""WITH blocks AS (SELECT unnest(range(0, 4)) AS b),
+      Some(oneLine("""WITH blocks AS (SELECT unnest(range(0, 4)) AS b),
                  | sub AS (SELECT e.vec_id, b.b,
                  |     list_slice(e.embedding, b.b * 16 + 1, b.b * 16 + 16) AS sv
                  |   FROM embeddings e, blocks b),
@@ -3972,7 +3971,7 @@ object PipelineOps {
           .select(col("vec_id"), col("b"), col("cid").as("pcid"))
         ivfPqSearch(emb, coarse, cent, assigned, codes)
       },
-      Some(sql("""WITH cent AS (SELECT vec_id AS cid, embedding AS cemb FROM embeddings WHERE vec_id < 8),
+      Some(oneLine("""WITH cent AS (SELECT vec_id AS cid, embedding AS cemb FROM embeddings WHERE vec_id < 8),
                  | adot AS (
                  |   SELECT vec_id, cid, round(sum(p), 6) AS cd
                  |   FROM (SELECT e.vec_id, c.cid,
@@ -4077,7 +4076,7 @@ object PipelineOps {
     Q("i43_ann_index_ingest",
       (s, dir) => annIndexIngest(t(s, dir, "embeddings"), 400)
         .orderBy("vec_id"),
-      Some(sql("""WITH corpus AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 400),
+      Some(oneLine("""WITH corpus AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 400),
                  | batchv AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 400),
                  | cent AS (SELECT vec_id AS cid, embedding AS cemb FROM corpus WHERE vec_id < 8),
                  | adot AS (
@@ -4202,7 +4201,7 @@ object PipelineOps {
       (s, dir) => annPqBatch(t(s, dir, "embeddings"),
           ivfParams.nQueries, topK = 10)
         .orderBy("qid", "rank"),
-      Some(sql("""WITH blocks AS (SELECT unnest(range(0, 4)) AS b),
+      Some(oneLine("""WITH blocks AS (SELECT unnest(range(0, 4)) AS b),
                  | sub AS (SELECT e.vec_id, b.b,
                  |     list_slice(e.embedding, b.b * 16 + 1, b.b * 16 + 16) AS sv
                  |   FROM embeddings e, blocks b),
@@ -4281,7 +4280,7 @@ object PipelineOps {
     Q("i46_ann_ingest_screen",
       (s, dir) => annIngestScreen(t(s, dir, "embeddings"), 400, 0.4)
         .orderBy("vec_id"),
-      Some(sql(s"""WITH ${centroidAssignCte()},
+      Some(oneLine(s"""WITH ${centroidAssignCte()},
                  | corpus AS (SELECT a.cid, a.vec_id AS cvid, e.embedding AS cemb
                  |   FROM assigned a JOIN embeddings e ON a.vec_id = e.vec_id
                  |   WHERE a.vec_id < 400),
@@ -4352,7 +4351,7 @@ object PipelineOps {
               .as("jaccard"))
           .orderBy("source1", "source2")
       },
-      Some(sql("""WITH sh AS (
+      Some(oneLine("""WITH sh AS (
                  |   SELECT DISTINCT source,
                  |     unnest(list_transform(range(1, len(toks)-1),
                  |       i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s
@@ -4391,7 +4390,7 @@ object PipelineOps {
           .select(col("vec_id"), col("cid"), col("best_sim"))
           .orderBy("vec_id")
       },
-      Some(sql(s"""WITH ${centroidAssignCte()},
+      Some(oneLine(s"""WITH ${centroidAssignCte()},
                  | best AS (SELECT vec_id, max(cd) AS best_sim
                  |   FROM adot GROUP BY vec_id)
                  | SELECT a.vec_id, a.cid, b.best_sim
@@ -4439,7 +4438,7 @@ object PipelineOps {
             round(VectorFunctions.dot(col("ea"), col("eb")), 3).as("sim"))
           .orderBy(col("sim").desc, col("i"), col("j")).limit(20)
       },
-      Some(sql(s"""WITH ${centroidAssignCte(scaledKSql)},
+      Some(oneLine(s"""WITH ${centroidAssignCte(scaledKSql)},
                  | pairs AS (
                  |   SELECT a.cid, a.vec_id AS i, b.vec_id AS j,
                  |     round((SELECT sum(x * y) FROM (SELECT
@@ -4483,7 +4482,7 @@ object PipelineOps {
         // dispatcher-mirroring numpy oracle (check.py --cc-numpy).
         semDedup(emb, stubCodebook(emb, k), 0.4, assignK = k).orderBy("vec_id")
       },
-      Some(sql(s"""WITH RECURSIVE ${centroidAssignCte(scaledKSql)},
+      Some(oneLine(s"""WITH RECURSIVE ${centroidAssignCte(scaledKSql)},
                   | pairs AS (
                   |   SELECT a.vec_id AS i, b.vec_id AS j,
                   |     round((SELECT sum(x * y) FROM (SELECT
@@ -4522,7 +4521,7 @@ object PipelineOps {
     // split, is a corpus-level contract reproducible OUTSIDE the engine.
     Q("i21_sample_stratified",
       (s, dir) => mixtureSample(t(s, dir, "documents")).orderBy("doc_id"),
-      Some(sql("""WITH b AS (SELECT doc_id, source,
+      Some(oneLine("""WITH b AS (SELECT doc_id, source,
                  |     ('0x' || substr(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS bucket,
                  |     100 - 4 * CAST(substr(source, 4) AS INT) AS rate
                  |   FROM documents)
@@ -4555,7 +4554,7 @@ object PipelineOps {
             col("doc_id"), col("pri"))
           .orderBy("source", "rn")
       },
-      Some(sql("""WITH b AS (SELECT doc_id, source,
+      Some(oneLine("""WITH b AS (SELECT doc_id, source,
                  |     ('0x' || substr(md5('ksample:' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT AS pri
                  |   FROM documents)
                  | SELECT source, CAST(rn AS BIGINT) AS rn, doc_id, pri FROM (
@@ -4580,7 +4579,7 @@ object PipelineOps {
     Q("i34_upsample",
       (s, dir) => upsampleCopies(t(s, dir, "documents"))
         .orderBy("doc_id", "copy_idx"),
-      Some(sql("""WITH r AS (
+      Some(oneLine("""WITH r AS (
                  |   SELECT doc_id, source,
                  |     100 + 13 * CAST(substr(source, 4) AS INT) AS rate_pct,
                  |     ('0x' || substr(md5('upsample:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 AS bucket
@@ -4619,7 +4618,7 @@ object PipelineOps {
             max(col("doc_id")).as("last_doc"))
           .orderBy("shard_id")
       },
-      Some(sql("""WITH tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
+      Some(oneLine("""WITH tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
                  |   FROM documents),
                  | c AS (SELECT doc_id, tok,
                  |     COALESCE(SUM(tok) OVER (ORDER BY doc_id
@@ -4656,7 +4655,7 @@ object PipelineOps {
         seqPlacement(exclusiveRunningTokens(docs, 32), L)
           .orderBy("doc_id")
       },
-      Some(sql("""WITH tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
+      Some(oneLine("""WITH tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
                  |   FROM documents),
                  | c AS (SELECT doc_id, tok,
                  |     COALESCE(SUM(tok) OVER (ORDER BY doc_id
@@ -4692,7 +4691,7 @@ object PipelineOps {
           docs.filter(col("doc_id") >= 400).select("doc_id", "text"), base)
           .orderBy("doc_id")
       },
-      Some(sql("""WITH tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
+      Some(oneLine("""WITH tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
                  |   FROM documents),
                  | base AS (SELECT COALESCE(SUM(tok), 0)::BIGINT AS bt FROM tk
                  |   WHERE doc_id < 400),
@@ -4736,7 +4735,7 @@ object PipelineOps {
               greatest(col("cum_before"), col("seq_id") * L)).as("fill"))
           .orderBy("seq_id")
       },
-      Some(sql("""WITH tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
+      Some(oneLine("""WITH tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
                  |   FROM documents),
                  | c AS (SELECT doc_id, tok,
                  |     COALESCE(SUM(tok) OVER (ORDER BY doc_id
@@ -4777,7 +4776,7 @@ object PipelineOps {
           .select(col("doc_id"), col("shard_id"), col("pos"))
           .orderBy("doc_id")
       },
-      Some(sql("""WITH h AS (SELECT doc_id,
+      Some(oneLine("""WITH h AS (SELECT doc_id,
                  |     ('0x' || substr(md5('shuffle42:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS h
                  |   FROM documents)
                  | SELECT doc_id, h % 16 AS shard_id,
@@ -4821,7 +4820,7 @@ object PipelineOps {
           .select(col("doc_id"), col("quality"), col("phase"), col("pos_in_phase"))
           .orderBy("doc_id")
       },
-      Some(sql("""WITH st AS (SELECT doc_id,
+      Some(oneLine("""WITH st AS (SELECT doc_id,
                  |     len(string_split(text,' '))::BIGINT AS n_tok,
                  |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
                  |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
@@ -4876,7 +4875,7 @@ object PipelineOps {
           .withColumn("oov_permille", expr("(n_oov * 1000) div n_tok"))
           .orderBy("doc_id")
       },
-      Some(sql("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tk
+      Some(oneLine("""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tk
                  |   FROM documents),
                  | vocab AS (SELECT tk FROM tok GROUP BY tk
                  |   ORDER BY count(*) DESC, tk ASC LIMIT 16)
@@ -4920,7 +4919,7 @@ object PipelineOps {
             md5(array_join(col("ctoks"), " ")).as("chunk_fp"))
           .orderBy("doc_id", "chunk_id")
       },
-      Some(sql("""WITH d AS (SELECT doc_id, string_split(text,' ') AS toks,
+      Some(oneLine("""WITH d AS (SELECT doc_id, string_split(text,' ') AS toks,
                  |     len(string_split(text,' '))::BIGINT AS nt FROM documents),
                  | c AS (SELECT doc_id, toks, nt,
                  |     unnest(range(0, CASE WHEN nt <= 32 THEN 1
@@ -4959,7 +4958,7 @@ object PipelineOps {
           .groupBy(col("pair")).agg(sum(col("n")).as("cnt"))
           .orderBy(col("cnt").desc, col("pair").asc).limit(20)
       },
-      Some(sql("""WITH w AS (SELECT tk AS w, count(*)::BIGINT AS n
+      Some(oneLine("""WITH w AS (SELECT tk AS w, count(*)::BIGINT AS n
                  |   FROM (SELECT unnest(string_split(text,' ')) AS tk FROM documents)
                  |   GROUP BY tk),
                  | p AS (SELECT n, unnest(list_transform(range(1, len(w)),
@@ -5002,7 +5001,7 @@ object PipelineOps {
             round(col("n_shared") * lit(1.0) / col("n_fp"), 3).as("containment"))
           .orderBy("doc_id")
       },
-      Some(sql("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+      Some(oneLine("""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
                  | g AS (SELECT doc_id,
                  |     unnest(range(0, greatest(len(toks)-2, 0))) AS pos,
                  |     unnest(list_transform(range(1, greatest(len(toks)-1, 1)), i ->
@@ -5046,7 +5045,7 @@ object PipelineOps {
           .select(col("doc_id"), col("source"), col("lang"))
           .orderBy("doc_id")
       },
-      Some(sql("""WITH sh AS (
+      Some(oneLine("""WITH sh AS (
                  |   SELECT DISTINCT doc_id,
                  |     unnest(list_transform(range(1, len(toks)-1),
                  |       i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s
@@ -5091,7 +5090,7 @@ object PipelineOps {
             round(col("tot_tok") / (col("k") * col("n_tok")), 6).as("weight"))
           .orderBy("source")
       },
-      Some(sql("""WITH per AS (SELECT source, count(*)::BIGINT AS n_docs,
+      Some(oneLine("""WITH per AS (SELECT source, count(*)::BIGINT AS n_docs,
                  |     sum(len(string_split(text,' ')))::BIGINT AS n_tok
                  |   FROM documents GROUP BY source),
                  | tot AS (SELECT sum(n_tok)::BIGINT AS tot_tok,
@@ -5133,7 +5132,7 @@ object PipelineOps {
             (col("merged") * col("n")).as("total_merges"))
           .orderBy("w")
       },
-      Some(sql("""WITH w AS (SELECT w, count(*)::BIGINT AS n
+      Some(oneLine("""WITH w AS (SELECT w, count(*)::BIGINT AS n
                  |   FROM (SELECT unnest(string_split(text,' ')) AS w FROM documents)
                  |   GROUP BY w),
                  | p AS (SELECT n, unnest(list_transform(range(1, len(w)),
@@ -5190,7 +5189,7 @@ object PipelineOps {
         corpus.crossJoin(broadcast(fit))
           .select(col("n_types"), col("n_tokens"), col("zipf_slope"))
       },
-      Some(sql("""WITH w AS (SELECT w, count(*)::BIGINT AS n
+      Some(oneLine("""WITH w AS (SELECT w, count(*)::BIGINT AS n
                  |   FROM (SELECT unnest(string_split(text,' ')) AS w FROM documents)
                  |   GROUP BY w),
                  | corpus AS (SELECT count(*)::BIGINT AS n_types,
@@ -5252,7 +5251,7 @@ object PipelineOps {
               (col("m8") * col("sxx") - col("sx") * col("sx")), 4)
               .as("heaps_beta"))
       },
-      Some(sql("""WITH d AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
+      Some(oneLine("""WITH d AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
                  | cp AS (SELECT i, (m * i) // 8 AS c
                  |   FROM (SELECT max(doc_id) AS m FROM documents), range(1,9) t(i)),
                  | g AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)-1),
@@ -5300,7 +5299,7 @@ object PipelineOps {
     // and the scoring spine.
     Q("i60_dsir_importance",
       (s, dir) => dsirImportance(t(s, dir, "documents"), topK = 25),
-      Some(sql("""WITH occ AS (
+      Some(oneLine("""WITH occ AS (
                  |   SELECT doc_id, lang,
                  |     unnest(list_transform(range(1, len(toks)),
                  |       i -> toks[i] || ' ' || toks[i+1])) AS bg
@@ -5342,7 +5341,7 @@ object PipelineOps {
     // d-group shuffle.
     Q("i61_pca_power_step",
       (s, dir) => pcaPowerStep(t(s, dir, "embeddings")),
-      Some(sql("""WITH x AS (SELECT
+      Some(oneLine("""WITH x AS (SELECT
                  |     round(1e6 * embedding[1])::BIGINT AS q,
                  |     unnest(range(0, len(embedding))) AS pos,
                  |     unnest(list_transform(embedding,
@@ -5391,7 +5390,7 @@ object PipelineOps {
             round(col("grad") / (col("n") * lit(100000.0))).cast("long"))
           .orderBy("pos")
       },
-      Some(sql("""WITH x AS (SELECT label::BIGINT AS y,
+      Some(oneLine("""WITH x AS (SELECT label::BIGINT AS y,
                  |     list_transform(embedding, e -> round(1e6 * e)::BIGINT) AS xq
                  |   FROM embeddings),
                  | s AS (SELECT y, xq,
@@ -5438,7 +5437,7 @@ object PipelineOps {
           .select(col("doc_id"), col("quality"), col("n_tok"))
           .orderBy("doc_id")
       },
-      Some(sql("""WITH st AS (SELECT doc_id,
+      Some(oneLine("""WITH st AS (SELECT doc_id,
                  |     len(string_split(text,' '))::BIGINT AS n_tok,
                  |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
                  |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
@@ -5477,7 +5476,7 @@ object PipelineOps {
     // which preserves the integer-exactness argument at any scale.
     Q("j15_source_divergence",
       (s, dir) => sourceTvd(t(s, dir, "documents")),
-      Some(sql("""WITH occ AS (SELECT source, unnest(string_split(text, ' ')) AS w
+      Some(oneLine("""WITH occ AS (SELECT source, unnest(string_split(text, ' ')) AS w
                  |   FROM documents),
                  | cnt AS (SELECT source, w, count(*)::BIGINT AS c
                  |   FROM occ GROUP BY source, w),
@@ -5529,7 +5528,7 @@ object PipelineOps {
             round(VectorFunctions.dot(col("embedding"), col("qemb")), 3).as("sim"))
           .orderBy(col("sim").desc, col("vec_id")).limit(10)
       },
-      Some(sql(s"""WITH q AS (SELECT embedding AS qemb FROM embeddings WHERE vec_id = 0),
+      Some(oneLine(s"""WITH q AS (SELECT embedding AS qemb FROM embeddings WHERE vec_id = 0),
                  | ${centroidAssignCte()},
                  | probe AS (
                  |   SELECT cid FROM (
@@ -5559,7 +5558,7 @@ object PipelineOps {
     // map-side combined, nothing else.
     Q("j16_token_gini",
       (s, dir) => tokenGini(t(s, dir, "documents")),
-      Some(sql("""WITH cnt AS (SELECT source, w, count(*)::BIGINT AS c
+      Some(oneLine("""WITH cnt AS (SELECT source, w, count(*)::BIGINT AS c
                  |   FROM (SELECT source, unnest(string_split(text, ' ')) AS w
                  |         FROM documents)
                  |   GROUP BY source, w)
@@ -5583,7 +5582,7 @@ object PipelineOps {
     // is the literal shard count.
     Q("i64_rendezvous_shard",
       (s, dir) => rendezvousShards(t(s, dir, "documents")).orderBy("doc_id"),
-      Some(sql("""WITH w AS (SELECT doc_id, s,
+      Some(oneLine("""WITH w AS (SELECT doc_id, s,
                  |     ('0x' || substr(md5('shard:' || CAST(s AS VARCHAR) || ':'
                  |       || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS w
                  |   FROM documents, range(0, 5) t(s)),
@@ -5616,7 +5615,7 @@ object PipelineOps {
         val (rat, cfac) = dsirState(docs.filter(col("doc_id") < 400))
         dsirScoreAgainst(docs.filter(col("doc_id") >= 400), rat, cfac)
       },
-      Some(sql("""WITH corp AS (
+      Some(oneLine("""WITH corp AS (
                  |   SELECT doc_id, lang,
                  |     unnest(list_transform(range(1, len(toks)),
                  |       i -> toks[i] || ' ' || toks[i+1])) AS bg
@@ -5678,7 +5677,7 @@ object PipelineOps {
           .limit(5)
           .select(col("vec_id"), col("mind2"))
       },
-      Some(sql("""WITH x AS (SELECT vec_id,
+      Some(oneLine("""WITH x AS (SELECT vec_id,
                  |     list_transform(embedding, e -> round(1e6 * e)::BIGINT) AS xq
                  |   FROM embeddings),
                  | c AS (SELECT list(xq) AS cs FROM x WHERE vec_id < 4),
@@ -5726,7 +5725,7 @@ object PipelineOps {
             col("true_label"), col("votes"))
           .orderBy("qid")
       },
-      Some(sql("""WITH q AS (SELECT vec_id AS qid, embedding AS qemb, label AS true_label
+      Some(oneLine("""WITH q AS (SELECT vec_id AS qid, embedding AS qemb, label AS true_label
                  |   FROM embeddings WHERE vec_id < 20),
                  | sims AS (SELECT qid, vec_id, round(sum(p), 3) AS sim
                  |   FROM (SELECT q.qid, e.vec_id,
@@ -5781,7 +5780,7 @@ object PipelineOps {
             (col("est_cnt") - col("true_cnt")).as("overcount"))
           .orderBy(col("true_cnt").desc, col("w"))
       },
-      Some(sql("""WITH toks AS (SELECT unnest(string_split(text,' ')) AS w FROM documents),
+      Some(oneLine("""WITH toks AS (SELECT unnest(string_split(text,' ')) AS w FROM documents),
                  | sk AS (SELECT i, ('0x'||substr(md5(i||':'||w),1,8))::BIGINT % 64 AS b,
                  |     count(*)::BIGINT AS c
                  |   FROM toks, range(0,3) t(i) GROUP BY 1, 2),
@@ -5844,7 +5843,7 @@ object PipelineOps {
                 |WHERE CAST(n_shared AS DOUBLE) / n_sh >= 0.2
                 |ORDER BY sz.doc_id""".stripMargin)
       },
-      Some(sql("""WITH sh AS (
+      Some(oneLine("""WITH sh AS (
                  |   SELECT DISTINCT doc_id,
                  |     unnest(list_transform(range(1, len(toks)-1),
                  |       i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s
@@ -5876,7 +5875,7 @@ object PipelineOps {
         minhashEstimate(graft.operators.LlmOps.nearDupPairs(docs),
           minhashSig(docs))
       },
-      Some(sql(s"""WITH dtok AS (
+      Some(oneLine(s"""WITH dtok AS (
                  |   SELECT doc_id, source, token,
                  |     count(*) OVER (PARTITION BY doc_id) AS n_tok
                  |   FROM (SELECT DISTINCT doc_id, source,
@@ -5938,7 +5937,7 @@ object PipelineOps {
             min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
           .orderBy("status")
       },
-      Some(sql("""WITH old AS (SELECT doc_id, md5(text) AS fp
+      Some(oneLine("""WITH old AS (SELECT doc_id, md5(text) AS fp
                  |   FROM documents WHERE doc_id < 450),
                  | new AS (SELECT doc_id,
                  |     md5(CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END) AS fp
@@ -5966,7 +5965,7 @@ object PipelineOps {
     // narrowing keys, the j16 shape exactly.
     Q("j17_token_entropy",
       (s, dir) => tokenEntropy(t(s, dir, "documents")),
-      Some(sql("""WITH cnt AS (SELECT source, w, count(*)::BIGINT AS c
+      Some(oneLine("""WITH cnt AS (SELECT source, w, count(*)::BIGINT AS c
                  |   FROM (SELECT source, unnest(string_split(text,' ')) AS w FROM documents)
                  |   GROUP BY source, w),
                  | per AS (SELECT source, count(*)::BIGINT AS n_types, sum(c)::BIGINT AS n_tok,
@@ -5998,7 +5997,7 @@ object PipelineOps {
             .select(col("doc_id1"), col("doc_id2"))
             .withColumn("is_true", lit(1L)))
       },
-      Some(sql(s"""WITH $duckSigCte,
+      Some(oneLine(s"""WITH $duckSigCte,
                  | bands AS (
                  |   SELECT doc_id, source, 0 AS b, mh0 AS x, mh1 AS y FROM sig UNION ALL
                  |   SELECT doc_id, source, 1, mh2, mh3 FROM sig UNION ALL
@@ -6076,7 +6075,7 @@ object PipelineOps {
               .as("cos_drift"))
           .orderBy("label")
       },
-      Some(sql("""WITH px AS (
+      Some(oneLine("""WITH px AS (
                  |   SELECT label, vec_id % 2 AS par,
                  |     unnest(range(0, len(embedding))) AS pos,
                  |     unnest(list_transform(range(0, len(embedding)),
@@ -6122,7 +6121,7 @@ object PipelineOps {
             coalesce(col("fmt"), lit("ALL")).as("fmt"),
             col("n_assets"), col("total_bytes"), col("max_bytes"))
           .orderBy("source", "fmt"),
-      Some(sql("""SELECT coalesce(source, 'ALL') AS source,
+      Some(oneLine("""SELECT coalesce(source, 'ALL') AS source,
                  |   coalesce(fmt, 'ALL') AS fmt,
                  |   count(*) AS n_assets,
                  |   CAST(sum(n_bytes) AS BIGINT) AS total_bytes,
@@ -6162,7 +6161,7 @@ object PipelineOps {
           .select(col("qid"), col("rk"), col("vec_id"), col("neg_label"), col("sim"))
           .orderBy("qid", "rk")
       },
-      Some(sql("""WITH q AS (SELECT vec_id AS qid, embedding AS qemb, label AS qlabel
+      Some(oneLine("""WITH q AS (SELECT vec_id AS qid, embedding AS qemb, label AS qlabel
                  |   FROM embeddings WHERE vec_id < 20),
                  | sims AS (SELECT qid, vec_id, min(neg_label) AS neg_label,
                  |     round(sum(p), 3) AS sim
@@ -6205,7 +6204,7 @@ object PipelineOps {
             round(col("c") / col("n_members"), 4).as("purity"))
           .orderBy("cid")
       },
-      Some(sql(s"""WITH ${centroidAssignCte()},
+      Some(oneLine(s"""WITH ${centroidAssignCte()},
                  | lab AS (SELECT a.cid, e.label, count(*)::BIGINT AS c
                  |   FROM assigned a JOIN embeddings e ON a.vec_id = e.vec_id
                  |   GROUP BY 1, 2),
@@ -6257,7 +6256,7 @@ object PipelineOps {
             coalesce(col("n_kept"), lit(0L)).as("n_kept"))
           .orderBy("source")
       },
-      Some(sql("""WITH per AS (SELECT source, count(*)::BIGINT AS n_docs,
+      Some(oneLine("""WITH per AS (SELECT source, count(*)::BIGINT AS n_docs,
                  |     sum(len(string_split(text,' ')))::BIGINT AS n_tok
                  |   FROM documents GROUP BY source),
                  | tot AS (SELECT CAST(sum(n_tok) AS BIGINT) AS tot_tok,
@@ -6296,7 +6295,7 @@ object PipelineOps {
             length(col("frame")).cast("long").as("frame_len"))
           .orderBy("doc_id", "frame_idx")
       },
-      Some(sql("""WITH b AS (SELECT doc_id, octet_length(text::BLOB) AS len FROM documents),
+      Some(oneLine("""WITH b AS (SELECT doc_id, octet_length(text::BLOB) AS len FROM documents),
                  | p AS (SELECT doc_id, len, least(4, greatest(1, len // 64)) AS nf FROM b),
                  | st AS (SELECT doc_id, len, nf, greatest(64, len // nf) AS stride FROM p),
                  | f AS (SELECT doc_id, unnest(range(0, nf)) AS frame_idx, len, stride FROM st)
@@ -6344,7 +6343,7 @@ object PipelineOps {
             max(col("feat")).as("feat_max"))
           .orderBy("doc_id", "shot_idx")
       },
-      Some(sql("""WITH b AS (SELECT doc_id, text, octet_length(text::BLOB) AS len FROM documents),
+      Some(oneLine("""WITH b AS (SELECT doc_id, text, octet_length(text::BLOB) AS len FROM documents),
                  | p AS (SELECT doc_id, text, len, least(4, greatest(1, len // 64)) AS nf FROM b),
                  | st AS (SELECT doc_id, text, len, nf, greatest(64, len // nf) AS stride FROM p),
                  | f AS (SELECT doc_id, unnest(range(0, nf)) AS frame_idx, text, len, stride FROM st),
@@ -6384,7 +6383,7 @@ object PipelineOps {
         .agg(count(lit(1)).as("n_images"),
           sum(col("width") * col("height")).as("total_px"))
         .orderBy("bucket"),
-      Some(sql("""WITH m AS (SELECT doc_id,
+      Some(oneLine("""WITH m AS (SELECT doc_id,
                  |     (16 + h % 240)::BIGINT AS w, (16 + (h // 240) % 240)::BIGINT AS ht
                  |   FROM (SELECT doc_id, ('0x'||substr(md5(text),1,4))::BIGINT AS h
                  |         FROM documents)),
@@ -6439,7 +6438,7 @@ object PipelineOps {
             sum(col("energy")).as("energy_sum"))
           .orderBy("doc_id", "seg_idx")
       },
-      Some(sql("""WITH b AS (SELECT doc_id, text, octet_length(text::BLOB) AS len FROM documents),
+      Some(oneLine("""WITH b AS (SELECT doc_id, text, octet_length(text::BLOB) AS len FROM documents),
                  | p AS (SELECT doc_id, text, len, least(8, greatest(1, len // 32)) AS nf FROM b),
                  | st AS (SELECT doc_id, text, len, nf, greatest(32, len // nf) AS stride FROM p),
                  | f AS (SELECT doc_id, unnest(range(0, nf)) AS frame_idx, text, len, stride FROM st),
@@ -6503,7 +6502,7 @@ object PipelineOps {
           .filter(col("n_docs") >= 2)
           .orderBy("rep_doc")
       },
-      Some(sql("""WITH ch AS (SELECT doc_id, ord(c) % 61 AS b
+      Some(oneLine("""WITH ch AS (SELECT doc_id, ord(c) % 61 AS b
                  |   FROM (SELECT doc_id, unnest(string_split_regex(text, '')) AS c
                  |         FROM documents) WHERE c <> ''),
                  | cnt AS (SELECT doc_id, b, count(*)::BIGINT AS n FROM ch GROUP BY 1, 2),
@@ -6558,7 +6557,7 @@ object PipelineOps {
                 / sqrt(col("dy").cast("double")), 4)).as("corr"))
           .orderBy("source")
       },
-      Some(sql("""WITH st AS (SELECT source,
+      Some(oneLine("""WITH st AS (SELECT source,
                  |     len(string_split(text,' '))::BIGINT AS n_tok,
                  |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
                  |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
@@ -6645,7 +6644,7 @@ object PipelineOps {
               .as("mean_score"))
           .orderBy("source", "bucket")
       },
-      Some(sql("""WITH occ AS (
+      Some(oneLine("""WITH occ AS (
                  |   SELECT doc_id, source,
                  |     unnest(list_transform(range(1, len(toks)),
                  |       i -> toks[i] || ' ' || toks[i+1])) AS bg
@@ -6705,7 +6704,7 @@ object PipelineOps {
             val rest = langs.drop(i + 1).map(o => s"s_$o").mkString(", ")
             s"CASE WHEN s_$l >= greatest($rest) THEN '$l' ELSE $els END"
         }
-        sql(s"""WITH p AS (SELECT lang AS true_lang, $pred AS pred_lang
+        oneLine(s"""WITH p AS (SELECT lang AS true_lang, $pred AS pred_lang
                |   FROM (SELECT doc_id, lang, $scores FROM documents)),
                | c AS (SELECT true_lang, pred_lang, count(*)::BIGINT AS n_docs
                |   FROM p GROUP BY 1, 2)

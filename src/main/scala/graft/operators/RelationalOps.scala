@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Harness, Q, Tables}
+import graft.Q.oneLine
 
 /** Group B (SURVEY.md §2.B): the relational core, run on the TPC-H-ish
   * tables. Everything is declared through the DataFrame API so Catalyst
@@ -44,9 +45,6 @@ object RelationalOps {
     sum(c.cast("decimal(18,2)")).cast("decimal(18,2)").cast("double")
   private def duckSumMoney(x: String): String =
     s"CAST(CAST(sum(CAST($x AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE)"
-
-  private def sql(s: String): String =
-    s.stripMargin.replace("\n", " ").trim
 
   /** Exact square for cross-multiplied variance tests; evaluate the
     * operand into a column first so codegen computes it once per use.
@@ -230,7 +228,7 @@ object RelationalOps {
           .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
           .select(col("o_orderkey"), col("o_totalprice"), col("c_custkey"), col("c_name"))
           .orderBy("o_orderkey"),
-      Some(sql("""SELECT o_orderkey, o_totalprice, c_custkey, c_name
+      Some(oneLine("""SELECT o_orderkey, o_totalprice, c_custkey, c_name
                  | FROM orders JOIN customer ON o_custkey = c_custkey
                  | ORDER BY o_orderkey"""))),
 
@@ -240,7 +238,7 @@ object RelationalOps {
           .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
           .select(col("n_nationkey"), col("n_name"), col("r_name"))
           .orderBy("n_nationkey"),
-      Some(sql("""SELECT n_nationkey, n_name, r_name
+      Some(oneLine("""SELECT n_nationkey, n_name, r_name
                  | FROM nation JOIN region ON n_regionkey = r_regionkey
                  | ORDER BY n_nationkey"""))),
 
@@ -250,7 +248,7 @@ object RelationalOps {
           .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_outer")
           .select(col("c_custkey"), col("o_orderkey"), col("o_totalprice"))
           .orderBy(col("c_custkey").asc, col("o_orderkey").asc_nulls_first),
-      Some(sql("""SELECT c_custkey, o_orderkey, o_totalprice
+      Some(oneLine("""SELECT c_custkey, o_orderkey, o_totalprice
                  | FROM customer LEFT JOIN orders ON c_custkey = o_custkey
                  | ORDER BY c_custkey ASC, o_orderkey ASC NULLS FIRST"""))),
 
@@ -260,7 +258,7 @@ object RelationalOps {
           .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
           .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
           .orderBy("c_custkey"),
-      Some(sql("""SELECT c_custkey, c_name, c_acctbal FROM customer c
+      Some(oneLine("""SELECT c_custkey, c_name, c_acctbal FROM customer c
                  | WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
                  | ORDER BY c_custkey"""))),
 
@@ -270,7 +268,7 @@ object RelationalOps {
           .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
           .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
           .orderBy("c_custkey"),
-      Some(sql("""SELECT c_custkey, c_name, c_acctbal FROM customer c
+      Some(oneLine("""SELECT c_custkey, c_name, c_acctbal FROM customer c
                  | WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
                  | ORDER BY c_custkey"""))),
 
@@ -297,7 +295,7 @@ object RelationalOps {
           .select(col("p_partkey"), col("s_suppkey"), col("p_retailprice"), col("s_acctbal"))
           .orderBy("p_partkey", "s_suppkey")
       },
-      Some(sql("""SELECT p_partkey, s_suppkey, p_retailprice, s_acctbal
+      Some(oneLine("""SELECT p_partkey, s_suppkey, p_retailprice, s_acctbal
                  | FROM part JOIN supplier
                  | ON p_retailprice BETWEEN s_acctbal / 10 - 2 AND s_acctbal / 10 + 2
                  | ORDER BY p_partkey, s_suppkey"""))),
@@ -324,7 +322,7 @@ object RelationalOps {
             col("last_error_ts").cast("timestamp_ntz").as("last_error_ts"))
           .orderBy("event_id")
       },
-      Some(sql("""SELECT p.event_id, p.user_id, p.ts,
+      Some(oneLine("""SELECT p.event_id, p.user_id, p.ts,
                  | (SELECT max(e.ts) FROM events e
                  |  WHERE e.user_id = p.user_id AND e.event_type = 'error' AND e.ts <= p.ts) AS last_error_ts
                  | FROM events p WHERE p.event_type = 'purchase' ORDER BY p.event_id"""))),
@@ -370,7 +368,7 @@ object RelationalOps {
               .when(validF, col("f.event_id")).as("err_event_id"))
           .orderBy("event_id")
       },
-      Some(sql("""SELECT p.event_id, p.user_id,
+      Some(oneLine("""SELECT p.event_id, p.user_id,
                  | CASE WHEN b.tus IS NOT NULL AND (f.tus IS NULL OR p.tus - b.tus <= f.tus - p.tus)
                  |        THEN b.tus - p.tus
                  |      WHEN f.tus IS NOT NULL THEN f.tus - p.tus END AS dt_us,
@@ -426,7 +424,7 @@ object RelationalOps {
               greatest(col("p_st"), col("e_st"))).as("overlap_us"))
           .orderBy("p_event_id", "e_event_id")
       },
-      Some(sql("""WITH p AS (SELECT user_id, event_id AS p_event_id, epoch_us(ts) AS st,
+      Some(oneLine("""WITH p AS (SELECT user_id, event_id AS p_event_id, epoch_us(ts) AS st,
                  |     epoch_us(ts) + 600000000 AS en FROM events WHERE event_type = 'purchase'),
                  | e AS (SELECT user_id, event_id AS e_event_id, epoch_us(ts) AS st,
                  |     epoch_us(ts) + 300000000 AS en FROM events WHERE event_type = 'error')
@@ -465,7 +463,7 @@ object RelationalOps {
           .agg(count(lit(1)).as("n_ships"), sum(col("cents")).as("cents"))
           .orderBy("attr")
       },
-      Some(sql("""WITH uni AS (
+      Some(oneLine("""WITH uni AS (
                  |   SELECT c_custkey AS k, TIMESTAMP '1990-01-01 00:00:00' AS chg_ts,
                  |          CAST(-1 AS BIGINT) AS chg_seq, 'NONE' AS attr FROM customer
                  |   UNION ALL
@@ -527,7 +525,7 @@ object RelationalOps {
           .select(col("key").as("p_partkey"), col("n_match"),
             col("sum_v").as("sum_acctbal_cents"))
           .orderBy("p_partkey"),
-      Some(sql("""SELECT p.p_partkey,
+      Some(oneLine("""SELECT p.p_partkey,
                  | count(s.sm) AS n_match,
                  | CAST(coalesce(sum(s.sm), 0) AS BIGINT) AS sum_acctbal_cents
                  | FROM part p LEFT JOIN
@@ -552,7 +550,7 @@ object RelationalOps {
             round(avg(col("l_discount")), 4).as("avg_disc"),
             count(lit(1)).as("count_order"))
           .orderBy("l_returnflag", "l_linestatus"),
-      Some(sql(s"""SELECT l_returnflag, l_linestatus,
+      Some(oneLine(s"""SELECT l_returnflag, l_linestatus,
                   | ${duckSumMoney("l_quantity")} AS sum_qty,
                   | ${duckSumMoney("l_extendedprice")} AS sum_base_price,
                   | round(avg(l_quantity), 4) AS avg_qty,
@@ -570,7 +568,7 @@ object RelationalOps {
             countDistinct(col("l_suppkey")).as("nd_supps"),
             count(lit(1)).as("n_rows"))
           .orderBy("l_returnflag"),
-      Some(sql("""SELECT l_returnflag, count(DISTINCT l_partkey) AS nd_parts,
+      Some(oneLine("""SELECT l_returnflag, count(DISTINCT l_partkey) AS nd_parts,
                  | count(DISTINCT l_suppkey) AS nd_supps, count(*) AS n_rows
                  | FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""))),
 
@@ -586,7 +584,7 @@ object RelationalOps {
             grouping(col("c_mktsegment")).cast("int").as("g_seg"))
           .orderBy(col("g_nation"), col("g_seg"),
             col("n_name").asc_nulls_first, col("c_mktsegment").asc_nulls_first),
-      Some(sql(s"""SELECT n_name, c_mktsegment, count(*) AS n_cust,
+      Some(oneLine(s"""SELECT n_name, c_mktsegment, count(*) AS n_cust,
                   | ${duckSumMoney("c_acctbal")} AS sum_bal,
                   | CAST(grouping(n_name) AS INTEGER) AS g_nation,
                   | CAST(grouping(c_mktsegment) AS INTEGER) AS g_seg
@@ -606,7 +604,7 @@ object RelationalOps {
             grouping(col("o_orderpriority")).cast("int").as("g_pri"))
           .orderBy(col("g_seg"), col("g_pri"),
             col("c_mktsegment").asc_nulls_first, col("o_orderpriority").asc_nulls_first),
-      Some(sql(s"""SELECT c_mktsegment, o_orderpriority, count(*) AS n_orders,
+      Some(oneLine(s"""SELECT c_mktsegment, o_orderpriority, count(*) AS n_orders,
                   | ${duckSumMoney("o_totalprice")} AS sum_price,
                   | CAST(grouping(c_mktsegment) AS INTEGER) AS g_seg,
                   | CAST(grouping(o_orderpriority) AS INTEGER) AS g_pri
@@ -634,7 +632,7 @@ object RelationalOps {
             round(stddev_samp(col("l_extendedprice")), 4).as("sd_price"),
             count(lit(1)).as("n_rows"))
           .orderBy("l_returnflag"),
-      Some(sql("""SELECT l_returnflag, min(l_extendedprice) AS min_price,
+      Some(oneLine("""SELECT l_returnflag, min(l_extendedprice) AS min_price,
                  | max(l_extendedprice) AS max_price,
                  | round(avg(l_extendedprice), 4) AS avg_price,
                  | round(stddev_samp(l_extendedprice), 4) AS sd_price,
@@ -653,7 +651,7 @@ object RelationalOps {
             count(lit(1)).as("n"),
             array_join(sort_array(collect_list(col("c_name"))), ",").as("names"))
           .orderBy("c_nationkey"),
-      Some(sql("""SELECT c_nationkey, count(*) AS n,
+      Some(oneLine("""SELECT c_nationkey, count(*) AS n,
                  | string_agg(c_name, ',' ORDER BY c_name) AS names
                  | FROM customer WHERE c_custkey <= 200
                  | GROUP BY c_nationkey ORDER BY c_nationkey"""))),
@@ -672,7 +670,7 @@ object RelationalOps {
           .select(col("o_orderpriority"), col("F").as("n_f"),
             col("O").as("n_o"), col("P").as("n_p"))
           .orderBy("o_orderpriority"),
-      Some(sql("""SELECT o_orderpriority,
+      Some(oneLine("""SELECT o_orderpriority,
                  | count(*) FILTER (o_orderstatus = 'F') AS n_f,
                  | count(*) FILTER (o_orderstatus = 'O') AS n_o,
                  | count(*) FILTER (o_orderstatus = 'P') AS n_p
@@ -699,7 +697,7 @@ object RelationalOps {
             (abs(col("est") - col("exact_distinct")) <=
               greatest(lit(1.0), col("exact_distinct") * 0.15)).cast("long").as("est_ok"))
           .orderBy("o_orderpriority"),
-      Some(sql("""SELECT o_orderpriority, count(DISTINCT o_custkey) AS exact_distinct,
+      Some(oneLine("""SELECT o_orderpriority, count(DISTINCT o_custkey) AS exact_distinct,
                  | CAST(1 AS BIGINT) AS est_ok
                  | FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"""))),
 
@@ -771,7 +769,7 @@ object RelationalOps {
             (col("est") >= col("lo") && col("est") <= col("hi")).cast("long").as("est_ok"))
           .orderBy("l_returnflag")
       },
-      Some(sql("""SELECT l_returnflag, round(quantile_cont(l_extendedprice, 0.5), 3) AS p50_exact,
+      Some(oneLine("""SELECT l_returnflag, round(quantile_cont(l_extendedprice, 0.5), 3) AS p50_exact,
                  | count(*) AS n_rows, CAST(1 AS BIGINT) AS est_ok
                  | FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""))),
 
@@ -798,7 +796,7 @@ object RelationalOps {
             "metric", "value")
           .orderBy("l_returnflag", "metric")
       },
-      Some(sql("""WITH wide AS (SELECT l_returnflag,
+      Some(oneLine("""WITH wide AS (SELECT l_returnflag,
                  |     CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_qty,
                  |     CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_price,
                  |     CAST(count(*) AS DOUBLE) AS n_rows
@@ -857,7 +855,7 @@ object RelationalOps {
             col("n_outliers"))
           .orderBy("l_returnflag")
       },
-      Some(sql("""WITH cents AS (
+      Some(oneLine("""WITH cents AS (
                  |   SELECT l_returnflag AS g,
                  |     CAST(round(l_extendedprice * 100) AS BIGINT) AS vc
                  |   FROM lineitem),
@@ -901,7 +899,7 @@ object RelationalOps {
             col("total_weight"))
           .orderBy("l_returnflag")
       },
-      Some(sql("""WITH d AS (
+      Some(oneLine("""WITH d AS (
                  |   SELECT l_returnflag AS g,
                  |     CAST(round(l_extendedprice * 100) AS BIGINT) AS vc,
                  |     CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS wc
@@ -940,7 +938,7 @@ object RelationalOps {
             round(col("low_v") * 100).cast("long").as("low_c"),
             col("n_events"))
           .orderBy("user_id", "hour_start"),
-      Some(sql("""SELECT user_id, date_trunc('hour', ts) AS hour_start,
+      Some(oneLine("""SELECT user_id, date_trunc('hour', ts) AS hour_start,
                  |   CAST(round(min_by(value, event_id) * 100) AS BIGINT) AS open_c,
                  |   CAST(round(max_by(value, event_id) * 100) AS BIGINT) AS close_c,
                  |   CAST(round(max(value) * 100) AS BIGINT) AS high_c,
@@ -975,7 +973,7 @@ object RelationalOps {
             col("n").as("n_mode"))
           .orderBy("o_orderpriority")
       },
-      Some(sql("""WITH cnt AS (
+      Some(oneLine("""WITH cnt AS (
                  |   SELECT o_orderpriority,
                  |     CAST(month(l_shipdate) AS BIGINT) AS ship_month, count(*) AS n
                  |   FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -1028,7 +1026,7 @@ object RelationalOps {
             sum(col("vc") * col("ov")).as("sum_vc"))
           .orderBy("bucket")
       },
-      Some(sql("""WITH c AS (
+      Some(oneLine("""WITH c AS (
                  |   SELECT CAST(round(value * 100) AS BIGINT) AS vc FROM events),
                  | r AS (SELECT vc, row_number() OVER (ORDER BY vc) AS rn,
                  |     count(*) OVER () AS n FROM c)
@@ -1073,7 +1071,7 @@ object RelationalOps {
             expr("psum * 1000000 div n").as("mean_microcents"),
             expr("wsum * 1000000 div n").as("wmean_microcents"))
       },
-      Some(sql("""WITH d AS (SELECT round(value * 100)::BIGINT AS vc, count(*)::BIGINT AS cnt
+      Some(oneLine("""WITH d AS (SELECT round(value * 100)::BIGINT AS vc, count(*)::BIGINT AS cnt
                  |   FROM events GROUP BY 1),
                  | w AS (SELECT vc, cnt,
                  |     sum(cnt) OVER (ORDER BY vc ROWS UNBOUNDED PRECEDING) AS cum,
@@ -1121,7 +1119,7 @@ object RelationalOps {
           .withColumn("dev_ppm", abs(col("obs_ppm") - col("benford_ppm")))
           .orderBy("digit")
       },
-      Some(sql("""WITH d AS (SELECT substr(CAST(round(o_totalprice * 100)::BIGINT AS VARCHAR), 1, 1)::BIGINT AS digit
+      Some(oneLine("""WITH d AS (SELECT substr(CAST(round(o_totalprice * 100)::BIGINT AS VARCHAR), 1, 1)::BIGINT AS digit
                  |   FROM orders),
                  | c AS (SELECT digit, count(*)::BIGINT AS n FROM d GROUP BY digit),
                  | t AS (SELECT sum(n)::BIGINT AS tot FROM c),
@@ -1174,7 +1172,7 @@ object RelationalOps {
             corr("p", "x").as("corr_price_tax"),
             corr("d", "x").as("corr_disc_tax"))
       },
-      Some(sql("""WITH b AS (SELECT round(l_quantity)::BIGINT AS q,
+      Some(oneLine("""WITH b AS (SELECT round(l_quantity)::BIGINT AS q,
                  |     round(l_extendedprice * 100)::BIGINT AS p,
                  |     round(l_discount * 100)::BIGINT AS d,
                  |     round(l_tax * 100)::BIGINT AS x FROM lineitem),
@@ -1211,7 +1209,7 @@ object RelationalOps {
             row_number().over(w).cast("long").as("rn"))
           .orderBy("c_custkey")
       },
-      Some(sql("""SELECT c_custkey, c_mktsegment, c_acctbal,
+      Some(oneLine("""SELECT c_custkey, c_mktsegment, c_acctbal,
                  | rank() OVER w AS rnk, dense_rank() OVER w AS drnk, row_number() OVER w AS rn
                  | FROM customer
                  | WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey ASC)
@@ -1229,7 +1227,7 @@ object RelationalOps {
               .cast("decimal(18,2)").cast("double").as("running_total"))
           .orderBy("o_orderkey")
       },
-      Some(sql("""SELECT o_orderkey, o_custkey,
+      Some(oneLine("""SELECT o_orderkey, o_custkey,
                  | CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER
                  |   (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
                  |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DECIMAL(18,2)) AS DOUBLE) AS running_total
@@ -1244,7 +1242,7 @@ object RelationalOps {
             lead(col("value"), 1).over(w).as("next_value"))
           .orderBy("event_id")
       },
-      Some(sql("""SELECT event_id, user_id, value,
+      Some(oneLine("""SELECT event_id, user_id, value,
                  | lag(value, 1) OVER w AS prev_value, lead(value, 1) OVER w AS next_value
                  | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY event_id ASC)
                  | ORDER BY event_id"""))),
@@ -1259,7 +1257,7 @@ object RelationalOps {
               .cast("decimal(18,2)").cast("double").as("windowed_sum"))
           .orderBy("event_id")
       },
-      Some(sql("""SELECT event_id, user_id,
+      Some(oneLine("""SELECT event_id, user_id,
                  | CAST(CAST(sum(CAST(value AS DECIMAL(18,2))) OVER
                  |   (PARTITION BY user_id ORDER BY event_id
                  |    RANGE BETWEEN 1000 PRECEDING AND CURRENT ROW) AS DECIMAL(18,2)) AS DOUBLE) AS windowed_sum
@@ -1279,7 +1277,7 @@ object RelationalOps {
             round(cume_dist().over(w), 4).as("cume"))
           .orderBy("c_custkey")
       },
-      Some(sql("""SELECT c_custkey, c_mktsegment,
+      Some(oneLine("""SELECT c_custkey, c_mktsegment,
                  | ntile(4) OVER w AS quartile,
                  | round(percent_rank() OVER w, 4) AS pct_rank,
                  | round(cume_dist() OVER w, 4) AS cume
@@ -1297,7 +1295,7 @@ object RelationalOps {
           .select(col("c_mktsegment"), col("rn"), col("c_custkey"), col("c_acctbal"))
           .orderBy("c_mktsegment", "rn")
       },
-      Some(sql("""SELECT c_mktsegment, rn, c_custkey, c_acctbal FROM (
+      Some(oneLine("""SELECT c_mktsegment, rn, c_custkey, c_acctbal FROM (
                  |   SELECT c_mktsegment, c_custkey, c_acctbal,
                  |     row_number() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
                  |   FROM customer)
@@ -1340,7 +1338,7 @@ object RelationalOps {
             col("n_events"), col("sum_cents"))
           .orderBy("user_id", "sid")
       },
-      Some(sql("""WITH brk AS (
+      Some(oneLine("""WITH brk AS (
                  |   SELECT user_id, ts, event_id, value,
                  |     CASE WHEN lag(ts) OVER w IS NULL
                  |            OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 600000000 THEN 1 ELSE 0 END AS is_brk
@@ -1386,7 +1384,7 @@ object RelationalOps {
               - sum(col("run_len"))).as("missing"))
           .orderBy("shard")
       },
-      Some(sql("""WITH seq AS (SELECT user_id % 8 AS shard, event_id FROM events),
+      Some(oneLine("""WITH seq AS (SELECT user_id % 8 AS shard, event_id FROM events),
                  | runs AS (SELECT shard, event_id,
                  |     event_id - row_number() OVER (PARTITION BY shard ORDER BY event_id) AS grp
                  |   FROM seq),
@@ -1420,7 +1418,7 @@ object RelationalOps {
           .drop("ts")
           .orderBy("user_id", "event_id")
       },
-      Some(sql("""SELECT user_id, event_id,
+      Some(oneLine("""SELECT user_id, event_id,
                  |   CASE WHEN event_id % 5 = 0 THEN NULL ELSE value END AS raw,
                  |   last_value(CASE WHEN event_id % 5 = 0 THEN NULL ELSE value END IGNORE NULLS)
                  |     OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -1460,7 +1458,7 @@ object RelationalOps {
             round(col("s_click") / col("s_view"), 4).as("conv_click"),
             round(col("s_purchase") / col("s_click"), 4).as("conv_purchase"))
       },
-      Some(sql("""WITH w1 AS (SELECT user_id, event_type, ts,
+      Some(oneLine("""WITH w1 AS (SELECT user_id, event_type, ts,
                  |     min(CASE WHEN event_type = 'view' THEN ts END)
                  |       OVER (PARTITION BY user_id) AS t1
                  |   FROM events),
@@ -1502,7 +1500,7 @@ object RelationalOps {
             coalesce(col("revenue"), lit(0.0)).as("revenue"))
           .orderBy("month_start")
       },
-      Some(sql("""WITH b AS (SELECT
+      Some(oneLine("""WITH b AS (SELECT
                  |     date_trunc('month', min(o_orderdate)) - INTERVAL 6 MONTH AS lo,
                  |     date_trunc('month', max(o_orderdate)) + INTERVAL 6 MONTH AS hi
                  |   FROM orders),
@@ -1540,7 +1538,7 @@ object RelationalOps {
             col("first_seen"), col("n_distinct_so_far"))
           .orderBy("user_id", "event_id")
       },
-      Some(sql("""WITH f AS (SELECT user_id, event_id, ts, event_type,
+      Some(oneLine("""WITH f AS (SELECT user_id, event_id, ts, event_type,
                  |     CASE WHEN row_number() OVER
                  |       (PARTITION BY user_id, event_type ORDER BY ts, event_id) = 1
                  |       THEN 1 ELSE 0 END AS first_seen
@@ -1579,7 +1577,7 @@ object RelationalOps {
             round(col("n_active") / col("cohort_n"), 4).as("retention"))
           .orderBy("cohort_yr", "offset_yr")
       },
-      Some(sql("""WITH yr AS (
+      Some(oneLine("""WITH yr AS (
                  |   SELECT DISTINCT o_custkey, CAST(year(o_orderdate) AS BIGINT) AS yr FROM orders),
                  | cohort AS (SELECT o_custkey, min(yr) AS cohort_yr FROM yr GROUP BY 1),
                  | act AS (
@@ -1625,7 +1623,7 @@ object RelationalOps {
             sum(col("ben") - col("bst")).as("covered_us"))
           .orderBy("user_id")
       },
-      Some(sql("""WITH iv AS (
+      Some(oneLine("""WITH iv AS (
                  |   SELECT user_id, event_id, epoch_us(ts) AS st,
                  |     epoch_us(ts) + 43200000000 AS en
                  |   FROM events),
@@ -1677,7 +1675,7 @@ object RelationalOps {
             round(col("ewma_num") / col("ewma_den"), 4).as("ewma_cents"))
           .orderBy("user_id", "event_id")
       },
-      Some(sql("""WITH lagged AS (
+      Some(oneLine("""WITH lagged AS (
                  |   SELECT user_id, event_id,
                  |     CAST(round(value * 100) AS BIGINT) AS cents,
                  |     lag(CAST(round(value * 100) AS BIGINT), 1) OVER w AS c1,
@@ -1736,7 +1734,7 @@ object RelationalOps {
             when(col("den") > 0, round(col("num") / col("den"), 4)).as("slope"))
           .orderBy("user_id", "event_id")
       },
-      Some(sql("""WITH lg AS (
+      Some(oneLine("""WITH lg AS (
                  |   SELECT user_id, event_id,
                  |     CAST(round(value * 100) AS BIGINT) AS c0,
                  |     lag(CAST(round(value * 100) AS BIGINT), 1) OVER w AS c1,
@@ -1806,7 +1804,7 @@ object RelationalOps {
               .cast("timestamp_ntz").as("first_alarm_ts"))
           .orderBy("user_id")
       },
-      Some(sql("""WITH v AS (SELECT user_id, ts, event_id,
+      Some(oneLine("""WITH v AS (SELECT user_id, ts, event_id,
                  |     CAST(round(value * 100) AS BIGINT) AS vc FROM events),
                  | g AS (SELECT count(*) AS n, CAST(sum(vc) AS BIGINT) AS s FROM v),
                  | p AS (SELECT user_id, ts, event_id, g.n,
@@ -1859,7 +1857,7 @@ object RelationalOps {
             sum(col("is_anom")).as("n_anom"))
           .orderBy("user_id", "hod")
       },
-      Some(sql("""WITH b AS (SELECT user_id, event_id,
+      Some(oneLine("""WITH b AS (SELECT user_id, event_id,
                  |     CAST(hour(ts) AS BIGINT) AS hod,
                  |     CAST(round(value * 100) AS BIGINT) AS cents
                  |   FROM events),
@@ -1898,7 +1896,7 @@ object RelationalOps {
             expr("n * 1000000 div tot").as("share_ppm"))
           .orderBy("dow", "hod")
       },
-      Some(sql("""WITH c AS (SELECT (dayofweek(ts) + 1)::BIGINT AS dow,
+      Some(oneLine("""WITH c AS (SELECT (dayofweek(ts) + 1)::BIGINT AS dow,
                  |     CAST(hour(ts) AS BIGINT) AS hod, count(*)::BIGINT AS n
                  |   FROM events GROUP BY 1, 2),
                  | t AS (SELECT *, sum(n) OVER () AS tot FROM c)
@@ -1930,7 +1928,7 @@ object RelationalOps {
             expr("n * 1000000 div tot").as("ppm"))
           .orderBy("cur", "nxt")
       },
-      Some(sql("""WITH p AS (SELECT user_id, event_type AS cur,
+      Some(oneLine("""WITH p AS (SELECT user_id, event_type AS cur,
                  |     lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
                  |   FROM events),
                  | c AS (SELECT cur, nxt, count(*)::BIGINT AS n
@@ -1975,7 +1973,7 @@ object RelationalOps {
                   / (col("nt") - col("pt"))).cast("long")).as("interp_c"))
           .orderBy("user_id", "event_id")
       },
-      Some(sql("""WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS tus, ts,
+      Some(oneLine("""WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS tus, ts,
                  |     CASE WHEN event_id % 5 = 0 THEN NULL
                  |          ELSE round(value * 100)::BIGINT END AS rawc
                  |   FROM events),
@@ -2020,7 +2018,7 @@ object RelationalOps {
               expr("CAST((size(vals) + 1) div 2 AS INT)")).as("roll_med"))
           .orderBy("user_id", "event_id")
       },
-      Some(sql("""WITH b AS (SELECT user_id, event_id, ts,
+      Some(oneLine("""WITH b AS (SELECT user_id, event_id, ts,
                  |     round(value * 100)::BIGINT AS cents FROM events),
                  | lg AS (SELECT user_id, event_id, cents,
                  |     list_sort(list_filter([cents,
@@ -2062,7 +2060,7 @@ object RelationalOps {
             round(col("ws").cast("double") / col("total_us") / 100, 4).as("twap"))
           .orderBy("user_id")
       },
-      Some(sql("""WITH b AS (SELECT user_id, event_id, ts,
+      Some(oneLine("""WITH b AS (SELECT user_id, event_id, ts,
                  |     round(value * 100)::BIGINT AS cents FROM events),
                  | d AS (SELECT user_id, cents,
                  |     epoch_us(lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))
@@ -2088,7 +2086,7 @@ object RelationalOps {
             col("c_acctbal"))
           .orderBy(col("c_nationkey").desc, col("seg_or_null").asc_nulls_first,
             col("c_acctbal").desc, col("c_custkey").asc),
-      Some(sql("""SELECT c_custkey, c_nationkey, nullif(c_mktsegment, 'BUILDING') AS seg_or_null, c_acctbal
+      Some(oneLine("""SELECT c_custkey, c_nationkey, nullif(c_mktsegment, 'BUILDING') AS seg_or_null, c_acctbal
                  | FROM customer
                  | ORDER BY c_nationkey DESC, seg_or_null ASC NULLS FIRST, c_acctbal DESC, c_custkey ASC"""))),
 
@@ -2100,7 +2098,7 @@ object RelationalOps {
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
           .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
           .limit(10),
-      Some(sql("""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+      Some(oneLine("""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
                  | ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10"""))),
 
     // Z-order clustering — the multi-dimensional data-LAYOUT operator: a
@@ -2140,7 +2138,7 @@ object RelationalOps {
         val terms = (0 until 16).flatMap(i => Seq(
           s"(((l_partkey & 65535) & ${1L << i}) << ${i + 1})",
           s"(((l_suppkey & 65535) & ${1L << i}) << $i)")).mkString(" | ")
-        sql(s"""SELECT (($terms) >> 12) AS zone_id, count(*) AS n_rows,
+        oneLine(s"""SELECT (($terms) >> 12) AS zone_id, count(*) AS n_rows,
                | min(l_partkey) AS p_min, max(l_partkey) AS p_max,
                | min(l_suppkey) AS s_min, max(l_suppkey) AS s_max
                | FROM lineitem GROUP BY zone_id ORDER BY zone_id""")
@@ -2177,7 +2175,7 @@ object RelationalOps {
             round(col("col") / 100.0, 2).as("bound_price"))
           .orderBy("bound_idx")
       },
-      Some(sql("""WITH cents AS (
+      Some(oneLine("""WITH cents AS (
                  |   SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS vc FROM lineitem),
                  | dist AS (SELECT vc, count(*) AS cnt FROM cents GROUP BY vc),
                  | ranked AS (SELECT vc, cnt,
@@ -2232,7 +2230,7 @@ object RelationalOps {
             col("sz").as("p_size"))
           .orderBy("p_brand", "p_partkey")
       },
-      Some(sql("""SELECT b.p_brand, b.p_partkey,
+      Some(oneLine("""SELECT b.p_brand, b.p_partkey,
                  |   CAST(round(b.p_retailprice * 100) AS BIGINT) AS price_c,
                  |   CAST(b.p_size AS BIGINT) AS p_size
                  | FROM part b
@@ -2249,7 +2247,7 @@ object RelationalOps {
         t(s, dir, "customer").select(col("c_custkey").as("id"), lit("customer").as("src"))
           .unionAll(t(s, dir, "supplier").select(col("s_suppkey").as("id"), lit("supplier").as("src")))
           .orderBy("id", "src"),
-      Some(sql("""SELECT c_custkey AS id, 'customer' AS src FROM customer
+      Some(oneLine("""SELECT c_custkey AS id, 'customer' AS src FROM customer
                  | UNION ALL SELECT s_suppkey AS id, 'supplier' AS src FROM supplier
                  | ORDER BY id, src"""))),
 
@@ -2259,7 +2257,7 @@ object RelationalOps {
           .union(t(s, dir, "supplier").select(col("s_nationkey").as("n_key")))
           .distinct()
           .orderBy("n_key"),
-      Some(sql("""SELECT c_nationkey AS n_key FROM customer
+      Some(oneLine("""SELECT c_nationkey AS n_key FROM customer
                  | UNION SELECT s_nationkey AS n_key FROM supplier ORDER BY n_key"""))),
 
     Q("f3_intersect",
@@ -2267,7 +2265,7 @@ object RelationalOps {
         t(s, dir, "customer").select(col("c_nationkey").as("n_key"))
           .intersect(t(s, dir, "supplier").select(col("s_nationkey").as("n_key")))
           .orderBy("n_key"),
-      Some(sql("""SELECT c_nationkey AS n_key FROM customer
+      Some(oneLine("""SELECT c_nationkey AS n_key FROM customer
                  | INTERSECT SELECT s_nationkey AS n_key FROM supplier ORDER BY n_key"""))),
 
     Q("f4_except",
@@ -2275,7 +2273,7 @@ object RelationalOps {
         t(s, dir, "customer").select(col("c_nationkey").as("n_key"))
           .except(t(s, dir, "supplier").select(col("s_nationkey").as("n_key")))
           .orderBy("n_key"),
-      Some(sql("""SELECT c_nationkey AS n_key FROM customer
+      Some(oneLine("""SELECT c_nationkey AS n_key FROM customer
                  | EXCEPT SELECT s_nationkey AS n_key FROM supplier ORDER BY n_key"""))),
 
     // NULL-SAFE equi join — `<=>` / ANSI IS NOT DISTINCT FROM: the join
@@ -2297,7 +2295,7 @@ object RelationalOps {
           .agg(count(lit(1)).as("n_joined"), max(col("n_cust")).as("n_cust"))
           .orderBy(col("seg").asc_nulls_first)
       },
-      Some(sql("""WITH c AS (SELECT nullif(c_mktsegment, 'BUILDING') AS seg, c_custkey
+      Some(oneLine("""WITH c AS (SELECT nullif(c_mktsegment, 'BUILDING') AS seg, c_custkey
                  |   FROM customer),
                  | segs AS (SELECT seg, count(*)::BIGINT AS n_cust FROM c GROUP BY seg)
                  | SELECT s.seg, count(*)::BIGINT AS n_joined, max(s.n_cust) AS n_cust
@@ -2327,7 +2325,7 @@ object RelationalOps {
             (col("ordered").isNull || col("shipped").isNull).cast("long").as("one_sided"))
           .orderBy("d")
       },
-      Some(sql(s"""WITH o AS (SELECT o_orderdate AS d,
+      Some(oneLine(s"""WITH o AS (SELECT o_orderdate AS d,
                  |     ${duckSumMoney("o_totalprice")} AS ordered
                  |   FROM orders GROUP BY 1),
                  | l AS (SELECT l_shipdate AS d,
@@ -2363,7 +2361,7 @@ object RelationalOps {
             coalesce(col("n_exc"), lit(0L)).as("n_exc"))
           .orderBy("l_orderkey")
       },
-      Some(sql("""WITH a AS (SELECT l_orderkey FROM lineitem WHERE l_quantity > 25),
+      Some(oneLine("""WITH a AS (SELECT l_orderkey FROM lineitem WHERE l_quantity > 25),
                  | b AS (SELECT l_orderkey FROM lineitem WHERE l_extendedprice > 30000),
                  | i AS (SELECT l_orderkey, count(*)::BIGINT AS n_inter
                  |   FROM (SELECT * FROM a INTERSECT ALL SELECT * FROM b) GROUP BY 1),
@@ -2974,7 +2972,7 @@ object RelationalOps {
           math.max(1000000L, st.getLong(0) * (bitlen + 2) * 2).toString)
         s.sql(text)
       },
-      Some(sql("""WITH RECURSIVE anc(doc_id, anc_id, depth) AS (
+      Some(oneLine("""WITH RECURSIVE anc(doc_id, anc_id, depth) AS (
                  |  SELECT doc_id, doc_id, CAST(0 AS BIGINT) FROM documents
                  |  UNION ALL
                  |  SELECT a.doc_id, a.anc_id // 2, a.depth + 1
@@ -3021,7 +3019,7 @@ object RelationalOps {
     // and no two consecutive versions share an attribute value.
     Q("b15_scd2_merge",
       (s, dir) => scd2Dim(s, dir).orderBy("c_custkey", "ver"),
-      Some(sql("""WITH uni AS (
+      Some(oneLine("""WITH uni AS (
                  |   SELECT c_custkey AS k, TIMESTAMP '1990-01-01 00:00:00' AS chg_ts,
                  |          CAST(-1 AS BIGINT) AS chg_seq, 'NONE' AS attr FROM customer
                  |   UNION ALL
@@ -3082,7 +3080,7 @@ object RelationalOps {
             col("attr"))
           .orderBy("c_custkey")
       },
-      Some(sql("""WITH uni AS (
+      Some(oneLine("""WITH uni AS (
                  |   SELECT c_custkey AS k, TIMESTAMP '1990-01-01 00:00:00' AS chg_ts,
                  |          CAST(-1 AS BIGINT) AS chg_seq, 'NONE' AS attr FROM customer
                  |   UNION ALL
@@ -3113,7 +3111,7 @@ object RelationalOps {
             length(col("p_name")).cast("long").as("name_len"),
             concat_ws("|", col("p_brand"), col("p_type")).as("brand_type"))
           .orderBy("p_partkey"),
-      Some(sql("""SELECT p_partkey, upper(p_name) AS up_name, lower(p_brand) AS lo_brand,
+      Some(oneLine("""SELECT p_partkey, upper(p_name) AS up_name, lower(p_brand) AS lo_brand,
                  | substring(p_name, 1, 8) AS name8, trim(p_name) AS trimmed,
                  | lpad(CAST(p_size AS VARCHAR), 5, '0') AS size5,
                  | replace(p_type, ' ', '_') AS type_us,
@@ -3134,7 +3132,7 @@ object RelationalOps {
           .orderBy("o_orderkey"),
       // DuckDB date_trunc('month', ts) yields DATE; cast back to TIMESTAMP
       // to align with Spark's timestamp result (VERDICT r1 "what's wrong" #4).
-      Some(sql("""SELECT o_orderkey, CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
+      Some(oneLine("""SELECT o_orderkey, CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
                  | CAST(year(o_orderdate) AS INTEGER) AS yr,
                  | CAST(month(o_orderdate) AS INTEGER) AS mo,
                  | CAST(day(o_orderdate) AS INTEGER) AS dom,
@@ -3153,7 +3151,7 @@ object RelationalOps {
             round(log(col("l_extendedprice")), 4).as("ln_price"),
             (col("l_orderkey") % 7).as("mod7"))
           .orderBy("l_orderkey", "l_linenumber"),
-      Some(sql("""SELECT l_orderkey, l_linenumber,
+      Some(oneLine("""SELECT l_orderkey, l_linenumber,
                  | CAST(ceil(l_extendedprice) AS BIGINT) AS ceil_price,
                  | CAST(floor(l_extendedprice) AS BIGINT) AS floor_price,
                  | abs(l_discount - 0.05) AS abs_disc_dev,
@@ -3172,7 +3170,7 @@ object RelationalOps {
             explode(sort_array(toks)).as("token"))
           .orderBy("p_partkey", "token")
       },
-      Some(sql("""SELECT p_partkey,
+      Some(oneLine("""SELECT p_partkey,
                  | CAST(len(string_split(p_name, ' ')) AS BIGINT) AS n_tokens,
                  | list_contains(string_split(p_name, ' '), 'red') AS has_red,
                  | unnest(list_sort(string_split(p_name, ' '))) AS token
@@ -3198,7 +3196,7 @@ object RelationalOps {
               (a, b) => concat(a, lit(">"), b)), ",").as("bigram_head"))
           .orderBy("doc_id")
       },
-      Some(sql("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks
+      Some(oneLine("""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks
                  |   FROM documents)
                  | SELECT doc_id,
                  |   len(list_filter(toks, t -> len(t) >= 5))::BIGINT AS n_long,
@@ -3220,7 +3218,7 @@ object RelationalOps {
           .withColumnRenamed("key", "prop_key")
           .withColumnRenamed("value", "prop_value")
           .orderBy("event_id", "prop_key"),
-      Some(sql("""SELECT event_id, prop_key, prop_value FROM (
+      Some(oneLine("""SELECT event_id, prop_key, prop_value FROM (
                  |   SELECT event_id, 'type' AS prop_key, event_type AS prop_value FROM events
                  |   UNION ALL
                  |   SELECT event_id, 'uid' AS prop_key, CAST(user_id AS VARCHAR) AS prop_value FROM events)
@@ -3246,7 +3244,7 @@ object RelationalOps {
             k.cast("int").as("k_struct"))
           .orderBy("event_id")
       },
-      Some(sql("""SELECT event_id,
+      Some(oneLine("""SELECT event_id,
                  | CAST(json_extract_string(props, '$.k') AS DOUBLE) AS k_double,
                  | CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_int,
                  | json_extract_string(props, '$.k') AS k_str,
@@ -3269,7 +3267,7 @@ object RelationalOps {
           nvl2(col("err_value"), lit("present"), lit("absent")).as("presence"))
           .orderBy("event_id")
       },
-      Some(sql("""SELECT event_id,
+      Some(oneLine("""SELECT event_id,
                  | coalesce(err_value, -1.0) AS coalesced,
                  | err_value IS NULL AS is_null,
                  | nullif(err_value, 0.0) AS nullifed,
@@ -3290,7 +3288,7 @@ object RelationalOps {
               .cast("long").as("n_words"),
             col("p_type").rlike("^STANDARD").as("is_standard"))
           .orderBy("p_partkey"),
-      Some(sql("""SELECT p_partkey,
+      Some(oneLine("""SELECT p_partkey,
                  | regexp_extract(p_type, '^(\w+)', 1) AS first_word,
                  | regexp_replace(p_name, '[aeiou]', '*', 'g') AS devoweled,
                  | len(regexp_extract_all(p_type, '\w+'))::BIGINT AS n_words,
@@ -3322,7 +3320,7 @@ object RelationalOps {
               CASE WHEN o_orderkey % 1000 = 1 THEN 9223372036854775807L ELSE 2L END)""")
               .as("overflow_null"))
           .orderBy("o_orderkey"),
-      Some(sql("""SELECT o_orderkey,
+      Some(oneLine("""SELECT o_orderkey,
                  | TRY_CAST(o_orderpriority AS INT) AS bad_cast,
                  | TRY_CAST(substring(o_orderpriority, 1, 1) AS INT) AS prio_num,
                  | CASE WHEN o_orderkey % 3 = 0 THEN NULL
@@ -3351,7 +3349,7 @@ object RelationalOps {
             max(expr("width_bucket(o_totalprice, 0, 500000, 10)"))
               .as("max_bucket"))
           .orderBy("o_orderstatus"),
-      Some(sql("""SELECT o_orderstatus,
+      Some(oneLine("""SELECT o_orderstatus,
                  | bool_and(o_totalprice > 1000) AS all_over_1k,
                  | bool_or(o_orderpriority = '1-URGENT') AS any_urgent,
                  | count_if(o_orderpriority = '1-URGENT')::BIGINT AS n_urgent,
@@ -3422,7 +3420,7 @@ object RelationalOps {
         Q.views(s, dir, text)
         s.sql(text)
       },
-      Some(sql("""WITH u AS (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT'),
+      Some(oneLine("""WITH u AS (SELECT o_orderkey FROM orders WHERE o_orderpriority = '1-URGENT'),
                  | ex AS (SELECT l_orderkey, l_extendedprice FROM lineitem
                  |   WHERE l_orderkey IN (SELECT o_orderkey FROM u))
                  | SELECT l_orderkey,
@@ -3444,7 +3442,7 @@ object RelationalOps {
               when(col("o_totalprice") > 300000, "urgent_big").otherwise("urgent_small"))
               .otherwise("normal").as("nested_band"))
           .orderBy("o_orderkey"),
-      Some(sql("""SELECT o_orderkey,
+      Some(oneLine("""SELECT o_orderkey,
                  | CASE WHEN o_totalprice > 400000 THEN 'high'
                  |      WHEN o_totalprice > 200000 THEN 'mid' ELSE 'low' END AS price_band,
                  | CASE WHEN o_orderstatus = 'F' THEN 1 WHEN o_orderstatus = 'O' THEN 2 ELSE 0 END AS status_code,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Event, Q, Tables}
+import graft.Q.oneLine
 
 /** Group C (SURVEY.md §2.C): Structured-Streaming-shaped operators.
   *
@@ -159,19 +160,17 @@ object StreamingOps {
   }
 
   private def ev(s: SparkSession, dir: String): DataFrame = Tables.load(s, dir, "events")
-  private def sql(s: String): String = s.stripMargin.replace("\n", " ").trim
-
   val qs: Seq[Q] = Seq(
     Q("h1_stream_tumbling",
       (s, dir) => tumbling(ev(s, dir)).orderBy("ws", "event_type"),
-      Some(sql("""SELECT date_trunc('hour', ts) AS ws, event_type, count(*) AS cnt,
+      Some(oneLine("""SELECT date_trunc('hour', ts) AS ws, event_type, count(*) AS cnt,
                  | CAST(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_value
                  | FROM events GROUP BY 1, 2 ORDER BY ws, event_type"""))),
 
     Q("h9_window_topk",
       (s, dir) => windowTopK(tumbling(ev(s, dir)), 2)
         .orderBy("ws", "rnk"),
-      Some(sql("""WITH c AS (SELECT date_trunc('hour', ts) AS ws, event_type,
+      Some(oneLine("""WITH c AS (SELECT date_trunc('hour', ts) AS ws, event_type,
                  |     count(*) AS cnt,
                  |     CAST(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_value
                  |   FROM events GROUP BY 1, 2)
@@ -186,7 +185,7 @@ object StreamingOps {
     // its 30-minute bucket and the one 30 minutes earlier.
     Q("h2_stream_sliding",
       (s, dir) => sliding(ev(s, dir)).orderBy("ws"),
-      Some(sql("""SELECT ws, count(*) AS cnt FROM (
+      Some(oneLine("""SELECT ws, count(*) AS cnt FROM (
                  |   SELECT time_bucket(INTERVAL '30 minutes', ts) AS ws FROM events
                  |   UNION ALL
                  |   SELECT time_bucket(INTERVAL '30 minutes', ts) - INTERVAL '30 minutes' AS ws FROM events)
@@ -196,7 +195,7 @@ object StreamingOps {
     // strict (`next.ts < prev.ts + gap`), so a break is `diff >= gap`.
     Q("h3_stream_session",
       (s, dir) => session(ev(s, dir)).orderBy("user_id", "session_start"),
-      Some(sql("""WITH brk AS (
+      Some(oneLine("""WITH brk AS (
                  |   SELECT user_id, ts,
                  |     CASE WHEN lag(ts) OVER w IS NULL
                  |            OR ts - lag(ts) OVER w >= INTERVAL '10 minutes' THEN 1 ELSE 0 END AS is_brk
@@ -210,7 +209,7 @@ object StreamingOps {
 
     Q("h4_stream_dedup",
       (s, dir) => dedupFirst(ev(s, dir)).orderBy("event_id"),
-      Some(sql("""SELECT event_id, user_id, event_type, ts FROM (
+      Some(oneLine("""SELECT event_id, user_id, event_type, ts FROM (
                  |   SELECT event_id, user_id, event_type, ts,
                  |     row_number() OVER (PARTITION BY user_id, event_type ORDER BY event_id) AS rn
                  |   FROM events)
@@ -218,7 +217,7 @@ object StreamingOps {
 
     Q("h6_stateful_running",
       (s, dir) => statefulRunning(ev(s, dir)).orderBy("user_id"),
-      Some(sql("""SELECT user_id, count(*) AS n_events,
+      Some(oneLine("""SELECT user_id, count(*) AS n_events,
                  | CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
                  | max(event_id) AS last_event_id
                  | FROM events GROUP BY user_id ORDER BY user_id"""))),
@@ -231,7 +230,7 @@ object StreamingOps {
           events.filter(col("event_type") === "error"))
           .orderBy("p_id", "e_id")
       },
-      Some(sql("""SELECT p.event_id AS p_id, e.event_id AS e_id, p.user_id, p.ts AS p_ts, e.ts AS e_ts
+      Some(oneLine("""SELECT p.event_id AS p_id, e.event_id AS e_id, p.user_id, p.ts AS p_ts, e.ts AS e_ts
                  | FROM events p JOIN events e
                  |   ON p.user_id = e.user_id
                  |  AND e.ts >= p.ts - INTERVAL '10 minutes' AND e.ts <= p.ts

@@ -93,6 +93,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(graft.functions.SortedIntersectCount.description)
     ext.injectFunction(graft.functions.PolyFingerprint.description)
     ext.injectFunction(graft.functions.AsciiSanitize.description)
+    ext.injectFunction(graft.functions.GoTimeString.description)
     // Spark ships BloomFilterAggregate/BloomFilterMightContain as
     // internal expressions (used by its own runtime-filter rule) without
     // public SQL registration; expose them for the i68 prescreen join.

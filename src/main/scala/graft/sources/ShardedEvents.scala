@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{ByteArrayOutputStream, Closeable, File, FileInputStream}
+import java.io.{Closeable, File, FileInputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
@@ -175,38 +175,75 @@ object ShardedEvents {
     shardFiles(root, shard).foreach { f =>
       val r = new LineReader(f, 0L)
       try {
-        var line = r.next(keep = true)
-        while (line != null) {
-          if (tsUsOf(line) >= startUs) return pos
+        while (r.next()) {
+          val b = r.bytes
+          val t1 = tab(b, tab(b, r.start, r.start, r.end) + 1, r.start, r.end)
+          if (long(b, t1 + 1, tab(b, t1 + 1, r.start, r.end)) >= startUs) return pos
           pos += 1
-          line = r.next(keep = true)
         }
       } finally r.close()
     }
     pos
   }
 
-  /** Line layout: seq \t event_id \t ts_us \t user_id \t event_type \t
-    * value \t props (props last so embedded tabs cannot corrupt parsing;
-    * split with a field limit keeps the remainder intact).
+  /** Parses one line, `b[start, end)`: seq \t event_id \t ts_us \t user_id
+    * \t event_type \t value \t props. `props` is last, so a tab inside it
+    * stays part of it. Numbers parse in place; string fields are copied
+    * out of `b`, which the reader reuses for the next line.
     */
-  private[sources] def tsUsOf(line: String): Long = {
-    val parts = line.split("\t", 7)
-    parts(2).toLong
+  private[sources] def parse(shard: UTF8String, b: Array[Byte], start: Int, end: Int): InternalRow = {
+    val t0 = tab(b, start, start, end)
+    val t1 = tab(b, t0 + 1, start, end)
+    val t2 = tab(b, t1 + 1, start, end)
+    val t3 = tab(b, t2 + 1, start, end)
+    val t4 = tab(b, t3 + 1, start, end)
+    val t5 = tab(b, t4 + 1, start, end)
+    val props =
+      if (end - t5 == 3 && b(t5 + 1) == '\\' && b(t5 + 2) == 'N') null // NullToken
+      else UTF8String.fromBytes(util.Arrays.copyOfRange(b, t5 + 1, end))
+    try new GenericInternalRow(Array[Any](
+      shard,
+      long(b, start, t0),
+      long(b, t0 + 1, t1),
+      long(b, t1 + 1, t2), // TimestampType = micros since epoch
+      long(b, t2 + 1, t3),
+      UTF8String.fromBytes(util.Arrays.copyOfRange(b, t3 + 1, t4)),
+      java.lang.Double.parseDouble(new String(b, t4 + 1, t5 - t4 - 1, UTF_8)),
+      props))
+    catch {
+      case e: NumberFormatException => throw malformed(b, start, end, e.getMessage)
+    }
   }
 
-  private[sources] def parse(shard: String, line: String): InternalRow = {
-    val p = line.split("\t", 7)
-    new GenericInternalRow(Array[Any](
-      UTF8String.fromString(shard),
-      p(0).toLong,
-      p(1).toLong,
-      p(2).toLong, // TimestampType = micros since epoch
-      p(3).toLong,
-      UTF8String.fromString(p(4)),
-      p(5).toDouble,
-      if (p(6) == NullToken) null else UTF8String.fromString(p(6))))
+  /** The first tab in `b[from, end)` of the line `b[start, end)`. */
+  private def tab(b: Array[Byte], from: Int, start: Int, end: Int): Int = {
+    var i = from
+    while (i < end && b(i) != '\t') i += 1
+    if (i == end) throw malformed(b, start, end, "fewer than 7 tab-separated fields")
+    i
   }
+
+  /** The decimal long in `b[from, until)`. Up to 18 digits with an
+    * optional `-` parse in place; anything else is `String.toLong` of the
+    * text, so a bad field's error names it.
+    */
+  private def long(b: Array[Byte], from: Int, until: Int): Long = {
+    val neg = from < until && b(from) == '-'
+    var i = if (neg) from + 1 else from
+    if (i == until || until - i > 18) return new String(b, from, until - from, UTF_8).toLong
+    var v = 0L
+    while (i < until) {
+      val d = b(i) - '0'
+      if (d < 0 || d > 9) return new String(b, from, until - from, UTF_8).toLong
+      v = v * 10 + d
+      i += 1
+    }
+    if (neg) -v else v
+  }
+
+  private def malformed(b: Array[Byte], start: Int, end: Int, why: String) =
+    new IllegalArgumentException(
+      s"malformed record line: ${new String(b, start, end - start, UTF_8)} ($why)")
 
   /** Materialize an events DataFrame as a sharded stream directory:
     * records are routed to `numShards` shards by hash of `user_id` (the
@@ -451,25 +488,28 @@ class ShardedEventsReaderFactory extends PartitionReaderFactory {
 
 /** Sequential reader over one piece's [from, until) lines — per-shard
   * order is the file order. It seeks to the piece's index point and
-  * skips the lines before `from` without decoding them.
+  * skips the lines before `from` without parsing them.
   */
 class ShardSliceReader(slice: ShardSlice) extends PartitionReader[InternalRow] {
   private val files =
     ShardedEvents.shardFiles(slice.root, slice.shard).drop(slice.file).iterator
+  private val shard = UTF8String.fromString(slice.shard)
   private var reader: LineReader = _
   private var offset = slice.offset
   private var pos = slice.line
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    while (pos < slice.from) { line(keep = false); pos += 1 }
+    while (pos < slice.from) { line(); pos += 1 }
     if (pos >= slice.until) return false
-    current = ShardedEvents.parse(slice.shard, line(keep = true))
+    val r = line()
+    current = ShardedEvents.parse(shard, r.bytes, r.start, r.end)
     pos += 1
     true
   }
 
-  private def line(keep: Boolean): String = {
+  /** The reader positioned on the next line of the shard. */
+  private def line(): LineReader = {
     while (true) {
       if (reader == null) {
         // The offset was committed past the files' end: emitting fewer
@@ -480,8 +520,7 @@ class ShardSliceReader(slice: ShardSlice) extends PartitionReader[InternalRow] {
         reader = new LineReader(files.next(), offset)
         offset = 0L
       }
-      val l = reader.next(keep)
-      if (l != null) return l
+      if (reader.next()) return reader
       reader.close()
       reader = null
     }
@@ -492,44 +531,47 @@ class ShardSliceReader(slice: ShardSlice) extends PartitionReader[InternalRow] {
   override def close(): Unit = if (reader != null) reader.close()
 }
 
-/** `\n`-terminated UTF-8 lines of `f` from byte `offset` on; a last line
+/** `\n`-terminated lines of `f` from byte `offset` on; a last line
   * without `\n` is returned too. A bare `\r` is data, not a terminator.
+  * After [[next]] the line, without its `\n`, is `bytes[start, end)`:
+  * a view of the read buffer, valid until the next call. A line that
+  * crosses the buffer's end is moved to its front, and the buffer
+  * doubles for a line longer than itself.
   */
 private[sources] final class LineReader(f: File, offset: Long) extends Closeable {
   private val in = new FileInputStream(f)
   in.getChannel.position(offset)
-  private val buf = new Array[Byte](1 << 16)
+  var bytes = new Array[Byte](1 << 16)
+  var start = 0
+  var end = 0
   private var pos = 0
   private var lim = 0
-  private val spill = new ByteArrayOutputStream()
 
-  /** The next line without its `\n` (`""` when `keep` is false), or null
-    * at the end of the file.
-    */
-  def next(keep: Boolean): String = {
-    spill.reset()
-    var any = false
+  /** Moves to the next line; false at the end of the file. */
+  def next(): Boolean = {
+    var i = pos
     while (true) {
-      if (pos == lim) {
-        lim = math.max(in.read(buf), 0)
-        pos = 0
-        if (lim == 0) return if (!any) null else if (keep) spill.toString(UTF_8) else ""
-      }
-      any = true
-      var i = pos
-      while (i < lim && buf(i) != '\n') i += 1
+      val b = bytes
+      while (i < lim && b(i) != '\n') i += 1
       if (i < lim) {
-        val s =
-          if (!keep) ""
-          else if (spill.size() == 0) new String(buf, pos, i - pos, UTF_8)
-          else { spill.write(buf, pos, i - pos); spill.toString(UTF_8) }
-        pos = i + 1
-        return s
+        start = pos; end = i; pos = i + 1
+        return true
       }
-      if (keep) spill.write(buf, pos, lim - pos)
-      pos = lim
+      val n = lim - pos
+      if (n == b.length) bytes = util.Arrays.copyOf(b, 2 * n)
+      else if (pos > 0) System.arraycopy(b, pos, b, 0, n)
+      pos = 0
+      lim = n
+      i = n
+      val read = in.read(bytes, n, bytes.length - n)
+      if (read <= 0) {
+        if (n == 0) return false
+        start = 0; end = n; pos = n
+        return true
+      }
+      lim += read
     }
-    null // unreachable
+    false // unreachable
   }
 
   override def close(): Unit = in.close()

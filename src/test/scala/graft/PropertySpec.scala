@@ -26,10 +26,12 @@ class PropertySpec extends SparkTestBase {
   test("short_host_id derivation is total and matches the reference model on arbitrary keys") {
     // Arbitrary partition keys: printable junk, with and without ':'
     // segments and task// instance/ prefixes, empty segments included.
+    // Non-ASCII segments put byte and char offsets in different places.
     val seg = Gen.oneOf(
       Gen.alphaNumStr.map(_.take(8)),
       Gen.const(""),
-      Gen.oneOf("task/x", "instance/y", "task/", "instance/", "a.b.c.d"))
+      Gen.oneOf("task/x", "instance/y", "task/", "instance/", "a.b.c.d"),
+      Gen.oneOf("task/é", "ü:instance/ß", "中:task/", "instance/中文", "é"))
     val keyGen = for {
       n <- Gen.choose(1, 4)
       segs <- Gen.listOfN(n, seg)

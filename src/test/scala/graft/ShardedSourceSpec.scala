@@ -533,4 +533,50 @@ class ShardedSourceSpec extends SparkTestBase {
     assert(p.line == 2048L && p.offset == want, p)
     assert(seqsOf(p) == (2500L until 3400L))
   }
+
+  /** Reads every line of one shard file holding `body` through the slice
+    * reader; the reader closes at the end or on a failure.
+    */
+  private def readAll(body: String, n: Int): Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+    val r = tmp("graft-shards-bytes")
+    val shard = Files.createDirectories(Paths.get(r, "shard_id=s1"))
+    Files.write(shard.resolve("part-00000.txt"), body.getBytes("UTF-8"))
+    val reader = new ShardSliceReader(ShardSlice(r, "s1", 0L, n.toLong))
+    try (1 to n).map { _ => assert(reader.next()); reader.get().copy() }
+    finally reader.close()
+  }
+
+  test("the slice reader parses every field from bytes as the split model does") {
+    val odd = Seq(
+      s"0\t-1\t-1700000000000000\t-42\tclick\tNaN\t\\N",
+      s"1\t${Long.MaxValue}\t${Long.MinValue}\t${Long.MaxValue}\tview\tInfinity\t",
+      "2\t3\t4\t5\tclick\t-0.0\t{\"a\":1}\tx\t\ty",
+      "3\t4\t5\t6\tклик\t1e-05\t{\"k\":\"é中\"}",
+      "4\t5\t6\t7\tbuy\t1.0E-5\t-Infinity",
+      "5\t6\t7\t8\tbuy\t+1.5\t\\N\t",
+      "6\t+7\t007\t0\tbuy\t0\t\\n")
+    // Short lines past the 64 KiB buffer's end, a line longer than the
+    // buffer, and a last line without its '\n'.
+    val filler = (0 until 4000).map(i => s"""${7 + i}\t${i * 37}\t${i * 1000L}\t${i % 9}\te\t${i / 7.0}\t{"i":$i}""")
+    val long = s"4007\t1\t2\t3\tbig\t2.5\t${"é" * 40000}"
+    val all = odd ++ filler :+ long :+ "4008\t9\t9\t9\tlast\t1\tno-newline"
+    val rows = readAll(all.mkString("\n"), all.size)
+    all.zip(rows).foreach { case (line, row) =>
+      val p = line.split("\t", 7) // the model
+      assert(row.getUTF8String(0).toString == "s1")
+      for (i <- 0 until 4) assert(row.getLong(i + 1) == p(i).toLong, line)
+      assert(row.getUTF8String(5).toString == p(4), line)
+      assert(java.lang.Double.doubleToLongBits(row.getDouble(6)) ==
+        java.lang.Double.doubleToLongBits(p(5).toDouble), line)
+      if (p(6) == "\\N") assert(row.isNullAt(7), line)
+      else assert(row.getUTF8String(7).toString == p(6), line)
+    }
+  }
+
+  test("a line with six fields or an empty number fails, naming the line") {
+    for (bad <- Seq("0\t1\t2\t3\tclick\t1.0", "0\t\t2\t3\tclick\t1.0\t\\N")) {
+      val e = intercept[IllegalArgumentException](readAll(bad + "\n", 1))
+      assert(e.getMessage.contains(bad), e.getMessage)
+    }
+  }
 }

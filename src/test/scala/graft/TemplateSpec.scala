@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr, lit, timestamp_micros}
 import graft.functions.Template
 
 /** Template compiler contract (reference `main.go:103-114` parse-time
@@ -295,5 +295,40 @@ class TemplateSpec extends SparkTestBase {
         fields).as("l")).as[String].collect()
     assert(lines(0) ==
       "2024-01-01 10:00:00 +0000 UTC|2024-01-01 10:00:00 +0000 UTC|at 2024-01-01 10:00:00 +0000 UTC end")
+  }
+
+  test("{{.Timestamp}} renders in UTC whatever the session time zone") {
+    val key = "spark.sql.session.timeZone"
+    val zone = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try {
+      val line = spark.range(1).select(Template.compile("{{.Timestamp}}",
+        Map("Timestamp" -> timestamp_micros(lit(1704067200000000L)))).as("l")).as[String].head()
+      assert(line == "2024-01-01 00:00:00 +0000 UTC") // 2024-01-01T00:00:00Z
+    } finally spark.conf.set(key, zone)
+  }
+
+  test("graft_go_time == cast(ts as string) + ' +0000 UTC' at the edges, under UTC") {
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    val us = Seq(0L, -1L, 1L, 999999L, 1000000L, 100000L,
+      1709251199999999L, // 2024-02-29T23:59:59.999999
+      -62135596800000000L, // 0001-01-01
+      253402300799999999L, // 9999-12-31T23:59:59.999999
+      -62135596800000000L - 86400L * 1000000L, // 0000-12-31, year 0
+      253402300800000000L) // 10000-01-01
+    val ts = us.toDF("us").select(timestamp_micros(col("us")).as("ts"))
+    // A local relation folds the projection (interpreted eval); the
+    // exchange makes the second frame run generated code.
+    for (df <- Seq(ts, ts.repartition(2)); t <- Seq("ts", "cast(ts as timestamp_ntz)")) {
+      val got = df.select(expr(s"graft_go_time($t)"), expr(s"concat(cast($t as string), ' +0000 UTC')"))
+        .as[(String, String)].collect()
+      assert(got.length == us.length)
+      got.foreach { case (g, want) => assert(g == want, t) }
+    }
+    // A null ts empties the whole action, suffix included.
+    val nulls = Seq(Option.empty[Long]).toDF("us").select(timestamp_micros(col("us")).as("ts"))
+    assert(nulls.select(expr("graft_go_time(ts)")).head().isNullAt(0))
+    assert(nulls.select(Template.compile("[{{.Timestamp}}]", Map("Timestamp" -> col("ts"))))
+      .as[String].head() == "[]")
   }
 }
