@@ -18,10 +18,22 @@ object Harness {
   def cpus(default: Int): Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(default)
 
+  /** Spark 4.1 isolates each session's artifacts by default: every
+    * session, a streaming query's clone included, gets its own executor
+    * class loader, so each query compiles its codegen stages again with a
+    * cold JIT. The engine adds no JARs, files or classes to a session, so
+    * isolation only throws compiled code away. [[session]] sets this pair
+    * and `Tail.run` sets it on a caller's session that does not set the
+    * key itself.
+    */
+  private[graft] val NoArtifactIsolation: (String, String) =
+    "spark.sql.artifact.isolation.enabled" -> "false"
+
   /** The engine session: UTC session time zone, no UI, the
-    * [[graft.plans.GraftExtensions]] rules (the ns-timestamp pushdown)
-    * and WARN logging. `warehouse` sets `spark.sql.warehouse.dir` for the
-    * tools that write catalog tables.
+    * [[graft.plans.GraftExtensions]] rules (the ns-timestamp pushdown),
+    * no artifact isolation ([[NoArtifactIsolation]]) and WARN logging.
+    * `warehouse` sets `spark.sql.warehouse.dir` for the tools that write
+    * catalog tables.
     */
   def session(cpus: Int, warehouse: Option[String] = None): SparkSession =
     session(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus, warehouse)
@@ -34,6 +46,7 @@ object Harness {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config(NoArtifactIsolation._1, NoArtifactIsolation._2)
     warehouse.foreach(b.config("spark.sql.warehouse.dir", _))
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

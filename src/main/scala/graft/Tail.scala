@@ -44,7 +44,8 @@ import graft.streaming.LocalCheckpointFileManager
   *   - missing stream / extra positional → exit 2 (`main.go:117-129`)
   *   - unreadable stream (the reference's ListShards failure) → exit 1
   *     (`main.go:153-156`); so does a stream whose query fails (a
-  *     malformed or truncated shard), with the cause on stderr
+  *     malformed or truncated shard), or a one-shot drain that has not
+  *     finished after 600 s, with the cause on stderr
   *   - SIGINT during watch → graceful drain then exit (`main.go:180-208`),
   *     as a shutdown hook stopping the streaming query
   */
@@ -186,11 +187,16 @@ object Tail {
               return 1
             }
             val s = spark()
-            // Unless the session names a manager, the scratch checkpoint
-            // below gets the one that never forks a process.
-            if (s.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
-              s.conf.set(LocalCheckpointFileManager.ClassKey,
-                classOf[LocalCheckpointFileManager].getName)
+            // A key the session sets stays as it is. Otherwise the scratch
+            // checkpoint below gets the manager that never forks a process,
+            // and the query keeps the JVM's compiled code instead of
+            // compiling its stages again in a class loader of its own.
+            // `getAll` holds only the keys set; `getOption` would read
+            // isolation's default `true`.
+            def setUnlessSet(kv: (String, String)): Unit =
+              if (!s.conf.getAll.contains(kv._1)) s.conf.set(kv._1, kv._2)
+            setUnlessSet(LocalCheckpointFileManager.ClassKey -> classOf[LocalCheckpointFileManager].getName)
+            setUnlessSet(Harness.NoArtifactIsolation)
             val rendered = EnvelopeOps.envelope(
               ShardedEvents.readStream(s, streamDir,
                 startTimestampUs = Some(startUs),
@@ -218,7 +224,11 @@ object Tail {
               val q = (if (o.oneShot) writer.trigger(Trigger.AvailableNow())
                 else writer.trigger(Trigger.ProcessingTime(pollUs / 1000L))).start()
               if (o.oneShot) {
-                if (!q.awaitTermination(600000L)) { q.stop(); return 1 }
+                if (!q.awaitTermination(600000L)) {
+                  err.println(s"Failed to read stream $streamDir: one-shot drain did not finish within 600 s")
+                  q.stop()
+                  return 1
+                }
                 0
               } else {
                 // Graceful shutdown on SIGINT/SIGTERM: stop the query so the
@@ -244,21 +254,25 @@ object Tail {
   }
 
   /** One partition's rows of a single string column as one block: per
-    * row, its UTF-8 length (-1 for null) and its bytes.
+    * row, its UTF-8 length (-1 for null) and its bytes. A named function
+    * object, not a lambda: `submitJob`'s `ClosureCleaner` would otherwise
+    * read `Tail$`'s bytecode on every job.
     */
-  private val renderBlock: Iterator[InternalRow] => Array[Byte] = rows => {
-    val bytes = new ByteArrayOutputStream(1 << 16)
-    val data = new DataOutputStream(bytes)
-    rows.foreach { r =>
-      if (r.isNullAt(0)) data.writeInt(-1)
-      else {
-        val s = r.getUTF8String(0)
-        data.writeInt(s.numBytes())
-        s.writeTo(data)
+  private object RenderBlock extends (Iterator[InternalRow] => Array[Byte]) with Serializable {
+    def apply(rows: Iterator[InternalRow]): Array[Byte] = {
+      val bytes = new ByteArrayOutputStream(1 << 16)
+      val data = new DataOutputStream(bytes)
+      rows.foreach { r =>
+        if (r.isNullAt(0)) data.writeInt(-1)
+        else {
+          val s = r.getUTF8String(0)
+          data.writeInt(s.numBytes())
+          s.writeTo(data)
+        }
       }
+      data.flush()
+      bytes.toByteArray
     }
-    data.flush()
-    bytes.toByteArray
   }
 
   private def printBlock(block: Array[Byte], out: PrintStream): Unit = {
@@ -291,7 +305,7 @@ object Tail {
     var held, peak = 0
     def submit(w: Int): Unit = if (w < jobs.length) {
       val lo = w * window
-      val job = sc.submitJob(rows, renderBlock, lo until math.min(n, lo + window),
+      val job = sc.submitJob(rows, RenderBlock, lo until math.min(n, lo + window),
         (k: Int, block: Array[Byte]) => slots.synchronized {
           slots(lo + k) = block
           held += 1

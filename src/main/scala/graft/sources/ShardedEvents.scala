@@ -208,7 +208,7 @@ object ShardedEvents {
       long(b, t1 + 1, t2), // TimestampType = micros since epoch
       long(b, t2 + 1, t3),
       UTF8String.fromBytes(util.Arrays.copyOfRange(b, t3 + 1, t4)),
-      java.lang.Double.parseDouble(new String(b, t4 + 1, t5 - t4 - 1, UTF_8)),
+      double(b, t4 + 1, t5),
       props))
     catch {
       case e: NumberFormatException => throw malformed(b, start, end, e.getMessage)
@@ -239,6 +239,41 @@ object ShardedEvents {
       i += 1
     }
     if (neg) -v else v
+  }
+
+  /** Exact powers of ten: 1e0 to 1e22 are each one double. */
+  private val Pow10 = Array.tabulate(23)(k => s"1e$k".toDouble)
+
+  /** The double in `b[from, until)`, as `Double.parseDouble` reads it. A
+    * plain decimal, `-?d+(.d+)?`, of at most 15 significant digits and at
+    * most 22 fraction digits is `mantissa / 10^scale`: both are exact
+    * doubles, so the one division rounds correctly, as `parseDouble` does.
+    * Anything else (an exponent, more digits, `NaN`, `Infinity`) is
+    * `parseDouble` of the text.
+    */
+  private[graft] def double(b: Array[Byte], from: Int, until: Int): Double = {
+    val neg = from < until && b(from) == '-'
+    val digits = if (neg) from + 1 else from
+    var i = digits
+    var m = 0L
+    var sig = 0
+    var dot = -1
+    while (i < until && sig <= 15 &&
+        (b(i) >= '0' && b(i) <= '9' || b(i) == '.' && dot < 0 && i > digits)) {
+      if (b(i) == '.') dot = i
+      else {
+        if (m != 0 || b(i) != '0') sig += 1
+        m = m * 10 + (b(i) - '0')
+      }
+      i += 1
+    }
+    val scale = if (dot < 0) 0 else until - dot - 1
+    if (i < until || i == digits || sig > 15 || scale == 0 && dot >= 0 || scale > 22)
+      java.lang.Double.parseDouble(new String(b, from, until - from, UTF_8))
+    else {
+      val v = m / Pow10(scale)
+      if (neg) -v else v
+    }
   }
 
   private def malformed(b: Array[Byte], start: Int, end: Int, why: String) =

@@ -32,6 +32,12 @@ class HarnessSpec extends SparkTestBase {
     assert(sites.isEmpty, s"SparkSession.builder outside Harness.scala: ${sites.mkString(", ")}")
   }
 
+  test("the engine session keeps compiled code across sessions: artifact isolation is off") {
+    val (key, off) = Harness.NoArtifactIsolation
+    assert(off == "false")
+    assert(spark.conf.get(key) == off)
+  }
+
   test("no file in src/main drains serially through toLocalIterator") {
     // One job per partition, one after another: Tail.drainOrdered's
     // parallel, ordered drain replaced it.

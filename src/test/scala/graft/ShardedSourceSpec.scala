@@ -573,6 +573,38 @@ class ShardedSourceSpec extends SparkTestBase {
     }
   }
 
+  test("the byte-level value parse is bit-equal to Double.parseDouble") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val digits = (n: Int) => Gen.listOfN(n, Gen.numChar).map(_.mkString)
+    // Plain decimals around the fast path's limits: up to 17 integer and
+    // 24 fraction digits, leading zeros and a sign included.
+    val plain = for {
+      sign <- Gen.oneOf("", "-")
+      whole <- Gen.choose(1, 17).flatMap(digits)
+      frac <- Gen.choose(0, 24).flatMap(n => if (n == 0) Gen.const("") else digits(n).map("." + _))
+    } yield sign + whole + frac
+    val rendered = Gen.oneOf(
+      org.scalacheck.Arbitrary.arbitrary[Double].map(_.toString),
+      Gen.choose(0.0, 500.0).map(v => (math.round(v * 100) / 100.0).toString))
+    val edges = Seq("-0.0", "0", "-0", "0.1", "0.2", "0.30000000000000004",
+      "123456789012345", "1234567890123456", "999999999999999", "9999999999999999",
+      "9007199254740993", "0.123456789012345", "0.1234567890123456",
+      "10000000000000000000000", "1e22", "1e23", "0.0000000000000000000001",
+      "0.00000000000000000000001", "1.0E-5", "1e-05", "NaN", "-NaN", "Infinity",
+      "-Infinity", "1.", ".5", "-.5", "+1.5", "1.2.3", "1-2", "-", "", " 1", "1d")
+    val inputs = edges ++ (0 until 3000).map(i =>
+      Gen.frequency(3 -> plain, 1 -> rendered).apply(Gen.Parameters.default, Seed(600L + i)).get)
+    def parsed(f: => Double): Either[String, Long] =
+      try Right(java.lang.Double.doubleToRawLongBits(f))
+      catch { case e: NumberFormatException => Left(e.getClass.getName) }
+    inputs.foreach { text =>
+      val b = s"x$text\t".getBytes("UTF-8") // the field sits inside a line
+      assert(parsed(ShardedEvents.double(b, 1, b.length - 1)) ==
+        parsed(java.lang.Double.parseDouble(text)), s"'$text'")
+    }
+  }
+
   test("a line with six fields or an empty number fails, naming the line") {
     for (bad <- Seq("0\t1\t2\t3\tclick\t1.0", "0\t\t2\t3\tclick\t1.0\t\\N")) {
       val e = intercept[IllegalArgumentException](readAll(bad + "\n", 1))

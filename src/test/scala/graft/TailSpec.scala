@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.commons.lang3.exception.ExceptionUtils
 import org.apache.spark.TaskContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
@@ -141,6 +142,36 @@ class TailSpec extends SparkTestBase {
     val (c2, out2, _) = tailOn(named, nowAfterAllData, "-O", "-s", "20000d", streamRoot)
     assert(c2 == 0 && out2.split("\n").length == out1.split("\n").length)
     assert(named.conf.get(key) == fsManager)
+  }
+
+  /** Janino compilations in this JVM so far. */
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("a second one-shot run on one session prints the same lines and compiles no class") {
+    val s = spark.newSession()
+    s.conf.unset(Harness.NoArtifactIsolation._1) // a caller's session that does not set it
+    val (c1, out1, _) = tailOn(s, nowAfterAllData, "-O", "-s", "20000d", streamRoot)
+    val before = compiles()
+    val (c2, out2, _) = tailOn(s, nowAfterAllData, "-O", "-s", "20000d", streamRoot)
+    assert(c1 == 0 && c2 == 0 && out1.nonEmpty)
+    assert(out2 == out1)
+    assert(compiles() - before == 0, "the second run compiled its stages again")
+  }
+
+  test("Tail turns artifact isolation off unless the session sets the key") {
+    val (key, off) = Harness.NoArtifactIsolation
+    val fresh = spark.newSession()
+    fresh.conf.unset(key)
+    assert(!fresh.conf.getAll.contains(key) && fresh.conf.get(key) == "true") // Spark's default
+    val (c1, out1, _) = tailOn(fresh, nowAfterAllData, "-O", "-s", "20000d", streamRoot)
+    assert(c1 == 0 && out1.nonEmpty)
+    assert(fresh.conf.get(key) == off)
+
+    val named = spark.newSession()
+    named.conf.set(key, "true")
+    val (c2, out2, _) = tailOn(named, nowAfterAllData, "-O", "-s", "20000d", streamRoot)
+    assert(c2 == 0 && out2 == out1)
+    assert(named.conf.get(key) == "true")
   }
 
   test("one-shot honors -start as the AT_TIMESTAMP offset") {
