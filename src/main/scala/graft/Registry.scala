@@ -11,6 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * tables, and the same text is the oracle. A separate `duck` text is only
   * for a real dialect difference (`::BIGINT`, `<<`, `//`).
   *
+  * An oracle stage that two or more queries use is one named fragment: a
+  * `|`-margin string beside the queries (`nearDupLabelsCte`,
+  * `centroidAssignCte`), parameterized only where the uses differ and
+  * interpolated into each oracle text before [[Q.oneLine]] strips it.
+  * `HarnessSpec` fails when 8 margin lines are pasted into two entries.
+  *
   * Determinism contract (SURVEY.md §7): every oracled query ends in a
   * total-order ORDER BY; float aggregates are rounded or computed in
   * DECIMAL; timestamps are emitted as TIMESTAMP_NTZ so both engines write

@@ -810,8 +810,8 @@ object LlmOps {
     when(bucket < 80, "train").when(bucket < 90, "validation").otherwise("test")
 
   /** CTE list computing the exact J ≥ 0.9 same-source near-dup pairs as
-    * `nd(doc_id1, doc_id2, jaccard)` — shared by the pair oracle (i2/i14)
-    * and the cluster-resolution oracle (i15).
+    * `nd(doc_id1, doc_id2, jaccard)` — shared by the pair oracle (i2/i14),
+    * [[nearDupLabelsCte]], i36 and the graph oracles (i74, i79, i82, i83).
     */
   private val nearDupPairsCte: String =
     """dtok AS (
@@ -829,6 +829,45 @@ object LlmOps {
       |   SELECT doc_id1, doc_id2,
       |     round(inter * 1.0 / (n1 + n2 - inter), 3) AS jaccard
       |   FROM pairs WHERE inter * 1.0 / (n1 + n2 - inter) >= 0.9)"""
+
+  /** Min-label connected components over `edges(s, d)`: `reach` pairs
+    * every node with each id it reaches, and `lbl(v, canon)` keeps the
+    * least — the exact transitive closure (needs `WITH RECURSIVE`) that
+    * the text and embedding dedup oracles check the star-contraction
+    * resolver against.
+    */
+  private[operators] def ccLabelCte(v: String, canon: String): String =
+    s"""reach($v, r) AS (
+      |   SELECT DISTINCT s, s FROM edges
+      |   UNION
+      |   SELECT e.d, re.r FROM reach re JOIN edges e ON e.s = re.$v),
+      | lbl AS (SELECT $v, min(r) AS $canon FROM reach GROUP BY $v)"""
+
+  /** [[nearDupPairsCte]] resolved to components: `lbl(doc_id, canon_id)`
+    * over the undirected `nd` graph — the shared front of every
+    * near-dup cluster oracle (i15, i18, i31, i32, i45, i66, i80, i84).
+    */
+  private val nearDupLabelsCte: String =
+    s"""$nearDupPairsCte,
+      | edges AS (
+      |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
+      |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
+      | ${ccLabelCte("doc_id", "canon_id")}"""
+
+  /** The token stats behind the shared doc quality score
+    * ([[PipelineOps.docTokQuality]]) as SELECT-list lines: whitespace
+    * tokens, distinct tokens and stopwords of `text`.
+    */
+  private[operators] val tokStatCols: String =
+    """len(string_split(text,' '))::BIGINT AS n_tok,
+      |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
+      |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop"""
+
+  /** `st(key, n_tok, n_uniq, n_stop)`: [[tokStatCols]] per document. */
+  private[operators] def tokStatsCte(key: String): String =
+    s"""st AS (SELECT $key,
+      |     $tokStatCols
+      |   FROM documents)"""
 
   /** DuckDB form of the exact J ≥ 0.9 same-source near-dup (UNFILTERED —
     * any lossless candidate filter on the Spark side must reproduce it).
@@ -915,15 +954,7 @@ object LlmOps {
     // independent of the contraction schedule.
     Q("i15_dedup_clusters",
       (s, dir) => nearDupClusters(nearDupPairs(t(s, dir, "documents"))),
-      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
-                  | edges AS (
-                  |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
-                  |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
-                  | reach(doc_id, r) AS (
-                  |   SELECT DISTINCT s, s FROM edges
-                  |   UNION
-                  |   SELECT e.d, re.r FROM reach re JOIN edges e ON e.s = re.doc_id),
-                  | lbl AS (SELECT doc_id, min(r) AS canon_id FROM reach GROUP BY doc_id),
+      Some(oneLine(s"""WITH RECURSIVE $nearDupLabelsCte,
                   | cs AS (SELECT canon_id, count(*) AS cluster_size FROM lbl GROUP BY canon_id)
                   | SELECT l.doc_id, l.canon_id, c.cluster_size
                   | FROM lbl l JOIN cs c ON l.canon_id = c.canon_id
@@ -945,15 +976,7 @@ object LlmOps {
           .select(col("doc_id"), col("source"), col("lang"))
           .orderBy("doc_id")
       },
-      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
-                  | edges AS (
-                  |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
-                  |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
-                  | reach(doc_id, r) AS (
-                  |   SELECT DISTINCT s, s FROM edges
-                  |   UNION
-                  |   SELECT e.d, re.r FROM reach re JOIN edges e ON e.s = re.doc_id),
-                  | lbl AS (SELECT doc_id, min(r) AS canon_id FROM reach GROUP BY doc_id)
+      Some(oneLine(s"""WITH RECURSIVE $nearDupLabelsCte
                   | SELECT doc_id, source, lang FROM documents
                   | WHERE doc_id NOT IN (SELECT doc_id FROM lbl WHERE doc_id <> canon_id)
                   | ORDER BY doc_id"""))),
@@ -988,20 +1011,8 @@ object LlmOps {
           .select(col("doc_id"), col("source"), col("lang"))
           .orderBy("doc_id")
       },
-      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
-                  | edges AS (
-                  |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
-                  |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
-                  | reach(doc_id, r) AS (
-                  |   SELECT DISTINCT s, s FROM edges
-                  |   UNION
-                  |   SELECT e.d, re.r FROM reach re JOIN edges e ON e.s = re.doc_id),
-                  | lbl AS (SELECT doc_id, min(r) AS canon_id FROM reach GROUP BY doc_id),
-                  | st AS (SELECT doc_id,
-                  |     len(string_split(text,' '))::BIGINT AS n_tok,
-                  |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
-                  |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
-                  |   FROM documents),
+      Some(oneLine(s"""WITH RECURSIVE $nearDupLabelsCte,
+                  | ${tokStatsCte("doc_id")},
                   | qq AS (SELECT doc_id,
                   |     round(least(n_tok/100.0, 1.0)*0.4 + (n_uniq/n_tok)*0.3 + (1.0 - n_stop/n_tok)*0.3, 3) AS quality
                   |   FROM st),
@@ -1035,15 +1046,7 @@ object LlmOps {
           .select(col("doc_id"), col("source"), col("lang"))
           .orderBy("doc_id")
       },
-      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
-                  | edges AS (
-                  |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
-                  |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
-                  | reach(doc_id, r) AS (
-                  |   SELECT DISTINCT s, s FROM edges
-                  |   UNION
-                  |   SELECT e.d, re.r FROM reach re JOIN edges e ON e.s = re.doc_id),
-                  | lbl AS (SELECT doc_id, min(r) AS canon_id FROM reach GROUP BY doc_id),
+      Some(oneLine(s"""WITH RECURSIVE $nearDupLabelsCte,
                   | ranked AS (
                   |   SELECT doc_id,
                   |     row_number() OVER (PARTITION BY canon_id ORDER BY doc_id) AS rn
@@ -1083,15 +1086,7 @@ object LlmOps {
             when(coalesce(col("rnk"), lit(1)) <= 2, 1L).otherwise(0L).as("kept"))
           .orderBy("doc_id")
       },
-      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
-                  | edges AS (
-                  |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
-                  |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
-                  | reach(doc_id, r) AS (
-                  |   SELECT DISTINCT s, s FROM edges
-                  |   UNION
-                  |   SELECT e.d, re.r FROM reach re JOIN edges e ON e.s = re.doc_id),
-                  | lbl AS (SELECT doc_id, min(r) AS canon_id FROM reach GROUP BY doc_id),
+      Some(oneLine(s"""WITH RECURSIVE $nearDupLabelsCte,
                   | ranked AS (
                   |   SELECT doc_id, canon_id,
                   |     row_number() OVER (PARTITION BY canon_id ORDER BY doc_id) AS rnk,
@@ -1130,11 +1125,7 @@ object LlmOps {
                   |     AND doc_id2 NOT IN (SELECT doc_id FROM crossm)),
                   | edges AS (SELECT doc_id1 AS s, doc_id2 AS d FROM bi
                   |   UNION ALL SELECT doc_id2, doc_id1 FROM bi),
-                  | reach(v, r) AS (
-                  |   SELECT DISTINCT s, s FROM edges
-                  |   UNION
-                  |   SELECT e.d, re.r FROM reach re JOIN edges e ON e.s = re.v),
-                  | lbl AS (SELECT v, min(r) AS canon FROM reach GROUP BY v),
+                  | ${ccLabelCte("v", "canon")},
                   | sz AS (SELECT doc_id, min(source) AS source, min(n_tok) AS n_tok
                   |   FROM dtok GROUP BY doc_id)
                   | SELECT doc_id, source, n_tok FROM sz
@@ -1152,15 +1143,7 @@ object LlmOps {
     // arithmetic, fp-group windows, and the recursive-CC membership.
     Q("i45_delete_cascade",
       (s, dir) => deleteCascade(t(s, dir, "documents")).orderBy("doc_id"),
-      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
-                  | edges AS (
-                  |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
-                  |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
-                  | reach(doc_id, r) AS (
-                  |   SELECT DISTINCT s, s FROM edges
-                  |   UNION
-                  |   SELECT e.d, re.r FROM reach re JOIN edges e ON e.s = re.doc_id),
-                  | lbl AS (SELECT doc_id, min(r) AS canon_id FROM reach GROUP BY doc_id),
+      Some(oneLine(s"""WITH RECURSIVE $nearDupLabelsCte,
                   | base AS (SELECT doc_id, md5(text) AS fp,
                   |     greatest(len(string_split(text, ' ')) - 4, 0)::BIGINT AS n_grams,
                   |     (CASE WHEN ('0x' || substr(md5('del:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 5
@@ -1578,15 +1561,7 @@ object LlmOps {
           .select(col("cluster_size"), col("n_clusters"),
             ((col("cluster_size") - 1) * col("n_clusters")).as("dup_docs"))
           .orderBy("cluster_size"),
-      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
-                  | edges AS (
-                  |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
-                  |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
-                  | reach(doc_id, r) AS (
-                  |   SELECT DISTINCT s, s FROM edges
-                  |   UNION
-                  |   SELECT e.d, re.r FROM reach re JOIN edges e ON e.s = re.doc_id),
-                  | lbl AS (SELECT doc_id, min(r) AS canon_id FROM reach GROUP BY doc_id),
+      Some(oneLine(s"""WITH RECURSIVE $nearDupLabelsCte,
                   | cs AS (SELECT canon_id, count(*) AS cluster_size FROM lbl GROUP BY canon_id)
                   | SELECT cluster_size, count(*)::BIGINT AS n_clusters,
                   |   CAST((cluster_size - 1) * count(*) AS BIGINT) AS dup_docs
@@ -1732,21 +1707,9 @@ object LlmOps {
               - col("sum_qm") / col("n_docs")) / 1000.0, 4).as("shift"))
           .orderBy("source")
       },
-      Some(oneLine(s"""WITH RECURSIVE $nearDupPairsCte,
-                 | edges AS (
-                 |   SELECT doc_id1 AS s, doc_id2 AS d FROM nd
-                 |   UNION ALL SELECT doc_id2, doc_id1 FROM nd),
-                 | reach(doc_id, r) AS (
-                 |   SELECT DISTINCT s, s FROM edges
-                 |   UNION
-                 |   SELECT e.d, re.r FROM reach re JOIN edges e ON e.s = re.doc_id),
-                 | lbl AS (SELECT doc_id, min(r) AS canon_id FROM reach GROUP BY doc_id),
+      Some(oneLine(s"""WITH RECURSIVE $nearDupLabelsCte,
                  | drp AS (SELECT doc_id FROM lbl WHERE doc_id <> canon_id),
-                 | st AS (SELECT doc_id,
-                 |     len(string_split(text,' '))::BIGINT AS n_tok,
-                 |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
-                 |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
-                 |   FROM documents),
+                 | ${tokStatsCte("doc_id")},
                  | qq AS (SELECT doc_id,
                  |     CAST(round(round(least(n_tok/100.0, 1.0)*0.4 + (n_uniq/n_tok)*0.3
                  |       + (1.0 - n_stop/n_tok)*0.3, 3) * 1000) AS BIGINT) AS qm

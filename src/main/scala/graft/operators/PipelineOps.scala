@@ -259,15 +259,16 @@ object PipelineOps {
     * vec_id<8 codebook), `adot` (6dp-rounded dot per vector x centroid),
     * `assigned` (smallest-cid argmax winner): the SQL twin of
     * [[assignToCentroids]], interpolated verbatim into the i10/i20/i23/
-    * i24 oracles so the assignment contract has exactly ONE SQL source.
+    * i24/i42 oracles (and over i43's `corpus`) so the assignment contract
+    * has exactly ONE SQL source.
     */
-  private def centroidAssignCte(k: String = "8"): String =
-    s"""cent AS (SELECT vec_id AS cid, embedding AS cemb FROM embeddings WHERE vec_id < $k),
+  private def centroidAssignCte(k: String = "8", from: String = "embeddings"): String =
+    s"""cent AS (SELECT vec_id AS cid, embedding AS cemb FROM $from WHERE vec_id < $k),
       | adot AS (
       |   SELECT vec_id, cid, round(sum(p), 6) AS cd
       |   FROM (SELECT e.vec_id, c.cid,
       |           unnest(e.embedding)::DOUBLE * unnest(c.cemb)::DOUBLE AS p
-      |         FROM embeddings e, cent c)
+      |         FROM $from e, cent c)
       |   GROUP BY 1, 2),
       | assigned AS (
       |   SELECT vec_id, cid FROM (
@@ -314,6 +315,232 @@ object PipelineOps {
       |     SELECT qid, vec_id, sim,
       |       row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rank
       |     FROM sims) WHERE rank <= $topk)"""
+
+  /** `name(qid, vec_id, sim)`: the 3dp cosine of every query in `q`
+    * against every embedding — the exact side of the recall oracles.
+    */
+  private def exsimsCte(name: String = "exsims"): String =
+    s"""$name AS (
+      |   SELECT qid, vec_id, round(sum(p), 3) AS sim
+      |   FROM (SELECT q.qid, e.vec_id,
+      |           unnest(e.embedding)::DOUBLE * unnest(q.qemb)::DOUBLE AS p
+      |         FROM embeddings e, q)
+      |   GROUP BY 1, 2)"""
+
+  /** `name(cols)`: each query's top `k` of `sims` by (sim desc, vec_id). */
+  private def exactTopCte(name: String, cols: String, sims: String, k: Int): String =
+    s"""$name AS (SELECT $cols FROM (
+      |     SELECT qid, vec_id,
+      |       row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn
+      |     FROM $sims) WHERE rn <= $k)"""
+
+  /** The query batch's exact top 10 `(qid, vec_id, xr)` and its depth-10
+    * IVF ranking `(qid, vec_id, ir)` — the two rankings i86 and i91
+    * compare.
+    */
+  private def exactAndIvfTop10(emb: DataFrame): (DataFrame, DataFrame) = {
+    val queries = queryBatch(emb, ivfParams.nQueries)
+    val exact = emb.crossJoin(broadcast(queries))
+      .select(col("qid"), col("vec_id"),
+        round(VectorFunctions.dot(col("embedding"), col("qemb")), 3).as("sim"))
+      .withColumn("xr", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))))
+      .filter(col("xr") <= 10).select(col("qid"), col("vec_id"), col("xr"))
+    val ivf = annBatchTop3(emb, stubCodebook(emb, ivfParams.k),
+        queries, ivfParams.nprobe, topK = 10)
+      .select(col("qid"), col("vec_id"), col("rank").as("ir"))
+    (exact, ivf)
+  }
+
+  /** The i20 pipeline at depth 10 as `ivf(qid, rank, vec_id, sim)` beside
+    * the exact top 10 `exact(qid, vec_id, xr)` — the SQL twin of
+    * [[exactAndIvfTop10]] (i86, i91).
+    */
+  private val exactAndIvfTop10Cte: String =
+    s"""${annBatchCteK(10)},
+      | ${exsimsCte()},
+      | ${exactTopCte("exact", "qid, vec_id, rn AS xr", "exsims", 10)}"""
+
+  /** i10's single-query IVF top 10; `filter`, a margin line closing the
+    * candidate subquery, restricts the candidates (i65).
+    */
+  private def ivfTop10Oracle(filter: String): String = oneLine(
+    s"""WITH q AS (SELECT embedding AS qemb FROM embeddings WHERE vec_id = 0),
+      | ${centroidAssignCte()},
+      | probe AS (
+      |   SELECT cid FROM (
+      |     SELECT cid, round(sum(p), 6) AS qd
+      |     FROM (SELECT c.cid, unnest(c.cemb)::DOUBLE * unnest(q.qemb)::DOUBLE AS p
+      |           FROM cent c, q)
+      |     GROUP BY cid)
+      |   ORDER BY qd DESC, cid LIMIT 2),
+      | sims AS (
+      |   SELECT vec_id, round(sum(p), 3) AS sim
+      |   FROM (SELECT e.vec_id, unnest(e.embedding)::DOUBLE * unnest(q.qemb)::DOUBLE AS p
+      |         FROM embeddings e JOIN assigned a ON e.vec_id = a.vec_id
+      |              JOIN probe pr ON a.cid = pr.cid, q$filter)
+      |   GROUP BY vec_id)
+      | SELECT vec_id, sim FROM sims ORDER BY sim DESC, vec_id LIMIT 10""")
+
+  /** `pairs(cols AS i, j, sim)`: every same-cluster pair under `assigned`
+    * with its 3dp cosine (i24, i29).
+    */
+  private def clusterPairsCte(cols: String): String =
+    s"""pairs AS (
+      |   SELECT $cols AS i, b.vec_id AS j,
+      |     round((SELECT sum(x * y) FROM (SELECT
+      |        unnest(ea.embedding)::DOUBLE AS x,
+      |        unnest(eb.embedding)::DOUBLE AS y)), 3) AS sim
+      |   FROM assigned a JOIN assigned b
+      |     ON a.cid = b.cid AND a.vec_id < b.vec_id
+      |   JOIN embeddings ea ON ea.vec_id = a.vec_id
+      |   JOIN embeddings eb ON eb.vec_id = b.vec_id)"""
+
+  /** `name(cid, pos, vq)`: the micro-quantized elements of every `from`
+    * vector under its `assigned` centroid — the Lloyd means input.
+    */
+  private def quantRowsCte(name: String, from: String, assigned: String): String =
+    s"""$name AS (
+      |   SELECT a.cid,
+      |     unnest(range(0, len(e.embedding))) AS pos,
+      |     unnest(list_transform(range(0, len(e.embedding)),
+      |       i -> round(e.embedding[i + 1]::DOUBLE * 1e6)::BIGINT)) AS vq
+      |   FROM $from e JOIN $assigned a ON e.vec_id = a.vec_id)"""
+
+  /** [[centroidAssignCte]] over `from` plus one unrolled Lloyd step: the
+    * quantized means `m1` replace every stub centroid that has members,
+    * giving `cent1(cid, cemb1)` — the SQL twin of [[lloydCodebook]]
+    * (i23b, and i43 over its corpus).
+    */
+  private def lloydStepCte(from: String): String =
+    s"""${centroidAssignCte(from = from)},
+      | ${quantRowsCte("q1", from, "assigned")},
+      | m1 AS (SELECT cid, pos, round(sum(vq)::DOUBLE / count(*))::BIGINT AS mq
+      |   FROM q1 GROUP BY 1, 2),
+      | c0px AS (SELECT cid,
+      |     unnest(range(0, len(cemb))) AS pos,
+      |     unnest(list_transform(range(0, len(cemb)), i -> cemb[i + 1])) AS sv
+      |   FROM cent),
+      | c1px AS (SELECT c0px.cid, c0px.pos,
+      |     CASE WHEN m1.mq IS NULL THEN sv
+      |          ELSE CAST(m1.mq::DOUBLE / 1e6 AS FLOAT) END AS ce
+      |   FROM c0px LEFT JOIN m1 ON c0px.cid = m1.cid AND c0px.pos = m1.pos),
+      | cent1 AS (SELECT cid, list(ce ORDER BY pos) AS cemb1 FROM c1px GROUP BY cid)"""
+
+  /** `assigned(vec_id, cid)`: each `from` vector's argmax centroid in the
+    * one-step codebook `cent1`, over its 6dp dots `dot` (i23b, i43).
+    */
+  private def cent1AssignCte(dot: String, assigned: String, from: String): String =
+    s"""$dot AS (
+      |   SELECT vec_id, cid, round(sum(p), 6) AS cd
+      |   FROM (SELECT e.vec_id, c.cid,
+      |           unnest(e.embedding)::DOUBLE * unnest(c.cemb1)::DOUBLE AS p
+      |         FROM $from e, cent1 c)
+      |   GROUP BY 1, 2),
+      | $assigned AS (
+      |   SELECT vec_id, cid FROM (
+      |     SELECT vec_id, cid,
+      |       row_number() OVER (PARTITION BY vec_id ORDER BY cd DESC, cid) AS rn
+      |     FROM $dot) WHERE rn = 1)"""
+
+  /** `name(vec_id, b, sv)`: the 4 × 16-dim PQ sub-blocks of `from`'s
+    * embeddings (needs `blocks`).
+    */
+  private def pqSubCte(name: String, from: String): String =
+    s"""$name AS (SELECT e.vec_id, b.b,
+      |     list_slice(e.embedding, b.b * 16 + 1, b.b * 16 + 16) AS sv
+      |   FROM $from e, blocks b)"""
+
+  /** L2 argmin of every `sub` sub-block over the per-block codebook
+    * `cents`: `dist` holds the 6dp distances, `assign(vec_id, b, cid)`
+    * the smallest-cid winner — the SQL twin of [[pqAssign]].
+    */
+  private def pqAssignCte(dist: String, assign: String, sub: String, cents: String): String =
+    s"""$dist AS (
+      |   SELECT vec_id, b, cid, round(sum(p), 6) AS d2
+      |   FROM (SELECT s.vec_id, s.b AS b, c.cid,
+      |           unnest(list_transform(range(1, len(s.sv) + 1),
+      |             i -> (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
+      |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
+      |         FROM $sub s JOIN $cents c ON s.b = c.b)
+      |   GROUP BY 1, 2, 3),
+      | $assign AS (
+      |   SELECT vec_id, b, cid FROM (
+      |     SELECT vec_id, b, cid,
+      |       row_number() OVER (PARTITION BY vec_id, b ORDER BY d2, cid) AS rn
+      |     FROM $dist) WHERE rn = 1)"""
+
+  /** The PQ training slice of the i37-family oracles — the SQL twin of
+    * [[pqTrainStep]] then [[pqAssign]]: stub codebook `c0` (vec_id < 8 of
+    * `corpus`), one Lloyd step to `c1` on micro-quantized means, and
+    * `assign2`, the `batch` sub-blocks' codes under `c1`. `p` prefixes
+    * the codebook stage names (i43 keeps the bare ones for its coarse
+    * quantizer).
+    */
+  private def pqTrainCte(p: String, corpus: String, batch: String): String =
+    s"""${p}c0 AS (SELECT b, vec_id AS cid, sv AS cemb FROM $corpus WHERE vec_id < 8),
+      | ${pqAssignCte("d1", "assign1", corpus, s"${p}c0")},
+      | ${p}q1 AS (
+      |   SELECT a.b, a.cid,
+      |     unnest(range(0, len(s.sv))) AS pos,
+      |     unnest(list_transform(range(0, len(s.sv)),
+      |       i -> round(s.sv[i + 1]::DOUBLE * 1e6)::BIGINT)) AS vq
+      |   FROM $corpus s JOIN assign1 a ON s.vec_id = a.vec_id AND s.b = a.b),
+      | ${p}m1 AS (SELECT b, cid, pos, round(sum(vq)::DOUBLE / count(*))::BIGINT AS mq
+      |   FROM ${p}q1 GROUP BY 1, 2, 3),
+      | ${p}c0px AS (SELECT b, cid,
+      |     unnest(range(0, len(cemb))) AS pos,
+      |     unnest(list_transform(range(0, len(cemb)), i -> cemb[i + 1])) AS sv0
+      |   FROM ${p}c0),
+      | ${p}c1px AS (SELECT ${p}c0px.b, ${p}c0px.cid, ${p}c0px.pos,
+      |     CASE WHEN ${p}m1.mq IS NULL THEN sv0
+      |          ELSE CAST(${p}m1.mq::DOUBLE / 1e6 AS FLOAT) END AS ce
+      |   FROM ${p}c0px LEFT JOIN ${p}m1
+      |     ON ${p}c0px.b = ${p}m1.b AND ${p}c0px.cid = ${p}m1.cid AND ${p}c0px.pos = ${p}m1.pos),
+      | ${p}c1 AS (SELECT b, cid, list(ce ORDER BY pos) AS cemb FROM ${p}c1px GROUP BY 1, 2),
+      | ${pqAssignCte("d2t", "assign2", batch, s"${p}c1")}"""
+
+  /** i37's sub-blocks of every embedding and their trained codes
+    * (i37, i39, i42, i44).
+    */
+  private val pqCte: String =
+    s"""blocks AS (SELECT unnest(range(0, 4)) AS b),
+      | ${pqSubCte("sub", "embeddings")},
+      | ${pqTrainCte("", "sub", "sub")}"""
+
+  /** i37's integer-exact output stages over `assign2`: the reconstruction
+    * checksum `erra(vec_id, e2sum)` against codebook `cents`, and the 4
+    * code columns `codes` (i37, i43).
+    */
+  private def pqCodesCte(sub: String, cents: String): String =
+    s"""errp AS (
+      |   SELECT s.vec_id,
+      |     unnest(list_transform(range(1, len(s.sv) + 1),
+      |       i -> round((s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
+      |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE) * 1e12)::BIGINT)) AS q
+      |   FROM $sub s JOIN assign2 a ON s.vec_id = a.vec_id AND s.b = a.b
+      |     JOIN $cents c ON c.b = a.b AND c.cid = a.cid),
+      | erra AS (SELECT vec_id, sum(q)::BIGINT AS e2sum FROM errp GROUP BY vec_id),
+      | codes AS (SELECT vec_id,
+      |     max(CASE WHEN b = 0 THEN cid END)::BIGINT AS code0,
+      |     max(CASE WHEN b = 1 THEN cid END)::BIGINT AS code1,
+      |     max(CASE WHEN b = 2 THEN cid END)::BIGINT AS code2,
+      |     max(CASE WHEN b = 3 THEN cid END)::BIGINT AS code3
+      |   FROM assign2 GROUP BY vec_id)"""
+
+  /** Query 0's ADC lookup table `lutp(b, cid, d2q)` over the trained
+    * codebook `c1` (i39, i42).
+    */
+  private val pqLutCte: String =
+    """qsub AS (SELECT b, sv AS qv FROM sub WHERE vec_id = 0),
+      | lutp AS (
+      |   SELECT b, cid, round(round(sum(p), 6) * 1e6)::BIGINT AS d2q
+      |   FROM (SELECT c.b AS b, c.cid,
+      |           unnest(list_transform(range(1, len(q.qv) + 1),
+      |             i -> (q.qv[i]::DOUBLE - c.cemb[i]::DOUBLE)
+      |                * (q.qv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
+      |         FROM c1 c JOIN qsub q ON c.b = q.b)
+      |   GROUP BY 1, 2)"""
 
   /** The j9 report card over any (doc_id, source, text, n_chars) frame:
     * per source — doc count, token volume, vocabulary size, mean doc
@@ -1707,6 +1934,134 @@ object PipelineOps {
 
   // ------------------------------------------------------------ queries
 
+  // ------------------------------------------- shared text oracle stages
+
+  /** `g(doc_id, pos, gram)`: every 5-token window of each doc's tokens
+    * `tks(doc_id, tk)` (i35, i40, i41).
+    */
+  private val gramsCte: String =
+    """tks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
+      | g AS (SELECT doc_id,
+      |     unnest(range(1, len(tk)-3)) - 1 AS pos,
+      |     unnest(list_transform(range(1, len(tk)-3),
+      |       i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||tk[i+4])) AS gram
+      |   FROM tks)"""
+
+  /** i40's span excision: every token under a repeat of an earlier
+    * 5-gram goes; `filter`, a margin line, restricts the output docs (i41).
+    */
+  private def spanExciseOracle(filter: String): String = oneLine(
+    s"""WITH $gramsCte,
+      | m AS (SELECT doc_id, pos FROM (
+      |     SELECT doc_id, pos,
+      |       row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
+      |     FROM g) WHERE rn >= 2),
+      | ex AS (SELECT DISTINCT doc_id, pos + o AS tp
+      |   FROM m, (SELECT unnest(range(0, 5)) AS o) os),
+      | tok AS (SELECT doc_id, unnest(range(1, len(tk)+1)) - 1 AS tp,
+      |     unnest(tk) AS tok FROM tks),
+      | kept AS (SELECT t.doc_id, t.tp, t.tok FROM tok t
+      |   WHERE NOT EXISTS (SELECT 1 FROM ex
+      |     WHERE ex.doc_id = t.doc_id AND ex.tp = t.tp)),
+      | agg AS (SELECT doc_id, count(*)::BIGINT AS n_kept,
+      |     string_agg(tok, ' ' ORDER BY tp) AS clean_text
+      |   FROM kept GROUP BY doc_id),
+      | sz AS (SELECT doc_id, len(string_split(text,' '))::BIGINT AS n_tokens
+      |   FROM documents)
+      | SELECT sz.doc_id, n_tokens,
+      |   (n_tokens - COALESCE(n_kept, 0))::BIGINT AS n_removed,
+      |   COALESCE(clean_text, '') AS clean_text
+      | FROM sz LEFT JOIN agg USING (doc_id)$filter
+      | ORDER BY sz.doc_id""")
+
+  /** Distinct 3-token shingles `sh(doc_id, s)`, split into the eval set
+    * `ev` (doc_id < 50) and the train rows `tr`, with each train doc's
+    * shingle count `sz(doc_id, n_sh)` (i19, i57, i68).
+    */
+  private val evalShinglesCte: String =
+    """sh AS (
+      |   SELECT DISTINCT doc_id,
+      |     unnest(list_transform(range(1, len(toks)-1),
+      |       i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s
+      |   FROM (SELECT doc_id, string_split(text,' ') AS toks FROM documents
+      |         WHERE len(string_split(text,' ')) >= 3)),
+      | ev AS (SELECT DISTINCT s FROM sh WHERE doc_id < 50),
+      | tr AS (SELECT * FROM sh WHERE doc_id >= 50),
+      | sz AS (SELECT doc_id, count(*) AS n_sh FROM tr GROUP BY doc_id)"""
+
+  /** The exact containment screen: train docs sharing ≥ 20% of their
+    * shingles with the eval set (i19; i68's Bloom prescreen is lossless
+    * against it).
+    */
+  private val contaminationOracle: String = oneLine(
+    s"""WITH $evalShinglesCte,
+      | shd AS (SELECT doc_id, count(*) AS n_shared FROM tr JOIN ev USING (s) GROUP BY doc_id)
+      | SELECT sz.doc_id, n_shared,
+      |   round(n_shared * 1.0 / n_sh, 3) AS containment
+      | FROM sz JOIN shd ON sz.doc_id = shd.doc_id
+      | WHERE n_shared * 1.0 / n_sh >= 0.2
+      | ORDER BY sz.doc_id""")
+
+  /** `c(doc_id, tok, cb)`: each doc's token count and the running token
+    * total before it in doc_id order (i22, i48, i51).
+    */
+  private val tokOffsetsCte: String =
+    """tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
+      |   FROM documents),
+      | c AS (SELECT doc_id, tok,
+      |     COALESCE(SUM(tok) OVER (ORDER BY doc_id
+      |       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS cb
+      |   FROM tk)"""
+
+  /** Each doc's placement over `c` in 512-token sequences (i48, i52). */
+  private val seqPlacementSql: String =
+    """SELECT doc_id, tok, (cb // 512)::BIGINT AS first_seq,
+      |   (cb % 512)::BIGINT AS seq_offset,
+      |   ((cb + tok - 1) // 512)::BIGINT AS last_seq,
+      |   (((cb + tok - 1) // 512) - (cb // 512) + 1)::BIGINT AS n_seqs
+      | FROM c ORDER BY doc_id"""
+
+  /** Every adjacent token pair `occ(doc_id, bg)`, with its first word in
+    * `o2(doc_id, w1, bg)` (j10, j12).
+    */
+  private val bigramOccCte: String =
+    """occ AS (
+      |   SELECT doc_id,
+      |     unnest(list_transform(range(1, len(toks)),
+      |       i -> toks[i] || ' ' || toks[i+1])) AS bg
+      |   FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
+      | o2 AS (SELECT doc_id, string_split(bg, ' ')[1] AS w1, bg FROM occ)"""
+
+  /** The DSIR state over the bigrams `occ` of `docs`: the add-one
+    * target/raw ratio `rat(bg, q)` (micro-units) and the normalizer
+    * `cf(cfac)` — the SQL twin of [[dsirState]] (i60, i62).
+    */
+  private def dsirStateCte(occ: String, docs: String): String =
+    s"""$occ AS (
+      |   SELECT doc_id, lang,
+      |     unnest(list_transform(range(1, len(toks)),
+      |       i -> toks[i] || ' ' || toks[i+1])) AS bg
+      |   FROM (SELECT doc_id, lang, string_split(text, ' ') AS toks
+      |         FROM $docs)),
+      | raw AS (SELECT bg, count(*)::BIGINT AS cs FROM $occ GROUP BY bg),
+      | tgt AS (SELECT bg, count(*)::BIGINT AS ct FROM $occ
+      |   WHERE lang = 'en' GROUP BY bg),
+      | rat AS (SELECT raw.bg,
+      |     round(1e6 * (coalesce(ct, 0) + 1) / (cs + 1))::BIGINT AS q
+      |   FROM raw LEFT JOIN tgt ON raw.bg = tgt.bg),
+      | sv AS (SELECT sum(cs)::DOUBLE AS s_tot, count(*)::DOUBLE AS v FROM raw),
+      | tv AS (SELECT count(*)::DOUBLE AS t_tot FROM $occ WHERE lang = 'en'),
+      | cf AS (SELECT (s_tot + v) / (t_tot + v) AS cfac FROM sv, tv)"""
+
+  /** `v(cols, qm)`: the shared doc quality over `st` in integer
+    * milli-units (j23, i94, i95, j20).
+    */
+  private def qmCte(cols: String): String =
+    s"""v AS (SELECT $cols,
+      |     CAST(round(round(least(n_tok/100.0,1.0)*0.4 + (n_uniq/n_tok)*0.3
+      |       + (1.0-n_stop/n_tok)*0.3, 3)*1000) AS BIGINT) AS qm
+      |   FROM st)"""
+
   val qs: Seq[Q] = Seq(
 
     // Per-doc MinHash signature — linear sketch, the building block of the
@@ -2164,12 +2519,7 @@ object PipelineOps {
             round(col("sq").cast("double") / col("n_bigrams") / 1e6, 4)
               .as("loo_score"))
       },
-      Some(oneLine("""WITH occ AS (
-                 |   SELECT doc_id,
-                 |     unnest(list_transform(range(1, len(toks)),
-                 |       i -> toks[i] || ' ' || toks[i+1])) AS bg
-                 |   FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-                 | o2 AS (SELECT doc_id, string_split(bg, ' ')[1] AS w1, bg FROM occ),
+      Some(oneLine(s"""WITH $bigramOccCte,
                  | own2 AS (SELECT doc_id, bg, min(w1) AS w1, count(*) AS own2
                  |   FROM o2 GROUP BY doc_id, bg),
                  | own1 AS (SELECT doc_id, w1, count(*) AS own1 FROM o2 GROUP BY doc_id, w1),
@@ -2221,12 +2571,7 @@ object PipelineOps {
             round(col("sq").cast("double") / col("n_bigrams") / 1e6, 4).as("lm_score"))
           .orderBy("doc_id")
       },
-      Some(oneLine("""WITH occ AS (
-                 |   SELECT doc_id,
-                 |     unnest(list_transform(range(1, len(toks)),
-                 |       i -> toks[i] || ' ' || toks[i+1])) AS bg
-                 |   FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
-                 | o2 AS (SELECT doc_id, string_split(bg, ' ')[1] AS w1, bg FROM occ),
+      Some(oneLine(s"""WITH $bigramOccCte,
                  | c2 AS (SELECT bg, count(*) AS c2 FROM o2 GROUP BY bg),
                  | c1 AS (SELECT w1, count(*) AS c1 FROM o2 GROUP BY w1),
                  | q AS (
@@ -2258,22 +2603,7 @@ object PipelineOps {
             round(VectorFunctions.dot(col("embedding"), col("qemb")), 3).as("sim"))
           .orderBy(col("sim").desc, col("vec_id")).limit(10)
       },
-      Some(oneLine(s"""WITH q AS (SELECT embedding AS qemb FROM embeddings WHERE vec_id = 0),
-                 | ${centroidAssignCte()},
-                 | probe AS (
-                 |   SELECT cid FROM (
-                 |     SELECT cid, round(sum(p), 6) AS qd
-                 |     FROM (SELECT c.cid, unnest(c.cemb)::DOUBLE * unnest(q.qemb)::DOUBLE AS p
-                 |           FROM cent c, q)
-                 |     GROUP BY cid)
-                 |   ORDER BY qd DESC, cid LIMIT 2),
-                 | sims AS (
-                 |   SELECT vec_id, round(sum(p), 3) AS sim
-                 |   FROM (SELECT e.vec_id, unnest(e.embedding)::DOUBLE * unnest(q.qemb)::DOUBLE AS p
-                 |         FROM embeddings e JOIN assigned a ON e.vec_id = a.vec_id
-                 |              JOIN probe pr ON a.cid = pr.cid, q)
-                 |   GROUP BY vec_id)
-                 | SELECT vec_id, sim FROM sims ORDER BY sim DESC, vec_id LIMIT 10"""))),
+      Some(ivfTop10Oracle(""))),
 
     // The MANY-query form of i10 — batch ANN, the shape a retrieval or
     // dedup-by-embedding job actually runs: every query routes to its
@@ -2311,12 +2641,7 @@ object PipelineOps {
           .orderBy("qid")
       },
       Some(oneLine(s"""WITH $annBatchCte,
-                 | exsims AS (
-                 |   SELECT qid, vec_id, round(sum(p), 3) AS sim
-                 |   FROM (SELECT q.qid, e.vec_id,
-                 |           unnest(e.embedding)::DOUBLE * unnest(q.qemb)::DOUBLE AS p
-                 |         FROM embeddings e, q)
-                 |   GROUP BY 1, 2),
+                 | ${exsimsCte()},
                  | exact AS (
                  |   SELECT qid, vec_id FROM (
                  |     SELECT qid, vec_id,
@@ -2389,16 +2714,8 @@ object PipelineOps {
       Some(oneLine(s"""WITH q AS (SELECT vec_id AS qid, embedding AS qemb
                  |     FROM embeddings WHERE vec_id < ${ivfParams.nQueries}),
                  | dims AS (SELECT unnest([8, 16, 32]) AS dim),
-                 | sim64 AS (
-                 |   SELECT qid, vec_id, round(sum(p), 3) AS sim
-                 |   FROM (SELECT q.qid, e.vec_id,
-                 |           unnest(e.embedding)::DOUBLE * unnest(q.qemb)::DOUBLE AS p
-                 |         FROM embeddings e, q)
-                 |   GROUP BY 1, 2),
-                 | top64 AS (SELECT qid, vec_id FROM (
-                 |     SELECT qid, vec_id,
-                 |       row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn
-                 |     FROM sim64) WHERE rn <= 3),
+                 | ${exsimsCte("sim64")},
+                 | ${exactTopCte("top64", "qid, vec_id", "sim64", 3)},
                  | simd AS (
                  |   SELECT dim, qid, vec_id, round(sum(p), 3) AS sim
                  |   FROM (SELECT d.dim, q.qid, e.vec_id,
@@ -2436,17 +2753,7 @@ object PipelineOps {
     // anywhere in the output.
     Q("i86_overlap_curve",
       (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val queries = queryBatch(emb, ivfParams.nQueries)
-        val exact = emb.crossJoin(broadcast(queries))
-          .select(col("qid"), col("vec_id"),
-            round(VectorFunctions.dot(col("embedding"), col("qemb")), 3).as("sim"))
-          .withColumn("xr", row_number().over(
-            Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))))
-          .filter(col("xr") <= 10).select(col("qid"), col("vec_id"), col("xr"))
-        val ivf = annBatchTop3(emb, stubCodebook(emb, ivfParams.k),
-            queries, ivfParams.nprobe, topK = 10)
-          .select(col("qid"), col("vec_id"), col("rank").as("ir"))
+        val (exact, ivf) = exactAndIvfTop10(t(s, dir, "embeddings"))
         val depths = Seq(1, 3, 5, 10)
         val hitCols = depths.map(d =>
           sum(when(col("xr") <= d && col("ir") <= d, 1L).otherwise(0L))
@@ -2461,17 +2768,7 @@ object PipelineOps {
               / (col("z.depth") * ivfParams.nQueries)).cast("long").as("overlap_ppm"))
           .orderBy("depth")
       },
-      Some(oneLine(s"""WITH ${annBatchCteK(10)},
-                 | exsims AS (
-                 |   SELECT qid, vec_id, round(sum(p), 3) AS sim
-                 |   FROM (SELECT q.qid, e.vec_id,
-                 |           unnest(e.embedding)::DOUBLE * unnest(q.qemb)::DOUBLE AS p
-                 |         FROM embeddings e, q)
-                 |   GROUP BY 1, 2),
-                 | exact AS (SELECT qid, vec_id, rn AS xr FROM (
-                 |     SELECT qid, vec_id,
-                 |       row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn
-                 |     FROM exsims) WHERE rn <= 10),
+      Some(oneLine(s"""WITH $exactAndIvfTop10Cte,
                  | j AS (SELECT x.xr, i.rank AS ir
                  |   FROM exact x JOIN ivf i ON x.qid = i.qid AND x.vec_id = i.vec_id),
                  | d AS (SELECT unnest([1, 3, 5, 10]) AS depth),
@@ -2507,16 +2804,11 @@ object PipelineOps {
         .select(col("bucket"), col("n_docs"),
           expr("qsum * 1000 div n_docs").as("mean_micro"))
         .orderBy("bucket"),
-      Some(oneLine("""WITH st AS (SELECT
+      Some(oneLine(s"""WITH st AS (SELECT
                  |     ('0x' || substr(md5('stab:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 16 AS bucket,
-                 |     len(string_split(text,' '))::BIGINT AS n_tok,
-                 |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
-                 |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
+                 |     ${LlmOps.tokStatCols}
                  |   FROM documents),
-                 | v AS (SELECT bucket,
-                 |     CAST(round(round(least(n_tok/100.0,1.0)*0.4 + (n_uniq/n_tok)*0.3
-                 |       + (1.0-n_stop/n_tok)*0.3, 3)*1000) AS BIGINT) AS qm
-                 |   FROM st)
+                 | ${qmCte("bucket")}
                  | SELECT bucket, count(*)::BIGINT AS n_docs,
                  |   ((sum(qm) * 1000) // count(*))::BIGINT AS mean_micro
                  | FROM v GROUP BY bucket ORDER BY bucket"""))),
@@ -2634,15 +2926,8 @@ object PipelineOps {
     // keep-set broadcast back (the i63 shape).
     Q("i95_quota_select",
       (s, dir) => quotaSelect(t(s, dir, "documents")),
-      Some(oneLine("""WITH st AS (SELECT source,
-                 |     len(string_split(text,' '))::BIGINT AS n_tok,
-                 |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
-                 |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
-                 |   FROM documents),
-                 | v AS (SELECT source, n_tok,
-                 |     CAST(round(round(least(n_tok/100.0,1.0)*0.4 + (n_uniq/n_tok)*0.3
-                 |       + (1.0-n_stop/n_tok)*0.3, 3)*1000) AS BIGINT) AS qm
-                 |   FROM st),
+      Some(oneLine(s"""WITH ${LlmOps.tokStatsCte("source")},
+                 | ${qmCte("source, n_tok")},
                  | lvl AS (SELECT source, qm, sum(n_tok)::BIGINT AS ltok FROM v GROUP BY 1, 2),
                  | w AS (SELECT source, qm, ltok,
                  |     sum(ltok) OVER (PARTITION BY source ORDER BY qm DESC
@@ -2688,15 +2973,8 @@ object PipelineOps {
             expr("(2 * cum - cnt) * 1000000 div (2 * n)").as("qrank_ppm"))
           .orderBy("source", "qm")
       },
-      Some(oneLine("""WITH st AS (SELECT source,
-                 |     len(string_split(text,' '))::BIGINT AS n_tok,
-                 |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
-                 |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
-                 |   FROM documents),
-                 | v AS (SELECT source,
-                 |     CAST(round(round(least(n_tok/100.0,1.0)*0.4 + (n_uniq/n_tok)*0.3
-                 |       + (1.0-n_stop/n_tok)*0.3, 3)*1000) AS BIGINT) AS qm
-                 |   FROM st),
+      Some(oneLine(s"""WITH ${LlmOps.tokStatsCte("source")},
+                 | ${qmCte("source")},
                  | h AS (SELECT source, qm, count(*)::BIGINT AS cnt FROM v GROUP BY 1, 2),
                  | w AS (SELECT source, qm, cnt,
                  |     sum(cnt) OVER (PARTITION BY source ORDER BY qm
@@ -2979,16 +3257,8 @@ object PipelineOps {
                  |   FROM qdot),
                  | sz AS (SELECT cid, count(*)::BIGINT AS sz FROM assigned GROUP BY cid),
                  | mass AS (SELECT qr.qid, qr.prank, sz.sz FROM qr JOIN sz USING (cid)),
-                 | exsims AS (
-                 |   SELECT qid, vec_id, round(sum(p), 3) AS sim
-                 |   FROM (SELECT q.qid, e.vec_id,
-                 |           unnest(e.embedding)::DOUBLE * unnest(q.qemb)::DOUBLE AS p
-                 |         FROM embeddings e, q)
-                 |   GROUP BY 1, 2),
-                 | ex3 AS (SELECT qid, vec_id FROM (
-                 |     SELECT qid, vec_id,
-                 |       row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn
-                 |     FROM exsims) WHERE rn <= 3),
+                 | ${exsimsCte()},
+                 | ${exactTopCte("ex3", "qid, vec_id", "exsims", 3)},
                  | exr AS (SELECT e3.qid, qr.prank FROM ex3 e3
                  |   JOIN assigned a ON e3.vec_id = a.vec_id
                  |   JOIN qr ON qr.qid = e3.qid AND qr.cid = a.cid),
@@ -3018,17 +3288,7 @@ object PipelineOps {
     // corpus.
     Q("i91_rank_fusion",
       (s, dir) => {
-        val emb = t(s, dir, "embeddings")
-        val queries = queryBatch(emb, ivfParams.nQueries)
-        val exact = emb.crossJoin(broadcast(queries))
-          .select(col("qid"), col("vec_id"),
-            round(VectorFunctions.dot(col("embedding"), col("qemb")), 3).as("sim"))
-          .withColumn("xr", row_number().over(
-            Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id"))))
-          .filter(col("xr") <= 10).select(col("qid"), col("vec_id"), col("xr"))
-        val ivf = annBatchTop3(emb, stubCodebook(emb, ivfParams.k),
-            queries, ivfParams.nprobe, topK = 10)
-          .select(col("qid"), col("vec_id"), col("rank").as("ir"))
+        val (exact, ivf) = exactAndIvfTop10(t(s, dir, "embeddings"))
         exact.join(ivf, Seq("qid", "vec_id"), "full_outer")
           .withColumn("rrf",
             coalesce(expr("1000000 div (60 + xr)"), lit(0L)) +
@@ -3040,17 +3300,7 @@ object PipelineOps {
             col("vec_id"), col("rrf"))
           .orderBy("qid", "frank")
       },
-      Some(oneLine(s"""WITH ${annBatchCteK(10)},
-                 | exsims AS (
-                 |   SELECT qid, vec_id, round(sum(p), 3) AS sim
-                 |   FROM (SELECT q.qid, e.vec_id,
-                 |           unnest(e.embedding)::DOUBLE * unnest(q.qemb)::DOUBLE AS p
-                 |         FROM embeddings e, q)
-                 |   GROUP BY 1, 2),
-                 | exact AS (SELECT qid, vec_id, rn AS xr FROM (
-                 |     SELECT qid, vec_id,
-                 |       row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn
-                 |     FROM exsims) WHERE rn <= 10),
+      Some(oneLine(s"""WITH $exactAndIvfTop10Cte,
                  | f AS (SELECT coalesce(x.qid, i.qid) AS qid,
                  |     coalesce(x.vec_id, i.vec_id) AS vec_id,
                  |     coalesce(1000000 // (60 + x.xr), 0)
@@ -3227,12 +3477,7 @@ object PipelineOps {
     Q("i35_span_dedup",
       (s, dir) => duplicateSpans(t(s, dir, "documents"))
         .orderBy("doc_id", "span_start"),
-      Some(oneLine("""WITH tks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
-                 | g AS (SELECT doc_id,
-                 |     unnest(range(1, len(tk)-3)) - 1 AS pos,
-                 |     unnest(list_transform(range(1, len(tk)-3),
-                 |       i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||tk[i+4])) AS gram
-                 |   FROM tks),
+      Some(oneLine(s"""WITH $gramsCte,
                  | d AS (SELECT doc_id, pos FROM (
                  |     SELECT doc_id, pos, count(*) OVER (PARTITION BY gram) AS c FROM g)
                  |   WHERE c >= 2),
@@ -3264,33 +3509,7 @@ object PipelineOps {
     // partitioned by doc_id.
     Q("i40_span_excise",
       (s, dir) => spanExcise(t(s, dir, "documents")).orderBy("doc_id"),
-      Some(oneLine("""WITH tks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
-                 | g AS (SELECT doc_id,
-                 |     unnest(range(1, len(tk)-3)) - 1 AS pos,
-                 |     unnest(list_transform(range(1, len(tk)-3),
-                 |       i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||tk[i+4])) AS gram
-                 |   FROM tks),
-                 | m AS (SELECT doc_id, pos FROM (
-                 |     SELECT doc_id, pos,
-                 |       row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-                 |     FROM g) WHERE rn >= 2),
-                 | ex AS (SELECT DISTINCT doc_id, pos + o AS tp
-                 |   FROM m, (SELECT unnest(range(0, 5)) AS o) os),
-                 | tok AS (SELECT doc_id, unnest(range(1, len(tk)+1)) - 1 AS tp,
-                 |     unnest(tk) AS tok FROM tks),
-                 | kept AS (SELECT t.doc_id, t.tp, t.tok FROM tok t
-                 |   WHERE NOT EXISTS (SELECT 1 FROM ex
-                 |     WHERE ex.doc_id = t.doc_id AND ex.tp = t.tp)),
-                 | agg AS (SELECT doc_id, count(*)::BIGINT AS n_kept,
-                 |     string_agg(tok, ' ' ORDER BY tp) AS clean_text
-                 |   FROM kept GROUP BY doc_id),
-                 | sz AS (SELECT doc_id, len(string_split(text,' '))::BIGINT AS n_tokens
-                 |   FROM documents)
-                 | SELECT sz.doc_id, n_tokens,
-                 |   (n_tokens - COALESCE(n_kept, 0))::BIGINT AS n_removed,
-                 |   COALESCE(clean_text, '') AS clean_text
-                 | FROM sz LEFT JOIN agg USING (doc_id)
-                 | ORDER BY sz.doc_id"""))),
+      Some(spanExciseOracle(""))),
 
     // INTRA-doc repeated-segment excision — the Gopher/C4 cleanup rule
     // the cross-doc span ops (i35/i40) don't cover: a doc repeating its
@@ -3338,34 +3557,7 @@ object PipelineOps {
     Q("i41_span_dedup_incremental",
       (s, dir) => spanExciseIncremental(t(s, dir, "documents"), 400)
         .orderBy("doc_id"),
-      Some(oneLine("""WITH tks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
-                 | g AS (SELECT doc_id,
-                 |     unnest(range(1, len(tk)-3)) - 1 AS pos,
-                 |     unnest(list_transform(range(1, len(tk)-3),
-                 |       i -> tk[i]||' '||tk[i+1]||' '||tk[i+2]||' '||tk[i+3]||' '||tk[i+4])) AS gram
-                 |   FROM tks),
-                 | m AS (SELECT doc_id, pos FROM (
-                 |     SELECT doc_id, pos,
-                 |       row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-                 |     FROM g) WHERE rn >= 2),
-                 | ex AS (SELECT DISTINCT doc_id, pos + o AS tp
-                 |   FROM m, (SELECT unnest(range(0, 5)) AS o) os),
-                 | tok AS (SELECT doc_id, unnest(range(1, len(tk)+1)) - 1 AS tp,
-                 |     unnest(tk) AS tok FROM tks),
-                 | kept AS (SELECT t.doc_id, t.tp, t.tok FROM tok t
-                 |   WHERE NOT EXISTS (SELECT 1 FROM ex
-                 |     WHERE ex.doc_id = t.doc_id AND ex.tp = t.tp)),
-                 | agg AS (SELECT doc_id, count(*)::BIGINT AS n_kept,
-                 |     string_agg(tok, ' ' ORDER BY tp) AS clean_text
-                 |   FROM kept GROUP BY doc_id),
-                 | sz AS (SELECT doc_id, len(string_split(text,' '))::BIGINT AS n_tokens
-                 |   FROM documents)
-                 | SELECT sz.doc_id, n_tokens,
-                 |   (n_tokens - COALESCE(n_kept, 0))::BIGINT AS n_removed,
-                 |   COALESCE(clean_text, '') AS clean_text
-                 | FROM sz LEFT JOIN agg USING (doc_id)
-                 | WHERE sz.doc_id >= 400
-                 | ORDER BY sz.doc_id"""))),
+      Some(spanExciseOracle("\n | WHERE sz.doc_id >= 400"))),
 
     // Train↔eval CONTAMINATION screening — the leakage check a training
     // pipeline runs before any benchmark claim: for every train doc, the
@@ -3405,21 +3597,7 @@ object PipelineOps {
             round(containment, 3).as("containment"))
           .orderBy("doc_id")
       },
-      Some(oneLine("""WITH sh AS (
-                 |   SELECT DISTINCT doc_id,
-                 |     unnest(list_transform(range(1, len(toks)-1),
-                 |       i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s
-                 |   FROM (SELECT doc_id, string_split(text,' ') AS toks FROM documents
-                 |         WHERE len(string_split(text,' ')) >= 3)),
-                 | ev AS (SELECT DISTINCT s FROM sh WHERE doc_id < 50),
-                 | tr AS (SELECT * FROM sh WHERE doc_id >= 50),
-                 | sz AS (SELECT doc_id, count(*) AS n_sh FROM tr GROUP BY doc_id),
-                 | shd AS (SELECT doc_id, count(*) AS n_shared FROM tr JOIN ev USING (s) GROUP BY doc_id)
-                 | SELECT sz.doc_id, n_shared,
-                 |   round(n_shared * 1.0 / n_sh, 3) AS containment
-                 | FROM sz JOIN shd ON sz.doc_id = shd.doc_id
-                 | WHERE n_shared * 1.0 / n_sh >= 0.2
-                 | ORDER BY sz.doc_id"""))),
+      Some(contaminationOracle)),
 
     // Embedding-similarity dedup machinery, label-bucketed: all pairs
     // WITHIN a label bucket (never across the corpus), cosine in
@@ -3477,13 +3655,11 @@ object PipelineOps {
           .select(col("doc_id"), col("quality"),
             LlmOps.splitBand(LlmOps.splitBucket).as("split"))
           .orderBy("doc_id"),
-      Some(oneLine("""WITH q AS (
+      Some(oneLine(s"""WITH q AS (
                  |   SELECT doc_id, text,
                  |     round(least(n_tok/100.0, 1.0)*0.4 + (n_uniq/n_tok)*0.3 + (1.0 - n_stop/n_tok)*0.3, 3) AS quality
                  |   FROM (SELECT doc_id, text,
-                 |     len(string_split(text,' '))::BIGINT AS n_tok,
-                 |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
-                 |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
+                 |     ${LlmOps.tokStatCols}
                  |    FROM documents WHERE lang = 'en')),
                  | f AS (SELECT doc_id, quality, md5(text) AS fp FROM q WHERE quality >= 0.64),
                  | d AS (SELECT doc_id, quality,
@@ -3610,12 +3786,7 @@ object PipelineOps {
           .orderBy("cid", "pos")
       },
       Some(oneLine(s"""WITH ${centroidAssignCte()},
-                 | px AS (
-                 |   SELECT a.cid,
-                 |     unnest(range(0, len(e.embedding))) AS pos,
-                 |     unnest(list_transform(range(0, len(e.embedding)),
-                 |       i -> round(e.embedding[i + 1]::DOUBLE * 1e6)::BIGINT)) AS vq
-                 |   FROM embeddings e JOIN assigned a ON e.vec_id = a.vec_id)
+                 | ${quantRowsCte("px", "embeddings", "assigned")}
                  | SELECT cid, pos, count(*)::BIGINT AS n_members,
                  |   round(sum(vq)::DOUBLE / count(*) / 1e6, 6) AS cmean
                  | FROM px GROUP BY 1, 2 ORDER BY 1, 2"""))),
@@ -3660,41 +3831,9 @@ object PipelineOps {
             round(col("sq").cast("double") / col("n_members")).cast("long").as("cmean_q"))
           .orderBy("cid", "pos")
       },
-      Some(oneLine(s"""WITH ${centroidAssignCte()},
-                 | q1 AS (
-                 |   SELECT a.cid,
-                 |     unnest(range(0, len(e.embedding))) AS pos,
-                 |     unnest(list_transform(range(0, len(e.embedding)),
-                 |       i -> round(e.embedding[i + 1]::DOUBLE * 1e6)::BIGINT)) AS vq
-                 |   FROM embeddings e JOIN assigned a ON e.vec_id = a.vec_id),
-                 | m1 AS (SELECT cid, pos, round(sum(vq)::DOUBLE / count(*))::BIGINT AS mq
-                 |   FROM q1 GROUP BY 1, 2),
-                 | c0px AS (SELECT cid,
-                 |     unnest(range(0, len(cemb))) AS pos,
-                 |     unnest(list_transform(range(0, len(cemb)), i -> cemb[i + 1])) AS sv
-                 |   FROM cent),
-                 | c1px AS (SELECT c0px.cid, c0px.pos,
-                 |     CASE WHEN m1.mq IS NULL THEN sv
-                 |          ELSE CAST(m1.mq::DOUBLE / 1e6 AS FLOAT) END AS ce
-                 |   FROM c0px LEFT JOIN m1 ON c0px.cid = m1.cid AND c0px.pos = m1.pos),
-                 | cent1 AS (SELECT cid, list(ce ORDER BY pos) AS cemb1 FROM c1px GROUP BY cid),
-                 | adot2 AS (
-                 |   SELECT vec_id, cid, round(sum(p), 6) AS cd
-                 |   FROM (SELECT e.vec_id, c.cid,
-                 |           unnest(e.embedding)::DOUBLE * unnest(c.cemb1)::DOUBLE AS p
-                 |         FROM embeddings e, cent1 c)
-                 |   GROUP BY 1, 2),
-                 | assigned2 AS (
-                 |   SELECT vec_id, cid FROM (
-                 |     SELECT vec_id, cid,
-                 |       row_number() OVER (PARTITION BY vec_id ORDER BY cd DESC, cid) AS rn
-                 |     FROM adot2) WHERE rn = 1),
-                 | px2 AS (
-                 |   SELECT a.cid,
-                 |     unnest(range(0, len(e.embedding))) AS pos,
-                 |     unnest(list_transform(range(0, len(e.embedding)),
-                 |       i -> round(e.embedding[i + 1]::DOUBLE * 1e6)::BIGINT)) AS vq
-                 |   FROM embeddings e JOIN assigned2 a ON e.vec_id = a.vec_id)
+      Some(oneLine(s"""WITH ${lloydStepCte("embeddings")},
+                 | ${cent1AssignCte("adot2", "assigned2", "embeddings")},
+                 | ${quantRowsCte("px2", "embeddings", "assigned2")}
                  | SELECT cid, pos, count(*)::BIGINT AS n_members,
                  |   round(sum(vq)::DOUBLE / count(*))::BIGINT AS cmean_q
                  | FROM px2 GROUP BY 1, 2 ORDER BY 1, 2"""))),
@@ -3781,69 +3920,8 @@ object PipelineOps {
         val cent = Harness.materialize(pqTrainStep(sub, pqStubCodebook(sub, ivfParams.k)))
         pqQuantize(sub, cent, nBlocks = 4).orderBy("vec_id")
       },
-      Some(oneLine("""WITH blocks AS (SELECT unnest(range(0, 4)) AS b),
-                 | sub AS (SELECT e.vec_id, b.b,
-                 |     list_slice(e.embedding, b.b * 16 + 1, b.b * 16 + 16) AS sv
-                 |   FROM embeddings e, blocks b),
-                 | c0 AS (SELECT b, vec_id AS cid, sv AS cemb FROM sub WHERE vec_id < 8),
-                 | d1 AS (
-                 |   SELECT vec_id, b, cid, round(sum(p), 6) AS d2
-                 |   FROM (SELECT s.vec_id, s.b AS b, c.cid,
-                 |           unnest(list_transform(range(1, len(s.sv) + 1),
-                 |             i -> (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
-                 |         FROM sub s JOIN c0 c ON s.b = c.b)
-                 |   GROUP BY 1, 2, 3),
-                 | assign1 AS (
-                 |   SELECT vec_id, b, cid FROM (
-                 |     SELECT vec_id, b, cid,
-                 |       row_number() OVER (PARTITION BY vec_id, b ORDER BY d2, cid) AS rn
-                 |     FROM d1) WHERE rn = 1),
-                 | q1 AS (
-                 |   SELECT a.b, a.cid,
-                 |     unnest(range(0, len(s.sv))) AS pos,
-                 |     unnest(list_transform(range(0, len(s.sv)),
-                 |       i -> round(s.sv[i + 1]::DOUBLE * 1e6)::BIGINT)) AS vq
-                 |   FROM sub s JOIN assign1 a ON s.vec_id = a.vec_id AND s.b = a.b),
-                 | m1 AS (SELECT b, cid, pos, round(sum(vq)::DOUBLE / count(*))::BIGINT AS mq
-                 |   FROM q1 GROUP BY 1, 2, 3),
-                 | c0px AS (SELECT b, cid,
-                 |     unnest(range(0, len(cemb))) AS pos,
-                 |     unnest(list_transform(range(0, len(cemb)), i -> cemb[i + 1])) AS sv0
-                 |   FROM c0),
-                 | c1px AS (SELECT c0px.b, c0px.cid, c0px.pos,
-                 |     CASE WHEN m1.mq IS NULL THEN sv0
-                 |          ELSE CAST(m1.mq::DOUBLE / 1e6 AS FLOAT) END AS ce
-                 |   FROM c0px LEFT JOIN m1
-                 |     ON c0px.b = m1.b AND c0px.cid = m1.cid AND c0px.pos = m1.pos),
-                 | c1 AS (SELECT b, cid, list(ce ORDER BY pos) AS cemb FROM c1px GROUP BY 1, 2),
-                 | d2t AS (
-                 |   SELECT vec_id, b, cid, round(sum(p), 6) AS d2
-                 |   FROM (SELECT s.vec_id, s.b AS b, c.cid,
-                 |           unnest(list_transform(range(1, len(s.sv) + 1),
-                 |             i -> (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
-                 |         FROM sub s JOIN c1 c ON s.b = c.b)
-                 |   GROUP BY 1, 2, 3),
-                 | assign2 AS (
-                 |   SELECT vec_id, b, cid FROM (
-                 |     SELECT vec_id, b, cid,
-                 |       row_number() OVER (PARTITION BY vec_id, b ORDER BY d2, cid) AS rn
-                 |     FROM d2t) WHERE rn = 1),
-                 | errp AS (
-                 |   SELECT s.vec_id,
-                 |     unnest(list_transform(range(1, len(s.sv) + 1),
-                 |       i -> round((s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE) * 1e12)::BIGINT)) AS q
-                 |   FROM sub s JOIN assign2 a ON s.vec_id = a.vec_id AND s.b = a.b
-                 |     JOIN c1 c ON c.b = a.b AND c.cid = a.cid),
-                 | erra AS (SELECT vec_id, sum(q)::BIGINT AS e2sum FROM errp GROUP BY vec_id),
-                 | codes AS (SELECT vec_id,
-                 |     max(CASE WHEN b = 0 THEN cid END)::BIGINT AS code0,
-                 |     max(CASE WHEN b = 1 THEN cid END)::BIGINT AS code1,
-                 |     max(CASE WHEN b = 2 THEN cid END)::BIGINT AS code2,
-                 |     max(CASE WHEN b = 3 THEN cid END)::BIGINT AS code3
-                 |   FROM assign2 GROUP BY vec_id)
+      Some(oneLine(s"""WITH $pqCte,
+                 | ${pqCodesCte("sub", "c1")}
                  | SELECT c.vec_id, code0, code1, code2, code3, e.e2sum
                  | FROM codes c JOIN erra e ON c.vec_id = e.vec_id
                  | ORDER BY c.vec_id"""))),
@@ -3882,64 +3960,8 @@ object PipelineOps {
           .agg(sum(col("d2q")).as("adc_q"))
           .orderBy(col("adc_q"), col("vec_id")).limit(20)
       },
-      Some(oneLine("""WITH blocks AS (SELECT unnest(range(0, 4)) AS b),
-                 | sub AS (SELECT e.vec_id, b.b,
-                 |     list_slice(e.embedding, b.b * 16 + 1, b.b * 16 + 16) AS sv
-                 |   FROM embeddings e, blocks b),
-                 | c0 AS (SELECT b, vec_id AS cid, sv AS cemb FROM sub WHERE vec_id < 8),
-                 | d1 AS (
-                 |   SELECT vec_id, b, cid, round(sum(p), 6) AS d2
-                 |   FROM (SELECT s.vec_id, s.b AS b, c.cid,
-                 |           unnest(list_transform(range(1, len(s.sv) + 1),
-                 |             i -> (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
-                 |         FROM sub s JOIN c0 c ON s.b = c.b)
-                 |   GROUP BY 1, 2, 3),
-                 | assign1 AS (
-                 |   SELECT vec_id, b, cid FROM (
-                 |     SELECT vec_id, b, cid,
-                 |       row_number() OVER (PARTITION BY vec_id, b ORDER BY d2, cid) AS rn
-                 |     FROM d1) WHERE rn = 1),
-                 | q1 AS (
-                 |   SELECT a.b, a.cid,
-                 |     unnest(range(0, len(s.sv))) AS pos,
-                 |     unnest(list_transform(range(0, len(s.sv)),
-                 |       i -> round(s.sv[i + 1]::DOUBLE * 1e6)::BIGINT)) AS vq
-                 |   FROM sub s JOIN assign1 a ON s.vec_id = a.vec_id AND s.b = a.b),
-                 | m1 AS (SELECT b, cid, pos, round(sum(vq)::DOUBLE / count(*))::BIGINT AS mq
-                 |   FROM q1 GROUP BY 1, 2, 3),
-                 | c0px AS (SELECT b, cid,
-                 |     unnest(range(0, len(cemb))) AS pos,
-                 |     unnest(list_transform(range(0, len(cemb)), i -> cemb[i + 1])) AS sv0
-                 |   FROM c0),
-                 | c1px AS (SELECT c0px.b, c0px.cid, c0px.pos,
-                 |     CASE WHEN m1.mq IS NULL THEN sv0
-                 |          ELSE CAST(m1.mq::DOUBLE / 1e6 AS FLOAT) END AS ce
-                 |   FROM c0px LEFT JOIN m1
-                 |     ON c0px.b = m1.b AND c0px.cid = m1.cid AND c0px.pos = m1.pos),
-                 | c1 AS (SELECT b, cid, list(ce ORDER BY pos) AS cemb FROM c1px GROUP BY 1, 2),
-                 | d2t AS (
-                 |   SELECT vec_id, b, cid, round(sum(p), 6) AS d2
-                 |   FROM (SELECT s.vec_id, s.b AS b, c.cid,
-                 |           unnest(list_transform(range(1, len(s.sv) + 1),
-                 |             i -> (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
-                 |         FROM sub s JOIN c1 c ON s.b = c.b)
-                 |   GROUP BY 1, 2, 3),
-                 | assign2 AS (
-                 |   SELECT vec_id, b, cid FROM (
-                 |     SELECT vec_id, b, cid,
-                 |       row_number() OVER (PARTITION BY vec_id, b ORDER BY d2, cid) AS rn
-                 |     FROM d2t) WHERE rn = 1),
-                 | qsub AS (SELECT b, sv AS qv FROM sub WHERE vec_id = 0),
-                 | lutp AS (
-                 |   SELECT b, cid, round(round(sum(p), 6) * 1e6)::BIGINT AS d2q
-                 |   FROM (SELECT c.b AS b, c.cid,
-                 |           unnest(list_transform(range(1, len(q.qv) + 1),
-                 |             i -> (q.qv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (q.qv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
-                 |         FROM c1 c JOIN qsub q ON c.b = q.b)
-                 |   GROUP BY 1, 2)
+      Some(oneLine(s"""WITH $pqCte,
+                 | $pqLutCte
                  | SELECT a.vec_id, sum(l.d2q)::BIGINT AS adc_q
                  | FROM assign2 a JOIN lutp l ON a.b = l.b AND a.cid = l.cid
                  | WHERE a.vec_id <> 0
@@ -3971,18 +3993,7 @@ object PipelineOps {
           .select(col("vec_id"), col("b"), col("cid").as("pcid"))
         ivfPqSearch(emb, coarse, cent, assigned, codes)
       },
-      Some(oneLine("""WITH cent AS (SELECT vec_id AS cid, embedding AS cemb FROM embeddings WHERE vec_id < 8),
-                 | adot AS (
-                 |   SELECT vec_id, cid, round(sum(p), 6) AS cd
-                 |   FROM (SELECT e.vec_id, c.cid,
-                 |           unnest(e.embedding)::DOUBLE * unnest(c.cemb)::DOUBLE AS p
-                 |         FROM embeddings e, cent c)
-                 |   GROUP BY 1, 2),
-                 | assigned AS (
-                 |   SELECT vec_id, cid FROM (
-                 |     SELECT vec_id, cid,
-                 |       row_number() OVER (PARTITION BY vec_id ORDER BY cd DESC, cid) AS rn
-                 |     FROM adot) WHERE rn = 1),
+      Some(oneLine(s"""WITH ${centroidAssignCte()},
                  | q0 AS (SELECT embedding AS qemb FROM embeddings WHERE vec_id = 0),
                  | qdot AS (
                  |   SELECT cid, round(sum(p), 6) AS qd
@@ -3993,64 +4004,8 @@ object PipelineOps {
                  | probes AS (SELECT cid FROM (
                  |     SELECT cid, row_number() OVER (ORDER BY qd DESC, cid) AS rn
                  |     FROM qdot) WHERE rn <= 2),
-                 | blocks AS (SELECT unnest(range(0, 4)) AS b),
-                 | sub AS (SELECT e.vec_id, b.b,
-                 |     list_slice(e.embedding, b.b * 16 + 1, b.b * 16 + 16) AS sv
-                 |   FROM embeddings e, blocks b),
-                 | c0 AS (SELECT b, vec_id AS cid, sv AS cemb FROM sub WHERE vec_id < 8),
-                 | d1 AS (
-                 |   SELECT vec_id, b, cid, round(sum(p), 6) AS d2
-                 |   FROM (SELECT s.vec_id, s.b AS b, c.cid,
-                 |           unnest(list_transform(range(1, len(s.sv) + 1),
-                 |             i -> (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
-                 |         FROM sub s JOIN c0 c ON s.b = c.b)
-                 |   GROUP BY 1, 2, 3),
-                 | assign1 AS (
-                 |   SELECT vec_id, b, cid FROM (
-                 |     SELECT vec_id, b, cid,
-                 |       row_number() OVER (PARTITION BY vec_id, b ORDER BY d2, cid) AS rn
-                 |     FROM d1) WHERE rn = 1),
-                 | q1 AS (
-                 |   SELECT a.b, a.cid,
-                 |     unnest(range(0, len(s.sv))) AS pos,
-                 |     unnest(list_transform(range(0, len(s.sv)),
-                 |       i -> round(s.sv[i + 1]::DOUBLE * 1e6)::BIGINT)) AS vq
-                 |   FROM sub s JOIN assign1 a ON s.vec_id = a.vec_id AND s.b = a.b),
-                 | m1 AS (SELECT b, cid, pos, round(sum(vq)::DOUBLE / count(*))::BIGINT AS mq
-                 |   FROM q1 GROUP BY 1, 2, 3),
-                 | c0px AS (SELECT b, cid,
-                 |     unnest(range(0, len(cemb))) AS pos,
-                 |     unnest(list_transform(range(0, len(cemb)), i -> cemb[i + 1])) AS sv0
-                 |   FROM c0),
-                 | c1px AS (SELECT c0px.b, c0px.cid, c0px.pos,
-                 |     CASE WHEN m1.mq IS NULL THEN sv0
-                 |          ELSE CAST(m1.mq::DOUBLE / 1e6 AS FLOAT) END AS ce
-                 |   FROM c0px LEFT JOIN m1
-                 |     ON c0px.b = m1.b AND c0px.cid = m1.cid AND c0px.pos = m1.pos),
-                 | c1 AS (SELECT b, cid, list(ce ORDER BY pos) AS cemb FROM c1px GROUP BY 1, 2),
-                 | d2t AS (
-                 |   SELECT vec_id, b, cid, round(sum(p), 6) AS d2
-                 |   FROM (SELECT s.vec_id, s.b AS b, c.cid,
-                 |           unnest(list_transform(range(1, len(s.sv) + 1),
-                 |             i -> (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
-                 |         FROM sub s JOIN c1 c ON s.b = c.b)
-                 |   GROUP BY 1, 2, 3),
-                 | assign2 AS (
-                 |   SELECT vec_id, b, cid FROM (
-                 |     SELECT vec_id, b, cid,
-                 |       row_number() OVER (PARTITION BY vec_id, b ORDER BY d2, cid) AS rn
-                 |     FROM d2t) WHERE rn = 1),
-                 | qsub AS (SELECT b, sv AS qv FROM sub WHERE vec_id = 0),
-                 | lutp AS (
-                 |   SELECT b, cid, round(round(sum(p), 6) * 1e6)::BIGINT AS d2q
-                 |   FROM (SELECT c.b AS b, c.cid,
-                 |           unnest(list_transform(range(1, len(q.qv) + 1),
-                 |             i -> (q.qv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (q.qv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
-                 |         FROM c1 c JOIN qsub q ON c.b = q.b)
-                 |   GROUP BY 1, 2),
+                 | $pqCte,
+                 | $pqLutCte,
                  | adc AS (
                  |   SELECT a.vec_id, sum(l.d2q)::BIGINT AS adc_q
                  |   FROM assign2 a JOIN lutp l ON a.b = l.b AND a.cid = l.cid
@@ -4076,114 +4031,15 @@ object PipelineOps {
     Q("i43_ann_index_ingest",
       (s, dir) => annIndexIngest(t(s, dir, "embeddings"), 400)
         .orderBy("vec_id"),
-      Some(oneLine("""WITH corpus AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 400),
+      Some(oneLine(s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 400),
                  | batchv AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 400),
-                 | cent AS (SELECT vec_id AS cid, embedding AS cemb FROM corpus WHERE vec_id < 8),
-                 | adot AS (
-                 |   SELECT vec_id, cid, round(sum(p), 6) AS cd
-                 |   FROM (SELECT e.vec_id, c.cid,
-                 |           unnest(e.embedding)::DOUBLE * unnest(c.cemb)::DOUBLE AS p
-                 |         FROM corpus e, cent c)
-                 |   GROUP BY 1, 2),
-                 | assigned AS (
-                 |   SELECT vec_id, cid FROM (
-                 |     SELECT vec_id, cid,
-                 |       row_number() OVER (PARTITION BY vec_id ORDER BY cd DESC, cid) AS rn
-                 |     FROM adot) WHERE rn = 1),
-                 | q1 AS (
-                 |   SELECT a.cid,
-                 |     unnest(range(0, len(e.embedding))) AS pos,
-                 |     unnest(list_transform(range(0, len(e.embedding)),
-                 |       i -> round(e.embedding[i + 1]::DOUBLE * 1e6)::BIGINT)) AS vq
-                 |   FROM corpus e JOIN assigned a ON e.vec_id = a.vec_id),
-                 | m1 AS (SELECT cid, pos, round(sum(vq)::DOUBLE / count(*))::BIGINT AS mq
-                 |   FROM q1 GROUP BY 1, 2),
-                 | c0px AS (SELECT cid,
-                 |     unnest(range(0, len(cemb))) AS pos,
-                 |     unnest(list_transform(range(0, len(cemb)), i -> cemb[i + 1])) AS sv
-                 |   FROM cent),
-                 | c1px AS (SELECT c0px.cid, c0px.pos,
-                 |     CASE WHEN m1.mq IS NULL THEN sv
-                 |          ELSE CAST(m1.mq::DOUBLE / 1e6 AS FLOAT) END AS ce
-                 |   FROM c0px LEFT JOIN m1 ON c0px.cid = m1.cid AND c0px.pos = m1.pos),
-                 | cent1 AS (SELECT cid, list(ce ORDER BY pos) AS cemb1 FROM c1px GROUP BY cid),
-                 | bdot AS (
-                 |   SELECT vec_id, cid, round(sum(p), 6) AS cd
-                 |   FROM (SELECT e.vec_id, c.cid,
-                 |           unnest(e.embedding)::DOUBLE * unnest(c.cemb1)::DOUBLE AS p
-                 |         FROM batchv e, cent1 c)
-                 |   GROUP BY 1, 2),
-                 | routed AS (
-                 |   SELECT vec_id, cid FROM (
-                 |     SELECT vec_id, cid,
-                 |       row_number() OVER (PARTITION BY vec_id ORDER BY cd DESC, cid) AS rn
-                 |     FROM bdot) WHERE rn = 1),
+                 | ${lloydStepCte("corpus")},
+                 | ${cent1AssignCte("bdot", "routed", "batchv")},
                  | blocks AS (SELECT unnest(range(0, 4)) AS b),
-                 | subc AS (SELECT e.vec_id, b.b,
-                 |     list_slice(e.embedding, b.b * 16 + 1, b.b * 16 + 16) AS sv
-                 |   FROM corpus e, blocks b),
-                 | subb AS (SELECT e.vec_id, b.b,
-                 |     list_slice(e.embedding, b.b * 16 + 1, b.b * 16 + 16) AS sv
-                 |   FROM batchv e, blocks b),
-                 | pc0 AS (SELECT b, vec_id AS cid, sv AS cemb FROM subc WHERE vec_id < 8),
-                 | d1 AS (
-                 |   SELECT vec_id, b, cid, round(sum(p), 6) AS d2
-                 |   FROM (SELECT s.vec_id, s.b AS b, c.cid,
-                 |           unnest(list_transform(range(1, len(s.sv) + 1),
-                 |             i -> (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
-                 |         FROM subc s JOIN pc0 c ON s.b = c.b)
-                 |   GROUP BY 1, 2, 3),
-                 | assign1 AS (
-                 |   SELECT vec_id, b, cid FROM (
-                 |     SELECT vec_id, b, cid,
-                 |       row_number() OVER (PARTITION BY vec_id, b ORDER BY d2, cid) AS rn
-                 |     FROM d1) WHERE rn = 1),
-                 | pq1 AS (
-                 |   SELECT a.b, a.cid,
-                 |     unnest(range(0, len(s.sv))) AS pos,
-                 |     unnest(list_transform(range(0, len(s.sv)),
-                 |       i -> round(s.sv[i + 1]::DOUBLE * 1e6)::BIGINT)) AS vq
-                 |   FROM subc s JOIN assign1 a ON s.vec_id = a.vec_id AND s.b = a.b),
-                 | pm1 AS (SELECT b, cid, pos, round(sum(vq)::DOUBLE / count(*))::BIGINT AS mq
-                 |   FROM pq1 GROUP BY 1, 2, 3),
-                 | pc0px AS (SELECT b, cid,
-                 |     unnest(range(0, len(cemb))) AS pos,
-                 |     unnest(list_transform(range(0, len(cemb)), i -> cemb[i + 1])) AS sv0
-                 |   FROM pc0),
-                 | pc1px AS (SELECT pc0px.b, pc0px.cid, pc0px.pos,
-                 |     CASE WHEN pm1.mq IS NULL THEN sv0
-                 |          ELSE CAST(pm1.mq::DOUBLE / 1e6 AS FLOAT) END AS ce
-                 |   FROM pc0px LEFT JOIN pm1
-                 |     ON pc0px.b = pm1.b AND pc0px.cid = pm1.cid AND pc0px.pos = pm1.pos),
-                 | pc1 AS (SELECT b, cid, list(ce ORDER BY pos) AS cemb FROM pc1px GROUP BY 1, 2),
-                 | d2t AS (
-                 |   SELECT vec_id, b, cid, round(sum(p), 6) AS d2
-                 |   FROM (SELECT s.vec_id, s.b AS b, c.cid,
-                 |           unnest(list_transform(range(1, len(s.sv) + 1),
-                 |             i -> (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
-                 |         FROM subb s JOIN pc1 c ON s.b = c.b)
-                 |   GROUP BY 1, 2, 3),
-                 | assign2 AS (
-                 |   SELECT vec_id, b, cid FROM (
-                 |     SELECT vec_id, b, cid,
-                 |       row_number() OVER (PARTITION BY vec_id, b ORDER BY d2, cid) AS rn
-                 |     FROM d2t) WHERE rn = 1),
-                 | errp AS (
-                 |   SELECT s.vec_id,
-                 |     unnest(list_transform(range(1, len(s.sv) + 1),
-                 |       i -> round((s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE) * 1e12)::BIGINT)) AS q
-                 |   FROM subb s JOIN assign2 a ON s.vec_id = a.vec_id AND s.b = a.b
-                 |     JOIN pc1 c ON c.b = a.b AND c.cid = a.cid),
-                 | erra AS (SELECT vec_id, sum(q)::BIGINT AS e2sum FROM errp GROUP BY vec_id),
-                 | codes AS (SELECT vec_id,
-                 |     max(CASE WHEN b = 0 THEN cid END)::BIGINT AS code0,
-                 |     max(CASE WHEN b = 1 THEN cid END)::BIGINT AS code1,
-                 |     max(CASE WHEN b = 2 THEN cid END)::BIGINT AS code2,
-                 |     max(CASE WHEN b = 3 THEN cid END)::BIGINT AS code3
-                 |   FROM assign2 GROUP BY vec_id)
+                 | ${pqSubCte("subc", "corpus")},
+                 | ${pqSubCte("subb", "batchv")},
+                 | ${pqTrainCte("p", "subc", "subb")},
+                 | ${pqCodesCte("subb", "pc1")}
                  | SELECT r.vec_id, r.cid, code0, code1, code2, code3, e.e2sum
                  | FROM routed r JOIN codes c ON r.vec_id = c.vec_id
                  |   JOIN erra e ON r.vec_id = e.vec_id
@@ -4201,55 +4057,7 @@ object PipelineOps {
       (s, dir) => annPqBatch(t(s, dir, "embeddings"),
           ivfParams.nQueries, topK = 10)
         .orderBy("qid", "rank"),
-      Some(oneLine("""WITH blocks AS (SELECT unnest(range(0, 4)) AS b),
-                 | sub AS (SELECT e.vec_id, b.b,
-                 |     list_slice(e.embedding, b.b * 16 + 1, b.b * 16 + 16) AS sv
-                 |   FROM embeddings e, blocks b),
-                 | c0 AS (SELECT b, vec_id AS cid, sv AS cemb FROM sub WHERE vec_id < 8),
-                 | d1 AS (
-                 |   SELECT vec_id, b, cid, round(sum(p), 6) AS d2
-                 |   FROM (SELECT s.vec_id, s.b AS b, c.cid,
-                 |           unnest(list_transform(range(1, len(s.sv) + 1),
-                 |             i -> (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
-                 |         FROM sub s JOIN c0 c ON s.b = c.b)
-                 |   GROUP BY 1, 2, 3),
-                 | assign1 AS (
-                 |   SELECT vec_id, b, cid FROM (
-                 |     SELECT vec_id, b, cid,
-                 |       row_number() OVER (PARTITION BY vec_id, b ORDER BY d2, cid) AS rn
-                 |     FROM d1) WHERE rn = 1),
-                 | q1 AS (
-                 |   SELECT a.b, a.cid,
-                 |     unnest(range(0, len(s.sv))) AS pos,
-                 |     unnest(list_transform(range(0, len(s.sv)),
-                 |       i -> round(s.sv[i + 1]::DOUBLE * 1e6)::BIGINT)) AS vq
-                 |   FROM sub s JOIN assign1 a ON s.vec_id = a.vec_id AND s.b = a.b),
-                 | m1 AS (SELECT b, cid, pos, round(sum(vq)::DOUBLE / count(*))::BIGINT AS mq
-                 |   FROM q1 GROUP BY 1, 2, 3),
-                 | c0px AS (SELECT b, cid,
-                 |     unnest(range(0, len(cemb))) AS pos,
-                 |     unnest(list_transform(range(0, len(cemb)), i -> cemb[i + 1])) AS sv0
-                 |   FROM c0),
-                 | c1px AS (SELECT c0px.b, c0px.cid, c0px.pos,
-                 |     CASE WHEN m1.mq IS NULL THEN sv0
-                 |          ELSE CAST(m1.mq::DOUBLE / 1e6 AS FLOAT) END AS ce
-                 |   FROM c0px LEFT JOIN m1
-                 |     ON c0px.b = m1.b AND c0px.cid = m1.cid AND c0px.pos = m1.pos),
-                 | c1 AS (SELECT b, cid, list(ce ORDER BY pos) AS cemb FROM c1px GROUP BY 1, 2),
-                 | d2t AS (
-                 |   SELECT vec_id, b, cid, round(sum(p), 6) AS d2
-                 |   FROM (SELECT s.vec_id, s.b AS b, c.cid,
-                 |           unnest(list_transform(range(1, len(s.sv) + 1),
-                 |             i -> (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE)
-                 |                * (s.sv[i]::DOUBLE - c.cemb[i]::DOUBLE))) AS p
-                 |         FROM sub s JOIN c1 c ON s.b = c.b)
-                 |   GROUP BY 1, 2, 3),
-                 | assign2 AS (
-                 |   SELECT vec_id, b, cid FROM (
-                 |     SELECT vec_id, b, cid,
-                 |       row_number() OVER (PARTITION BY vec_id, b ORDER BY d2, cid) AS rn
-                 |     FROM d2t) WHERE rn = 1),
+      Some(oneLine(s"""WITH $pqCte,
                  | qsub AS (SELECT vec_id AS qid, b, sv AS qv FROM sub WHERE vec_id < 20),
                  | lutp AS (
                  |   SELECT qid, b, cid, round(round(sum(p), 6) * 1e6)::BIGINT AS d2q
@@ -4439,15 +4247,7 @@ object PipelineOps {
           .orderBy(col("sim").desc, col("i"), col("j")).limit(20)
       },
       Some(oneLine(s"""WITH ${centroidAssignCte(scaledKSql)},
-                 | pairs AS (
-                 |   SELECT a.cid, a.vec_id AS i, b.vec_id AS j,
-                 |     round((SELECT sum(x * y) FROM (SELECT
-                 |        unnest(ea.embedding)::DOUBLE AS x,
-                 |        unnest(eb.embedding)::DOUBLE AS y)), 3) AS sim
-                 |   FROM assigned a JOIN assigned b
-                 |     ON a.cid = b.cid AND a.vec_id < b.vec_id
-                 |   JOIN embeddings ea ON ea.vec_id = a.vec_id
-                 |   JOIN embeddings eb ON eb.vec_id = b.vec_id)
+                 | ${clusterPairsCte("a.cid, a.vec_id")}
                  | SELECT cid, i, j, sim FROM pairs
                  | ORDER BY sim DESC, i, j LIMIT 20"""))),
 
@@ -4483,23 +4283,11 @@ object PipelineOps {
         semDedup(emb, stubCodebook(emb, k), 0.4, assignK = k).orderBy("vec_id")
       },
       Some(oneLine(s"""WITH RECURSIVE ${centroidAssignCte(scaledKSql)},
-                  | pairs AS (
-                  |   SELECT a.vec_id AS i, b.vec_id AS j,
-                  |     round((SELECT sum(x * y) FROM (SELECT
-                  |        unnest(ea.embedding)::DOUBLE AS x,
-                  |        unnest(eb.embedding)::DOUBLE AS y)), 3) AS sim
-                  |   FROM assigned a JOIN assigned b
-                  |     ON a.cid = b.cid AND a.vec_id < b.vec_id
-                  |   JOIN embeddings ea ON ea.vec_id = a.vec_id
-                  |   JOIN embeddings eb ON eb.vec_id = b.vec_id),
+                  | ${clusterPairsCte("a.vec_id")},
                   | nd AS (SELECT i, j FROM pairs WHERE sim >= 0.4),
                   | edges AS (SELECT i AS s, j AS d FROM nd
                   |   UNION ALL SELECT j, i FROM nd),
-                  | reach(v, r) AS (
-                  |   SELECT DISTINCT s, s FROM edges
-                  |   UNION
-                  |   SELECT e.d, re.r FROM reach re JOIN edges e ON e.s = re.v),
-                  | lbl AS (SELECT v, min(r) AS canon FROM reach GROUP BY v)
+                  | ${LlmOps.ccLabelCte("v", "canon")}
                   | SELECT a.vec_id, a.cid FROM assigned a
                   | WHERE a.vec_id NOT IN (SELECT v FROM lbl WHERE v <> canon)
                   | ORDER BY a.vec_id"""))),
@@ -4618,12 +4406,7 @@ object PipelineOps {
             max(col("doc_id")).as("last_doc"))
           .orderBy("shard_id")
       },
-      Some(oneLine("""WITH tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
-                 |   FROM documents),
-                 | c AS (SELECT doc_id, tok,
-                 |     COALESCE(SUM(tok) OVER (ORDER BY doc_id
-                 |       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS cb
-                 |   FROM tk)
+      Some(oneLine(s"""WITH $tokOffsetsCte
                  | SELECT cb // 2000 AS shard_id, count(*)::BIGINT AS n_docs,
                  |   SUM(tok)::BIGINT AS tok_total,
                  |   MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
@@ -4655,17 +4438,8 @@ object PipelineOps {
         seqPlacement(exclusiveRunningTokens(docs, 32), L)
           .orderBy("doc_id")
       },
-      Some(oneLine("""WITH tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
-                 |   FROM documents),
-                 | c AS (SELECT doc_id, tok,
-                 |     COALESCE(SUM(tok) OVER (ORDER BY doc_id
-                 |       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS cb
-                 |   FROM tk)
-                 | SELECT doc_id, tok, (cb // 512)::BIGINT AS first_seq,
-                 |   (cb % 512)::BIGINT AS seq_offset,
-                 |   ((cb + tok - 1) // 512)::BIGINT AS last_seq,
-                 |   (((cb + tok - 1) // 512) - (cb // 512) + 1)::BIGINT AS n_seqs
-                 | FROM c ORDER BY doc_id"""))),
+      Some(oneLine(s"""WITH $tokOffsetsCte
+                 | $seqPlacementSql"""))),
 
     // Incremental packing INGEST — the lifecycle closer for the packing
     // family (the i25/i36/i41 symmetry: find→manifest→incremental):
@@ -4691,7 +4465,7 @@ object PipelineOps {
           docs.filter(col("doc_id") >= 400).select("doc_id", "text"), base)
           .orderBy("doc_id")
       },
-      Some(oneLine("""WITH tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
+      Some(oneLine(s"""WITH tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
                  |   FROM documents),
                  | base AS (SELECT COALESCE(SUM(tok), 0)::BIGINT AS bt FROM tk
                  |   WHERE doc_id < 400),
@@ -4699,11 +4473,7 @@ object PipelineOps {
                  |     ((SELECT bt FROM base) + COALESCE(SUM(tok) OVER (ORDER BY doc_id
                  |       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT AS cb
                  |   FROM tk WHERE doc_id >= 400)
-                 | SELECT doc_id, tok, (cb // 512)::BIGINT AS first_seq,
-                 |   (cb % 512)::BIGINT AS seq_offset,
-                 |   ((cb + tok - 1) // 512)::BIGINT AS last_seq,
-                 |   (((cb + tok - 1) // 512) - (cb // 512) + 1)::BIGINT AS n_seqs
-                 | FROM c ORDER BY doc_id"""))),
+                 | $seqPlacementSql"""))),
 
     // Packing MANIFEST — i48 transposed to the artifact the trainer
     // actually indexes: one row per OUTPUT SEQUENCE (which docs feed it,
@@ -4735,12 +4505,7 @@ object PipelineOps {
               greatest(col("cum_before"), col("seq_id") * L)).as("fill"))
           .orderBy("seq_id")
       },
-      Some(oneLine("""WITH tk AS (SELECT doc_id, len(string_split(text, ' '))::BIGINT AS tok
-                 |   FROM documents),
-                 | c AS (SELECT doc_id, tok,
-                 |     COALESCE(SUM(tok) OVER (ORDER BY doc_id
-                 |       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS cb
-                 |   FROM tk),
+      Some(oneLine(s"""WITH $tokOffsetsCte,
                  | e AS (SELECT doc_id, tok, cb,
                  |     unnest(range(cb // 512, (cb + tok - 1) // 512 + 1)) AS seq_id
                  |   FROM c)
@@ -4820,11 +4585,7 @@ object PipelineOps {
           .select(col("doc_id"), col("quality"), col("phase"), col("pos_in_phase"))
           .orderBy("doc_id")
       },
-      Some(oneLine("""WITH st AS (SELECT doc_id,
-                 |     len(string_split(text,' '))::BIGINT AS n_tok,
-                 |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
-                 |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
-                 |   FROM documents),
+      Some(oneLine(s"""WITH ${LlmOps.tokStatsCte("doc_id")},
                  | q AS (SELECT doc_id,
                  |     round(least(n_tok/100.0, 1.0)*0.4 + (n_uniq/n_tok)*0.3 + (1.0 - n_stop/n_tok)*0.3, 3) AS quality
                  |   FROM st),
@@ -5045,15 +4806,7 @@ object PipelineOps {
           .select(col("doc_id"), col("source"), col("lang"))
           .orderBy("doc_id")
       },
-      Some(oneLine("""WITH sh AS (
-                 |   SELECT DISTINCT doc_id,
-                 |     unnest(list_transform(range(1, len(toks)-1),
-                 |       i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s
-                 |   FROM (SELECT doc_id, string_split(text,' ') AS toks FROM documents
-                 |         WHERE len(string_split(text,' ')) >= 3)),
-                 | ev AS (SELECT DISTINCT s FROM sh WHERE doc_id < 50),
-                 | tr AS (SELECT * FROM sh WHERE doc_id >= 50),
-                 | sz AS (SELECT doc_id, count(*) AS n_sh FROM tr GROUP BY doc_id),
+      Some(oneLine(s"""WITH $evalShinglesCte,
                  | shd AS (SELECT doc_id, count(*) AS n_shared
                  |   FROM tr JOIN ev USING (s) GROUP BY doc_id),
                  | flagged AS (SELECT sz.doc_id FROM sz JOIN shd USING (doc_id)
@@ -5299,21 +5052,7 @@ object PipelineOps {
     // and the scoring spine.
     Q("i60_dsir_importance",
       (s, dir) => dsirImportance(t(s, dir, "documents"), topK = 25),
-      Some(oneLine("""WITH occ AS (
-                 |   SELECT doc_id, lang,
-                 |     unnest(list_transform(range(1, len(toks)),
-                 |       i -> toks[i] || ' ' || toks[i+1])) AS bg
-                 |   FROM (SELECT doc_id, lang, string_split(text, ' ') AS toks
-                 |         FROM documents)),
-                 | raw AS (SELECT bg, count(*)::BIGINT AS cs FROM occ GROUP BY bg),
-                 | tgt AS (SELECT bg, count(*)::BIGINT AS ct FROM occ
-                 |   WHERE lang = 'en' GROUP BY bg),
-                 | rat AS (SELECT raw.bg,
-                 |     round(1e6 * (coalesce(ct, 0) + 1) / (cs + 1))::BIGINT AS q
-                 |   FROM raw LEFT JOIN tgt ON raw.bg = tgt.bg),
-                 | sv AS (SELECT sum(cs)::DOUBLE AS s_tot, count(*)::DOUBLE AS v FROM raw),
-                 | tv AS (SELECT count(*)::DOUBLE AS t_tot FROM occ WHERE lang = 'en'),
-                 | cf AS (SELECT (s_tot + v) / (t_tot + v) AS cfac FROM sv, tv),
+      Some(oneLine(s"""WITH ${dsirStateCte("occ", "documents")},
                  | sp AS (SELECT doc_id, count(*)::BIGINT AS n_bigrams,
                  |     sum(q)::BIGINT AS sq
                  |   FROM occ JOIN rat ON occ.bg = rat.bg GROUP BY doc_id)
@@ -5437,11 +5176,7 @@ object PipelineOps {
           .select(col("doc_id"), col("quality"), col("n_tok"))
           .orderBy("doc_id")
       },
-      Some(oneLine("""WITH st AS (SELECT doc_id,
-                 |     len(string_split(text,' '))::BIGINT AS n_tok,
-                 |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
-                 |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
-                 |   FROM documents),
+      Some(oneLine(s"""WITH ${LlmOps.tokStatsCte("doc_id")},
                  | q AS (SELECT doc_id, n_tok,
                  |     round(least(n_tok/100.0, 1.0)*0.4 + (n_uniq/n_tok)*0.3 + (1.0 - n_stop/n_tok)*0.3, 3) AS quality
                  |   FROM st),
@@ -5528,23 +5263,7 @@ object PipelineOps {
             round(VectorFunctions.dot(col("embedding"), col("qemb")), 3).as("sim"))
           .orderBy(col("sim").desc, col("vec_id")).limit(10)
       },
-      Some(oneLine(s"""WITH q AS (SELECT embedding AS qemb FROM embeddings WHERE vec_id = 0),
-                 | ${centroidAssignCte()},
-                 | probe AS (
-                 |   SELECT cid FROM (
-                 |     SELECT cid, round(sum(p), 6) AS qd
-                 |     FROM (SELECT c.cid, unnest(c.cemb)::DOUBLE * unnest(q.qemb)::DOUBLE AS p
-                 |           FROM cent c, q)
-                 |     GROUP BY cid)
-                 |   ORDER BY qd DESC, cid LIMIT 2),
-                 | sims AS (
-                 |   SELECT vec_id, round(sum(p), 3) AS sim
-                 |   FROM (SELECT e.vec_id, unnest(e.embedding)::DOUBLE * unnest(q.qemb)::DOUBLE AS p
-                 |         FROM embeddings e JOIN assigned a ON e.vec_id = a.vec_id
-                 |              JOIN probe pr ON a.cid = pr.cid, q
-                 |         WHERE e.label = 1)
-                 |   GROUP BY vec_id)
-                 | SELECT vec_id, sim FROM sims ORDER BY sim DESC, vec_id LIMIT 10"""))),
+      Some(ivfTop10Oracle("\n |         WHERE e.label = 1"))),
 
     // Per-source token concentration — the Simpson/Gini diversity index
     // 1 − Σp², j15's within-source companion (j15 compares sources,
@@ -5615,21 +5334,7 @@ object PipelineOps {
         val (rat, cfac) = dsirState(docs.filter(col("doc_id") < 400))
         dsirScoreAgainst(docs.filter(col("doc_id") >= 400), rat, cfac)
       },
-      Some(oneLine("""WITH corp AS (
-                 |   SELECT doc_id, lang,
-                 |     unnest(list_transform(range(1, len(toks)),
-                 |       i -> toks[i] || ' ' || toks[i+1])) AS bg
-                 |   FROM (SELECT doc_id, lang, string_split(text, ' ') AS toks
-                 |         FROM documents WHERE doc_id < 400)),
-                 | raw AS (SELECT bg, count(*)::BIGINT AS cs FROM corp GROUP BY bg),
-                 | tgt AS (SELECT bg, count(*)::BIGINT AS ct FROM corp
-                 |   WHERE lang = 'en' GROUP BY bg),
-                 | rat AS (SELECT raw.bg,
-                 |     round(1e6 * (coalesce(ct, 0) + 1) / (cs + 1))::BIGINT AS q
-                 |   FROM raw LEFT JOIN tgt ON raw.bg = tgt.bg),
-                 | sv AS (SELECT sum(cs)::DOUBLE AS s_tot, count(*)::DOUBLE AS v FROM raw),
-                 | tv AS (SELECT count(*)::DOUBLE AS t_tot FROM corp WHERE lang = 'en'),
-                 | cf AS (SELECT (s_tot + v) / (t_tot + v) AS cfac FROM sv, tv),
+      Some(oneLine(s"""WITH ${dsirStateCte("corp", "documents WHERE doc_id < 400")},
                  | bocc AS (
                  |   SELECT doc_id,
                  |     unnest(list_transform(range(1, len(toks)),
@@ -5843,21 +5548,7 @@ object PipelineOps {
                 |WHERE CAST(n_shared AS DOUBLE) / n_sh >= 0.2
                 |ORDER BY sz.doc_id""".stripMargin)
       },
-      Some(oneLine("""WITH sh AS (
-                 |   SELECT DISTINCT doc_id,
-                 |     unnest(list_transform(range(1, len(toks)-1),
-                 |       i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s
-                 |   FROM (SELECT doc_id, string_split(text,' ') AS toks FROM documents
-                 |         WHERE len(string_split(text,' ')) >= 3)),
-                 | ev AS (SELECT DISTINCT s FROM sh WHERE doc_id < 50),
-                 | tr AS (SELECT * FROM sh WHERE doc_id >= 50),
-                 | sz AS (SELECT doc_id, count(*) AS n_sh FROM tr GROUP BY doc_id),
-                 | shd AS (SELECT doc_id, count(*) AS n_shared FROM tr JOIN ev USING (s) GROUP BY doc_id)
-                 | SELECT sz.doc_id, n_shared,
-                 |   round(n_shared * 1.0 / n_sh, 3) AS containment
-                 | FROM sz JOIN shd ON sz.doc_id = shd.doc_id
-                 | WHERE n_shared * 1.0 / n_sh >= 0.2
-                 | ORDER BY sz.doc_id"""))),
+      Some(contaminationOracle)),
 
     // MinHash estimator calibration — the i28 rule applied to the
     // MinHash sketch: for every EXACT J ≥ 0.9 pair (i2's output), the
@@ -6557,15 +6248,8 @@ object PipelineOps {
                 / sqrt(col("dy").cast("double")), 4)).as("corr"))
           .orderBy("source")
       },
-      Some(oneLine("""WITH st AS (SELECT source,
-                 |     len(string_split(text,' '))::BIGINT AS n_tok,
-                 |     len(list_distinct(string_split(text,' ')))::BIGINT AS n_uniq,
-                 |     len(list_filter(string_split(text,' '), t -> t IN ('a','the')))::BIGINT AS n_stop
-                 |   FROM documents),
-                 | v AS (SELECT source, n_tok,
-                 |     CAST(round(round(least(n_tok/100.0,1.0)*0.4 + (n_uniq/n_tok)*0.3
-                 |       + (1.0-n_stop/n_tok)*0.3, 3)*1000) AS BIGINT) AS qm
-                 |   FROM st),
+      Some(oneLine(s"""WITH ${LlmOps.tokStatsCte("source")},
+                 | ${qmCte("source, n_tok")},
                  | a AS (SELECT source, count(*) AS n_docs,
                  |     CAST(sum(n_tok) AS BIGINT) AS sx, CAST(sum(qm) AS BIGINT) AS sy,
                  |     CAST(sum(n_tok*qm) AS BIGINT) AS sxy,
@@ -6724,6 +6408,14 @@ object PipelineOps {
     val occ = Harness.materialize(corpus
       .select(col("lang"), explode(gramZip(col("text"), 2)).as("z"))
       .select(col("lang"), xxhash64(col("z.0"), col("z.1")).as("bk")))
+    dsirRatios(occ)
+  }
+
+  /** (rat, cfac) over bigram occurrences `occ(bk, lang)`: the add-1
+    * quantized en/all ratio per bigram hash and the 1-row smoothing
+    * normalizer — shared by [[dsirState]] and [[dsirImportance]].
+    */
+  private def dsirRatios(occ: DataFrame): (DataFrame, DataFrame) = {
     val raw = occ.groupBy(col("bk")).agg(count(lit(1)).as("cs"))
     val tgt = occ.filter(col("lang") === "en")
       .groupBy(col("bk")).agg(count(lit(1)).as("ct"))
@@ -6820,20 +6512,7 @@ object PipelineOps {
         explode(gramZip(col("text"), 2)).as("z"))
       .select(col("doc_id"), col("lang"),
         xxhash64(col("z.0"), col("z.1")).as("bk")))
-    val raw = occ.groupBy(col("bk")).agg(count(lit(1)).as("cs"))
-    val tgt = occ.filter(col("lang") === "en")
-      .groupBy(col("bk")).agg(count(lit(1)).as("ct"))
-    val rat = raw.join(tgt, Seq("bk"), "left")
-      .select(col("bk"),
-        round(lit(1e6) * (coalesce(col("ct"), lit(0L)) + lit(1L))
-          / (col("cs") + lit(1L))).cast("long").as("q"))
-    val sv = raw.agg(sum(col("cs")).cast("double").as("s_tot"),
-      count(lit(1)).cast("double").as("v"))
-    val tv = occ.filter(col("lang") === "en")
-      .agg(count(lit(1)).cast("double").as("t_tot"))
-    val cfac = sv.crossJoin(broadcast(tv))
-      .select(((col("s_tot") + col("v")) / (col("t_tot") + col("v")))
-        .as("cfac"))
+    val (rat, cfac) = dsirRatios(occ)
     occ.join(rat, "bk")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("q")).as("sq"))

@@ -51,15 +51,11 @@ object RelationalOps {
     */
   private def sq(c: Column): Column = c * c
 
-  /** b15/b38's SCD2 dimension build: the 1990 snapshot unions the
-    * change stream, consecutive same-attr versions collapse, and each
-    * version carries its half-open [valid_from, valid_to) interval
-    * (valid_to null = current). One (key) Exchange feeds the lag
-    * filter, the version numbers, and the lead validity — b15 emits
-    * this table, b38 point-in-time-joins facts against it (the shipped
-    * plan rule).
+  /** The 1990 customer snapshot (seq −1, attr NONE) followed by the
+    * orders change stream as (k, chg_ts, chg_seq, attr): the input of
+    * b15/b38's SCD2 dimension and of b16's CDC compaction.
     */
-  private def scd2Dim(s: SparkSession, dir: String): DataFrame = {
+  private def scd2Changes(s: SparkSession, dir: String): DataFrame = {
     val snap = t(s, dir, "customer").select(
       col("c_custkey").as("k"),
       to_timestamp(lit("1990-01-01 00:00:00")).as("chg_ts"),
@@ -70,9 +66,54 @@ object RelationalOps {
       col("o_orderdate").as("chg_ts"),
       col("o_orderkey").as("chg_seq"),
       col("o_orderpriority").as("attr"))
+    snap.unionAll(changes)
+  }
+
+  /** DuckDB twin of [[scd2Changes]], the body of a `uni` CTE. */
+  private val duckScd2Changes: String =
+    """SELECT c_custkey AS k, TIMESTAMP '1990-01-01 00:00:00' AS chg_ts,
+      |          CAST(-1 AS BIGINT) AS chg_seq, 'NONE' AS attr FROM customer
+      |   UNION ALL
+      |   SELECT o_custkey, o_orderdate, o_orderkey, o_orderpriority FROM orders"""
+
+  /** [[duckScd2Changes]] with consecutive same-attr versions collapsed:
+    * `flt(k, chg_ts, chg_seq, attr)` (b15, b38).
+    */
+  private val duckScd2VersionsCte: String =
+    s"""uni AS (
+      |   $duckScd2Changes
+      | ), flt AS (
+      |   SELECT k, chg_ts, chg_seq, attr FROM (
+      |     SELECT k, chg_ts, chg_seq, attr,
+      |       lag(attr) OVER (PARTITION BY k ORDER BY chg_ts, chg_seq) AS prev_attr
+      |     FROM uni)
+      |   WHERE prev_attr IS NULL OR attr <> prev_attr)"""
+
+  /** The 7 lagged cent values `c1`..`c7` of each event over window `w`,
+    * per user in (ts, event_id) order (d15, d16).
+    */
+  private val duckCentsLags: String =
+    """lag(CAST(round(value * 100) AS BIGINT), 1) OVER w AS c1,
+      |     lag(CAST(round(value * 100) AS BIGINT), 2) OVER w AS c2,
+      |     lag(CAST(round(value * 100) AS BIGINT), 3) OVER w AS c3,
+      |     lag(CAST(round(value * 100) AS BIGINT), 4) OVER w AS c4,
+      |     lag(CAST(round(value * 100) AS BIGINT), 5) OVER w AS c5,
+      |     lag(CAST(round(value * 100) AS BIGINT), 6) OVER w AS c6,
+      |     lag(CAST(round(value * 100) AS BIGINT), 7) OVER w AS c7
+      |   FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"""
+
+  /** b15/b38's SCD2 dimension build: the 1990 snapshot unions the
+    * change stream, consecutive same-attr versions collapse, and each
+    * version carries its half-open [valid_from, valid_to) interval
+    * (valid_to null = current). One (key) Exchange feeds the lag
+    * filter, the version numbers, and the lead validity — b15 emits
+    * this table, b38 point-in-time-joins facts against it (the shipped
+    * plan rule).
+    */
+  private def scd2Dim(s: SparkSession, dir: String): DataFrame = {
     val ord = Window.partitionBy(col("k"))
       .orderBy(col("chg_ts").asc, col("chg_seq").asc)
-    snap.unionAll(changes)
+    scd2Changes(s, dir)
       .withColumn("prev_attr", lag(col("attr"), 1).over(ord))
       .filter(col("prev_attr").isNull || col("attr") =!= col("prev_attr"))
       .withColumn("ver", row_number().over(ord).cast("long"))
@@ -463,17 +504,7 @@ object RelationalOps {
           .agg(count(lit(1)).as("n_ships"), sum(col("cents")).as("cents"))
           .orderBy("attr")
       },
-      Some(oneLine("""WITH uni AS (
-                 |   SELECT c_custkey AS k, TIMESTAMP '1990-01-01 00:00:00' AS chg_ts,
-                 |          CAST(-1 AS BIGINT) AS chg_seq, 'NONE' AS attr FROM customer
-                 |   UNION ALL
-                 |   SELECT o_custkey, o_orderdate, o_orderkey, o_orderpriority FROM orders
-                 | ), flt AS (
-                 |   SELECT k, chg_ts, chg_seq, attr FROM (
-                 |     SELECT k, chg_ts, chg_seq, attr,
-                 |       lag(attr) OVER (PARTITION BY k ORDER BY chg_ts, chg_seq) AS prev_attr
-                 |     FROM uni)
-                 |   WHERE prev_attr IS NULL OR attr <> prev_attr),
+      Some(oneLine(s"""WITH $duckScd2VersionsCte,
                  | dim AS (SELECT k AS c_custkey, chg_ts AS valid_from,
                  |     lead(chg_ts) OVER (PARTITION BY k ORDER BY chg_ts, chg_seq) AS valid_to,
                  |     attr
@@ -1675,17 +1706,10 @@ object RelationalOps {
             round(col("ewma_num") / col("ewma_den"), 4).as("ewma_cents"))
           .orderBy("user_id", "event_id")
       },
-      Some(oneLine("""WITH lagged AS (
+      Some(oneLine(s"""WITH lagged AS (
                  |   SELECT user_id, event_id,
                  |     CAST(round(value * 100) AS BIGINT) AS cents,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 1) OVER w AS c1,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 2) OVER w AS c2,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 3) OVER w AS c3,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 4) OVER w AS c4,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 5) OVER w AS c5,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 6) OVER w AS c6,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 7) OVER w AS c7
-                 |   FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
+                 |     $duckCentsLags)
                  | SELECT user_id, event_id, cents,
                  |   cents*128 + coalesce(c1,0)*64 + coalesce(c2,0)*32 + coalesce(c3,0)*16
                  |     + coalesce(c4,0)*8 + coalesce(c5,0)*4 + coalesce(c6,0)*2
@@ -1734,17 +1758,10 @@ object RelationalOps {
             when(col("den") > 0, round(col("num") / col("den"), 4)).as("slope"))
           .orderBy("user_id", "event_id")
       },
-      Some(oneLine("""WITH lg AS (
+      Some(oneLine(s"""WITH lg AS (
                  |   SELECT user_id, event_id,
                  |     CAST(round(value * 100) AS BIGINT) AS c0,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 1) OVER w AS c1,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 2) OVER w AS c2,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 3) OVER w AS c3,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 4) OVER w AS c4,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 5) OVER w AS c5,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 6) OVER w AS c6,
-                 |     lag(CAST(round(value * 100) AS BIGINT), 7) OVER w AS c7
-                 |   FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+                 |     $duckCentsLags),
                  | s AS (SELECT user_id, event_id, c0,
                  |     (CASE WHEN c0 IS NULL THEN 0 ELSE 1 END) + (CASE WHEN c1 IS NULL THEN 0 ELSE 1 END)
                  |       + (CASE WHEN c2 IS NULL THEN 0 ELSE 1 END) + (CASE WHEN c3 IS NULL THEN 0 ELSE 1 END)
@@ -3019,17 +3036,7 @@ object RelationalOps {
     // and no two consecutive versions share an attribute value.
     Q("b15_scd2_merge",
       (s, dir) => scd2Dim(s, dir).orderBy("c_custkey", "ver"),
-      Some(oneLine("""WITH uni AS (
-                 |   SELECT c_custkey AS k, TIMESTAMP '1990-01-01 00:00:00' AS chg_ts,
-                 |          CAST(-1 AS BIGINT) AS chg_seq, 'NONE' AS attr FROM customer
-                 |   UNION ALL
-                 |   SELECT o_custkey, o_orderdate, o_orderkey, o_orderpriority FROM orders
-                 | ), flt AS (
-                 |   SELECT k, chg_ts, chg_seq, attr FROM (
-                 |     SELECT k, chg_ts, chg_seq, attr,
-                 |       lag(attr) OVER (PARTITION BY k ORDER BY chg_ts, chg_seq) AS prev_attr
-                 |     FROM uni)
-                 |   WHERE prev_attr IS NULL OR attr <> prev_attr)
+      Some(oneLine(s"""WITH $duckScd2VersionsCte
                  | SELECT k AS c_custkey,
                  |   CAST(row_number() OVER w AS BIGINT) AS ver,
                  |   chg_ts AS valid_from,
@@ -3052,16 +3059,6 @@ object RelationalOps {
     // change set minus deletes, b16 ≡ b15's is_current slice.
     Q("b16_cdc_upsert",
       (s, dir) => {
-        val snap = t(s, dir, "customer").select(
-          col("c_custkey").as("k"),
-          to_timestamp(lit("1990-01-01 00:00:00")).as("chg_ts"),
-          lit(-1L).as("chg_seq"),
-          lit("NONE").as("attr"))
-        val changes = t(s, dir, "orders").select(
-          col("o_custkey").as("k"),
-          col("o_orderdate").as("chg_ts"),
-          col("o_orderkey").as("chg_seq"),
-          col("o_orderpriority").as("attr"))
         val tombstones = t(s, dir, "customer")
           .filter(conv(substring(md5(concat(lit("del:"),
             col("c_custkey").cast("string"))), 1, 8), 16, 10)
@@ -3072,7 +3069,7 @@ object RelationalOps {
             lit("DELETE").as("attr"))
         val ord = Window.partitionBy(col("k"))
           .orderBy(col("chg_ts").desc, col("chg_seq").desc)
-        snap.unionAll(changes).unionAll(tombstones)
+        scd2Changes(s, dir).unionAll(tombstones)
           .withColumn("rn", row_number().over(ord))
           .filter(col("rn") === 1 && col("attr") =!= "DELETE")
           .select(col("k").as("c_custkey"),
@@ -3080,11 +3077,8 @@ object RelationalOps {
             col("attr"))
           .orderBy("c_custkey")
       },
-      Some(oneLine("""WITH uni AS (
-                 |   SELECT c_custkey AS k, TIMESTAMP '1990-01-01 00:00:00' AS chg_ts,
-                 |          CAST(-1 AS BIGINT) AS chg_seq, 'NONE' AS attr FROM customer
-                 |   UNION ALL
-                 |   SELECT o_custkey, o_orderdate, o_orderkey, o_orderpriority FROM orders
+      Some(oneLine(s"""WITH uni AS (
+                 |   $duckScd2Changes
                  |   UNION ALL
                  |   SELECT c_custkey, TIMESTAMP '2030-01-01 00:00:00', CAST(-2 AS BIGINT), 'DELETE'
                  |   FROM customer

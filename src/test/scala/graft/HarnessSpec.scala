@@ -65,6 +65,46 @@ class HarnessSpec extends SparkTestBase {
       s"createOrReplaceTempView sites per file: $counts")
   }
 
+  /** The runs of consecutive `|`-margin lines (trimmed) of each registry
+    * entry under graft/operators, with the entry's query id. An entry runs
+    * from its `Q(`/`Q.sql(` line to the next one or to the next line at
+    * member indentation, so a fragment defined outside `qs` is in none.
+    */
+  private def registryMarginRuns(): Seq[(String, Vector[String])] = {
+    val root = Paths.get("src/main/scala/graft/operators")
+    assert(Files.isDirectory(root), s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
+    val start = """\s*Q(?:\.sql)?\("([^"]+)".*""".r
+    val s = Files.list(root)
+    try s.iterator().asScala.toSeq.sorted.flatMap { p =>
+      val runs = Seq.newBuilder[(String, Vector[String])]
+      var id = Option.empty[String]
+      var run = Vector.empty[String]
+      def flush(): Unit = {
+        if (run.nonEmpty) id.foreach(q => runs += q -> run)
+        run = Vector.empty
+      }
+      Files.readAllLines(p).asScala.foreach {
+        case start(q) => flush(); id = Some(q)
+        case l if l.trim.startsWith("|") => run :+= l.trim
+        case l => flush(); if (l.matches("  \\S.*")) id = None
+      }
+      flush()
+      runs.result()
+    } finally s.close()
+  }
+
+  test("no run of 8 margin lines is typed into two registry entries") {
+    // An oracle stage that two queries share is one named fragment; a
+    // pasted copy is where a fix to one of them misses the other. A
+    // query's own Spark text and duck text sit in one entry (b24, b28).
+    val shared = registryMarginRuns()
+      .flatMap { case (q, run) => run.sliding(8).filter(_.size == 8).map(_ -> q) }
+      .groupBy(_._1).map { case (w, owners) => w -> owners.map(_._2).distinct }
+      .filter(_._2.size > 1)
+    assert(shared.isEmpty, shared.map { case (w, qs) =>
+      s"${qs.mkString(", ")} share:\n  ${w.mkString("\n  ")}" }.mkString("\n"))
+  }
+
   /** A frame with a shuffle, and its rows. */
   private def grouped() = {
     val df = spark.range(0, 2000, 1, 4).groupBy((col("id") % 7).as("k")).count()
