@@ -46,6 +46,8 @@ import graft.streaming.LocalCheckpointFileManager
   *     (`main.go:153-156`); so does a stream whose query fails (a
   *     malformed or truncated shard), or a one-shot drain that has not
   *     finished after 600 s, with the cause on stderr
+  *   - stdout closed or failing (the reference dies on SIGPIPE) → exit 1
+  *     after the batch whose write failed; no later batch is drained
   *   - SIGINT during watch → graceful drain then exit (`main.go:180-208`),
   *     as a shutdown hook stopping the streaming query
   */
@@ -219,6 +221,10 @@ object Tail {
               .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
                 drainOrdered(batch.queryExecution.toRdd, out)
                 out.flush()
+                // PrintStream swallows write errors: a closed stdout (the
+                // reference dies on SIGPIPE) would drain every batch, and
+                // in watch mode poll forever.
+                if (out.checkError()) throw new OutputWriteFailed
               }
             try {
               val q = (if (o.oneShot) writer.trigger(Trigger.AvailableNow())
@@ -245,6 +251,10 @@ object Tail {
                 0
               }
             } catch {
+              case e: StreamingQueryException
+                  if ExceptionUtils.indexOfType(e, classOf[OutputWriteFailed]) >= 0 =>
+                err.println(s"Failed to write records: ${ExceptionUtils.getRootCauseMessage(e)}")
+                1
               case e: StreamingQueryException =>
                 err.println(s"Failed to read stream $streamDir: ${ExceptionUtils.getRootCauseMessage(e)}")
                 1
@@ -252,6 +262,10 @@ object Tail {
         }
     }
   }
+
+  /** The output stream reported an error (`PrintStream.checkError`). */
+  private final class OutputWriteFailed
+      extends java.io.IOException("write to the output stream failed")
 
   /** One partition's rows of a single string column as one block: per
     * row, its UTF-8 length (-1 for null) and its bytes. A named function

@@ -34,14 +34,6 @@ import graft.functions.{TextFunctions, VectorFunctions}
 object LlmOps {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables.load(s, dir, n)
-  /** Distinct tokens per document, with the doc's distinct-token count
-    * carried along so the pair-join needs no extra sizes join.
-    */
-  private def distinctTokens(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), col("source"),
-        explode(array_distinct(split(col("text"), " "))).as("token"),
-        size(array_distinct(split(col("text"), " "))).cast("long").as("n_tok"))
 
   /** Token sets as sorted xxhash64 longs. The uniform hash value IS the
     * global token order the prefix filter needs (lossless under any fixed
@@ -62,33 +54,20 @@ object LlmOps {
     * (i14, PipelineOps).
     */
   def hashedTokenSets(docs: DataFrame): DataFrame =
-    docs
+    PipelineOps.distinctTok(docs)
       .select(col("doc_id"), col("source"),
-        explode(array_distinct(split(col("text"), " "))).as("token"))
-      .select(col("doc_id"), col("source"),
-        xxhash64(col("token")).as("rk"))
+        xxhash64(col("tok")).as("rk"))
       .groupBy(col("doc_id"), col("source"))
       .agg(sort_array(collect_set(col("rk"))).as("rks"))
       .withColumn("n_tok", size(col("rks")).cast("long"))
 
-  /** Exact verify stage: candidate pairs × hashed token sets → pairs with
-    * token-set Jaccard ≥ 0.9, totally ordered. Candidate generation (i2's
-    * prefix filter, i14's minhash bands) only affects WHICH pairs are
-    * checked; this stage defines the output.
-    */
-  def verifyJaccard(cand: DataFrame, sets: DataFrame): DataFrame = {
-    val l = sets.select(col("doc_id").as("doc_id1"), col("rks").as("rks1"),
-      col("n_tok").as("n1"))
-    val r = sets.select(col("doc_id").as("doc_id2"), col("rks").as("rks2"),
-      col("n_tok").as("n2"))
-    val inter = TextFunctions.sortedIntersectCount(col("rks1"), col("rks2")).cast("long")
-    val jac = col("inter") / (col("n1") + col("n2") - col("inter"))
-    cand.join(l, "doc_id1").join(r, "doc_id2")
-      .withColumn("inter", inter)
-      .filter(jac >= 0.9)
-      .select(col("doc_id1"), col("doc_id2"), round(jac, 3).as("jaccard"))
-      .orderBy("doc_id1", "doc_id2")
-  }
+  // ------------------------------------------------- the near-dup pair join
+  // Every same-source pair operator (i2, i13, i14, i36, i98, the truth
+  // table and the CC consumers) is these pieces: rows to join on (prefix
+  // hashes or band keys), one candidate self-join over them, and one
+  // overlap stage that intersects both sides' sorted sketches. Each
+  // caller keeps its own threshold and projection. i70 and i30 form
+  // other candidates and keep their own joins (see there).
 
   /** Lossless PPJoin prefix length at θ (in tenths) over a token count
     * column: n − ceil(θ·n) + 1, with ceil(θ·n) as the integer-exact
@@ -99,6 +78,52 @@ object LlmOps {
     */
   private[graft] def prefixLen(nTok: Column, thetaTenths: Int): Column =
     nTok - ((nTok * thetaTenths + 9) / 10).cast("long") + 1
+
+  /** The `(doc_id, source, rk)` prefix rows of a sketch table
+    * `(doc_id, source, rks, n_tok)` at θ (in tenths): each doc's first
+    * [[prefixLen]] hashes. Two docs with J ≥ θ share at least one.
+    */
+  private[graft] def prefixRows(sets: DataFrame, thetaTenths: Int): DataFrame =
+    sets.select(col("doc_id"), col("source"),
+      explode(slice(col("rks"), lit(1),
+        prefixLen(col("n_tok"), thetaTenths).cast("int"))).as("rk"))
+
+  /** Candidate pairs `(doc_id1, doc_id2)`, distinct, doc_id1 < doc_id2:
+    * the self-join of `rows` on equal `keys`. The keys include `source`
+    * (pairs only form inside a source bucket), and their order is the
+    * join's hash-key order.
+    */
+  private[graft] def candidatePairs(rows: DataFrame, keys: String*): DataFrame = {
+    val on = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
+    rows.alias("l")
+      .join(rows.alias("r"), on && col("l.doc_id") < col("r.doc_id"))
+      .select(col("l.doc_id").as("doc_id1"), col("r.doc_id").as("doc_id2"))
+      .distinct()
+  }
+
+  /** Candidate pairs joined to both sides' sketches — `rks1`, `n1`,
+    * `rks2`, `n2` — plus their exact token overlap `inter`. Candidate
+    * generation only decides WHICH pairs are checked; the caller's
+    * threshold on `inter` defines the output.
+    */
+  private[graft] def pairOverlap(cand: DataFrame, sets: DataFrame): DataFrame = {
+    def side(i: Int) = sets.select(col("doc_id").as(s"doc_id$i"),
+      col("rks").as(s"rks$i"), col("n_tok").as(s"n$i"))
+    cand.join(side(1), "doc_id1").join(side(2), "doc_id2")
+      .withColumn("inter",
+        TextFunctions.sortedIntersectCount(col("rks1"), col("rks2")).cast("long"))
+  }
+
+  /** Exact verify stage: candidate pairs × hashed token sets → pairs with
+    * token-set Jaccard ≥ θ, totally ordered.
+    */
+  def verifyJaccard(cand: DataFrame, sets: DataFrame, theta: Double): DataFrame = {
+    val jac = col("inter") / (col("n1") + col("n2") - col("inter"))
+    pairOverlap(cand, sets)
+      .filter(jac >= theta)
+      .select(col("doc_id1"), col("doc_id2"), round(jac, 3).as("jaccard"))
+      .orderBy("doc_id1", "doc_id2")
+  }
 
   /** The i2 pipeline: hashed token sets → lossless prefix filter →
     * (source, prefix-token) candidate equi-join → exact Jaccard ≥ 0.9
@@ -114,17 +139,16 @@ object LlmOps {
     // persists; Harness.materialize is the in-session analog (blocks are
     // freed by the ContextCleaner once the plan is GC'd, as in i15).
     val sets = Harness.materialize(hashedTokenSets(docs))
-    val prefixed = sets.select(col("doc_id"), col("source"),
-      explode(slice(col("rks"), lit(1),
-        prefixLen(col("n_tok"), thetaTenths = 9).cast("int"))).as("rk"))
-    val cand = prefixed.alias("a")
-      .join(prefixed.alias("b"),
-        col("a.source") === col("b.source") && col("a.rk") === col("b.rk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_id1"), col("b.doc_id").as("doc_id2"))
-      .distinct()
-    verifyJaccard(cand, sets)
+    verifyJaccard(candidatePairs(prefixRows(sets, 9), "source", "rk"), sets, 0.9)
   }
+
+  /** An overlap frame's pairs with Jaccard ≥ θ (in tenths) by exact
+    * integer cross-multiplication, as (doc_id1, doc_id2, inter, un).
+    */
+  private def truthRows(overlap: DataFrame, thetaTenths: Int): DataFrame =
+    overlap.withColumn("un", col("n1") + col("n2") - col("inter"))
+      .filter(col("inter") * 10 >= col("un") * thetaTenths)
+      .select(col("doc_id1"), col("doc_id2"), col("inter"), col("un"))
 
   /** Exact pair STATS at θ (in tenths): (doc_id1, doc_id2, inter, un)
     * for every same-source pair with token-set Jaccard ≥ θ, via the
@@ -141,25 +165,8 @@ object LlmOps {
     */
   def pairStats(docs: DataFrame, thetaTenths: Int): DataFrame = {
     val sets = Harness.materialize(hashedTokenSets(docs))
-    val pref = sets.select(col("doc_id"), col("source"),
-      explode(slice(col("rks"), lit(1),
-        prefixLen(col("n_tok"), thetaTenths).cast("int"))).as("rk"))
-    val cand = pref.alias("a")
-      .join(pref.alias("b"),
-        col("a.source") === col("b.source") && col("a.rk") === col("b.rk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_id1"), col("b.doc_id").as("doc_id2"))
-      .distinct()
-    val l = sets.select(col("doc_id").as("doc_id1"), col("rks").as("rks1"),
-      col("n_tok").as("n1"))
-    val r = sets.select(col("doc_id").as("doc_id2"), col("rks").as("rks2"),
-      col("n_tok").as("n2"))
-    cand.join(l, "doc_id1").join(r, "doc_id2")
-      .withColumn("inter",
-        TextFunctions.sortedIntersectCount(col("rks1"), col("rks2")).cast("long"))
-      .withColumn("un", col("n1") + col("n2") - col("inter"))
-      .filter(col("inter") * 10 >= col("un") * thetaTenths)
-      .select(col("doc_id1"), col("doc_id2"), col("inter"), col("un"))
+    truthRows(pairOverlap(
+      candidatePairs(prefixRows(sets, thetaTenths), "source", "rk"), sets), thetaTenths)
   }
 
   /** INGEST form of [[pairStats]] — the truth artifact's lifecycle
@@ -179,26 +186,14 @@ object LlmOps {
   def pairStatsIngest(corpusSets: DataFrame, batchSets: DataFrame,
       thetaTenths: Int): DataFrame = {
     val allSets = Harness.materialize(corpusSets.unionByName(batchSets))
-    def pref(s: DataFrame) = s.select(col("doc_id"), col("source"),
-      explode(slice(col("rks"), lit(1),
-        prefixLen(col("n_tok"), thetaTenths).cast("int"))).as("rk"))
-    val cand = pref(batchSets).alias("a")
-      .join(pref(allSets).alias("b"),
+    val cand = prefixRows(batchSets, thetaTenths).alias("a")
+      .join(prefixRows(allSets, thetaTenths).alias("b"),
         col("a.source") === col("b.source") && col("a.rk") === col("b.rk") &&
           col("a.doc_id") =!= col("b.doc_id"))
       .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_id1"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_id2"))
       .distinct()
-    val l = allSets.select(col("doc_id").as("doc_id1"), col("rks").as("rks1"),
-      col("n_tok").as("n1"))
-    val r = allSets.select(col("doc_id").as("doc_id2"), col("rks").as("rks2"),
-      col("n_tok").as("n2"))
-    cand.join(l, "doc_id1").join(r, "doc_id2")
-      .withColumn("inter",
-        TextFunctions.sortedIntersectCount(col("rks1"), col("rks2")).cast("long"))
-      .withColumn("un", col("n1") + col("n2") - col("inter"))
-      .filter(col("inter") * 10 >= col("un") * thetaTenths)
-      .select(col("doc_id1"), col("doc_id2"), col("inter"), col("un"))
+    truthRows(pairOverlap(cand, allSets), thetaTenths)
   }
 
   /** The θ=0.9 near-dup pair set DERIVED from a persisted [[pairStats]]
@@ -239,7 +234,9 @@ object LlmOps {
     // and |A∩B| ≤ |B|, so |B|·10 ≥ |A|·9 — a too-short B can't contain
     // enough of A, and the pair dies BEFORE the distinct instead of at
     // the verify stage. The oracle computes the unfiltered form, so the
-    // filter must be (and is) implied by the verify predicate.
+    // filter must be (and is) implied by the verify predicate. Not
+    // [[candidatePairs]]: the join is directed (prefix ⋈ full set, both
+    // orders kept), and so is the verify's denominator.
     val cand = aPref.alias("a")
       .join(bAll.alias("b"),
         col("a.source") === col("b.source") && col("a.rk") === col("b.rk") &&
@@ -519,7 +516,9 @@ object LlmOps {
       .select(col("rks"), col("pg"))
       .withColumn("n_tok", size(col("rks")).cast("long"))
     // Lossless θ prefix filter between the GROUP tables (the i2/i13
-    // pigeonhole under the xxhash64 token order, shared prefixLen).
+    // pigeonhole under the xxhash64 token order, shared prefixLen). Not
+    // [[candidatePairs]]/[[pairOverlap]]: probe groups meet base groups
+    // across sources, keyed by group id, not a doc self-join.
     def prefixed(g: DataFrame, id: String) = g.select(col(id),
       explode(slice(col("rks"), lit(1),
         prefixLen(col("n_tok"), thetaTenths).cast("int"))).as("rk"))
@@ -616,21 +615,16 @@ object LlmOps {
           col("p.source") === col("c.source"))
       .select(col("c.doc_id").as("doc_id1"), col("p.doc_id").as("doc_id2"))
       .distinct()
-    val corpusMatched = Harness.materialize(verifyJaccard(candCross, sets)
+    val corpusMatched = Harness.materialize(verifyJaccard(candCross, sets, 0.9)
       .select(col("doc_id2").as("doc_id")).distinct())
     // Both sides of the internal-pair self-join read the screened band
     // table — materialized once (the r20 rule: Catalyst shares no
     // subtree between self-join sides, so the anti-join screen re-ran
     // per side).
     val cleanBands = Harness.materialize(batchBands.join(corpusMatched, Seq("doc_id"), "left_anti"))
-    val candIn = cleanBands.alias("l")
-      .join(cleanBands.alias("r"),
-        col("l.b") === col("r.b") && col("l.v") === col("r.v") &&
-          col("l.source") === col("r.source") && col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("doc_id1"), col("r.doc_id").as("doc_id2"))
-      .distinct()
-    val batchDrop = clusterLabels(
-        verifyJaccard(candIn, sets).select("doc_id1", "doc_id2"))
+    val batchDrop = clusterLabels(verifyJaccard(
+        candidatePairs(cleanBands, "b", "v", "source"), sets, 0.9)
+      .select("doc_id1", "doc_id2"))
       .filter(col("doc_id") =!= col("lbl"))
       .select("doc_id")
     batchSets.select(col("doc_id"), col("source"), col("n_tok"))
@@ -809,11 +803,12 @@ object LlmOps {
   def splitBand(bucket: Column): Column =
     when(bucket < 80, "train").when(bucket < 90, "validation").otherwise("test")
 
-  /** CTE list computing the exact J ≥ 0.9 same-source near-dup pairs as
-    * `nd(doc_id1, doc_id2, jaccard)` — shared by the pair oracle (i2/i14),
-    * [[nearDupLabelsCte]], i36 and the graph oracles (i74, i79, i82, i83).
+  /** The oracle's pair join: `dtok(doc_id, source, token, n_tok)` and
+    * `pairs(doc_id1, doc_id2, n1, n2, inter)` — every same-source pair
+    * that shares a token, with both set sizes and the exact overlap. The
+    * front of [[nearDupPairsCte]]; i98 applies its own integer thresholds.
     */
-  private val nearDupPairsCte: String =
+  private[operators] val tokenPairsCte: String =
     """dtok AS (
       |   SELECT doc_id, source, token,
       |     count(*) OVER (PARTITION BY doc_id) AS n_tok
@@ -824,7 +819,15 @@ object LlmOps {
       |     min(a.n_tok) AS n1, min(b.n_tok) AS n2, count(*) AS inter
       |   FROM dtok a JOIN dtok b
       |     ON a.source = b.source AND a.token = b.token AND a.doc_id < b.doc_id
-      |   GROUP BY 1, 2),
+      |   GROUP BY 1, 2)"""
+
+  /** [[tokenPairsCte]] plus the exact J ≥ 0.9 same-source near-dup pairs
+    * as `nd(doc_id1, doc_id2, jaccard)` — shared by the pair oracle
+    * (i2/i14), [[nearDupLabelsCte]], i36, i71, i75 and the graph oracles
+    * (i74, i79, i82, i83).
+    */
+  private[operators] val nearDupPairsCte: String =
+    s"""$tokenPairsCte,
       | nd AS (
       |   SELECT doc_id1, doc_id2,
       |     round(inter * 1.0 / (n1 + n2 - inter), 3) AS jaccard

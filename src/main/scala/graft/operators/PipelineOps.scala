@@ -1313,7 +1313,11 @@ object PipelineOps {
         col("band.b").as("b"), col("band.v").as("v"))
   }
 
-  private def distinctTok(docs: DataFrame): DataFrame =
+  /** Distinct whitespace tokens per document, (doc_id, source, tok): the
+    * first step of every token sketch — the md5 MinHash signature, the
+    * SimHash and the hashed token sets (LlmOps.hashedTokenSets).
+    */
+  private[graft] def distinctTok(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("source"),
       explode(array_distinct(split(col("text"), " "))).as("tok"))
 
@@ -1362,13 +1366,7 @@ object PipelineOps {
       explode(array(bandCols: _*)).as("band"))
       .select(col("doc_id"), col("source"),
         col("band.b").as("b"), col("band.x").as("x"), col("band.y").as("y"))
-    bands.alias("l")
-      .join(bands.alias("r"),
-        col("l.b") === col("r.b") && col("l.x") === col("r.x") &&
-          col("l.y") === col("r.y") && col("l.source") === col("r.source") &&
-          col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("doc_id1"), col("r.doc_id").as("doc_id2"))
-      .distinct()
+    LlmOps.candidatePairs(bands, "b", "x", "y", "source")
   }
 
   // (The former minhashSigFast — xxhash64 signatures straight off the
@@ -1378,9 +1376,13 @@ object PipelineOps {
   // tokenize pass. i7/i8/MinHashAgg keep the md5 scheme because their
   // oracles reproduce the signature VALUES in DuckDB.)
 
-  private val duckSigCte =
-    """dtok AS (SELECT doc_id, source, unnest(list_distinct(string_split(text,' '))) AS tok FROM documents),
-      |hh AS (SELECT doc_id, source, md5('0:'||tok)||md5('1:'||tok) AS h FROM dtok),
+  /** `sig(doc_id, source, mh0..mh7)`: the DuckDB form of [[minhashSig]],
+    * over a distinct-token stage named `tok` (a caller that also has
+    * [[LlmOps.nearDupPairsCte]]'s `dtok` names it apart).
+    */
+  private def duckSigCte(tok: String): String =
+    s"""$tok AS (SELECT doc_id, source, unnest(list_distinct(string_split(text,' '))) AS tok FROM documents),
+      |hh AS (SELECT doc_id, source, md5('0:'||tok)||md5('1:'||tok) AS h FROM $tok),
       |sig AS (SELECT doc_id, min(source) AS source,
       |  min(('0x'||substr(h,1,8))::BIGINT) AS mh0,
       |  min(('0x'||substr(h,9,8))::BIGINT) AS mh1,
@@ -2069,7 +2071,7 @@ object PipelineOps {
     Q("i7_minhash_sig",
       (s, dir) => minhashSig(t(s, dir, "documents"))
         .drop("source").orderBy("doc_id"),
-      Some(oneLine(s"""WITH $duckSigCte
+      Some(oneLine(s"""WITH ${duckSigCte("dtok")}
                   | SELECT doc_id, mh0, mh1, mh2, mh3, mh4, mh5, mh6, mh7
                   | FROM sig ORDER BY doc_id"""))),
 
@@ -2098,7 +2100,7 @@ object PipelineOps {
             round(col("nm") / 8.0, 3).as("est_jaccard"))
           .orderBy("doc_id1", "doc_id2")
       },
-      Some(oneLine(s"""WITH $duckSigCte,
+      Some(oneLine(s"""WITH ${duckSigCte("dtok")},
                   | bands AS (
                   |   SELECT *, 0 AS b, mh0 AS x, mh1 AS y FROM sig UNION ALL
                   |   SELECT *, 1, mh2, mh3 FROM sig UNION ALL
@@ -3152,28 +3154,10 @@ object PipelineOps {
         lshRecallSweep(LlmOps.pairStats(docs, 7),
           bandCandidates(minhashSig(docs)).withColumn("is_cand", lit(1L)))
       },
-      Some(oneLine("""WITH dt AS (SELECT DISTINCT doc_id, source,
-                 |     unnest(string_split(text, ' ')) AS token FROM documents),
-                 | dtn AS (SELECT doc_id, source, token,
-                 |     count(*) OVER (PARTITION BY doc_id) AS n_tok FROM dt),
-                 | prs AS (SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2,
-                 |     min(a.n_tok) AS n1, min(b.n_tok) AS n2, count(*) AS inter
-                 |   FROM dtn a JOIN dtn b
-                 |     ON a.source = b.source AND a.token = b.token AND a.doc_id < b.doc_id
-                 |   GROUP BY 1, 2),
+      Some(oneLine(s"""WITH ${LlmOps.tokenPairsCte},
                  | truth AS (SELECT doc_id1, doc_id2, inter, n1 + n2 - inter AS un
-                 |   FROM prs WHERE inter * 10 >= (n1 + n2 - inter) * 7),
-                 | hh AS (SELECT doc_id, source, md5('0:'||token)||md5('1:'||token) AS h FROM dt),
-                 | sig AS (SELECT doc_id, min(source) AS source,
-                 |     min(('0x'||substr(h,1,8))::BIGINT) AS mh0,
-                 |     min(('0x'||substr(h,9,8))::BIGINT) AS mh1,
-                 |     min(('0x'||substr(h,17,8))::BIGINT) AS mh2,
-                 |     min(('0x'||substr(h,25,8))::BIGINT) AS mh3,
-                 |     min(('0x'||substr(h,33,8))::BIGINT) AS mh4,
-                 |     min(('0x'||substr(h,41,8))::BIGINT) AS mh5,
-                 |     min(('0x'||substr(h,49,8))::BIGINT) AS mh6,
-                 |     min(('0x'||substr(h,57,8))::BIGINT) AS mh7
-                 |   FROM hh GROUP BY doc_id),
+                 |   FROM pairs WHERE inter * 10 >= (n1 + n2 - inter) * 7),
+                 | ${duckSigCte("stok")},
                  | cand AS (SELECT DISTINCT l.doc_id AS doc_id1, r.doc_id AS doc_id2
                  |   FROM sig l JOIN sig r ON l.source = r.source AND l.doc_id < r.doc_id
                  |     AND ((l.mh0 = r.mh0 AND l.mh1 = r.mh1) OR
@@ -3388,27 +3372,9 @@ object PipelineOps {
         val docSets = Harness.materialize(sh
           .groupBy(col("doc_id"), col("source"))
           .agg(sort_array(collect_set(col("s"))).as("rks"))
-          .withColumn("n", size(col("rks")).cast("long")))
-        val prefixed = docSets.select(col("doc_id"), col("source"),
-          explode(slice(col("rks"), lit(1),
-            LlmOps.prefixLen(col("n"), thetaTenths = 5).cast("int"))).as("rk"))
-        val cand = prefixed.alias("a")
-          .join(prefixed.alias("b"),
-            col("a.source") === col("b.source") && col("a.rk") === col("b.rk") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_id1"), col("b.doc_id").as("doc_id2"))
-          .distinct()
-        val l = docSets.select(col("doc_id").as("doc_id1"), col("rks").as("rks1"),
-          col("n").as("n1"))
-        val r = docSets.select(col("doc_id").as("doc_id2"), col("rks").as("rks2"),
-          col("n").as("n2"))
-        val inter = TextFunctions.sortedIntersectCount(col("rks1"), col("rks2")).cast("long")
-        val jac = col("inter") / (col("n1") + col("n2") - col("inter"))
-        cand.join(l, "doc_id1").join(r, "doc_id2")
-          .withColumn("inter", inter)
-          .filter(jac >= 0.5)
-          .select(col("doc_id1"), col("doc_id2"), round(jac, 3).as("jaccard"))
-          .orderBy("doc_id1", "doc_id2")
+          .withColumn("n_tok", size(col("rks")).cast("long")))
+        LlmOps.verifyJaccard(LlmOps.candidatePairs(
+          LlmOps.prefixRows(docSets, thetaTenths = 5), "source", "rk"), docSets, 0.5)
       },
       Some(oneLine("""WITH sh AS (
                  |   SELECT doc_id, source, unnest(list_distinct(list_transform(range(1, len(toks)-1),
@@ -3455,15 +3421,8 @@ object PipelineOps {
         // the materialized hash array beat re-exploding the corpus
         // through another hash Exchange; measured fastest of three
         // forms at sf0.1).
-        val bands = minhashBands(sets)
-        val cand = bands.alias("l")
-          .join(bands.alias("r"),
-            col("l.b") === col("r.b") && col("l.v") === col("r.v") &&
-              col("l.source") === col("r.source") &&
-              col("l.doc_id") < col("r.doc_id"))
-          .select(col("l.doc_id").as("doc_id1"), col("r.doc_id").as("doc_id2"))
-          .distinct()
-        LlmOps.verifyJaccard(cand, sets)
+        LlmOps.verifyJaccard(
+          LlmOps.candidatePairs(minhashBands(sets), "b", "v", "source"), sets, 0.9)
       },
       Some(LlmOps.exactNearDupOracle)),
 
@@ -5566,29 +5525,8 @@ object PipelineOps {
         minhashEstimate(graft.operators.LlmOps.nearDupPairs(docs),
           minhashSig(docs))
       },
-      Some(oneLine(s"""WITH dtok AS (
-                 |   SELECT doc_id, source, token,
-                 |     count(*) OVER (PARTITION BY doc_id) AS n_tok
-                 |   FROM (SELECT DISTINCT doc_id, source,
-                 |           unnest(string_split(text, ' ')) AS token FROM documents)),
-                 | prs AS (
-                 |   SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2,
-                 |     min(a.n_tok) AS n1, min(b.n_tok) AS n2, count(*) AS inter
-                 |   FROM dtok a JOIN dtok b
-                 |     ON a.source = b.source AND a.token = b.token AND a.doc_id < b.doc_id
-                 |   GROUP BY 1, 2),
-                 | nd AS (
-                 |   SELECT doc_id1, doc_id2,
-                 |     round(inter * 1.0 / (n1 + n2 - inter), 3) AS jaccard
-                 |   FROM prs WHERE inter * 1.0 / (n1 + n2 - inter) >= 0.9),
-                 | hh AS (SELECT doc_id, md5('0:'||token)||md5('1:'||token) AS h
-                 |   FROM (SELECT DISTINCT doc_id, unnest(string_split(text,' ')) AS token
-                 |         FROM documents)),
-                 | sig AS (SELECT doc_id,
-                 |   ${(0 until 8).map(j =>
-                      s"min(('0x'||substr(h,${1 + 8 * j},8))::BIGINT) AS mh$j")
-                      .mkString(", ")}
-                 |   FROM hh GROUP BY doc_id),
+      Some(oneLine(s"""WITH ${LlmOps.nearDupPairsCte},
+                 | ${duckSigCte("stok")},
                  | ag AS (SELECT nd.doc_id1, nd.doc_id2, nd.jaccard,
                  |     (${(0 until 8).map(j =>
                       s"(CASE WHEN s1.mh$j = s2.mh$j THEN 1 ELSE 0 END)")
@@ -5688,7 +5626,7 @@ object PipelineOps {
             .select(col("doc_id1"), col("doc_id2"))
             .withColumn("is_true", lit(1L)))
       },
-      Some(oneLine(s"""WITH $duckSigCte,
+      Some(oneLine(s"""WITH ${duckSigCte("stok")},
                  | bands AS (
                  |   SELECT doc_id, source, 0 AS b, mh0 AS x, mh1 AS y FROM sig UNION ALL
                  |   SELECT doc_id, source, 1, mh2, mh3 FROM sig UNION ALL
@@ -5699,22 +5637,10 @@ object PipelineOps {
                  |   FROM bands l JOIN bands r
                  |     ON l.b=r.b AND l.x=r.x AND l.y=r.y AND l.source=r.source
                  |        AND l.doc_id<r.doc_id),
-                 | xtok AS (
-                 |   SELECT doc_id, source, token,
-                 |     count(*) OVER (PARTITION BY doc_id) AS n_tok
-                 |   FROM (SELECT DISTINCT doc_id, source, unnest(string_split(text, ' ')) AS token
-                 |         FROM documents)),
-                 | xpair AS (
-                 |   SELECT a.doc_id AS doc_id1, b.doc_id AS doc_id2,
-                 |     min(a.n_tok) AS n1, min(b.n_tok) AS n2, count(*) AS inter
-                 |   FROM xtok a JOIN xtok b
-                 |     ON a.source = b.source AND a.token = b.token AND a.doc_id < b.doc_id
-                 |   GROUP BY 1, 2),
-                 | xnd AS (SELECT doc_id1, doc_id2 FROM xpair
-                 |   WHERE inter * 1.0 / (n1 + n2 - inter) >= 0.9),
+                 | ${LlmOps.nearDupPairsCte},
                  | jj AS (
                  |   SELECT c.doc_id1 IS NOT NULL AS ic, x.doc_id1 IS NOT NULL AS it
-                 |   FROM cand c FULL OUTER JOIN xnd x
+                 |   FROM cand c FULL OUTER JOIN nd x
                  |     ON c.doc_id1 = x.doc_id1 AND c.doc_id2 = x.doc_id2),
                  | k AS (SELECT
                  |   CAST(count(*) FILTER (WHERE ic AND it) AS BIGINT) AS tp,

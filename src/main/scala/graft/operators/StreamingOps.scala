@@ -100,30 +100,16 @@ object StreamingOps {
     * `withWatermark` on both inputs so the join state stays bounded
     * (inner-join emission itself needs no watermark). At scale this is a
     * single co-shuffle on user_id with per-key time-range state.
+    *
+    * `joinType = "left_outer"` is the sibling that needs the watermark
+    * to PROVE absence: a purchase with no error in its trailing
+    * 10-minute window emits null-padded, but only once both streams'
+    * watermarks pass the point where a matching error could still arrive
+    * (Spark buffers the left row in state until then). StreamingSpec pins
+    * stream ≡ batch after a watermark-advancing sentinel drains the tail.
     */
-  def purchaseErrorJoin(purchases: DataFrame, errors: DataFrame): DataFrame = {
-    val p = purchases.select(col("event_id").as("p_id"), col("user_id"),
-      col("ts").as("p_ts"))
-    val e = errors.select(col("event_id").as("e_id"),
-      col("user_id").as("e_user"), col("ts").as("e_ts"))
-    p.join(e,
-        col("user_id") === col("e_user") &&
-          col("e_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-          col("e_ts") <= col("p_ts"))
-      .select(col("p_id"), col("e_id"), col("user_id"),
-        col("p_ts").cast("timestamp_ntz").as("p_ts"),
-        col("e_ts").cast("timestamp_ntz").as("e_ts"))
-  }
-
-  /** h8's LEFT OUTER sibling — the stream-stream join semantics that
-    * needs the watermark to PROVE absence: a purchase with no error in
-    * its trailing 10-minute window emits null-padded, but only once both
-    * streams' watermarks pass the point where a matching error could
-    * still arrive (Spark buffers the left row in state until then). The
-    * batch form is the plain left join; StreamingSpec pins stream ≡
-    * batch after a watermark-advancing sentinel drains the tail.
-    */
-  def purchaseErrorLeftJoin(purchases: DataFrame, errors: DataFrame): DataFrame = {
+  def purchaseErrorJoin(purchases: DataFrame, errors: DataFrame,
+      joinType: String = "inner"): DataFrame = {
     val p = purchases.select(col("event_id").as("p_id"), col("user_id"),
       col("ts").as("p_ts"))
     val e = errors.select(col("event_id").as("e_id"),
@@ -132,7 +118,7 @@ object StreamingOps {
         col("user_id") === col("e_user") &&
           col("e_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
           col("e_ts") <= col("p_ts"),
-        "left_outer")
+        joinType)
       .select(col("p_id"), col("e_id"), col("user_id"),
         col("p_ts").cast("timestamp_ntz").as("p_ts"),
         col("e_ts").cast("timestamp_ntz").as("e_ts"))

@@ -53,41 +53,17 @@ object NearDedupStream {
     inter.toDouble / (sa.size + b.size - inter)
   }
 
-  /** Approximate serialized footprint of one member sketch. */
-  private[streaming] def memberBytes(m: (Long, Seq[Long])): Long =
-    16L + 8L * m._2.length
-
   def fold(theta: Double, maxStateBytes: Long = 64L << 20)(key: String,
       rows: Iterator[NearArrival], state: GroupState[NearState]): NearKeeps = {
     val st = state.getOption.getOrElse(NearState(Seq.empty, Seq.empty))
-    val seen = st.members.map(_._1).toSet
-    val fresh = rows.filterNot(a => seen(a.doc_id)).toSeq
-      .distinctBy(_.doc_id).sortBy(_.doc_id)
-    val parent = scala.collection.mutable.Map(st.parents: _*)
-    def find(x: Long): Long = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    val uf = new BucketPairs.UnionFind(st.parents)
+    val members = BucketPairs.grow(st.members, rows.map(a => a.doc_id -> a.rks))(
+        _._1, BucketPairs.sketchBytes, maxStateBytes, s"source '$key'") { (m, o) =>
+      if (jaccard(m._2, o._2) >= theta) uf.union(m._1, o._1)
     }
-    var members = st.members
-    fresh.foreach { m =>
-      members.foreach { case (oid, orks) =>
-        if (jaccard(m.rks, orks) >= theta) {
-          val (ra, rb) = (find(m.doc_id), find(oid))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-      }
-      members = members :+ (m.doc_id -> m.rks)
-    }
-    val stateBytes = members.iterator.map(memberBytes).sum
-    require(stateBytes <= maxStateBytes,
-      s"source '$key' accumulated ${members.size} members / ~$stateBytes " +
-        s"state bytes (cap $maxStateBytes): bound the ingest window or flush " +
-        "state to the batch path")
     val ids = members.map(_._1).sorted
-    ids.foreach(find)
-    state.update(NearState(members,
-      ids.filter(id => parent.contains(id)).map(id => id -> find(id))))
-    NearKeeps(key, ids.filter(id => find(id) == id))
+    state.update(NearState(members, uf.flatParents(ids)))
+    NearKeeps(key, uf.roots(ids))
   }
 
   /** Works on both a batch Dataset (one fold per source) and a

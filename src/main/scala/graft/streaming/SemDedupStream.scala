@@ -83,40 +83,14 @@ object SemDedupStream {
   def fold(theta: Double, maxStateBytes: Long = 64L << 20)(key: Long,
       rows: Iterator[SemArrival], state: GroupState[SemState]): SemKeeps = {
     val st = state.getOption.getOrElse(SemState(Seq.empty, Seq.empty))
-    val seen = st.members.map(_.vec_id).toSet
-    // Within-batch processing order is pinned by vec_id for determinism;
-    // the FINAL components depend only on the edge set, so cross-batch
-    // arrival order cannot change the outcome.
-    val fresh = rows.filterNot(a => seen(a.vec_id)).toSeq
-      .distinctBy(_.vec_id).sortBy(_.vec_id)
-    val parent = scala.collection.mutable.Map(st.parents: _*)
-    def find(x: Long): Long = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    val uf = new BucketPairs.UnionFind(st.parents)
+    val members = BucketPairs.grow(st.members, rows)(_.vec_id, memberBytes,
+        maxStateBytes, s"cluster $key") { (m, o) =>
+      if (round3(dot(m.embedding, o.embedding)) >= theta) uf.union(m.vec_id, o.vec_id)
     }
-    // Only new-vs-existing (and new-vs-earlier-new) pairs are scored:
-    // every unordered pair is examined exactly once over the stream's
-    // lifetime, at its later member's arrival.
-    var members = st.members
-    fresh.foreach { m =>
-      members.foreach { o =>
-        if (round3(dot(m.embedding, o.embedding)) >= theta) {
-          val (ra, rb) = (find(m.vec_id), find(o.vec_id))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-      }
-      members = members :+ m
-    }
-    val stateBytes = members.iterator.map(memberBytes).sum
-    require(stateBytes <= maxStateBytes,
-      s"cluster $key accumulated ${members.size} members / ~$stateBytes state " +
-        s"bytes (cap $maxStateBytes): bound the ingest window or flush state " +
-        "to the batch path")
     val ids = members.map(_.vec_id).sorted
-    ids.foreach(find) // path-compress so the persisted chains stay flat
-    state.update(SemState(members,
-      ids.filter(id => parent.contains(id)).map(id => id -> find(id))))
-    SemKeeps(key, ids.filter(id => find(id) == id))
+    state.update(SemState(members, uf.flatParents(ids)))
+    SemKeeps(key, uf.roots(ids))
   }
 
   /** Works on both a batch Dataset (one fold per cluster) and a

@@ -37,33 +37,19 @@ final case class TruthNewPairs(source: String,
   */
 object TruthPairStream {
 
-  private[streaming] def memberBytes(m: (Long, Seq[Long])): Long =
-    16L + 8L * m._2.length
-
   def fold(thetaTenths: Int, maxStateBytes: Long = 64L << 20)(key: String,
       rows: Iterator[TruthArrival],
       state: GroupState[TruthMembers]): TruthNewPairs = {
     val st = state.getOption.getOrElse(TruthMembers(Seq.empty))
-    val seen = st.members.map(_._1).toSet
-    val fresh = rows.filterNot(a => seen(a.doc_id)).toSeq
-      .distinctBy(_.doc_id).sortBy(_.doc_id)
-    var members = st.members
     val out = Seq.newBuilder[(Long, Long, Long, Long)]
-    fresh.foreach { m =>
-      members.foreach { case (oid, orks) =>
-        val sa = orks.toSet
-        val inter = m.rks.count(sa).toLong
-        val un = sa.size + m.rks.size - inter
-        if (inter * 10 >= un * thetaTenths)
-          out += ((math.min(m.doc_id, oid), math.max(m.doc_id, oid), inter, un))
-      }
-      members = members :+ (m.doc_id -> m.rks)
+    val members = BucketPairs.grow(st.members, rows.map(a => a.doc_id -> a.rks))(
+        _._1, BucketPairs.sketchBytes, maxStateBytes, s"source '$key'") { (m, o) =>
+      val sa = o._2.toSet
+      val inter = m._2.count(sa).toLong
+      val un = sa.size + m._2.size - inter
+      if (inter * 10 >= un * thetaTenths)
+        out += ((math.min(m._1, o._1), math.max(m._1, o._1), inter, un))
     }
-    val stateBytes = members.iterator.map(memberBytes).sum
-    require(stateBytes <= maxStateBytes,
-      s"source '$key' accumulated ${members.size} sketches / ~$stateBytes " +
-        s"state bytes (cap $maxStateBytes): bound the ingest window or flush " +
-        "state to the batch path")
     state.update(TruthMembers(members))
     TruthNewPairs(key, out.result())
   }

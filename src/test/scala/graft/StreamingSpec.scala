@@ -344,9 +344,9 @@ class StreamingSpec extends SparkTestBase {
     val sentinelE = Event(-998L, new java.sql.Timestamp(maxTs + 10L * 3600 * 1000),
       -1L, "error", 0.0, "{}")
     val msP = MemoryStream[Event]; val msE = MemoryStream[Event]
-    val joined = StreamingOps.purchaseErrorLeftJoin(
+    val joined = StreamingOps.purchaseErrorJoin(
       msP.toDS().toDF().withWatermark("ts", "1 hour"),
-      msE.toDS().toDF().withWatermark("ts", "1 hour"))
+      msE.toDS().toDF().withWatermark("ts", "1 hour"), "left_outer")
     val q = joined.writeStream.format("memory").queryName("h8b_t")
       .outputMode(OutputMode.Append())
       .option("checkpointLocation",
@@ -363,9 +363,9 @@ class StreamingSpec extends SparkTestBase {
     q.processAllAvailable()
     q.stop(); q.awaitTermination()
     val got = spark.table("h8b_t").filter(col("p_id") =!= -999L)
-    val want = StreamingOps.purchaseErrorLeftJoin(
+    val want = StreamingOps.purchaseErrorJoin(
       batchDF.filter(col("event_type") === "purchase"),
-      batchDF.filter(col("event_type") === "error"))
+      batchDF.filter(col("event_type") === "error"), "left_outer")
     assertSameRows(got, want)
     // the outer semantics actually fired: null-padded rows exist
     assert(got.filter(col("e_id").isNull).count() > 0)

@@ -1,7 +1,8 @@
 package graft
 
-import java.io.{ByteArrayOutputStream, OutputStream, PrintStream}
+import java.io.{ByteArrayOutputStream, IOException, OutputStream, PrintStream}
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
@@ -126,6 +127,35 @@ class TailSpec extends SparkTestBase {
     assert(code == 1, s"stderr: $err")
     assert(err.contains(s"Failed to read stream $root:") && err.contains("not-a-number"), err)
     assert((tempEntries("graft-tail-ckpt") -- before).isEmpty)
+  }
+
+  test("a failing stdout makes -O exit 1 after its batch, and no later batch drains") {
+    // 25,000 records in one shard: three pulls of at most 10,000 each.
+    val root = Files.createTempDirectory("tail-closed-stdout")
+    val shard = Files.createDirectories(root.resolve("shard_id=shard-000"))
+    Files.write(shard.resolve("part-00000.txt"), (0 until 25000).map { i =>
+      s"$i\t$i\t${1000L * (i + 1)}\t7\tclick\t1.0\t\\N"
+    }.asJava)
+    // Takes its first write, then throws on every later one, as a closed
+    // pipe does; counts the lines offered to it.
+    val offered = new AtomicLong()
+    val closed = new OutputStream {
+      private var writes = 0
+      override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        offered.addAndGet((off until off + len).count(b(_) == '\n').toLong)
+        writes += 1
+        if (writes > 1) throw new IOException("Broken pipe")
+      }
+    }
+    val e = new ByteArrayOutputStream()
+    val code = Tail.run(Array("-O", "-s", "0", root.toString), () => spark,
+      new PrintStream(closed, true, "UTF-8"), new PrintStream(e, true, "UTF-8"), 0L)
+    val err = e.toString("UTF-8")
+    assert(code == 1, err)
+    assert(err.contains("Failed to write records") && !err.contains("Failed to read"), err)
+    assert(offered.get <= 10000L,
+      s"${offered.get} lines offered: a batch after the failing one was drained")
   }
 
   test("Tail selects the fork-free checkpoint manager unless the session names one") {
